@@ -615,10 +615,8 @@ from filter_vectordb_spark.index.filteridx_kernels import (  # noqa: F401
     _decode_poison,
     _flat_tags,
     _hit_lists,
-    _num_row_groups,
     _partials_compact,
     _probed_lut,
-    _rg_units,
     _score_meta,
     _score_meta_bin,
     _score_meta_gather,

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filter_vectordb_spark.index.tagpart import _f32_exact_ok
+from filter_vectordb_spark.operators.knn import launch_units, rg_rows, rg_units
 
 def _score_pairview(
     spark: SparkSession,
@@ -36,21 +37,16 @@ def _score_pairview(
             np.stack(grp["qemb"].to_numpy()).astype(np.float64),
         )
     use_f32 = _f32_exact_ok(np.stack(qpdf["qemb"].to_numpy()).astype(np.float64))
-    units = []
-    for pr in groups:
-        files = pair_files.get(pr, ())
-        if files:
-            units.extend(
-                (pr[0], pr[1], p, lo, hi)
-                for _pl, p, lo, hi in _rg_units(spark, list(files))
-            )
+    units, cost = [], []
+    for pr, (qids, _Q) in groups.items():
+        for p, lo, hi, rows in rg_units(spark, list(pair_files.get(pr, ()))):
+            units.append((pr[0], pr[1], p, lo, hi))
+            cost.append(rows * len(qids))
     if not units:
         return spark.createDataFrame([], "qid LONG, id LONG, dist DOUBLE")
     bc = spark.sparkContext.broadcast((groups, off, use_f32))
-    par = max(1, min(len(units), 4 * spark.sparkContext.defaultParallelism))
-    fdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(units, par),
-        "tag_a INT, tag_b INT, path STRING, rg_lo INT, rg_hi INT",
+    fdf = launch_units(
+        spark, units, "tag_a INT, tag_b INT, path STRING, rg_lo INT, rg_hi INT", cost
     )
 
     def serve(it):
@@ -103,41 +99,6 @@ def _score_pairview(
             )
 
     return fdf.mapInArrow(serve, schema="qid long, id long, dist double")
-
-
-#: (path, mtime_ns, size) → num_row_groups — staged index files are
-#: immutable once written; per-batch footer re-reads measured ~0.4 s of
-#: pure driver overhead on the serving path
-_RG_CACHE: dict = {}
-
-
-def _num_row_groups(path: str) -> int:
-    import pyarrow.parquet as pq
-
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    n = _RG_CACHE.get(key)
-    if n is None:
-        if len(_RG_CACHE) >= 4096:
-            _RG_CACHE.clear()
-        n = pq.ParquetFile(path).num_row_groups
-        _RG_CACHE[key] = n
-    return n
-
-
-def _rg_units(spark: SparkSession, files: list[str], payload=None) -> list:
-    """(payload, path, rg_lo, rg_hi) task units, row-group-aligned, ~4×
-    parallelism when row groups abound (the direct-read fan-out shape of
-    operators/knn._score_vectorized_chunk_direct)."""
-    rg_counts = [(p, _num_row_groups(p)) for p in files]
-    total_rg = sum(n for _, n in rg_counts)
-    target = 4 * spark.sparkContext.defaultParallelism
-    step = max(1, total_rg // max(1, target))
-    units = []
-    for p, nrg in rg_counts:
-        for lo in range(0, nrg, step):
-            units.append((payload, p, lo, min(lo + step, nrg)))
-    return units
 
 
 def _flat_tags(tbl_col, n: int):
@@ -309,10 +270,20 @@ def _tag_units(spark: SparkSession, groups: dict, tag_files: dict, bins):
         else:
             for p in tag_files.get(t, ()):
                 units.extend(
-                    (t, pth, lo, hi)
-                    for _pl, pth, lo, hi in _rg_units(spark, [p])
+                    (t, pth, lo, hi) for pth, lo, hi, _rows in rg_units(spark, [p])
                 )
     return units, bin_dir, bin_d
+
+
+def _launch_tag_units(spark: SparkSession, units: list, groups: dict) -> DataFrame:
+    """launch_units over _tag_units' units, each costing its rows × the
+    tag's query count."""
+    nq = {t: sum(len(g[1]) for g in gl) for t, gl in groups.items()}
+    cost = [
+        (hi if lo < 0 else int(rg_rows(p)[lo:hi].sum())) * nq[t]
+        for t, p, lo, hi in units
+    ]
+    return launch_units(spark, units, "tag INT, path STRING, rg_lo INT, rg_hi INT", cost)
 
 
 def _score_tagview(
@@ -346,11 +317,7 @@ def _score_tagview(
     bc = spark.sparkContext.broadcast(
         (groups, off, use_f32, has_xn, bin_dir, bin_d)
     )
-    par = max(1, min(len(units), 4 * spark.sparkContext.defaultParallelism))
-    fdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(units, par),
-        "tag INT, path STRING, rg_lo INT, rg_hi INT",
-    )
+    fdf = _launch_tag_units(spark, units, groups)
 
     def serve(it):
         import pyarrow.parquet as pq
@@ -577,11 +544,7 @@ def _score_tagview_probed(
     bc = spark.sparkContext.broadcast(
         (groups, off, use_f32, nlist, has_xn, bin_dir, bin_d)
     )
-    par = max(1, min(len(units), 4 * spark.sparkContext.defaultParallelism))
-    fdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(units, par),
-        "tag INT, path STRING, rg_lo INT, rg_hi INT",
-    )
+    fdf = _launch_tag_units(spark, units, groups)
 
     def serve(it):
         import pyarrow.parquet as pq
@@ -1066,14 +1029,15 @@ def _score_meta(
     files = sorted(_glob.glob(f"{codes_dir}/*.parquet"))
     if not files:
         raise FileNotFoundError(f"no parquet files under {codes_dir}")
-    units = _rg_units(spark, files, payload=0)
+    units = rg_units(spark, files)
     bc = spark.sparkContext.broadcast(
         (scan_q, flat_q, multi_q, probed, lut, off, use_f32, has_xn)
     )
-    par = max(1, min(len(units), 4 * spark.sparkContext.defaultParallelism))
-    fdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(units, par),
-        "pl INT, path STRING, rg_lo INT, rg_hi INT",
+    fdf = launch_units(
+        spark,
+        [u[:3] for u in units],
+        "path STRING, rg_lo INT, rg_hi INT",
+        cost=[u[3] for u in units],
     )
 
     def serve(it):
@@ -1328,8 +1292,8 @@ def _score_meta_bin(
         man = _json.load(fh)
     d = int(man["d"])
     scan_q, flat_q, multi_q, probed, use_f32 = _group_queries(qpdf, ndoc)
-    # tasks: (file, row-split) — candidate work splits with the rows, so
-    # parallelism is not capped at the file count
+    # units: (file, row-split) — candidate work splits with the rows, so
+    # the balance is not capped at the file count
     nfiles = max(1, len(man["files"]))
     nsp = max(1, -(-2 * spark.sparkContext.defaultParallelism // nfiles))
     units = [
@@ -1338,10 +1302,11 @@ def _score_meta_bin(
     bc = spark.sparkContext.broadcast(
         (scan_q, flat_q, multi_q, probed, off, use_f32, bin_dir, d)
     )
-    par = max(1, min(len(units), 4 * spark.sparkContext.defaultParallelism))
-    fdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(units, par),
+    fdf = launch_units(
+        spark,
+        units,
         "stem STRING, n LONG, sp INT, nsp INT",
+        cost=[n * (sp + 1) // m - n * sp // m for _s, n, sp, m in units],
     )
 
     def serve(it):

@@ -26,11 +26,14 @@ step per component, so refine=64 has margin; pinned in tests/test_sq.py).
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filter_vectordb_spark.index.sq import _scales, encode_sq, train_sq
+from filter_vectordb_spark.operators.knn import launch_units
 from filter_vectordb_spark.operators.topk import per_group_topk
 
 
@@ -436,7 +439,7 @@ def _ivfsq_score_chunk_direct(
     # distribution is EXTREMELY skewed (measured at the 10M point:
     # 2 of 3200 lists absorb ~94% of all probes — high-norm centroids
     # attract almost every query), so a task-per-file layout serializes
-    # the whole job behind one (nq_hot × list) GEMM.  Emit one task per
+    # the whole job behind one (nq_hot × list) GEMM.  Plan one unit per
     # (file, query-slice) with ≤ _QSLICE probing queries per slice —
     # the slice re-reads a page-cache-resident file (cheap) and scores
     # a disjoint strided subset of its queries, so the per-task partial
@@ -459,20 +462,22 @@ def _ivfsq_score_chunk_direct(
             f"none of the {misses} probed lists have parquet under "
             f"{entries_dir} — wrong entries_dir?"
         )
-    # max(1, ...): an empty probe map (possible only with 0 queries, which
-    # union_query_chunks_df already short-circuits, but keep the guard —
-    # parallelize(.., 0) is an error, not an empty result).  parallelize
-    # with the slice count directly — a .repartition(par) here added a
-    # shuffle stage that measured ~0.2 s of pure scheduling per batch;
-    # contiguous slices are balanced because list sizes are ~N/nlist rows
-    # each by construction.  4× slots: with exactly one task per slot a
-    # single slow core IS the wall (measured one 9 s straggler against a
-    # 1.2 s mean at the 4M point); finer tasks let dynamic scheduling
-    # absorb it, bounding the tail at one small task
-    par = max(1, min(len(files), 4 * spark.sparkContext.defaultParallelism))
-    fdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(files, par),
+    # one task per core (launch_units): each unit costs its file's
+    # on-disk bytes (∝ rows — fixed-width codes) × its slice's probing
+    # queries, so the longest-first placement spreads the hot lists'
+    # slices across cores instead of leaving the skew to scheduling
+    # (the 4× fan-out this replaces bounded a slow core's tail at one
+    # small task, but paid the fixed Python-task cost 4× over).
+    # An empty probe map (possible only with 0 queries, which
+    # union_query_chunks_df already short-circuits) gives an empty frame
+    fdf = launch_units(
+        spark,
+        files,
         "path STRING, cid INT, sl INT, nsl INT",
+        cost=[
+            os.path.getsize(p) * len(range(sl, len(probe_map[cid]), nsl))
+            for p, cid, sl, nsl in files
+        ],
     )
 
     def serve(it):

@@ -11,14 +11,14 @@ implements this as brute-force SIMD kernels + per-query heaps
         ├─ strategy="expr":  crossJoin + codegen'd distance expression
         │                    + window top-k   (pure JVM, zero Python)
         │
-        └─ strategy="vectorized":  mapInPandas over base partitions,
-                                   float64 BLAS block — per-Arrow-batch
-                                   partial top-k (nq×k rows out per batch)
+        └─ strategy="vectorized":  mapInArrow over base partitions,
+                                   float64 BLAS block — per-task
+                                   streaming top-k (nq×k rows out per task)
                                    → global final top-k (W3 merge)
 
 Scale posture (100 TB): the base side is never collected or shuffled in
-full — only nq×k rows per Arrow batch leave the scan stage, then one
-shuffle of nq×k×nbatches rows for the final merge.  Queries must be the
+full — only nq×k rows per task leave the scan stage, then one shuffle of
+nq×k×ntasks rows for the final merge.  Queries must be the
 provably-small side (the reference's query sets are 10k-100k rows; the
 broadcast cap guards this).
 
@@ -104,35 +104,159 @@ def topk_blocked(key: np.ndarray, k: int, block: int = TOPK_BLOCK) -> np.ndarray
     return np.take_along_axis(C, pf, axis=1)
 
 
+#: sentinel id of an empty top-k slot: sorts after every real id, so at
+#: an equal score a real row always wins the slot
+_NO_ID = np.iinfo(np.int64).max
+
+#: columns of the first block that seed an empty accumulator's
+#: threshold (at least k): the k-th best of this narrow slice bounds the
+#: final k-th best, so the first block needs no full-width selection
+SEED_COLS = 256
+
+
 def _threshold_merge(
     best_idx: np.ndarray,
     best_val: np.ndarray,
     rows: np.ndarray,
-    cols: np.ndarray,
+    ids: np.ndarray,
     vals: np.ndarray,
     larger: bool,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Merge sparse (row, col, val) candidates into the dense per-row
-    (idx, val) top-kk state; returns (best_idx, best_val, thr) with
-    rows sorted best-first so thr (the per-row selection boundary) is
-    the last column.  One lexsort over kk·nq + ncand entries — the
-    candidate stream is ~kk·ln(nb/chunk) per row on unordered data, so
-    this is metadata-sized next to the GEMM."""
+    """Merge sparse (row, id, val) candidates into the dense per-row
+    (id, val) top-kk state; returns (best_idx, best_val, thr) with rows
+    sorted best-first by (val, id asc), so thr (the per-row selection
+    boundary) is the last column and a tie at the boundary keeps the
+    lowest ids.  One lexsort over kk·nq + ncand entries — the candidate
+    stream is ~kk·ln(nb/chunk) per row on unordered data, so this is
+    metadata-sized next to the GEMM."""
     nq, kk = best_idx.shape
     all_r = np.concatenate([np.repeat(np.arange(nq), kk), rows])
-    all_c = np.concatenate([best_idx.ravel(), cols])
+    all_i = np.concatenate([best_idx.ravel(), ids])
     all_v = np.concatenate([best_val.ravel(), vals])
     key = -all_v if larger else all_v
-    order = np.lexsort((key, all_r))
-    ar, ac, av = all_r[order], all_c[order], all_v[order]
+    order = np.lexsort((all_i, key, all_r))
+    ar, ai, av = all_r[order], all_i[order], all_v[order]
     starts = np.flatnonzero(np.r_[True, ar[1:] != ar[:-1]])
     counts = np.diff(np.r_[starts, len(ar)])
     rank = np.arange(len(ar)) - np.repeat(starts, counts)
     keep = rank < kk
     # every row already holds kk dense entries → exactly kk survive per row
-    best_idx = ac[keep].reshape(nq, kk)
+    best_idx = ai[keep].reshape(nq, kk)
     best_val = av[keep].reshape(nq, kk)
     return best_idx, best_val, best_val[:, -1].copy()
+
+
+class StreamTopK:
+    """Per-row top-k over score blocks streamed through one at a time —
+    the reference's one heap per query per scan thread
+    (`uint8_knn.hpp:39-82`) in vectorized form.  A scan task keeps ONE
+    accumulator across all of its units and emits one partial at the
+    end, so no unit restarts its selection.
+
+    Selection is threshold-pruned (r8: the exact anchors were
+    selection-bound — introselect costs ~10-40 ns/element where a SIMD
+    compare is ~0.5).  State: per row the best k (id, score) so far,
+    sorted best-first by (score, id asc); thr is the k-th score.  A
+    block's entries become
+    candidates only when no worse than thr — ties KEPT, so a tied lower
+    id can still take the last slot — gathered with one flatnonzero +
+    divmod.  Candidates merge into the state (re-tightening thr) once
+    they pass ~4·nq·k, which bounds memory and keeps the candidate rate
+    at ~k/seen per element on unordered data.  An accumulator that has
+    not yet seen k columns seeds thr from the k-th best of the block's
+    first SEED_COLS columns (ties again go through the same compare), so
+    no full-width selection ever runs.
+
+    The kept set is exact under (score, id asc): results do not depend
+    on how rows are cut into blocks, units or tasks.  metric ∈ METRICS
+    fixes the direction (l2 smaller is better, ip/cos larger)."""
+
+    def __init__(self, nq: int, k: int, metric: str):
+        self.k = k
+        self.larger = metric in ("ip", "cos")
+        self.metric = metric
+        fill = -np.inf if self.larger else np.inf
+        self.val = np.full((nq, k), fill)
+        self.idx = np.full((nq, k), _NO_ID, dtype=np.int64)
+        self.thr = self.val[:, -1].copy()
+        self.seen = 0
+        self._pend: list = []  # (rows, ids, vals) candidate triples
+        self._npend = 0
+        self._cap = max(65_536, 4 * nq * k)
+
+    def push(self, D: np.ndarray, ids: np.ndarray) -> None:
+        """Offer a C-contiguous (nq, c) score block for the base rows
+        `ids` (c,) int64."""
+        nc = D.shape[1]
+        if nc == 0:
+            return
+        if self.seen < self.k <= nc:
+            # the k-th best of any k seen scores bounds the final k-th
+            # best, so the seed holds until a merge tightens it
+            S = D[:, : max(self.k, min(nc, SEED_COLS))].astype(np.float64)
+            if self.larger:
+                kth = -np.partition(-S, self.k - 1, axis=1)[:, self.k - 1]
+                self.thr = np.maximum(self.thr, kth)
+            else:
+                kth = np.partition(S, self.k - 1, axis=1)[:, self.k - 1]
+                self.thr = np.minimum(self.thr, kth)
+        t = self.thr
+        self.seen += nc
+        # compare in D's dtype; when the f64 boundary rounds toward
+        # "stricter" in f32, step it one ulp looser so no true candidate
+        # is lost (ties must stay in the pool)
+        if D.dtype == np.float32:
+            t32 = t.astype(np.float32)
+            if self.larger:
+                t = np.where(t32 > t, np.nextafter(t32, np.float32(-np.inf)), t32)
+            else:
+                t = np.where(t32 < t, np.nextafter(t32, np.float32(np.inf)), t32)
+        m = D >= t[:, None] if self.larger else D <= t[:, None]
+        flat = np.flatnonzero(m)
+        if len(flat) == 0:
+            return
+        r, c = np.divmod(flat, nc)
+        self._pend.append((r, ids[c], D.ravel()[flat].astype(np.float64)))
+        self._npend += len(flat)
+        if self._npend > self._cap:
+            self._merge()
+
+    def scan(self, Q, qn, X, xn, ids: np.ndarray, chunk: int = TOPK_BLOCK) -> None:
+        """Fused BLAS + push over base rows in CONTIGUOUS chunks:
+        G = Q @ X[lo:hi]ᵀ lands C-contiguous at (nq, chunk), is pushed,
+        and is freed before the next chunk — peak memory is O(nq·chunk)
+        however many rows X carries, and no selection ever runs on
+        strided memory.  Q/X in the caller's compute dtype; qn/xn
+        float64 squared norms (l2) or norms (cos), None for ip."""
+        for lo in range(0, X.shape[0], chunk):
+            G = Q @ X[lo : lo + chunk].T  # (nq, c) C-contiguous
+            if self.metric == "ip":
+                # score straight off G (f32 for the integer-exact
+                # contract, f64 otherwise); only candidates become f64
+                D = G
+            elif self.metric == "l2":
+                D = qn[:, None] - 2.0 * G.astype(np.float64) + xn[None, lo : lo + chunk]
+                np.maximum(D, 0.0, out=D)
+            else:  # cos — divide (not reciprocal-multiply) to keep f64
+                # rounding identical to the expression path G / (‖q‖·‖x‖)
+                D = G.astype(np.float64) / (qn[:, None] * xn[None, lo : lo + chunk])
+            self.push(D, ids[lo : lo + chunk])
+
+    def _merge(self) -> None:
+        if not self._npend:
+            return
+        r, i, v = (np.concatenate(a) for a in zip(*self._pend))
+        self.idx, self.val, self.thr = _threshold_merge(
+            self.idx, self.val, r, i, v, self.larger
+        )
+        self._pend, self._npend = [], 0
+
+    def result(self) -> tuple[np.ndarray, np.ndarray]:
+        """(ids (nq, kk), scores (nq, kk) float64), kk = min(k, seen),
+        each row best-first by (score, id asc)."""
+        self._merge()
+        kk = min(self.k, self.seen)
+        return self.idx[:, :kk], self.val[:, :kk]
 
 
 def gemm_topk(
@@ -144,125 +268,14 @@ def gemm_topk(
     k: int,
     chunk: int = TOPK_BLOCK,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Fused BLAS + per-row top-k over base rows in CONTIGUOUS chunks:
-    G_chunk = Q @ X[lo:hi]ᵀ lands C-contiguous at (nq, chunk), gets its
-    per-row top-k immediately, and is freed before the next chunk — peak
-    memory is O(nq·chunk) however many rows the Arrow batch carries, and
-    no selection ever runs on strided memory (a (nq, 65k) score matrix is
-    512 MB whose strided column-blocks cost 10-100× contiguous).
-
-    Selection is THRESHOLD-PRUNED after the first chunk (r8 — the 1M/10M
-    exact anchors were selection-bound, not GEMM-bound: introselect costs
-    ~10-40 ns/element where a SIMD compare is ~0.5): chunk 0 runs the
-    full argpartition and records each row's boundary value; every later
-    chunk only compares its scores against that boundary (ties KEPT, so
-    the candidate pool matches what argpartition could select from) and
-    gathers the few survivors sparsely.  Candidates are merged — and the
-    boundary re-tightened — whenever they accumulate past ~4·nq·k, which
-    bounds memory and keeps the candidate rate at ~k/seen per element on
-    unordered data (≈ nq·k·ln(nb/chunk) total).
-
-    Q/X in the caller's compute dtype; qn/xn float64 squared norms (l2)
-    or norms (cos), None for ip.  Returns (idx (nq, kk) into X's rows,
-    dist (nq, kk) float64) — unordered within a row.
-
-    Boundary-tie semantics (shared with topk_blocked): when >k candidates
-    tie at the k-th distance, the selection keeps an arbitrary — but
-    deterministic for a fixed batch/chunk composition — subset; the
-    downstream (dist, id asc) ordering then applies only among survivors.
-    The deterministic sources make results reproducible run-to-run, but
-    a different partitioning could keep a different same-distance id.
-    Callers needing strict (dist, id) tie selection must widen k by the
-    tie margin or use the expression path — the fixtures' distinct-value
-    generators make the case unreachable in every hash-checked row."""
-    nq, nb = Q.shape[0], X.shape[0]
-    kk = min(k, nb)
-    larger = metric in ("ip", "cos")
-    best_idx: np.ndarray | None = None
-    best_val: np.ndarray | None = None
-    thr: np.ndarray | None = None
-    cr: list = []  # pending sparse candidates (rows/cols/vals)
-    cc: list = []
-    cv: list = []
-    npend = 0
-    cap = max(65_536, 4 * nq * kk)
-    for lo in range(0, nb, chunk):
-        Xc = X[lo : lo + chunk]
-        G = Q @ Xc.T  # (nq, c) C-contiguous
-        nc = G.shape[1]
-        if metric == "ip":
-            # score straight off G (f32 for the integer-exact contract,
-            # f64 otherwise) — no full-matrix conversions; only
-            # survivors become f64
-            D = G
-        elif metric == "l2":
-            D = qn[:, None] - 2.0 * G.astype(np.float64) + xn[None, lo : lo + chunk]
-            np.maximum(D, 0.0, out=D)
-        else:  # cos — divide (not reciprocal-multiply) to keep f64
-            # rounding identical to the expression path G / (‖q‖·‖x‖)
-            D = G.astype(np.float64) / (qn[:, None] * xn[None, lo : lo + chunk])
-        if best_idx is None:
-            # first chunk: full selection initializes the boundary
-            ck = min(kk, nc)
-            if ck < nc:
-                key0 = -D if larger else D
-                p = np.argpartition(key0, ck - 1, axis=1)[:, :ck]
-            else:
-                p = np.tile(np.arange(nc), (nq, 1))
-            v = np.take_along_axis(D, p, axis=1).astype(np.float64)
-            if ck < kk:  # nb > chunk but first chunk narrower than kk
-                pad = np.zeros((nq, kk - ck), dtype=np.int64)
-                fill = np.float64(-np.inf) if larger else np.float64(np.inf)
-                v = np.concatenate([v, np.full((nq, kk - ck), fill)], axis=1)
-                p = np.concatenate([p, pad], axis=1)
-            best_idx, best_val, thr = _threshold_merge(
-                (p + lo).astype(np.int64),
-                v,
-                np.empty(0, dtype=np.int64),
-                np.empty(0, dtype=np.int64),
-                np.empty(0, dtype=np.float64),
-                larger,
-            )
-            continue
-        # threshold compare in D's dtype; when the f64 boundary rounds
-        # toward "stricter" in f32, step it one ulp looser so no true
-        # candidate is lost (ties must stay in the pool)
-        if D.dtype == np.float32:
-            t = thr.astype(np.float32)
-            if larger:
-                t = np.where(t > thr, np.nextafter(t, np.float32(-np.inf)), t)
-            else:
-                t = np.where(t < thr, np.nextafter(t, np.float32(np.inf)), t)
-        else:
-            t = thr
-        m = D >= t[:, None] if larger else D <= t[:, None]
-        r, c = np.nonzero(m)
-        if len(r):
-            cr.append(r)
-            cc.append(c + lo)
-            cv.append(D[r, c].astype(np.float64))
-            npend += len(r)
-            if npend > cap:
-                best_idx, best_val, thr = _threshold_merge(
-                    best_idx,
-                    best_val,
-                    np.concatenate(cr),
-                    np.concatenate(cc),
-                    np.concatenate(cv),
-                    larger,
-                )
-                cr, cc, cv = [], [], []
-                npend = 0
-    if npend:
-        best_idx, best_val, thr = _threshold_merge(
-            best_idx,
-            best_val,
-            np.concatenate(cr),
-            np.concatenate(cc),
-            np.concatenate(cv),
-            larger,
-        )
-    return best_idx, best_val
+    """Per-row top-k of one (Q, X) block: a StreamTopK fed X's rows in
+    `chunk`-row GEMM chunks.  Returns (idx (nq, kk) into X's rows,
+    dist (nq, kk) float64), kk = min(k, len(X)), each row best-first by
+    (dist, row index asc) — at a tied k-th distance the lowest row
+    indices are kept."""
+    acc = StreamTopK(Q.shape[0], k, metric)
+    acc.scan(Q, qn, X, xn, np.arange(X.shape[0]), chunk)
+    return acc.result()
 
 
 def _row_payload_bytes(pdf: pd.DataFrame) -> int:
@@ -418,6 +431,93 @@ def task_topk_merge(qids, ids, dists, k: int, largest: bool, col: str = "dist"):
     )
 
 
+def _balance(cost: list, nbins: int) -> list[list[int]]:
+    """Longest-first greedy placement of units (by cost) into nbins bins:
+    each unit, costliest first, goes to the least-loaded bin (ties: the
+    bin with fewer units, then the lower index).  The bin that ends up
+    heaviest was the lightest when it took its last unit, so max load ≤
+    min load + the largest unit cost.  Returns per-bin unit indices in
+    input order (file, row-group locality within a task)."""
+    import heapq
+
+    heap = [(0, 0, b) for b in range(nbins)]
+    bins: list[list[int]] = [[] for _ in range(nbins)]
+    for i in sorted(range(len(cost)), key=lambda j: -cost[j]):
+        load, n, b = heapq.heappop(heap)
+        bins[b].append(i)
+        heapq.heappush(heap, (load + cost[i], n + 1, b))
+    return [sorted(b) for b in bins]
+
+
+def launch_units(spark, units: list, schema: str, cost=None) -> DataFrame:
+    """The one launch of every direct-read scan: a DataFrame of `units`
+    (tuples matching `schema`) in min(len(units), defaultParallelism)
+    partitions — one Python task per core — balanced longest-first by
+    the per-unit `cost` (rows × queries where the caller knows them,
+    else 1 per unit).  Each Python task pays a fixed worker start /
+    initialize cost (measured 0.2-0.5 s of slot time per task on a
+    4-core host), so finer launches spend more on tasks than their
+    dynamic scheduling saves; balance comes from the cost placement
+    instead, and the caller's serve loop carries its top-k state across
+    all units of its task.  Callers keep planning fine-grained units
+    (the packing needs them to balance).  An empty unit list gives an
+    empty frame of `schema`, so the caller's mapInArrow yields its typed
+    empty result."""
+    nparts = min(len(units), spark.sparkContext.defaultParallelism)
+    if nparts == 0:
+        return spark.createDataFrame([], schema)
+    bins = _balance([1] * len(units) if cost is None else list(cost), nparts)
+    # one bin per element, so parallelize puts exactly one per partition
+    rdd = spark.sparkContext.parallelize([[units[i] for i in b] for b in bins], nparts)
+    return spark.createDataFrame(rdd.flatMap(lambda b: b), schema)
+
+
+#: planning grain of rg_units: units per core, so the longest-first
+#: placement has pieces to balance with
+UNITS_PER_CORE = 4
+
+#: (path, mtime_ns, size) → per-row-group row counts — staged files are
+#: immutable once written; per-batch footer re-reads measured ~0.4 s of
+#: pure driver overhead on the filtered serving path
+_RG_CACHE: dict = {}
+
+
+def rg_rows(path: str) -> np.ndarray:
+    """Row count of each row group of a parquet file (footer, cached)."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    st = os.stat(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    rows = _RG_CACHE.get(key)
+    if rows is None:
+        if len(_RG_CACHE) >= 4096:
+            _RG_CACHE.clear()
+        md = pq.ParquetFile(path).metadata
+        rows = np.array(
+            [md.row_group(i).num_rows for i in range(md.num_row_groups)], dtype=np.int64
+        )
+        _RG_CACHE[key] = rows
+    return rows
+
+
+def rg_units(spark, files: list[str]) -> list[tuple[str, int, int, int]]:
+    """(path, rg_lo, rg_hi, rows) scan units, row-group-aligned (pyarrow
+    reads row groups whole, so the units partition the rows exactly):
+    ~4 units per core when row groups abound, one per row group
+    otherwise — fine enough for launch_units to balance one task per
+    core by rows."""
+    counts = [(p, rg_rows(p)) for p in files]
+    total_rg = sum(len(r) for _, r in counts)
+    step = max(1, total_rg // (UNITS_PER_CORE * spark.sparkContext.defaultParallelism))
+    return [
+        (p, lo, min(lo + step, len(r)), int(r[lo : lo + step].sum()))
+        for p, r in counts
+        for lo in range(0, len(r), step)
+    ]
+
+
 def _order(metric: str):
     """l2: smaller is nearer; ip/cos: larger is nearer. Ties → id asc."""
     if metric == "l2":
@@ -491,10 +591,10 @@ def _score_vectorized(
     compute_dtype: str = "float64",
     base_dir: str | None = None,
 ) -> DataFrame:
-    """Arrow-batched numpy kernel: per-batch partial top-k, distances in
+    """Arrow-batched numpy kernel: per-task partial top-k, distances in
     float64 (see knn_join for when the float32 BLAS block stays exact).
 
-    Only the partial top-k (nq×k rows per batch) leaves the scan stage —
+    Only the partial top-k (nq×k rows per task) leaves the scan stage —
     the W3 two-phase merge pattern (SURVEY.md §2.5).
 
     Above the broadcast cap the query set is sliced into ≤cap chunks, each
@@ -520,101 +620,107 @@ def _score_vectorized(
     )
 
 
+def _check_f32_queries(Q: np.ndarray) -> None:
+    """Enforce the documented exactness precondition (knn_join): the
+    f32 GEMM is bit-exact only for integer components, |v| ≤ 255,
+    d ≤ 192.  Full check on the query side (cheap — one pass over the
+    chunk); the base side is spot-checked per block (_push_block)."""
+    if Q.shape[1] > 192 or not (
+        np.abs(Q).max(initial=0.0) <= 255 and np.array_equal(Q, np.rint(Q))
+    ):
+        raise ValueError(
+            "compute_dtype='float32' requires integer-valued vectors "
+            "with |component| <= 255 and d <= 192 (exactness "
+            "precondition); use the float64 default for real-valued "
+            "embeddings"
+        )
+
+
 def _score_vectorized_chunk(
     qpdf, b: DataFrame, metric: str, k: int, compute_dtype: str = "float64"
 ) -> DataFrame:
     """Scores arrive in (nq, nb) orientation — G = Q @ Xᵀ lands
-    C-contiguous per query row, so the per-row top-k partitions run on
-    contiguous memory with NO transposed copy (the (nb, nq) orientation
-    needed an ascontiguousarray(-D.T) that measured 96s per 2 GB on this
-    host's memory system — worse than the GEMM it followed)."""
+    C-contiguous per query row, so the per-row top-k runs on contiguous
+    memory with NO transposed copy (the (nb, nq) orientation needed an
+    ascontiguousarray(-D.T) that measured 96s per 2 GB on this host's
+    memory system — worse than the GEMM it followed).  One StreamTopK
+    per task over all of its Arrow batches, one partial per task."""
     dt = np.dtype(compute_dtype)
     qids = qpdf["qid"].to_numpy(dtype=np.int64)
     Q = np.stack(qpdf["qemb"].to_numpy()).astype(np.float64)
     if dt == np.float32:
-        # enforce the documented exactness precondition (knn_join): the
-        # f32 GEMM is bit-exact only for integer components, |v| ≤ 255,
-        # d ≤ 192.  Full check on the query side (cheap — one pass over
-        # the chunk); the base side is spot-checked per Arrow batch.
-        if Q.shape[1] > 192 or not (
-            np.abs(Q).max(initial=0.0) <= 255 and np.array_equal(Q, np.rint(Q))
-        ):
-            raise ValueError(
-                "compute_dtype='float32' requires integer-valued vectors "
-                "with |component| <= 255 and d <= 192 (exactness "
-                "precondition); use the float64 default for real-valued "
-                "embeddings"
-            )
-    sc = b.sparkSession.sparkContext
-    bc = sc.broadcast((qids, Q))
+        _check_f32_queries(Q)
+    bc = b.sparkSession.sparkContext.broadcast((qids, Q))
 
     def score_batches(it):
-        import pyarrow as pa
-
         bqids, bQ = bc.value
-        Qc = bQ.astype(dt)
-        qn64 = (bQ * bQ).sum(axis=1)  # float64 always — distance assembly
-        qfac = {"l2": qn64, "ip": None, "cos": np.sqrt(qn64)}[metric]
+        acc = StreamTopK(len(bqids), k, metric)
+        Qc, qfac = _query_side(bQ, metric, dt)
         for batch in it:
             nb = batch.num_rows
             if nb == 0:
                 continue
             ids = batch.column("id").to_numpy(zero_copy_only=False)
             X = flatten_fixed_list(batch.column("emb"), nb).astype(dt)
-            yield pa.RecordBatch.from_pydict(
-                _score_ids_X(bqids, Qc, qfac, ids, X, metric, k, dt)
-            )
+            _push_block(acc, Qc, qfac, ids, X)
+        if acc.seen:
+            yield _acc_partial(acc, bqids, k)
 
     return b.mapInArrow(score_batches, schema="qid long, id long, dist double")
 
 
-def _score_ids_X(bqids, Qc, qfac, ids, X, metric, k, dt) -> dict:
-    """Shared per-batch scan body of the DataFrame and direct-read
+def _query_side(bQ: np.ndarray, metric: str, dt):
+    """(Q in the compute dtype, its norm factor: float64 squared norms
+    for l2, norms for cos, None for ip)."""
+    qn64 = (bQ * bQ).sum(axis=1)  # float64 always — distance assembly
+    return bQ.astype(dt), {"l2": qn64, "ip": None, "cos": np.sqrt(qn64)}[metric]
+
+
+def _push_block(acc: StreamTopK, Qc, qfac, ids, X) -> None:
+    """Shared per-block scan body of the DataFrame and direct-read
     vectorized paths: f32 precondition spot-check, norm factors, fused
-    GEMM + partial top-k.  Returns the (qid, id, dist) pydict of the
-    batch's partial — nq×k rows however many base rows came in."""
-    if dt == np.float32:
-        # spot-check the f32 exactness precondition on the base
-        # side (first row per batch — a full pass would cost a
-        # memory-bandwidth sweep per batch)
+    GEMM + push into the task's accumulator."""
+    if X.dtype == np.float32:
+        # spot-check the f32 exactness precondition on the base side
+        # (first row per block — a full pass would cost a
+        # memory-bandwidth sweep per block)
         r0 = X[0].astype(np.float64)
         if not (np.abs(r0).max(initial=0.0) <= 255 and np.array_equal(r0, np.rint(r0))):
             raise ValueError(
                 "compute_dtype='float32' exactness precondition "
                 "violated by base vectors (non-integer or |v| > 255)"
             )
-    if metric == "ip":
+    if acc.metric == "ip":
         xfac = None
     else:
-        Xf = X if dt == np.float64 else X.astype(np.float64)
+        Xf = X if X.dtype == np.float64 else X.astype(np.float64)
         xn = (Xf * Xf).sum(axis=1)
-        xfac = xn if metric == "l2" else np.sqrt(xn)
-    # Emit the partial top-k UNSORTED: ordering/tie-breaks are the
-    # global merge's job (per_group_topk orders by (dist, id)), and
-    # a per-query sort here is a Python-loop hot spot at large nq.
-    # gemm_topk's boundary-tie pick is deterministic for a given
-    # batch composition, which the deterministic sources guarantee.
-    part, dist = gemm_topk(Qc, qfac, X, xfac, metric, k)
-    return {
-        "qid": np.repeat(bqids, part.shape[1]),
-        "id": ids[part].ravel(),
-        "dist": dist.ravel(),
-    }
+        xfac = xn if acc.metric == "l2" else np.sqrt(xn)
+    acc.scan(Qc, qfac, X, xfac, ids.astype(np.int64, copy=False))
+
+
+def _acc_partial(acc: StreamTopK, bqids: np.ndarray, k: int):
+    """A task's one partial: its accumulator's per-query top-k as the
+    (qid, id, dist) rows of task_topk_merge."""
+    idx, dist = acc.result()
+    return task_topk_merge(
+        np.repeat(bqids, idx.shape[1]), idx.ravel(), dist.ravel(), k, acc.larger
+    )
 
 
 def _score_vectorized_chunk_direct(
     qpdf, spark, base_dir: str, metric: str, k: int, compute_dtype: str = "float64"
 ) -> DataFrame:
     """Direct-read twin of _score_vectorized_chunk (VERDICT r7 #3): the
-    task list is the staged base's parquet FILES (driver-side glob —
-    metadata only); each task opens its file with pyarrow straight from
-    shared storage, so vectors move disk/page-cache → Python once with
-    no JVM Arrow hop, and repeat runs serve from the OS page cache —
-    the same resident-data cost model as the IVF+SQ8 direct serving
-    path (index/ivfsq._ivfsq_score_chunk_direct, where the rationale
-    and the POSIX-path caveat live).  One task per (file, row-slice):
-    files bigger than ~256k rows are split by row-group ranges so a
-    32-file staging still fans out across all slots at 10M rows."""
+    units are the staged base's (file, row-group range) slices
+    (driver-side glob + footers — metadata only); each task opens its
+    files with pyarrow straight from shared storage, so vectors move
+    disk/page-cache → Python once with no JVM Arrow hop, and repeat runs
+    serve from the OS page cache — the same resident-data cost model as
+    the IVF+SQ8 direct serving path (index/ivfsq._ivfsq_score_chunk_direct,
+    where the POSIX-path caveat lives).  One task per core
+    (launch_units, balanced by rows): each task carries one StreamTopK
+    across all of its units and emits one partial."""
     import glob as _glob
 
     if "://" in base_dir:
@@ -629,54 +735,29 @@ def _score_vectorized_chunk_direct(
     qids = qpdf["qid"].to_numpy(dtype=np.int64)
     Q = np.stack(qpdf["qemb"].to_numpy()).astype(np.float64)
     if dt == np.float32:
-        if Q.shape[1] > 192 or not (
-            np.abs(Q).max(initial=0.0) <= 255 and np.array_equal(Q, np.rint(Q))
-        ):
-            raise ValueError(
-                "compute_dtype='float32' requires integer-valued vectors "
-                "with |component| <= 255 and d <= 192 (exactness "
-                "precondition); use the float64 default for real-valued "
-                "embeddings"
-            )
+        _check_f32_queries(Q)
     bc = spark.sparkContext.broadcast((qids, Q))
-
-    # row-group-aligned slices: pyarrow reads row groups whole, so a
-    # (file, rg_lo, rg_hi) unit is an exact partition of the rows
-    import pyarrow.parquet as pq
-
-    rg_counts = [(p, pq.ParquetFile(p).num_row_groups) for p in files]
-    total_rg = sum(n for _, n in rg_counts)
-    target = 4 * spark.sparkContext.defaultParallelism
-    # ~target units when row groups abound; one unit per row group
-    # otherwise (finer than per-file either way, so a slow core's tail
-    # is one small task, the ivfsq-direct lesson)
-    step = max(1, total_rg // target)
-    units = []
-    for p, nrg in rg_counts:
-        for lo in range(0, nrg, step):
-            units.append((p, lo, min(lo + step, nrg)))
-    par = max(1, min(len(units), 4 * spark.sparkContext.defaultParallelism))
-    fdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(units, par),
+    units = rg_units(spark, files)
+    fdf = launch_units(
+        spark,
+        [u[:3] for u in units],
         "path STRING, rg_lo INT, rg_hi INT",
+        cost=[u[3] for u in units],
     )
 
     def serve(it):
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         bqids, bQ = bc.value
-        Qc = bQ.astype(dt)
-        qn64 = (bQ * bQ).sum(axis=1)
-        qfac = {"l2": qn64, "ip": None, "cos": np.sqrt(qn64)}[metric]
+        acc = StreamTopK(len(bqids), k, metric)
+        Qc, qfac = _query_side(bQ, metric, dt)
         for batch in it:
             for path, lo, hi in zip(
                 batch.column("path").to_pylist(),
                 batch.column("rg_lo").to_pylist(),
                 batch.column("rg_hi").to_pylist(),
             ):
-                pf = pq.ParquetFile(path)
-                tbl = pf.read_row_groups(
+                tbl = pq.ParquetFile(path).read_row_groups(
                     list(range(lo, hi)), columns=["id", "emb"]
                 )
                 n = tbl.num_rows
@@ -684,9 +765,9 @@ def _score_vectorized_chunk_direct(
                     continue
                 ids = tbl.column("id").to_numpy(zero_copy_only=False)
                 X = flatten_fixed_list(tbl.column("emb"), n).astype(dt)
-                yield pa.RecordBatch.from_pydict(
-                    _score_ids_X(bqids, Qc, qfac, ids, X, metric, k, dt)
-                )
+                _push_block(acc, Qc, qfac, ids, X)
+        if acc.seen:
+            yield _acc_partial(acc, bqids, k)
 
     return fdf.mapInArrow(serve, schema="qid long, id long, dist double")
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from filter_vectordb_spark.operators.knn import launch_units, rg_rows
 from filter_vectordb_spark.operators.topk import per_group_topk
 
 
@@ -106,11 +107,13 @@ def sparse_topk_sharded(
     inside the scan instead: the staged long-form corpus lives in
     parquet files each holding COMPLETE documents (the staging writes
     one file per doc-partitioned generator partition — the caller's
-    contract, parity-tested), so one task per file can compute its
-    docs' FULL scores and emit only its local top-k per query — the shuffle carries nq×k×nfiles rows (~10⁵)
-    instead of 10⁸.  This is the inverted-index-as-doc-sharded-segments
-    layout every distributed text engine uses; at 100 TB the segment
-    list is the metadata and each task streams one segment.
+    contract, parity-tested), so a task can compute each of its files'
+    docs' FULL scores and emit only that file's local top-k per query —
+    the shuffle carries nq×k×nfiles rows (~10⁵) instead of 10⁸.  Files
+    are launched one task per core (launch_units, balanced by rows).
+    This is the inverted-index-as-doc-sharded-segments layout every
+    distributed text engine uses; at 100 TB the segment list is the
+    metadata and each task streams its segments.
 
     Per-task kernel (pure numpy, no scipy in the container):
     binary-search each broadcast (qid, term, qw) posting into the
@@ -160,10 +163,11 @@ def sparse_topk_sharded(
         qpdf["w"].to_numpy(dtype=np.int64),
     )
     bc = spark.sparkContext.broadcast(bq)
-    par = max(1, min(len(files), 4 * spark.sparkContext.defaultParallelism))
-    fdf = spark.createDataFrame(
-        spark.sparkContext.parallelize([(p,) for p in files], par),
+    fdf = launch_units(
+        spark,
+        [(p,) for p in files],
         "path STRING",
+        cost=[int(rg_rows(p).sum()) for p in files],
     )
 
     def serve(it):

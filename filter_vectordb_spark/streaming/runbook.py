@@ -223,6 +223,12 @@ class StreamingReplayer:
         self._source = source
         self._source_inserted = False
 
+    @property
+    def source_bound(self) -> bool:
+        """True when inserts are id-range slices of the bound source
+        (rows may be None); False for the unbound, row-carrying mode."""
+        return self._source is not None
+
     def _truncate_lineage(self, force: bool = False) -> None:
         self._mutations += 1
         if force or self._mutations % self.CHECKPOINT_EVERY == 0:
@@ -316,8 +322,11 @@ class StreamingReplayer:
             self.consolidations += 1
 
     def consolidate(self) -> None:
-        """Explicit compaction (Delta OPTIMIZE analog)."""
+        """Explicit compaction (Delta OPTIMIZE analog).  A no-op before
+        the first insert in both modes, so the counters stay in parity."""
         if self._source is not None:
+            if not self._source_inserted:
+                return
             self.unprocessed_deletes = 0
             self.consolidations += 1
             return
@@ -411,7 +420,7 @@ def replay(
         if step.operation == "insert":
             rows = (
                 None
-                if rp._source is not None
+                if rp.source_bound
                 else source.filter(F.col("id").between(step.start, step.end - 1))
             )
             rp.insert(rows, step.start, step.end)

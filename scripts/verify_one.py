@@ -23,6 +23,15 @@ names = args
 from filter_vectordb_spark import TABLES, get_spark  # noqa: E402
 from filter_vectordb_spark.registry import ORACLES, QUERIES  # noqa: E402
 
+unknown = [n for n in names if n not in QUERIES]
+if unknown or not names:
+    print(
+        f"unknown query name(s): {' '.join(unknown) or '(none given)'}\n"
+        f"valid names: {' '.join(sorted(QUERIES))}",
+        file=sys.stderr,
+    )
+    sys.exit(2)
+
 spark = get_spark("verify_one")
 bad = 0
 for sf in sfs:
@@ -37,9 +46,16 @@ for sf in sfs:
             continue
         right = con.sql(sql).df()
         cols = sorted(left.columns)
+        if cols != sorted(right.columns):
+            print(
+                f"{sf} {name} MISMATCH (cols) {cols} vs {sorted(right.columns)}",
+                flush=True,
+            )
+            bad += 1
+            continue
         l = left[cols].sort_values(cols).reset_index(drop=True).astype(str)
         r = right[cols].sort_values(cols).reset_index(drop=True).astype(str)
-        ok = cols == sorted(right.columns) and l.equals(r)
+        ok = l.equals(r)
         print(f"{sf} {name} {'MATCH' if ok else 'MISMATCH'}", flush=True)
         bad += 0 if ok else 1
 spark.stop()

@@ -248,10 +248,11 @@ def test_gemm_topk_threshold_keeps_boundary_ties_f32():
     """f32 scores with many exact boundary ties: the pruned path's
     candidate pool must include tied values (>= / <= compare), so the
     selected VALUE multiset equals brute force even when the k-th place
-    ties broadly."""
+    ties broadly — and the selected (id, dist) set is the exact
+    (dist, id asc) one across chunk sizes and streamed units."""
     import numpy as np
 
-    from filter_vectordb_spark.operators.knn import gemm_topk
+    from filter_vectordb_spark.operators.knn import StreamTopK, gemm_topk
 
     rng = np.random.RandomState(5)
     nq, nb, d, k = 4, 1500, 8, 10
@@ -263,3 +264,114 @@ def test_gemm_topk_threshold_keeps_boundary_ties_f32():
     for qi in range(nq):
         want = -np.sort(-D[qi])[:k]
         assert np.array_equal(-np.sort(-dist[qi]), want), qi
+
+    # exact (dist, id asc) selection: a tie at the k-th distance keeps
+    # the lowest ids, whatever the chunking or the unit grouping
+    def pairs(ids, vals):
+        return [sorted(zip(i.tolist(), v.tolist())) for i, v in zip(ids, vals)]
+
+    want_ids = np.array([np.lexsort((np.arange(nb), -D[qi]))[:k] for qi in range(nq)])
+    want = pairs(want_ids, np.take_along_axis(D, want_ids, axis=1))
+    assert any(
+        (D[qi] == D[qi, want_ids[qi, -1]]).sum() > (D[qi, want_ids[qi]] == D[qi, want_ids[qi, -1]]).sum()
+        for qi in range(nq)
+    )  # some row really has ties cut at the boundary
+    assert pairs(idx, dist) == want
+    assert pairs(*gemm_topk(Q, None, X, None, "ip", k, chunk=37)) == want
+    acc = StreamTopK(nq, k, "ip")
+    for lo, hi in ((1000, nb), (0, 400), (400, 1000)):  # three units, any order
+        acc.scan(Q, None, X[lo:hi], None, np.arange(lo, hi), chunk=128)
+    assert pairs(*acc.result()) == want
+
+
+def test_stream_topk_seed_holds_until_first_merge():
+    """An empty accumulator seeds its threshold from the k-th best of
+    the first block's first SEED_COLS columns and keeps it until a merge
+    tightens it, so later blocks add only their few better scores as
+    candidates (a dropped seed let a whole second block through)."""
+    import numpy as np
+
+    from filter_vectordb_spark.operators.knn import SEED_COLS, StreamTopK
+
+    rng = np.random.RandomState(2)
+    D = rng.rand(64, 2048)
+    acc = StreamTopK(64, 10, "l2")
+    acc.push(D, np.arange(2048))
+    assert np.array_equal(acc.thr, np.sort(D[:, :SEED_COLS], axis=1)[:, 9])
+    acc.push(rng.rand(64, 2048), np.arange(2048, 4096))
+    assert acc._npend < 64 * 2048 // 4
+
+
+def test_launch_units_one_task_per_core_balanced(spark):
+    """launch_units places every unit exactly once into
+    min(n, defaultParallelism) partitions, longest-first by cost, so the
+    heaviest partition exceeds the lightest by at most one unit's cost;
+    no units give an empty frame of the unit schema."""
+    import numpy as np
+
+    from filter_vectordb_spark.operators.knn import launch_units
+
+    dp = spark.sparkContext.defaultParallelism
+    rng = np.random.RandomState(1)
+    schema = "i INT, name STRING"
+    for n in (3, dp, 5 * dp + 3):
+        units = [(i, f"u{i}") for i in range(n)]
+        for cost in (rng.randint(1, 1000, n).tolist(), None):
+            df = launch_units(spark, units, schema, cost)
+            parts = df.rdd.glom().map(lambda rows: [r.i for r in rows]).collect()
+            assert len(parts) == min(n, dp)
+            assert sorted(i for p in parts for i in p) == list(range(n))
+            c = cost or [1] * n
+            loads = [sum(c[i] for i in p) for p in parts]
+            assert max(loads) <= min(loads) + max(c), (n, loads)
+    empty = launch_units(spark, [], schema)
+    assert empty.collect() == [] and empty.schema.simpleString() == "struct<i:int,name:string>"
+
+
+def test_empty_units_give_typed_empty_frames(spark, tmp_path):
+    """Callers whose unit list comes out empty still return their typed
+    empty (qid, id, dist) frame."""
+    import json
+
+    import numpy as np
+    import pandas as pd
+
+    from filter_vectordb_spark.index.filteridx_kernels import (
+        _score_meta_bin,
+        _score_pairview,
+    )
+
+    off = np.zeros(4)
+    q = pd.DataFrame(
+        {"qid": [1], "qemb": [[1.0, 2.0, 3.0, 4.0]], "tag_a": [5], "tag_b": [6], "qtags": [[5, 6]]}
+    )
+    (tmp_path / "_SUCCESS.json").write_text(json.dumps({"d": 4, "files": []}))
+    for df in (
+        _score_pairview(spark, {}, q, K, off),
+        _score_meta_bin(spark, str(tmp_path), q, K, off),
+    ):
+        assert df.collect() == []
+        assert df.schema.simpleString() == "struct<qid:bigint,id:bigint,dist:double>"
+
+
+def test_direct_read_scan_runs_one_task_per_core(spark, tmp_path):
+    """The direct-read knn_join scan stage runs defaultParallelism tasks
+    when there are more units than cores (one Python task per core)."""
+    from filter_vectordb_spark.sources.synth import synth_queries, synth_uint8_base
+
+    sc = spark.sparkContext
+    dp = sc.defaultParallelism
+    out = str(tmp_path / "staged_base")
+    synth_uint8_base(spark, n=3000).select("id", "emb").repartition(3 * dp).write.parquet(out)
+    staged = spark.read.parquet(out)
+    q = synth_queries(spark, nq=4).select("qid", "qemb")
+    res = knn_join(q, staged, K, metric="ip", compute_dtype="float32", base_dir=out)
+    group = "test-direct-read-scan-tasks"
+    sc.setJobGroup(group, "scan stage task count")
+    try:
+        assert res.count() == 4 * K
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    stages = sorted(s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds)
+    assert st.getStageInfo(stages[0]).numTasks == dp

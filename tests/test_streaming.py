@@ -445,3 +445,27 @@ def test_source_bound_replay_matches_unbound(spark, tmp_path):
     assert bound.consolidations == unbound.consolidations
     assert bound.unprocessed_deletes == unbound.unprocessed_deletes
     assert want.equals(got), (want.head(), got.head())
+
+
+def test_consolidate_counter_parity_between_modes(spark):
+    """An explicit consolidate() is a no-op before the first insert in
+    BOTH replayer modes, and afterwards counts identically — the
+    source-bound mode used to count one consolidation with nothing
+    inserted."""
+    from filter_vectordb_spark.sources.synth import synth_uint8_base
+    from filter_vectordb_spark.streaming.runbook import StreamingReplayer
+
+    base = synth_uint8_base(spark, n=200, d=8).select("id", "emb")
+    unbound = StreamingReplayer(spark, max_pts=1000)
+    bound = StreamingReplayer(spark, max_pts=1000, source=base)
+    assert not unbound.source_bound and bound.source_bound
+    for rp in (unbound, bound):
+        rp.consolidate()
+    assert bound.consolidations == unbound.consolidations == 0
+    unbound.insert(base.filter("id < 100"), 0, 100)
+    bound.insert(None, 0, 100)
+    for rp in (unbound, bound):
+        rp.delete_range(10, 20)
+        rp.consolidate()
+    assert bound.consolidations == unbound.consolidations == 1
+    assert bound.unprocessed_deletes == unbound.unprocessed_deletes == 0
