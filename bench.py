@@ -348,6 +348,23 @@ def taxed_retry_granted(name: str, dt: float, runs_done: int, elapsed: float) ->
     )
 
 
+def arena_warm_mb(ncpu: int, meminfo: str = "/proc/meminfo") -> int:
+    """Per-worker arena warm size in MB: SPARK_GRAFT_ARENA_WARM_MB
+    (default 768, the heaviest kernels' per-worker peak), capped so the
+    ncpu workers that warm at once touch at most half of MemAvailable —
+    uncapped, 32 workers × 768 MB can OOM the host.  No cap when
+    MemAvailable cannot be read."""
+    want = int(os.environ.get("SPARK_GRAFT_ARENA_WARM_MB", "768"))
+    try:
+        with open(meminfo) as f:
+            avail_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemAvailable:")
+            )
+    except (OSError, StopIteration):
+        return want
+    return max(0, min(want, (avail_kb >> 10) // (2 * max(1, ncpu))))
+
+
 def main() -> None:
     t_proc = time.perf_counter()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -505,10 +522,10 @@ def main() -> None:
     # ~0 — the tax is host-side page refault, ~45 µs/page).  Process
     # warm-up only — the Python analog of the JVM spark.range warm-up
     # above; no query data or results are touched.
-    # sized to the heaviest kernels' per-worker peak (~0.5-1 GB, session
-    # notes); parameterised like the other scale knobs — on a real
-    # cluster this is per-executor-worker sizing, not a local constant
-    warm_mb = int(os.environ.get("SPARK_GRAFT_ARENA_WARM_MB", "768"))
+    # sized by arena_warm_mb: the heaviest kernels' per-worker peak,
+    # capped by MemAvailable
+    ncpu = spark.sparkContext.defaultParallelism
+    warm_mb = arena_warm_mb(ncpu)
 
     def _arena_warm(it):
         import numpy as _np
@@ -523,12 +540,11 @@ def main() -> None:
             yield b
 
     t0 = time.perf_counter()
-    ncpu = spark.sparkContext.defaultParallelism
     spark.range(0, ncpu, 1, ncpu).mapInArrow(_arena_warm, "id long").write.format(
         "noop"
     ).mode("overwrite").save()
     print(
-        f"bench: worker arena warm x{ncpu} {time.perf_counter() - t0:.1f}s",
+        f"bench: worker arena warm x{ncpu} {warm_mb} MB {time.perf_counter() - t0:.1f}s",
         file=sys.stderr,
     )
 

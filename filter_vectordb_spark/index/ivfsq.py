@@ -26,6 +26,7 @@ step per component, so refine=64 has margin; pinned in tests/test_sq.py).
 
 from __future__ import annotations
 
+import ctypes
 import os
 
 import numpy as np
@@ -35,6 +36,7 @@ from pyspark.sql import functions as F
 from filter_vectordb_spark.index.sq import _scales, encode_sq, train_sq
 from filter_vectordb_spark.operators.knn import launch_units
 from filter_vectordb_spark.operators.topk import per_group_topk
+from filter_vectordb_spark.session import openblas_fn
 
 
 def build_ivfsq(
@@ -148,35 +150,16 @@ def load_ivfsq(spark: SparkSession, out_dir: str):
 
 
 def _driver_blas_threads() -> "object | None":
-    """ctypes handle to numpy's bundled OpenBLAS thread setter (the
-    ILP64 build suffixes symbols with `64_`), or None.  The session
-    pins OPENBLAS_NUM_THREADS=1 process-wide so EXECUTOR workers never
-    oversubscribe N² threads — but the DRIVER-side ranking GEMM then
-    runs single-threaded on a 32-core box (measured 12.2 s vs 4.2 s for
-    the nq=64k ranking block).  The setter lets driver-only kernels
-    borrow the cores and hand them back."""
-    global _BLAS_SETTER
-    if _BLAS_SETTER is _UNSET:
-        import ctypes
-        import glob
-        import os
-
-        _BLAS_SETTER = None
-        for pat in ("numpy.libs/*openblas*", "scipy.libs/*openblas*"):
-            hits = glob.glob(os.path.join(np.__path__[0], "..", pat))
-            if hits:
-                lib = ctypes.CDLL(hits[0])
-                for sym in ("openblas_set_num_threads64_", "openblas_set_num_threads"):
-                    fn = getattr(lib, sym, None)
-                    if fn is not None:
-                        _BLAS_SETTER = fn
-                        break
-                break
-    return _BLAS_SETTER
-
-
-_UNSET = object()
-_BLAS_SETTER = _UNSET
+    """ctypes handle to numpy's bundled OpenBLAS thread setter, or None.
+    The session pins OPENBLAS_NUM_THREADS=1 process-wide so EXECUTOR
+    workers never oversubscribe N² threads — but the DRIVER-side ranking
+    GEMM then runs single-threaded on a 32-core box (measured 12.2 s vs
+    4.2 s for the nq=64k ranking block).  The setter lets driver-only
+    kernels borrow the cores and hand them back."""
+    fn = openblas_fn("openblas_set_num_threads64_", "openblas_set_num_threads")
+    if fn is not None:
+        fn.argtypes, fn.restype = [ctypes.c_int], None
+    return fn
 
 
 class driver_blas:
@@ -331,8 +314,10 @@ def _ivfsq_score_chunk(
     hot-list query slicing."""
     qids_np, Q, probe_map = _probe_map(chunk_pdf, C, cids, nprobe, metric)
 
-    # float32 decode + GEMM: ~30× faster than float64 on this host's
-    # OpenBLAS (502 vs 16 GFLOPS measured) and safe here by design — the
+    # float32 decode + GEMM: about twice the float64 rate (the absolute
+    # rate depends on the OpenBLAS kernels loaded — single-thread f32
+    # GEMM 23-25 GFLOP/s on the SSE3 fallback, 108-141 on AVX-512; see
+    # session._GENERIC_CORES) and safe here by design — the
     # ADC stage only nominates `refine` candidates whose margin is set by
     # SQ8 quantization error (≥ half a grid step per component), orders of
     # magnitude above float32 rounding; survivors are exact-rescored in

@@ -541,8 +541,11 @@ def knn_join(
     """Returns (qid BIGINT, id BIGINT, dist DOUBLE, rank INT), rank 1..k.
 
     compute_dtype="float32" runs the BLAS block in single precision —
-    ~30× faster on this host's OpenBLAS build (502 vs 16 GFLOPS
-    measured) and EXACT, not approximate, when both sides are
+    about twice the float64 rate, with the absolute rate set by which
+    OpenBLAS kernels load (single-thread f32 GEMM at 1024×192 · 192×2048
+    measured 23-25 GFLOP/s on the SSE3 fallback, 108-141 on the AVX-512
+    kernels session.get_spark selects for its workers) — and
+    EXACT, not approximate, when both sides are
     integer-valued with |component| ≤ 255 and d ≤ 192: every product
     (≤ 65025) and every partial dot-product sum (≤ 192·65025 < 2²⁴) is
     an integer float32 represents exactly, so G == the float64 result

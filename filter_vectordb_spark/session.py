@@ -5,10 +5,19 @@ join-strategy changes + skew-join splitting), Arrow on (all our Python
 kernels are pandas-UDF based), shuffle partitions sized to cores rather
 than the 200 default, UTC session timezone so results hash-compare against
 the DuckDB oracle (DuckDB timestamps are UTC-naive).
+
+Kernel selection: numpy's bundled OpenBLAS picks its GEMM kernels by CPU
+model and falls back to its SSE3 (Prescott) kernels on a model it does not
+know, so when it reports such a core on a CPU whose flags list AVX-512 or
+AVX2+FMA, get_spark exports OPENBLAS_CORETYPE (SkylakeX or Haswell) for the
+local Python workers it forks — never over a user's own setting, and never
+as executorEnv, since remote executors must detect their own CPU.
 """
 
 from __future__ import annotations
 
+import ctypes
+import functools
 import os
 
 from pyspark.sql import SparkSession
@@ -56,6 +65,90 @@ _MALLOC_ENV = {
 }
 
 
+#: OpenBLAS DYNAMIC_ARCH core names (lower-cased) with no AVX2/FMA
+#: kernels: Prescott, what 0.3.23 falls back to on a CPU model it does
+#: not recognise, and its pre-AVX kin.  Measured on an AVX-512 host that fell
+#: back to Prescott: single-thread f32 GEMM at the scan's shape
+#: (1024×192 · 192×2048) 23-25 GFLOP/s, 108-141 with SkylakeX kernels.
+_GENERIC_CORES = frozenset({
+    "unknown", "katmai", "coppermine", "northwood", "prescott", "banias",
+    "atom", "core2", "penryn", "dunnington", "nehalem", "athlon", "opteron",
+    "opteron_sse3", "barcelona", "nano", "bobcat",
+})
+_AVX512_FLAGS = frozenset({"avx512f", "avx512bw", "avx512vl", "avx512dq", "avx512cd"})
+_AVX2_FLAGS = frozenset({"avx2", "fma"})
+
+
+@functools.cache
+def _openblas_lib() -> "ctypes.CDLL | None":
+    """numpy's (else scipy's) bundled OpenBLAS, opened with ctypes."""
+    import glob
+
+    import numpy as np
+
+    for pat in ("numpy.libs/*openblas*", "scipy.libs/*openblas*"):
+        hits = glob.glob(os.path.join(np.__path__[0], "..", pat))
+        if hits:
+            return ctypes.CDLL(hits[0])
+    return None
+
+
+def openblas_fn(*names: str):
+    """The first of `names` the bundled OpenBLAS exports (ILP64 builds
+    suffix every symbol with `64_`), or None."""
+    lib = _openblas_lib()
+    if lib is None:
+        return None
+    for sym in names:
+        fn = getattr(lib, sym, None)
+        if fn is not None:
+            return fn
+    return None
+
+
+def _cpu_flags(path: str = "/proc/cpuinfo") -> "frozenset[str] | None":
+    """The first CPU's feature flags, or None when they cannot be read."""
+    try:
+        with open(path) as f:
+            for line in f:
+                if line.startswith("flags"):
+                    return frozenset(line.partition(":")[2].split())
+    except OSError:
+        pass
+    return None
+
+
+def _blas_coretype(core: "str | None", flags: "frozenset[str] | None", env) -> "str | None":
+    """The OPENBLAS_CORETYPE to export, or None to leave OpenBLAS alone:
+    only when the user set none, OpenBLAS chose a generic pre-AVX core,
+    and the CPU's flags prove the faster kernels' instructions exist."""
+    if "OPENBLAS_CORETYPE" in env or not core or not flags:
+        return None
+    if core.lower() not in _GENERIC_CORES:
+        return None
+    if _AVX512_FLAGS <= flags:
+        return "SkylakeX"
+    if _AVX2_FLAGS <= flags:
+        return "Haswell"
+    return None
+
+
+def _select_blas_kernels() -> None:
+    """Export the OPENBLAS_CORETYPE _blas_coretype picks.  OpenBLAS reads
+    it at load time, so it reaches the Python workers (forked through the
+    JVM → pyspark.daemon chain from this environment) but not this
+    already-loaded driver; on the integer-valued f32 path results stay
+    bit-identical (every partial sum is an exact integer below 2²⁴)."""
+    fn = openblas_fn("openblas_get_corename64_", "openblas_get_corename")
+    if fn is None:
+        return
+    fn.argtypes, fn.restype = [], ctypes.c_char_p
+    core = (fn() or b"").decode(errors="replace")
+    choice = _blas_coretype(core, _cpu_flags(), os.environ)
+    if choice is not None:
+        os.environ["OPENBLAS_CORETYPE"] = choice
+
+
 def get_spark(app_name: str = "filter_vectordb_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -70,6 +163,7 @@ def get_spark(app_name: str = "filter_vectordb_spark", cpus: int | None = None) 
     # executorEnv for completeness on a real cluster
     for k, v in {**_BLAS_ENV, **malloc_env}.items():
         os.environ.setdefault(k, v)
+    _select_blas_kernels()  # local process env only, never executorEnv
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

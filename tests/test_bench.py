@@ -193,3 +193,25 @@ def test_scale_block_order_record_debt_first():
         assert pos[n] < pos["filtered_knn_yfcc_10m"], n
         assert pos[n] < pos["filtered_knn_yfcc_10m_ivf"], n
     assert pos["filtered_knn_yfcc_10m_ivf"] < pos["knn_ip_10m"]
+
+
+def test_arena_warm_capped_at_half_mem_available(tmp_path, monkeypatch):
+    """ADVICE r12: ncpu × 768 MB at once can OOM the host — the warm is
+    capped at half of MemAvailable, the env override still applies
+    under the cap, and an unreadable meminfo leaves the size uncapped."""
+    from bench import arena_warm_mb
+
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemTotal:       16000000 kB\nMemAvailable:    8388608 kB\n")
+    monkeypatch.delenv("SPARK_GRAFT_ARENA_WARM_MB", raising=False)
+    assert arena_warm_mb(4, str(meminfo)) == 768  # 8 GB / 2 / 4 = 1024 ≥ 768
+    assert arena_warm_mb(32, str(meminfo)) == 128  # 8 GB / 2 / 32
+    monkeypatch.setenv("SPARK_GRAFT_ARENA_WARM_MB", "256")
+    assert arena_warm_mb(4, str(meminfo)) == 256
+    assert arena_warm_mb(64, str(meminfo)) == 64  # the cap binds the override too
+    monkeypatch.setenv("SPARK_GRAFT_ARENA_WARM_MB", "0")
+    assert arena_warm_mb(4, str(meminfo)) == 0
+    monkeypatch.setenv("SPARK_GRAFT_ARENA_WARM_MB", "768")
+    assert arena_warm_mb(32, str(tmp_path / "missing")) == 768
+    meminfo.write_text("MemTotal:       16000000 kB\n")  # no MemAvailable line
+    assert arena_warm_mb(32, str(meminfo)) == 768

@@ -509,25 +509,16 @@ def test_driver_blas_restores_single_thread():
     if fn is None:
         pytest.skip("no OpenBLAS thread setter in this numpy build")
 
-    # locate the matching GETTER in the same OpenBLAS build (ADVICE r7:
-    # the previous behavioral check compared an expression to itself —
-    # vacuous); ILP64 builds suffix with 64_
+    # the matching GETTER in the same OpenBLAS build (ADVICE r7: the
+    # previous behavioral check compared an expression to itself —
+    # vacuous)
     import ctypes
-    import glob
-    import os
 
-    getter = None
-    for pat in ("numpy.libs/*openblas*", "scipy.libs/*openblas*"):
-        hits = glob.glob(os.path.join(np.__path__[0], "..", pat))
-        if hits:
-            lib = ctypes.CDLL(hits[0])
-            for sym in ("openblas_get_num_threads64_", "openblas_get_num_threads"):
-                g = getattr(lib, sym, None)
-                if g is not None:
-                    g.restype = ctypes.c_int
-                    getter = g
-                    break
-            break
+    from filter_vectordb_spark.session import openblas_fn
+
+    getter = openblas_fn("openblas_get_num_threads64_", "openblas_get_num_threads")
+    if getter is not None:
+        getter.restype = ctypes.c_int
     if getter is None:
         pytest.skip("no OpenBLAS thread getter in this numpy build")
 
