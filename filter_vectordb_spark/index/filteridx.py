@@ -615,7 +615,6 @@ from filter_vectordb_spark.index.filteridx_kernels import (  # noqa: F401
     _decode_poison,
     _flat_tags,
     _hit_lists,
-    _partials_compact,
     _probed_lut,
     _score_meta,
     _score_meta_bin,

@@ -2,9 +2,17 @@
 of index/filteridx.py (VERDICT r8 #8) so build/route/search stay
 reviewable there.  See filteridx's module docstring for the route map
 (R1 pair view / R2-R3 tag view / R4 metadata-first) and the reference
-citations; this module holds the direct-read mapInArrow serve kernels
-plus their shared decode/posting helpers.  No behavior change from the
-split — the hash-checked nq32 rows pin that."""
+citations; this module holds the serve kernels plus their shared
+decode/posting helpers.
+
+Every kernel is one scoring body on the engine's one scan skeleton
+(operators/knn.py): it plans its units — parquet row groups or memmap
+sidecar files — and hands them to `scan_units`, which broadcasts the
+query payload, launches one Python task per core and calls the body
+with that task's units; the body feeds its candidates into one
+`TaskPartials`, whose emit() is the task's single bounded partial
+top-k for the global merge.  The hash-checked nq32 rows pin the
+results."""
 
 from __future__ import annotations
 
@@ -15,8 +23,12 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from filter_vectordb_spark.index.tagpart import _f32_exact_ok
-from filter_vectordb_spark.operators.knn import launch_units, rg_rows, rg_units
+from filter_vectordb_spark.index.tagpart import _f32_exact_ok, _l2_topk
+from filter_vectordb_spark.operators.knn import TaskPartials, rg_rows, rg_units, scan_units
+
+#: schema of every route kernel's per-task partial
+_PARTIAL = "qid long, id long, dist double"
+
 
 def _score_pairview(
     spark: SparkSession,
@@ -37,68 +49,43 @@ def _score_pairview(
             np.stack(grp["qemb"].to_numpy()).astype(np.float64),
         )
     use_f32 = _f32_exact_ok(np.stack(qpdf["qemb"].to_numpy()).astype(np.float64))
+    nq = len(qpdf)
     units, cost = [], []
     for pr, (qids, _Q) in groups.items():
         for p, lo, hi, rows in rg_units(spark, list(pair_files.get(pr, ()))):
             units.append((pr[0], pr[1], p, lo, hi))
             cost.append(rows * len(qids))
-    if not units:
-        return spark.createDataFrame([], "qid LONG, id LONG, dist DOUBLE")
-    bc = spark.sparkContext.broadcast((groups, off, use_f32))
-    fdf = launch_units(
-        spark, units, "tag_a INT, tag_b INT, path STRING, rg_lo INT, rg_hi INT", cost
-    )
 
-    def serve(it):
+    def serve(payload, units):
         import pyarrow.parquet as pq
 
-        from filter_vectordb_spark.operators.knn import gemm_topk, task_topk_merge
-
-        bgroups, boff, bf32 = bc.value
-        cap = max(
-            65_536, 8 * k * sum(len(g[0]) for g in bgroups.values())
-        )
-        out_q, out_i, out_d = [], [], []
-        for batch in it:
-            for a, b, path, lo, hi in zip(
-                batch.column("tag_a").to_pylist(),
-                batch.column("tag_b").to_pylist(),
-                batch.column("path").to_pylist(),
-                batch.column("rg_lo").to_pylist(),
-                batch.column("rg_hi").to_pylist(),
-            ):
-                qg = bgroups.get((a, b))
-                if qg is None:
-                    continue
-                qids, Q = qg
-                tbl = pq.ParquetFile(path).read_row_groups(
-                    list(range(lo, hi)), columns=["id", "codes"]
-                )
-                n = tbl.num_rows
-                if n == 0:
-                    continue
-                ids = tbl.column("id").to_numpy(zero_copy_only=False)
-                X = _decode(tbl.column("codes"), None, n, boff, bf32)
-                xn = _sqnorms(X)
-                Qc = Q.astype(np.float32) if X.dtype == np.float32 else Q
-                qn = (Q * Q).sum(axis=1)
-                part, dist = gemm_topk(Qc, qn, X, xn, "l2", k)
-                out_q.append(np.repeat(qids, part.shape[1]))
-                out_i.append(ids[part].ravel())
-                out_d.append(dist.ravel())
-                out_q, out_i, out_d = _partials_compact(
-                    out_q, out_i, out_d, k, cap
-                )
-        if out_q:
-            yield task_topk_merge(
-                np.concatenate(out_q),
-                np.concatenate(out_i),
-                np.concatenate(out_d),
-                k,
-                largest=False,
+        bgroups, boff, bf32 = payload
+        out = TaskPartials(k, nq, False)
+        for a, b, path, lo, hi in units:
+            qg = bgroups.get((a, b))
+            if qg is None:
+                continue
+            qids, Q = qg
+            tbl = pq.ParquetFile(path).read_row_groups(
+                list(range(lo, hi)), columns=["id", "codes"]
             )
+            n = tbl.num_rows
+            if n == 0:
+                continue
+            ids = tbl.column("id").to_numpy(zero_copy_only=False)
+            X = _decode(tbl.column("codes"), None, n, boff, bf32)
+            _l2_topk(out, qids, Q, X, _sqnorms(X), ids)
+        yield from out.emit()
 
-    return fdf.mapInArrow(serve, schema="qid long, id long, dist double")
+    return scan_units(
+        spark,
+        units,
+        "tag_a INT, tag_b INT, path STRING, rg_lo INT, rg_hi INT",
+        cost,
+        (groups, off, use_f32),
+        serve,
+        _PARTIAL,
+    )
 
 
 def _flat_tags(tbl_col, n: int):
@@ -193,28 +180,6 @@ def _decode(codes_col, rows: np.ndarray | None, n: int, off: np.ndarray, f32: bo
     return X
 
 
-def _partials_compact(out_q: list, out_i: list, out_d: list, k: int, cap: int):
-    """Bound a serve loop's accumulated (qid, id, dist) partials: past
-    `cap` rows, reduce to per-qid top-k (the task_topk_merge lexsort)
-    and keep only the survivors — per-task high-water memory stays
-    O(nq·k + cap) however many units the task scores (ADVICE r8: the
-    flat-pair kernels otherwise accumulate every candidate distance
-    until iterator end, unbounded on hot tags / large nprobe)."""
-    if sum(a.size for a in out_d) <= cap:
-        return out_q, out_i, out_d
-    q = np.concatenate(out_q)
-    i = np.concatenate(out_i)
-    d = np.concatenate(out_d)
-    order = np.lexsort((i, d, q))
-    q, i, d = q[order], i[order], d[order]
-    starts = np.flatnonzero(np.r_[True, q[1:] != q[:-1]])
-    rank = np.arange(len(q)) - np.repeat(
-        starts, np.diff(np.r_[starts, len(q)])
-    )
-    keep = rank < k
-    return [q[keep]], [i[keep]], [d[keep]]
-
-
 def _sqnorms(X: np.ndarray) -> np.ndarray:
     """Per-row squared norms as float64.  On the f32 integer-exact path
     the products and every partial sum stay below 2²⁴, so one f32
@@ -253,6 +218,17 @@ def _csr_restrict(prefix: str, probed: np.ndarray):
     return prow_cat, starts
 
 
+def _open_bin(bin_dir: str, stem: str, n: int, d: int):
+    """(ids, xn, C8) of one memmap sidecar file: row ids, persisted
+    squared norms and the (n, d) int8 codes, all page-cache backed."""
+    p = f"{bin_dir}/{stem}"
+    return (
+        np.load(f"{p}.ids.npy", mmap_mode="r"),
+        np.load(f"{p}.xn.npy", mmap_mode="r"),
+        np.memmap(f"{p}.codes.bin", dtype=np.int8, mode="r", shape=(n, d)),
+    )
+
+
 def _tag_units(spark: SparkSession, groups: dict, tag_files: dict, bins):
     """Task units for the R2/R3 kernels: memmap-sidecar units
     (tag, key, -1, n) when the tag is in the bin manifest, parquet
@@ -275,15 +251,17 @@ def _tag_units(spark: SparkSession, groups: dict, tag_files: dict, bins):
     return units, bin_dir, bin_d
 
 
-def _launch_tag_units(spark: SparkSession, units: list, groups: dict) -> DataFrame:
-    """launch_units over _tag_units' units, each costing its rows × the
+def _scan_tag_units(spark: SparkSession, units: list, groups: dict, payload, serve) -> DataFrame:
+    """scan_units over _tag_units' units, each costing its rows × the
     tag's query count."""
     nq = {t: sum(len(g[1]) for g in gl) for t, gl in groups.items()}
     cost = [
         (hi if lo < 0 else int(rg_rows(p)[lo:hi].sum())) * nq[t]
         for t, p, lo, hi in units
     ]
-    return launch_units(spark, units, "tag INT, path STRING, rg_lo INT, rg_hi INT", cost)
+    return scan_units(
+        spark, units, "tag INT, path STRING, rg_lo INT, rg_hi INT", cost, payload, serve, _PARTIAL
+    )
 
 
 def _score_tagview(
@@ -311,196 +289,153 @@ def _score_tagview(
             )
         )
     use_f32 = _f32_exact_ok(np.stack(qpdf["qemb"].to_numpy()).astype(np.float64))
-    units, bin_dir, bin_d = _tag_units(spark, groups, tag_files, bins)
-    if not units:
-        return spark.createDataFrame([], "qid LONG, id LONG, dist DOUBLE")
-    bc = spark.sparkContext.broadcast(
-        (groups, off, use_f32, has_xn, bin_dir, bin_d)
-    )
-    fdf = _launch_tag_units(spark, units, groups)
+    nq = len(qpdf)
 
-    def serve(it):
+    def serve(payload, units):
         import pyarrow.parquet as pq
 
-        from filter_vectordb_spark.operators.knn import gemm_topk, task_topk_merge
-
-        bgroups, boff, bf32, bxn, bdir, bd = bc.value
+        bgroups, boff, bf32, bxn, bdir, bd = payload
         int8_direct = bf32 and _int_off_ok(boff)
-        cap = max(
-            65_536,
-            8 * k * sum(len(g[1]) for gl in bgroups.values() for g in gl),
-        )
-        out_q, out_i, out_d = [], [], []
-        for batch in it:
-            for tag, path, lo, hi in zip(
-                batch.column("tag").to_pylist(),
-                batch.column("path").to_pylist(),
-                batch.column("rg_lo").to_pylist(),
-                batch.column("rg_hi").to_pylist(),
-            ):
-                tgroups = bgroups.get(tag)
-                if not tgroups:
-                    continue
-                others = np.array(
-                    sorted({o for o, _, _ in tgroups if o >= 0}), dtype=np.int64
-                )
-                has_single = any(o < 0 for o, _, _ in tgroups)
-                starts = prow = None
-                if lo < 0:  # memmap sidecar unit: path = key, hi = n
-                    n = hi
-                    if n == 0:
-                        continue
-                    ids = np.load(f"{bdir}/{path}.ids.npy", mmap_mode="r")
-                    xn_col = np.load(f"{bdir}/{path}.xn.npy", mmap_mode="r")
-                    codes_src = np.memmap(
-                        f"{bdir}/{path}.codes.bin",
-                        dtype=np.int8,
-                        mode="r",
-                        shape=(n, bd),
-                    )
-                    if len(others):
-                        prow, starts = _csr_restrict(f"{bdir}/{path}", others)
-                else:
-                    cols = (
-                        ["id"]
-                        + (["xn"] if bxn else [])
-                        + ["codes"]
-                        + (["tags"] if len(others) else [])
-                    )
-                    tbl = pq.ParquetFile(path).read_row_groups(
-                        list(range(lo, hi)), columns=cols
-                    )
-                    n = tbl.num_rows
-                    if n == 0:
-                        continue
-                    ids = tbl.column("id").to_numpy(zero_copy_only=False)
-                    xn_col = (
-                        tbl.column("xn").to_numpy(zero_copy_only=False)
-                        if bxn
-                        else None
-                    )
-                    codes_src = tbl.column("codes")
-                    if len(others):
-                        # every unit row already carries THIS tag, so the
-                        # conjunction candidates of a (tag, other) group
-                        # are exactly `other`'s posting list in the unit
-                        flat, row_of = _flat_tags(tbl.column("tags"), n)
-                        _pt, prow, starts = _hit_lists(
-                            flat, row_of, others, _probed_lut(others)
-                        )
-                # masked 2-tag groups: flat (query, row) pairs, scored in
-                # one chunked integer-exact einsum (the per-group slice +
-                # BLAS-call loop ran |others| × units times)
-                pq_ = []
-                for other, qids, Q in tgroups:
-                    if other < 0:
-                        continue
-                    oi = int(np.searchsorted(others, other))
-                    rows = prow[starts[oi] : starts[oi + 1]]
-                    if len(rows) == 0:
-                        continue
-                    m = len(qids)
-                    nb = sum(g[2].shape[0] for g in pq_)  # query-row base
-                    pq_.append(
-                        (
-                            np.repeat(qids, len(rows)),
-                            nb + np.repeat(np.arange(m, dtype=np.int64), len(rows)),
-                            Q,
-                            np.tile(rows, m),
-                        )
-                    )
-                if not has_single and not pq_:
-                    continue  # every group masked and no candidates here
-                # decode: the whole unit when a single-tag group scans it
-                # anyway (GEMM over all rows), else only the union of the
-                # masked groups' candidate rows (VERDICT r8 #1b) — and
-                # with the r11 int8-direct path (persisted norms +
-                # integral grid) not even that: masked pairs score
-                # straight off the int8 codes below
-                fast_pairs = (
-                    not has_single and int8_direct and xn_col is not None
-                )
-                if has_single:
-                    X_all = _decode(codes_src, None, n, boff, bf32)
-                    xn_all = xn_col if xn_col is not None else _sqnorms(X_all)
-                elif not fast_pairs:
-                    rcat = np.concatenate([g[3] for g in pq_])
-                    ur, inv_u = _row_union(rcat, n)
-                    XU = _decode(codes_src, ur, n, boff, bf32)
-                    xn_u = xn_col[ur] if xn_col is not None else _sqnorms(XU)
-                for other, qids, Q in tgroups:
-                    if other >= 0:
-                        continue
-                    # single-tag group: the whole unit, GEMM-shaped
-                    Qc = (
-                        Q.astype(np.float32)
-                        if X_all.dtype == np.float32
-                        else Q
-                    )
-                    qn = (Q * Q).sum(axis=1)
-                    part, dist = gemm_topk(Qc, qn, X_all, xn_all, "l2", k)
-                    out_q.append(np.repeat(qids, part.shape[1]))
-                    out_i.append(ids[part].ravel())
-                    out_d.append(dist.ravel())
-                if pq_:
-                    QU = np.concatenate([g[2] for g in pq_], axis=0)
-                    qidx = np.concatenate([g[1] for g in pq_])
-                    qid_cat = np.concatenate([g[0] for g in pq_])
-                    rows_cat = np.concatenate([g[3] for g in pq_])
-                    qn_u = (QU * QU).sum(axis=1)
-                    if fast_pairs:
-                        # int8-direct (r11, see _int_off_ok): no decode
-                        C8m = (
-                            codes_src
-                            if isinstance(codes_src, np.ndarray)
-                            else _codes_matrix(codes_src, n)
-                        )
-                        Qm = QU.astype(np.float32)
-                        qoff = QU @ boff
-                        g = _int8_pair_scores(Qm, qidx, C8m, rows_cat)
-                        dist = (
-                            qn_u[qidx]
-                            - 2.0 * (g + qoff[qidx])
-                            + xn_col[rows_cat]
-                        )
-                    else:
-                        if has_single:
-                            XP, upos = X_all, rows_cat
-                            xn_rows = xn_all[rows_cat]
-                        else:
-                            XP, upos = XU, inv_u[rows_cat]
-                            xn_rows = xn_u[upos]
-                        Qm = (
-                            QU.astype(np.float32)
-                            if XP.dtype == np.float32
-                            else QU
-                        )
-                        g = np.empty(len(rows_cat), dtype=np.float64)
-                        for clo in range(0, len(rows_cat), _PAIR_CHUNK):
-                            chi = min(clo + _PAIR_CHUNK, len(rows_cat))
-                            g[clo:chi] = np.einsum(
-                                "ij,ij->i",
-                                Qm[qidx[clo:chi]],
-                                XP[upos[clo:chi]],
-                            ).astype(np.float64)
-                        dist = qn_u[qidx] - 2.0 * g + xn_rows
-                    np.maximum(dist, 0.0, out=dist)
-                    out_q.append(qid_cat)
-                    out_i.append(ids[rows_cat])
-                    out_d.append(dist)
-                out_q, out_i, out_d = _partials_compact(
-                    out_q, out_i, out_d, k, cap
-                )
-        if out_q:
-            yield task_topk_merge(
-                np.concatenate(out_q),
-                np.concatenate(out_i),
-                np.concatenate(out_d),
-                k,
-                largest=False,
+        out = TaskPartials(k, nq, False)
+        for tag, path, lo, hi in units:
+            tgroups = bgroups.get(tag)
+            if not tgroups:
+                continue
+            others = np.array(
+                sorted({o for o, _, _ in tgroups if o >= 0}), dtype=np.int64
             )
+            has_single = any(o < 0 for o, _, _ in tgroups)
+            starts = prow = None
+            if lo < 0:  # memmap sidecar unit: path = key, hi = n
+                n = hi
+                if n == 0:
+                    continue
+                ids, xn_col, codes_src = _open_bin(bdir, path, n, bd)
+                if len(others):
+                    prow, starts = _csr_restrict(f"{bdir}/{path}", others)
+            else:
+                cols = (
+                    ["id"]
+                    + (["xn"] if bxn else [])
+                    + ["codes"]
+                    + (["tags"] if len(others) else [])
+                )
+                tbl = pq.ParquetFile(path).read_row_groups(
+                    list(range(lo, hi)), columns=cols
+                )
+                n = tbl.num_rows
+                if n == 0:
+                    continue
+                ids = tbl.column("id").to_numpy(zero_copy_only=False)
+                xn_col = (
+                    tbl.column("xn").to_numpy(zero_copy_only=False)
+                    if bxn
+                    else None
+                )
+                codes_src = tbl.column("codes")
+                if len(others):
+                    # every unit row already carries THIS tag, so the
+                    # conjunction candidates of a (tag, other) group
+                    # are exactly `other`'s posting list in the unit
+                    flat, row_of = _flat_tags(tbl.column("tags"), n)
+                    _pt, prow, starts = _hit_lists(
+                        flat, row_of, others, _probed_lut(others)
+                    )
+            # masked 2-tag groups: flat (query, row) pairs, scored in
+            # one chunked integer-exact einsum (the per-group slice +
+            # BLAS-call loop ran |others| × units times)
+            pq_ = []
+            for other, qids, Q in tgroups:
+                if other < 0:
+                    continue
+                oi = int(np.searchsorted(others, other))
+                rows = prow[starts[oi] : starts[oi + 1]]
+                if len(rows) == 0:
+                    continue
+                m = len(qids)
+                nb = sum(g[2].shape[0] for g in pq_)  # query-row base
+                pq_.append(
+                    (
+                        np.repeat(qids, len(rows)),
+                        nb + np.repeat(np.arange(m, dtype=np.int64), len(rows)),
+                        Q,
+                        np.tile(rows, m),
+                    )
+                )
+            if not has_single and not pq_:
+                continue  # every group masked and no candidates here
+            # decode: the whole unit when a single-tag group scans it
+            # anyway (GEMM over all rows), else only the union of the
+            # masked groups' candidate rows (VERDICT r8 #1b) — and
+            # with the r11 int8-direct path (persisted norms +
+            # integral grid) not even that: masked pairs score
+            # straight off the int8 codes below
+            fast_pairs = (
+                not has_single and int8_direct and xn_col is not None
+            )
+            if has_single:
+                X_all = _decode(codes_src, None, n, boff, bf32)
+                xn_all = xn_col if xn_col is not None else _sqnorms(X_all)
+            elif not fast_pairs:
+                rcat = np.concatenate([g[3] for g in pq_])
+                ur, inv_u = _row_union(rcat, n)
+                XU = _decode(codes_src, ur, n, boff, bf32)
+                xn_u = xn_col[ur] if xn_col is not None else _sqnorms(XU)
+            for other, qids, Q in tgroups:
+                if other >= 0:
+                    continue
+                # single-tag group: the whole unit, GEMM-shaped
+                _l2_topk(out, qids, Q, X_all, xn_all, ids)
+            if pq_:
+                QU = np.concatenate([g[2] for g in pq_], axis=0)
+                qidx = np.concatenate([g[1] for g in pq_])
+                qid_cat = np.concatenate([g[0] for g in pq_])
+                rows_cat = np.concatenate([g[3] for g in pq_])
+                qn_u = (QU * QU).sum(axis=1)
+                if fast_pairs:
+                    # int8-direct (r11, see _int_off_ok): no decode
+                    C8m = (
+                        codes_src
+                        if isinstance(codes_src, np.ndarray)
+                        else _codes_matrix(codes_src, n)
+                    )
+                    Qm = QU.astype(np.float32)
+                    qoff = QU @ boff
+                    g = _int8_pair_scores(Qm, qidx, C8m, rows_cat)
+                    dist = (
+                        qn_u[qidx]
+                        - 2.0 * (g + qoff[qidx])
+                        + xn_col[rows_cat]
+                    )
+                else:
+                    if has_single:
+                        XP, upos = X_all, rows_cat
+                        xn_rows = xn_all[rows_cat]
+                    else:
+                        XP, upos = XU, inv_u[rows_cat]
+                        xn_rows = xn_u[upos]
+                    Qm = (
+                        QU.astype(np.float32)
+                        if XP.dtype == np.float32
+                        else QU
+                    )
+                    g = np.empty(len(rows_cat), dtype=np.float64)
+                    for clo in range(0, len(rows_cat), _PAIR_CHUNK):
+                        chi = min(clo + _PAIR_CHUNK, len(rows_cat))
+                        g[clo:chi] = np.einsum(
+                            "ij,ij->i",
+                            Qm[qidx[clo:chi]],
+                            XP[upos[clo:chi]],
+                        ).astype(np.float64)
+                    dist = qn_u[qidx] - 2.0 * g + xn_rows
+                np.maximum(dist, 0.0, out=dist)
+                out.add(qid_cat, ids[rows_cat], dist)
+        yield from out.emit()
 
-    return fdf.mapInArrow(serve, schema="qid long, id long, dist double")
+    units, bin_dir, bin_d = _tag_units(spark, groups, tag_files, bins)
+    return _scan_tag_units(
+        spark, units, groups, (groups, off, use_f32, has_xn, bin_dir, bin_d), serve
+    )
 
 
 def _score_tagview_probed(
@@ -538,228 +473,194 @@ def _score_tagview_probed(
             )
         )
     use_f32 = _f32_exact_ok(np.stack(qpdf["qemb"].to_numpy()).astype(np.float64))
-    units, bin_dir, bin_d = _tag_units(spark, groups, tag_files, bins)
-    if not units:
-        return spark.createDataFrame([], "qid LONG, id LONG, dist DOUBLE")
-    bc = spark.sparkContext.broadcast(
-        (groups, off, use_f32, nlist, has_xn, bin_dir, bin_d)
-    )
-    fdf = _launch_tag_units(spark, units, groups)
+    nq = len(qpdf)
 
-    def serve(it):
+    def serve(payload, units):
         import pyarrow.parquet as pq
 
-        from filter_vectordb_spark.operators.knn import task_topk_merge
-
-        bgroups, boff, bf32, bnlist, bxn, bdir, bd = bc.value
+        bgroups, boff, bf32, bnlist, bxn, bdir, bd = payload
         off32 = boff.astype(np.float32)
         int8_direct = bf32 and _int_off_ok(boff)
-        cap = max(
-            65_536,
-            8 * k * sum(len(g[1]) for gl in bgroups.values() for g in gl),
-        )
-        out_q, out_i, out_d = [], [], []
-        for batch in it:
-            for tag, path, lo, hi in zip(
-                batch.column("tag").to_pylist(),
-                batch.column("path").to_pylist(),
-                batch.column("rg_lo").to_pylist(),
-                batch.column("rg_hi").to_pylist(),
-            ):
-                tgroups = bgroups.get(tag)
-                if not tgroups:
-                    continue
-                need_tags = any(o >= 0 for o, _, _, _ in tgroups)
-                oth_rows = oth_starts = None
-                others = np.array(
-                    sorted({o for o, _, _, _ in tgroups if o >= 0}),
-                    dtype=np.int64,
-                )
-                bounds = None
-                if lo < 0:  # memmap sidecar unit: path = key, hi = n
-                    n = hi
-                    if n == 0:
-                        continue
-                    ids = np.load(f"{bdir}/{path}.ids.npy", mmap_mode="r")
-                    xn_col = np.load(f"{bdir}/{path}.xn.npy", mmap_mode="r")
-                    C8 = np.memmap(
-                        f"{bdir}/{path}.codes.bin",
-                        dtype=np.int8,
-                        mode="r",
-                        shape=(n, bd),
-                    )
-                    # precomputed list bounds (VERDICT r9 next #1b):
-                    # written at bin build / upgraded at manifest load —
-                    # the per-batch searchsorted over lst (and the lst
-                    # pages themselves) drop out of the serve path
-                    try:
-                        bounds = np.load(f"{bdir}/{path}.bounds.npy")
-                        if len(bounds) != bnlist + 1:
-                            bounds = None  # foreign nlist — recompute
-                    except OSError:
-                        bounds = None
-                    if bounds is None:
-                        lst = np.load(f"{bdir}/{path}.lst.npy", mmap_mode="r")
-                    if need_tags:
-                        oth_rows, oth_starts = _csr_restrict(
-                            f"{bdir}/{path}", others
-                        )
-                    # lst ascending is canonical in bins (build_tag_bins
-                    # applies the stable re-sort once at build)
-                else:
-                    cols = (
-                        ["id", "codes", "lst"]
-                        + (["xn"] if bxn else [])
-                        + (["tags"] if need_tags else [])
-                    )
-                    tbl = pq.ParquetFile(path).read_row_groups(
-                        list(range(lo, hi)), columns=cols
-                    )
-                    n = tbl.num_rows
-                    if n == 0:
-                        continue
-                    ids = tbl.column("id").to_numpy(zero_copy_only=False)
-                    xn_col = (
-                        tbl.column("xn").to_numpy(zero_copy_only=False)
-                        if bxn
-                        else None
-                    )
-                    lst = tbl.column("lst").to_numpy(zero_copy_only=False)
-                    C8 = _codes_matrix(tbl.column("codes"), n)
-                    flat = row_of = None
-                    if need_tags:
-                        flat, row_of = _flat_tags(tbl.column("tags"), n)
-                    # lst ascending within each file by the build's
-                    # (tag, lst, id) sortWithinPartitions — probe sets
-                    # become binary-searched row ranges.  GUARD, not
-                    # assumption: a writer that re-sorts by partition
-                    # columns (older layouts, foreign builds) hands back
-                    # scrambled rows — re-sort locally instead of
-                    # silently scanning the wrong lists (that failure
-                    # measured recall ≈ nprobe/nlist)
-                    if np.any(np.diff(lst) < 0):
-                        order = np.argsort(lst, kind="stable")
-                        ids, lst = ids[order], lst[order]
-                        C8 = np.ascontiguousarray(C8[order])
-                        if xn_col is not None:
-                            xn_col = xn_col[order]
-                        if row_of is not None:
-                            inv = np.empty(n, dtype=np.int64)
-                            inv[order] = np.arange(n, dtype=np.int64)
-                            row_of = inv[row_of]
-                    if need_tags:
-                        # (rows, starts) over `others` — the CSR shape,
-                        # so the mask build below is source-agnostic
-                        _pt, oth_rows, oth_starts = _hit_lists(
-                            flat, row_of, others, _probed_lut(others)
-                        )
-                if bounds is None:
-                    bounds = np.searchsorted(
-                        lst, np.arange(bnlist + 1, dtype=np.int64)
-                    )
-                # PHASE 1 — every group's candidate (query, row) pairs,
-                # no codes touched yet.  PHASE 2 below decodes the UNION
-                # of probed rows across ALL of the unit's query groups
-                # once (VERDICT r9 next #1a: different groups' probe
-                # sets overlap on hot lists — per-group decode touched a
-                # hot list's codes once per group, now once per unit).
-                pq_ = []  # (qid_rows, global query-row idx, Q, rows)
-                nb = 0  # query-row base into the concatenated Q
-                for other, qids, Q, P in tgroups:
-                    # every query's probed row ranges IN ONE SHOT (the
-                    # per-query range-concatenate loop ran len(qids) ×
-                    # units times — its Python overhead, not the math,
-                    # dominated hot-tag groups): one multi-slice gather
-                    # over the (query, probe) range matrix
-                    plo = bounds[P]  # (m, nprobe) range starts
-                    cnt = bounds[P + 1] - plo
-                    ccnt = cnt.ravel()
-                    tot = int(ccnt.sum())
-                    if tot == 0:
-                        continue
-                    ofs = np.zeros(len(ccnt), dtype=np.int64)
-                    np.cumsum(ccnt[:-1], out=ofs[1:])
-                    rows = (
-                        np.arange(tot, dtype=np.int64)
-                        - np.repeat(ofs, ccnt)
-                        + np.repeat(plo.ravel(), ccnt)
-                    )
-                    qrep = np.repeat(
-                        np.arange(len(qids), dtype=np.int64), cnt.sum(axis=1)
-                    )
-                    if other >= 0:
-                        # conjunction mask via sorted-posting membership
-                        # — O(|rows|·log|post|), replacing a per-(other,
-                        # unit) O(n) boolean mask build whose allocation
-                        # + posting scatter dominated hot units with
-                        # many distinct `other` tags
-                        oi = int(np.searchsorted(others, other))
-                        post = oth_rows[oth_starts[oi] : oth_starts[oi + 1]]
-                        p2 = np.searchsorted(post, rows)
-                        keep = p2 < len(post)
-                        keep[keep] = post[p2[keep]] == rows[keep]
-                        rows, qrep = rows[keep], qrep[keep]
-                        if len(rows) == 0:
-                            continue
-                    pq_.append((qids[qrep], nb + qrep, Q, rows))
-                    nb += len(qids)
-                if not pq_:
-                    continue
-                # PHASE 2 — chunked pair scores over every group's
-                # pairs.  The einsum is per-pair independent, so
-                # batching groups together is bit-identical to the
-                # per-group loop.  Int8-direct fast path (r11 — the
-                # phase profile put 53% of serve-body time in the row
-                # union decode): with integer-exact queries, an
-                # integral grid offset, and persisted norms, score
-                # q·x = q·c + q·off straight off the int8 codes — the
-                # union decode drops out and per-pair code traffic
-                # falls 4× (192 B int8 vs 768 B decoded f32); the sum
-                # split is bit-exact (see _int_off_ok).
-                rows_cat = np.concatenate([g[3] for g in pq_])
-                QU = np.concatenate([g[2] for g in pq_], axis=0)
-                qidx = np.concatenate([g[1] for g in pq_])
-                qid_cat = np.concatenate([g[0] for g in pq_])
-                qn_u = (QU * QU).sum(axis=1)
-                Qm = QU.astype(np.float32) if bf32 else QU
-                if int8_direct and xn_col is not None:
-                    qoff = QU @ boff  # f64 exact: integer q · integer off
-                    g = _int8_pair_scores(Qm, qidx, C8, rows_cat)
-                    dist = (
-                        qn_u[qidx] - 2.0 * (g + qoff[qidx]) + xn_col[rows_cat]
-                    )
-                else:
-                    ur, inv = _row_union(rows_cat, n)
-                    pos = inv[rows_cat]
-                    if bf32:  # integer-exact f32 (knn_join contract)
-                        Xu = C8[ur].astype(np.float32) + off32[None, :]
-                    else:
-                        Xu = C8[ur].astype(np.float64) + boff[None, :]
-                    xn_u = xn_col[ur] if xn_col is not None else _sqnorms(Xu)
-                    g = np.empty(len(rows_cat), dtype=np.float64)
-                    for clo in range(0, len(rows_cat), _PAIR_CHUNK):
-                        chi = min(clo + _PAIR_CHUNK, len(rows_cat))
-                        g[clo:chi] = np.einsum(
-                            "ij,ij->i", Qm[qidx[clo:chi]], Xu[pos[clo:chi]]
-                        ).astype(np.float64)
-                    dist = qn_u[qidx] - 2.0 * g + xn_u[pos]
-                np.maximum(dist, 0.0, out=dist)
-                out_q.append(qid_cat)
-                out_i.append(ids[rows_cat])
-                out_d.append(dist)
-                out_q, out_i, out_d = _partials_compact(
-                    out_q, out_i, out_d, k, cap
-                )
-        if out_q:
-            yield task_topk_merge(
-                np.concatenate(out_q),
-                np.concatenate(out_i),
-                np.concatenate(out_d),
-                k,
-                largest=False,
+        out = TaskPartials(k, nq, False)
+        for tag, path, lo, hi in units:
+            tgroups = bgroups.get(tag)
+            if not tgroups:
+                continue
+            need_tags = any(o >= 0 for o, _, _, _ in tgroups)
+            oth_rows = oth_starts = None
+            others = np.array(
+                sorted({o for o, _, _, _ in tgroups if o >= 0}),
+                dtype=np.int64,
             )
+            bounds = None
+            if lo < 0:  # memmap sidecar unit: path = key, hi = n
+                n = hi
+                if n == 0:
+                    continue
+                ids, xn_col, C8 = _open_bin(bdir, path, n, bd)
+                # precomputed list bounds (VERDICT r9 next #1b):
+                # written at bin build / upgraded at manifest load —
+                # the per-batch searchsorted over lst (and the lst
+                # pages themselves) drop out of the serve path
+                try:
+                    bounds = np.load(f"{bdir}/{path}.bounds.npy")
+                    if len(bounds) != bnlist + 1:
+                        bounds = None  # foreign nlist — recompute
+                except OSError:
+                    bounds = None
+                if bounds is None:
+                    lst = np.load(f"{bdir}/{path}.lst.npy", mmap_mode="r")
+                if need_tags:
+                    oth_rows, oth_starts = _csr_restrict(
+                        f"{bdir}/{path}", others
+                    )
+                # lst ascending is canonical in bins (build_tag_bins
+                # applies the stable re-sort once at build)
+            else:
+                cols = (
+                    ["id", "codes", "lst"]
+                    + (["xn"] if bxn else [])
+                    + (["tags"] if need_tags else [])
+                )
+                tbl = pq.ParquetFile(path).read_row_groups(
+                    list(range(lo, hi)), columns=cols
+                )
+                n = tbl.num_rows
+                if n == 0:
+                    continue
+                ids = tbl.column("id").to_numpy(zero_copy_only=False)
+                xn_col = (
+                    tbl.column("xn").to_numpy(zero_copy_only=False)
+                    if bxn
+                    else None
+                )
+                lst = tbl.column("lst").to_numpy(zero_copy_only=False)
+                C8 = _codes_matrix(tbl.column("codes"), n)
+                flat = row_of = None
+                if need_tags:
+                    flat, row_of = _flat_tags(tbl.column("tags"), n)
+                # lst ascending within each file by the build's
+                # (tag, lst, id) sortWithinPartitions — probe sets
+                # become binary-searched row ranges.  GUARD, not
+                # assumption: a writer that re-sorts by partition
+                # columns (older layouts, foreign builds) hands back
+                # scrambled rows — re-sort locally instead of
+                # silently scanning the wrong lists (that failure
+                # measured recall ≈ nprobe/nlist)
+                if np.any(np.diff(lst) < 0):
+                    order = np.argsort(lst, kind="stable")
+                    ids, lst = ids[order], lst[order]
+                    C8 = np.ascontiguousarray(C8[order])
+                    if xn_col is not None:
+                        xn_col = xn_col[order]
+                    if row_of is not None:
+                        inv = np.empty(n, dtype=np.int64)
+                        inv[order] = np.arange(n, dtype=np.int64)
+                        row_of = inv[row_of]
+                if need_tags:
+                    # (rows, starts) over `others` — the CSR shape,
+                    # so the mask build below is source-agnostic
+                    _pt, oth_rows, oth_starts = _hit_lists(
+                        flat, row_of, others, _probed_lut(others)
+                    )
+            if bounds is None:
+                bounds = np.searchsorted(
+                    lst, np.arange(bnlist + 1, dtype=np.int64)
+                )
+            # PHASE 1 — every group's candidate (query, row) pairs,
+            # no codes touched yet.  PHASE 2 below decodes the UNION
+            # of probed rows across ALL of the unit's query groups
+            # once (VERDICT r9 next #1a: different groups' probe
+            # sets overlap on hot lists — per-group decode touched a
+            # hot list's codes once per group, now once per unit).
+            pq_ = []  # (qid_rows, global query-row idx, Q, rows)
+            nb = 0  # query-row base into the concatenated Q
+            for other, qids, Q, P in tgroups:
+                # every query's probed row ranges IN ONE SHOT (the
+                # per-query range-concatenate loop ran len(qids) ×
+                # units times — its Python overhead, not the math,
+                # dominated hot-tag groups): one multi-slice gather
+                # over the (query, probe) range matrix
+                plo = bounds[P]  # (m, nprobe) range starts
+                cnt = bounds[P + 1] - plo
+                ccnt = cnt.ravel()
+                tot = int(ccnt.sum())
+                if tot == 0:
+                    continue
+                ofs = np.zeros(len(ccnt), dtype=np.int64)
+                np.cumsum(ccnt[:-1], out=ofs[1:])
+                rows = (
+                    np.arange(tot, dtype=np.int64)
+                    - np.repeat(ofs, ccnt)
+                    + np.repeat(plo.ravel(), ccnt)
+                )
+                qrep = np.repeat(
+                    np.arange(len(qids), dtype=np.int64), cnt.sum(axis=1)
+                )
+                if other >= 0:
+                    # conjunction mask via sorted-posting membership
+                    # — O(|rows|·log|post|), replacing a per-(other,
+                    # unit) O(n) boolean mask build whose allocation
+                    # + posting scatter dominated hot units with
+                    # many distinct `other` tags
+                    oi = int(np.searchsorted(others, other))
+                    post = oth_rows[oth_starts[oi] : oth_starts[oi + 1]]
+                    p2 = np.searchsorted(post, rows)
+                    keep = p2 < len(post)
+                    keep[keep] = post[p2[keep]] == rows[keep]
+                    rows, qrep = rows[keep], qrep[keep]
+                    if len(rows) == 0:
+                        continue
+                pq_.append((qids[qrep], nb + qrep, Q, rows))
+                nb += len(qids)
+            if not pq_:
+                continue
+            # PHASE 2 — chunked pair scores over every group's
+            # pairs.  The einsum is per-pair independent, so
+            # batching groups together is bit-identical to the
+            # per-group loop.  Int8-direct fast path (r11 — the
+            # phase profile put 53% of serve-body time in the row
+            # union decode): with integer-exact queries, an
+            # integral grid offset, and persisted norms, score
+            # q·x = q·c + q·off straight off the int8 codes — the
+            # union decode drops out and per-pair code traffic
+            # falls 4× (192 B int8 vs 768 B decoded f32); the sum
+            # split is bit-exact (see _int_off_ok).
+            rows_cat = np.concatenate([g[3] for g in pq_])
+            QU = np.concatenate([g[2] for g in pq_], axis=0)
+            qidx = np.concatenate([g[1] for g in pq_])
+            qid_cat = np.concatenate([g[0] for g in pq_])
+            qn_u = (QU * QU).sum(axis=1)
+            Qm = QU.astype(np.float32) if bf32 else QU
+            if int8_direct and xn_col is not None:
+                qoff = QU @ boff  # f64 exact: integer q · integer off
+                g = _int8_pair_scores(Qm, qidx, C8, rows_cat)
+                dist = (
+                    qn_u[qidx] - 2.0 * (g + qoff[qidx]) + xn_col[rows_cat]
+                )
+            else:
+                ur, inv = _row_union(rows_cat, n)
+                pos = inv[rows_cat]
+                if bf32:  # integer-exact f32 (knn_join contract)
+                    Xu = C8[ur].astype(np.float32) + off32[None, :]
+                else:
+                    Xu = C8[ur].astype(np.float64) + boff[None, :]
+                xn_u = xn_col[ur] if xn_col is not None else _sqnorms(Xu)
+                g = np.empty(len(rows_cat), dtype=np.float64)
+                for clo in range(0, len(rows_cat), _PAIR_CHUNK):
+                    chi = min(clo + _PAIR_CHUNK, len(rows_cat))
+                    g[clo:chi] = np.einsum(
+                        "ij,ij->i", Qm[qidx[clo:chi]], Xu[pos[clo:chi]]
+                    ).astype(np.float64)
+                dist = qn_u[qidx] - 2.0 * g + xn_u[pos]
+            np.maximum(dist, 0.0, out=dist)
+            out.add(qid_cat, ids[rows_cat], dist)
+        yield from out.emit()
 
-    return fdf.mapInArrow(serve, schema="qid long, id long, dist double")
+    units, bin_dir, bin_d = _tag_units(spark, groups, tag_files, bins)
+    return _scan_tag_units(
+        spark, units, groups, (groups, off, use_f32, nlist, has_xn, bin_dir, bin_d), serve
+    )
 
 
 #: pair-scoring chunk: per-chunk gather buffers are 2 × CH × d × 4 B
@@ -1029,161 +930,124 @@ def _score_meta(
     files = sorted(_glob.glob(f"{codes_dir}/*.parquet"))
     if not files:
         raise FileNotFoundError(f"no parquet files under {codes_dir}")
-    units = rg_units(spark, files)
-    bc = spark.sparkContext.broadcast(
-        (scan_q, flat_q, multi_q, probed, lut, off, use_f32, has_xn)
-    )
-    fdf = launch_units(
-        spark,
-        [u[:3] for u in units],
-        "path STRING, rg_lo INT, rg_hi INT",
-        cost=[u[3] for u in units],
-    )
+    nq = len(qpdf)
 
-    def serve(it):
+    def serve(payload, units):
         import pyarrow.parquet as pq
 
-        from filter_vectordb_spark.operators.knn import gemm_topk, task_topk_merge
-
-        bscan, bflat, bmulti, bprobed, blut, boff, bf32, bxn = bc.value
+        bscan, bflat, bmulti, bprobed, blut, boff, bf32, bxn = payload
         int8_direct = bf32 and _int_off_ok(boff)
         fqids, fQ, frarer, fother = bflat
         fQ32 = fQ.astype(np.float32)
         fqn = (fQ * fQ).sum(axis=1)
         fqoff = fQ @ boff if int8_direct else None  # f64 exact rebase
-        nq_all = (
-            len(fqids)
-            + sum(len(g[1]) for g in bmulti)
-            + (len(bscan[0]) if bscan is not None else 0)
-        )
-        cap = max(65_536, 8 * k * nq_all)
-        out_q, out_i, out_d = [], [], []
-        for batch in it:
-            for path, lo, hi in zip(
-                batch.column("path").to_pylist(),
-                batch.column("rg_lo").to_pylist(),
-                batch.column("rg_hi").to_pylist(),
-            ):
-                pf = pq.ParquetFile(path)
-                rgs = list(range(lo, hi))
-                # PHASE 1: metadata columns only — candidates are known
-                # before a single code byte is read
-                mcols = ["id", "tags"] + (["xn"] if bxn else [])
-                tbl = pf.read_row_groups(rgs, columns=mcols)
-                n = tbl.num_rows
-                if n == 0:
-                    continue
-                ids = tbl.column("id").to_numpy(zero_copy_only=False)
-                xn_col = (
-                    tbl.column("xn").to_numpy(zero_copy_only=False)
-                    if bxn
-                    else None
-                )
-                flat, row_of = _flat_tags(tbl.column("tags"), n)
-                ptag, prow, starts = _hit_lists(flat, row_of, bprobed, blut)
-
-                # ---- the 1-2-tag bulk: all candidate pairs in one shot
-                qrep, rows = _flat_pairs(frarer, fother, ptag, prow, starts, n)
-                n_flat = len(qrep) if rows is not None else 0
-
-                # ---- >2-tag conjunctions: sorted-intersection row sets
-                mhits = []
-                for need_idx, qids, Q in bmulti:
-                    mrows = _multi_rows(need_idx, prow, starts)
-                    if len(mrows):
-                        mhits.append((mrows, qids, Q))
-
-                if not n_flat and not mhits and bscan is None:
-                    continue  # nothing in this unit touches codes at all
-
-                # PHASE 2: the codes column — decode only the candidate
-                # union unless a scan-all query (or candidate density
-                # past half the unit, where the gather costs more than
-                # the straight pass) wants every row
-                codes_col = pf.read_row_groups(rgs, columns=["codes"]).column(
-                    "codes"
-                )
-                # int8-direct fast path (r11, see _int_off_ok): with
-                # persisted norms + the integral grid, the flat pairs
-                # score straight off the int8 codes view — only the
-                # >2-tag GEMM row sets still decode; a scan-all batch
-                # decodes every row anyway, so the fast path stands
-                # down there
-                fast_flat = (
-                    int8_direct and xn_col is not None and bscan is None
-                )
-                parts = (
-                    [rows[:n_flat]] if n_flat and not fast_flat else []
-                ) + [m[0] for m in mhits]
-                if parts:
-                    ur, inv_u = _row_union(np.concatenate(parts), n)
-                else:
-                    ur = np.empty(0, dtype=np.int64)
-                full = bscan is not None or ur.size * 2 > n
-                if full:
-                    X_all = _decode(codes_col, None, n, boff, bf32)
-                    xn_all = xn_col if xn_col is not None else _sqnorms(X_all)
-                    XU = X_all
-                elif len(ur):
-                    XU = _decode(codes_col, ur, n, boff, bf32)
-                    xn_u = xn_col[ur] if xn_col is not None else _sqnorms(XU)
-
-                if n_flat:
-                    Qm = fQ32 if bf32 else fQ
-                    if fast_flat and not full:
-                        C8m = _codes_matrix(codes_col, n)
-                        np_d = _int8_pair_scores(Qm, qrep, C8m, rows)
-                        np_d += fqoff[qrep]
-                        xn_rows = xn_col[rows]
-                    else:
-                        up = rows if full else inv_u[rows]
-                        xn_rows = xn_all[rows] if full else xn_u[up]
-                        np_d = np.empty(n_flat, dtype=np.float64)
-                        for plo in range(0, n_flat, _PAIR_CHUNK):
-                            phi = min(plo + _PAIR_CHUNK, n_flat)
-                            a = Qm[qrep[plo:phi]]
-                            b = XU[up[plo:phi]]
-                            g = np.einsum("ij,ij->i", a, b)
-                            np_d[plo:phi] = g.astype(np.float64)
-                    dist = fqn[qrep] - 2.0 * np_d + xn_rows
-                    np.maximum(dist, 0.0, out=dist)
-                    out_q.append(fqids[qrep])
-                    out_i.append(ids[rows])
-                    out_d.append(dist)
-
-                for mrows, qids, Q in mhits:
-                    up = mrows if full else inv_u[mrows]
-                    Xc = np.ascontiguousarray(XU[up])
-                    xc = xn_all[mrows] if full else xn_u[up]
-                    Qc = Q.astype(np.float32) if Xc.dtype == np.float32 else Q
-                    qn = (Q * Q).sum(axis=1)
-                    part, dist = gemm_topk(Qc, qn, Xc, xc, "l2", k)
-                    out_q.append(np.repeat(qids, part.shape[1]))
-                    out_i.append(ids[mrows][part].ravel())
-                    out_d.append(dist.ravel())
-
-                # ---- empty conjunction: every row, blocked GEMM
-                if bscan is not None:
-                    qids, Q = bscan
-                    Qc = Q.astype(np.float32) if X_all.dtype == np.float32 else Q
-                    qn = (Q * Q).sum(axis=1)
-                    part, dist = gemm_topk(Qc, qn, X_all, xn_all, "l2", k)
-                    out_q.append(np.repeat(qids, part.shape[1]))
-                    out_i.append(ids[part].ravel())
-                    out_d.append(dist.ravel())
-                out_q, out_i, out_d = _partials_compact(
-                    out_q, out_i, out_d, k, cap
-                )
-        if out_q:
-            yield task_topk_merge(
-                np.concatenate(out_q),
-                np.concatenate(out_i),
-                np.concatenate(out_d),
-                k,
-                largest=False,
+        out = TaskPartials(k, nq, False)
+        for path, lo, hi in units:
+            pf = pq.ParquetFile(path)
+            rgs = list(range(lo, hi))
+            # PHASE 1: metadata columns only — candidates are known
+            # before a single code byte is read
+            mcols = ["id", "tags"] + (["xn"] if bxn else [])
+            tbl = pf.read_row_groups(rgs, columns=mcols)
+            n = tbl.num_rows
+            if n == 0:
+                continue
+            ids = tbl.column("id").to_numpy(zero_copy_only=False)
+            xn_col = (
+                tbl.column("xn").to_numpy(zero_copy_only=False)
+                if bxn
+                else None
             )
+            flat, row_of = _flat_tags(tbl.column("tags"), n)
+            ptag, prow, starts = _hit_lists(flat, row_of, bprobed, blut)
 
-    return fdf.mapInArrow(serve, schema="qid long, id long, dist double")
+            # ---- the 1-2-tag bulk: all candidate pairs in one shot
+            qrep, rows = _flat_pairs(frarer, fother, ptag, prow, starts, n)
+            n_flat = len(qrep) if rows is not None else 0
+
+            # ---- >2-tag conjunctions: sorted-intersection row sets
+            mhits = []
+            for need_idx, qids, Q in bmulti:
+                mrows = _multi_rows(need_idx, prow, starts)
+                if len(mrows):
+                    mhits.append((mrows, qids, Q))
+
+            if not n_flat and not mhits and bscan is None:
+                continue  # nothing in this unit touches codes at all
+
+            # PHASE 2: the codes column — decode only the candidate
+            # union unless a scan-all query (or candidate density
+            # past half the unit, where the gather costs more than
+            # the straight pass) wants every row
+            codes_col = pf.read_row_groups(rgs, columns=["codes"]).column(
+                "codes"
+            )
+            # int8-direct fast path (r11, see _int_off_ok): with
+            # persisted norms + the integral grid, the flat pairs
+            # score straight off the int8 codes view — only the
+            # >2-tag GEMM row sets still decode; a scan-all batch
+            # decodes every row anyway, so the fast path stands
+            # down there
+            fast_flat = (
+                int8_direct and xn_col is not None and bscan is None
+            )
+            parts = (
+                [rows[:n_flat]] if n_flat and not fast_flat else []
+            ) + [m[0] for m in mhits]
+            if parts:
+                ur, inv_u = _row_union(np.concatenate(parts), n)
+            else:
+                ur = np.empty(0, dtype=np.int64)
+            full = bscan is not None or ur.size * 2 > n
+            if full:
+                X_all = _decode(codes_col, None, n, boff, bf32)
+                xn_all = xn_col if xn_col is not None else _sqnorms(X_all)
+                XU = X_all
+            elif len(ur):
+                XU = _decode(codes_col, ur, n, boff, bf32)
+                xn_u = xn_col[ur] if xn_col is not None else _sqnorms(XU)
+
+            if n_flat:
+                Qm = fQ32 if bf32 else fQ
+                if fast_flat and not full:
+                    C8m = _codes_matrix(codes_col, n)
+                    np_d = _int8_pair_scores(Qm, qrep, C8m, rows)
+                    np_d += fqoff[qrep]
+                    xn_rows = xn_col[rows]
+                else:
+                    up = rows if full else inv_u[rows]
+                    xn_rows = xn_all[rows] if full else xn_u[up]
+                    np_d = np.empty(n_flat, dtype=np.float64)
+                    for plo in range(0, n_flat, _PAIR_CHUNK):
+                        phi = min(plo + _PAIR_CHUNK, n_flat)
+                        a = Qm[qrep[plo:phi]]
+                        b = XU[up[plo:phi]]
+                        g = np.einsum("ij,ij->i", a, b)
+                        np_d[plo:phi] = g.astype(np.float64)
+                dist = fqn[qrep] - 2.0 * np_d + xn_rows
+                np.maximum(dist, 0.0, out=dist)
+                out.add(fqids[qrep], ids[rows], dist)
+
+            for mrows, qids, Q in mhits:
+                up = mrows if full else inv_u[mrows]
+                xc = xn_all[mrows] if full else xn_u[up]
+                _l2_topk(out, qids, Q, np.ascontiguousarray(XU[up]), xc, ids[mrows])
+
+            # ---- empty conjunction: every row, blocked GEMM
+            if bscan is not None:
+                _l2_topk(out, *bscan, X_all, xn_all, ids)
+        yield from out.emit()
+
+    units = rg_units(spark, files)
+    return scan_units(
+        spark,
+        [u[:3] for u in units],
+        "path STRING, rg_lo INT, rg_hi INT",
+        [u[3] for u in units],
+        (scan_q, flat_q, multi_q, probed, lut, off, use_f32, has_xn),
+        serve,
+        _PARTIAL,
+    )
 
 
 def _score_meta_gather(
@@ -1230,12 +1094,10 @@ def _score_meta_gather(
     bc = spark.sparkContext.broadcast((qids[qorder], Q[qorder], off, use_f32))
 
     def score(it):
-        from filter_vectordb_spark.operators.knn import task_topk_merge
-
         bqids, bQ, boff, bf32 = bc.value
         Qm = bQ.astype(np.float32) if bf32 else bQ
         qn = (bQ * bQ).sum(axis=1)
-        out_q, out_i, out_d = [], [], []
+        out = TaskPartials(k, len(bqids), False)
         for batch in it:
             n = batch.num_rows
             if n == 0:
@@ -1247,21 +1109,10 @@ def _score_meta_gather(
             g = np.einsum("ij,ij->i", Qm[pos], X).astype(np.float64)
             dist = qn[pos] - 2.0 * g + _sqnorms(X)
             np.maximum(dist, 0.0, out=dist)
-            out_q.append(gq.astype(np.int64))
-            out_i.append(gi.astype(np.int64))
-            out_d.append(dist)
-        if out_q:
-            yield task_topk_merge(
-                np.concatenate(out_q),
-                np.concatenate(out_i),
-                np.concatenate(out_d),
-                k,
-                largest=False,
-            )
+            out.add(gq.astype(np.int64), gi.astype(np.int64), dist)
+        yield from out.emit()
 
-    return gathered.select("qid", "id", "codes").mapInArrow(
-        score, schema="qid long, id long, dist double"
-    )
+    return gathered.select("qid", "id", "codes").mapInArrow(score, schema=_PARTIAL)
 
 
 def _score_meta_bin(
@@ -1299,20 +1150,10 @@ def _score_meta_bin(
     units = [
         (stem, int(n), sp, nsp) for stem, n in man["files"] for sp in range(nsp)
     ]
-    bc = spark.sparkContext.broadcast(
-        (scan_q, flat_q, multi_q, probed, off, use_f32, bin_dir, d)
-    )
-    fdf = launch_units(
-        spark,
-        units,
-        "stem STRING, n LONG, sp INT, nsp INT",
-        cost=[n * (sp + 1) // m - n * sp // m for _s, n, sp, m in units],
-    )
+    nq = len(qpdf)
 
-    def serve(it):
-        from filter_vectordb_spark.operators.knn import gemm_topk, task_topk_merge
-
-        bscan, bflat, bmulti, bprobed, boff, bf32, bdir, bd = bc.value
+    def serve(payload, units):
+        bscan, bflat, bmulti, bprobed, boff, bf32, bdir, bd = payload
         off32 = boff.astype(np.float32)
         offd = boff if not bf32 else off32
         int8_direct = bf32 and _int_off_ok(boff)
@@ -1320,124 +1161,71 @@ def _score_meta_bin(
         fQ32 = fQ.astype(np.float32)
         fqn = (fQ * fQ).sum(axis=1)
         fqoff = fQ @ boff if int8_direct else None  # f64 exact rebase
-        nq_all = (
-            len(fqids)
-            + sum(len(g[1]) for g in bmulti)
-            + (len(bscan[0]) if bscan is not None else 0)
-        )
-        cap = max(65_536, 8 * k * nq_all)
-        out_q, out_i, out_d = [], [], []
+        out = TaskPartials(k, nq, False)
 
         def gather(C8, rows):
             B = C8[rows].astype(np.float32 if bf32 else np.float64)
             B += offd[None, :]
             return B
 
-        for batch in it:
-            for stem, n, sp, snsp in zip(
-                batch.column("stem").to_pylist(),
-                batch.column("n").to_pylist(),
-                batch.column("sp").to_pylist(),
-                batch.column("nsp").to_pylist(),
-            ):
-                rlo, rhi = n * sp // snsp, n * (sp + 1) // snsp
-                if rlo >= rhi:
-                    continue
-                ids = np.load(f"{bdir}/{stem}.ids.npy", mmap_mode="r")
-                xn = np.load(f"{bdir}/{stem}.xn.npy", mmap_mode="r")
-                C8 = np.memmap(
-                    f"{bdir}/{stem}.codes.bin",
-                    dtype=np.int8,
-                    mode="r",
-                    shape=(n, bd),
-                )
-                # restrict the prebuilt CSR to the probed tags + row split
-                prow_cat = np.empty(0, dtype=np.int64)
-                ptag_cat = np.empty(0, dtype=np.int64)
-                if len(bprobed):
-                    ptags = np.load(f"{bdir}/{stem}.ptags.npy", mmap_mode="r")
-                    pstarts = np.load(f"{bdir}/{stem}.pstarts.npy", mmap_mode="r")
-                    prows = np.load(f"{bdir}/{stem}.prows.npy", mmap_mode="r")
-                    if len(ptags):
-                        pidx = np.searchsorted(ptags, bprobed)
-                        safe = np.minimum(pidx, len(ptags) - 1)
-                        okp = (pidx < len(ptags)) & (ptags[safe] == bprobed)
-                        lo = np.where(okp, pstarts[safe], 0)
-                        hi = np.where(okp, pstarts[safe + 1], 0)
-                        if int((hi - lo).sum()):
-                            prow_cat = np.concatenate(
-                                [prows[l:h] for l, h in zip(lo, hi)]
-                            ).astype(np.int64)
-                            ptag_cat = np.repeat(
-                                np.arange(len(bprobed), dtype=np.int64),
-                                hi - lo,
-                            )
-                            if snsp > 1:
-                                m = (prow_cat >= rlo) & (prow_cat < rhi)
-                                prow_cat, ptag_cat = prow_cat[m], ptag_cat[m]
+        for stem, n, sp, snsp in units:
+            rlo, rhi = n * sp // snsp, n * (sp + 1) // snsp
+            if rlo >= rhi:
+                continue
+            ids, xn, C8 = _open_bin(bdir, stem, n, bd)
+            # the prebuilt CSR restricted to the probed tags, then to
+            # this unit's row split
+            prow_cat, starts = _csr_restrict(f"{bdir}/{stem}", bprobed)
+            ptag_cat = np.repeat(np.arange(len(bprobed), dtype=np.int64), np.diff(starts))
+            if snsp > 1:
+                m = (prow_cat >= rlo) & (prow_cat < rhi)
+                prow_cat, ptag_cat = prow_cat[m], ptag_cat[m]
                 starts = np.searchsorted(
                     ptag_cat, np.arange(len(bprobed) + 1, dtype=np.int64)
                 )
 
-                # ---- 1-2-tag bulk (the shared _score_meta flat kernel)
-                qrep, rows = _flat_pairs(
-                    frarer, fother, ptag_cat, prow_cat, starts, n
-                )
-                n_flat = len(qrep) if rows is not None else 0
-                if n_flat:
-                    Qm = fQ32 if bf32 else fQ
-                    if int8_direct:
-                        # int8-direct scoring (r11): q·x = q·c + q·off
-                        # straight off the codes bin — no per-chunk f32
-                        # decode buffer; bit-exact per _int_off_ok
-                        np_d = _int8_pair_scores(Qm, qrep, C8, rows)
-                        np_d += fqoff[qrep]
-                    else:
-                        np_d = np.empty(n_flat, dtype=np.float64)
-                        for plo in range(0, n_flat, _PAIR_CHUNK):
-                            phi = min(plo + _PAIR_CHUNK, n_flat)
-                            B = gather(C8, rows[plo:phi])
-                            g = np.einsum("ij,ij->i", Qm[qrep[plo:phi]], B)
-                            np_d[plo:phi] = g.astype(np.float64)
-                    dist = fqn[qrep] - 2.0 * np_d + xn[rows]
-                    np.maximum(dist, 0.0, out=dist)
-                    out_q.append(fqids[qrep])
-                    out_i.append(ids[rows])
-                    out_d.append(dist)
-
-                # ---- >2-tag conjunctions: sorted intersection over CSR
-                for need_idx, qids, Q in bmulti:
-                    mrows = _multi_rows(need_idx, prow_cat, starts)
-                    if len(mrows) == 0:
-                        continue
-                    Xc = gather(C8, mrows)
-                    Qc = Q.astype(np.float32) if Xc.dtype == np.float32 else Q
-                    qn = (Q * Q).sum(axis=1)
-                    part, dist = gemm_topk(Qc, qn, Xc, xn[mrows], "l2", k)
-                    out_q.append(np.repeat(qids, part.shape[1]))
-                    out_i.append(ids[mrows][part].ravel())
-                    out_d.append(dist.ravel())
-
-                # ---- empty conjunction: this split's rows, blocked GEMM
-                if bscan is not None:
-                    qids, Q = bscan
-                    X = gather(C8, slice(rlo, rhi))
-                    Qc = Q.astype(np.float32) if X.dtype == np.float32 else Q
-                    qn = (Q * Q).sum(axis=1)
-                    part, dist = gemm_topk(Qc, qn, X, xn[rlo:rhi], "l2", k)
-                    out_q.append(np.repeat(qids, part.shape[1]))
-                    out_i.append(ids[rlo:rhi][part].ravel())
-                    out_d.append(dist.ravel())
-                out_q, out_i, out_d = _partials_compact(
-                    out_q, out_i, out_d, k, cap
-                )
-        if out_q:
-            yield task_topk_merge(
-                np.concatenate(out_q),
-                np.concatenate(out_i),
-                np.concatenate(out_d),
-                k,
-                largest=False,
+            # ---- 1-2-tag bulk (the shared _score_meta flat kernel)
+            qrep, rows = _flat_pairs(
+                frarer, fother, ptag_cat, prow_cat, starts, n
             )
+            n_flat = len(qrep) if rows is not None else 0
+            if n_flat:
+                Qm = fQ32 if bf32 else fQ
+                if int8_direct:
+                    # int8-direct scoring (r11): q·x = q·c + q·off
+                    # straight off the codes bin — no per-chunk f32
+                    # decode buffer; bit-exact per _int_off_ok
+                    np_d = _int8_pair_scores(Qm, qrep, C8, rows)
+                    np_d += fqoff[qrep]
+                else:
+                    np_d = np.empty(n_flat, dtype=np.float64)
+                    for plo in range(0, n_flat, _PAIR_CHUNK):
+                        phi = min(plo + _PAIR_CHUNK, n_flat)
+                        B = gather(C8, rows[plo:phi])
+                        g = np.einsum("ij,ij->i", Qm[qrep[plo:phi]], B)
+                        np_d[plo:phi] = g.astype(np.float64)
+                dist = fqn[qrep] - 2.0 * np_d + xn[rows]
+                np.maximum(dist, 0.0, out=dist)
+                out.add(fqids[qrep], ids[rows], dist)
 
-    return fdf.mapInArrow(serve, schema="qid long, id long, dist double")
+            # ---- >2-tag conjunctions: sorted intersection over CSR
+            for need_idx, qids, Q in bmulti:
+                mrows = _multi_rows(need_idx, prow_cat, starts)
+                if len(mrows) == 0:
+                    continue
+                _l2_topk(out, qids, Q, gather(C8, mrows), xn[mrows], ids[mrows])
+
+            # ---- empty conjunction: this split's rows, blocked GEMM
+            if bscan is not None:
+                _l2_topk(out, *bscan, gather(C8, slice(rlo, rhi)), xn[rlo:rhi], ids[rlo:rhi])
+        yield from out.emit()
+
+    return scan_units(
+        spark,
+        units,
+        "stem STRING, n LONG, sp INT, nsp INT",
+        [n * (sp + 1) // m - n * sp // m for _s, n, sp, m in units],
+        (scan_q, flat_q, multi_q, probed, off, use_f32, bin_dir, d),
+        serve,
+        _PARTIAL,
+    )

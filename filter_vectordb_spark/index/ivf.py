@@ -298,14 +298,14 @@ def _ivf_score_chunk(
 
     def scan(it):
         from filter_vectordb_spark.operators.knn import (
+            TaskPartials,
             flatten_fixed_list,
             gemm_topk,
-            task_topk_merge,
         )
 
         bqids, bQ, groups = bc.value
         qn = (bQ * bQ).sum(axis=1)
-        out_q, out_i, out_d = [], [], []
+        out = TaskPartials(k, len(bqids), False)
         for batch in it:
             nb = batch.num_rows
             if nb == 0:
@@ -322,16 +322,7 @@ def _ivf_score_chunk(
                 X = np.ascontiguousarray(X_all[grp]).astype(np.float64)
                 xn = (X * X).sum(axis=1)
                 part, dist = gemm_topk(bQ[pos], qn[pos], X, xn, "l2", k)
-                out_q.append(np.repeat(bqids[pos], part.shape[1]))
-                out_i.append(all_ids[grp][part].ravel())
-                out_d.append(dist.ravel())
-        if out_q:
-            yield task_topk_merge(
-                np.concatenate(out_q),
-                np.concatenate(out_i),
-                np.concatenate(out_d),
-                k,
-                largest=False,
-            )
+                out.add_topk(bqids[pos], all_ids[grp], part, dist)
+        yield from out.emit()
 
     return cand.mapInArrow(scan, schema="qid long, id long, dist double")

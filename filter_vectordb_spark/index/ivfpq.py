@@ -171,13 +171,13 @@ def _ivfpq_score_chunk(
 
     def adc(it):
         from filter_vectordb_spark.operators.knn import (
+            TaskPartials,
             flatten_fixed_list,
-            task_topk_merge,
             topk_blocked,
         )
 
         bqids, bLUT, groups = bc.value
-        out_q, out_i, out_d = [], [], []
+        out = TaskPartials(refine, len(bqids), False, "adist")
         for batch in it:
             nb = batch.num_rows
             if nb == 0:
@@ -197,18 +197,9 @@ def _ivfpq_score_chunk(
                 for s in range(nsub):
                     D += L[:, s, :][:, M[:, s]]
                 part = topk_blocked(D, refine)
-                qrows = np.arange(len(pos))[:, None]
-                out_q.append(np.repeat(bqids[pos], part.shape[1]))
-                out_i.append(all_ids[grp][part].ravel())
-                out_d.append(D[qrows, part].ravel())
-        if out_q:
-            yield task_topk_merge(
-                np.concatenate(out_q),
-                np.concatenate(out_i),
-                np.concatenate(out_d),
-                refine,
-                largest=False,
-                col="adist",
-            )
+                out.add_topk(
+                    bqids[pos], all_ids[grp], part, D[np.arange(len(pos))[:, None], part]
+                )
+        yield from out.emit()
 
     return cand.mapInArrow(adc, schema="qid long, id long, adist double")

@@ -34,7 +34,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filter_vectordb_spark.index.sq import _scales, encode_sq, train_sq
-from filter_vectordb_spark.operators.knn import launch_units
+from filter_vectordb_spark.operators.knn import (
+    TaskPartials,
+    _topk_per_group,
+    flatten_fixed_list,
+    scan_units,
+    topk_blocked,
+)
 from filter_vectordb_spark.operators.topk import per_group_topk
 from filter_vectordb_spark.session import openblas_fn
 
@@ -250,11 +256,10 @@ def _probe_map(
     return qids_np, Q, probe_map
 
 
-def _score_group(ids, codes, pos, bQ, lo32, scale32, metric, refine):
+def _score_group(codes, pos, bQ, lo32, scale32, metric, refine):
     """Decode one list's codes and ADC-score it against its probing
-    queries; returns (qpos-expanded qids-index arrays) partial top-refine."""
-    from filter_vectordb_spark.operators.knn import topk_blocked
-
+    queries bQ[pos]; returns the per-query top-`refine` selection
+    (idx into the list's rows, adist float64), both (len(pos), kk)."""
     M = codes.astype(np.float32) + np.float32(128.0)
     Xd = lo32[None, :] + M * scale32[None, :]  # decode ONCE per group
     Qp = bQ[pos]
@@ -267,27 +272,7 @@ def _score_group(ids, codes, pos, bQ, lo32, scale32, metric, refine):
         np.maximum(D, np.float32(0.0), out=D)
         key = D
     part = topk_blocked(key, refine)
-    qrows = np.arange(len(pos))[:, None]
-    return (
-        np.repeat(pos, part.shape[1]),
-        ids[part].ravel(),
-        D[qrows, part].ravel().astype(np.float64),
-    )
-
-
-def _task_merge(bqids, out_q, out_i, out_d, refine, metric):
-    """Per-qid top-`refine` over a task's accumulated partials — bounds
-    the merge shuffle at nq×refine per task (see task_topk_merge)."""
-    from filter_vectordb_spark.operators.knn import task_topk_merge
-
-    return task_topk_merge(
-        bqids[np.concatenate(out_q)],
-        np.concatenate(out_i),
-        np.concatenate(out_d),
-        refine,
-        largest=metric == "ip",
-        col="adist",
-    )
+    return part, D[np.arange(len(pos))[:, None], part].astype(np.float64)
 
 
 def _ivfsq_score_chunk(
@@ -335,15 +320,12 @@ def _ivfsq_score_chunk(
     )
 
     def recon(it):
-        from filter_vectordb_spark.operators.knn import flatten_fixed_list
-
         bqids, bQ, groups = bc.value
-        # accumulate per-group partials and emit ONE per-task top-`refine`
-        # per query at iterator end: a task covering g lists would
-        # otherwise ship g×nq_probing×refine rows into the merge shuffle
-        # (1.9M at the 1M bench point — the shuffle, not the BLAS, then
-        # dominates); the task-level cut bounds it at nq×refine per task
-        out_q, out_i, out_d = [], [], []
+        # ONE per-task top-`refine` per query: a task covering g lists
+        # would otherwise ship g×nq_probing×refine rows into the merge
+        # shuffle (1.9M at the 1M bench point — the shuffle, not the
+        # BLAS, then dominates)
+        out = TaskPartials(refine, len(bqids), metric == "ip", "adist")
         for batch in it:
             nb = batch.num_rows
             if nb == 0:
@@ -360,14 +342,9 @@ def _ivfsq_score_chunk(
                 pos = groups.get(int(cid_col[grp[0]]))
                 if pos is None:
                     continue
-                oq, oi, od = _score_group(
-                    all_ids[grp], codes[grp], pos, bQ, lo32, scale32, metric, refine
-                )
-                out_q.append(oq)
-                out_i.append(oi)
-                out_d.append(od)
-        if out_q:
-            yield _task_merge(bqids, out_q, out_i, out_d, refine, metric)
+                part, ad = _score_group(codes[grp], pos, bQ, lo32, scale32, metric, refine)
+                out.add_topk(bqids[pos], all_ids[grp], part, ad)
+        yield from out.emit()
 
     return cand.mapInArrow(recon, schema="qid long, id long, adist double")
 
@@ -416,9 +393,6 @@ def _ivfsq_score_chunk_direct(
     qids_np, Q, probe_map = _probe_map(chunk_pdf, C, cids, nprobe, metric)
     scale32 = _scales(vmin, vmax).astype(np.float32)
     lo32 = vmin.astype(np.float32)
-    bc = spark.sparkContext.broadcast(
-        (qids_np, Q.astype(np.float32), probe_map)
-    )
 
     # Hot-list query slicing: under IP centroid ranking the probe
     # distribution is EXTREMELY skewed (measured at the 10M point:
@@ -447,60 +421,50 @@ def _ivfsq_score_chunk_direct(
             f"none of the {misses} probed lists have parquet under "
             f"{entries_dir} — wrong entries_dir?"
         )
-    # one task per core (launch_units): each unit costs its file's
-    # on-disk bytes (∝ rows — fixed-width codes) × its slice's probing
-    # queries, so the longest-first placement spreads the hot lists'
-    # slices across cores instead of leaving the skew to scheduling
-    # (the 4× fan-out this replaces bounded a slow core's tail at one
-    # small task, but paid the fixed Python-task cost 4× over).
-    # An empty probe map (possible only with 0 queries, which
-    # union_query_chunks_df already short-circuits) gives an empty frame
-    fdf = launch_units(
+
+    def serve(payload, units):
+        import pyarrow.parquet as pq
+
+        bqids, bQ, groups = payload
+        out = TaskPartials(refine, len(bqids), metric == "ip", "adist")
+        for path, cid, sl, nsl in units:
+            pos = groups.get(int(cid))
+            if pos is None:
+                continue
+            if nsl > 1:
+                pos = pos[sl::nsl]  # disjoint strided query slice
+                if len(pos) == 0:
+                    continue
+            tbl = pq.read_table(path, columns=["id", "codes"])
+            n = tbl.num_rows
+            if n == 0:
+                continue
+            ids = tbl.column("id").to_numpy(zero_copy_only=False)
+            codes = flatten_fixed_list(tbl.column("codes"), n)
+            part, ad = _score_group(codes, pos, bQ, lo32, scale32, metric, refine)
+            out.add_topk(bqids[pos], ids, part, ad)
+        yield from out.emit()
+
+    # one task per core: each unit costs its file's on-disk bytes (∝
+    # rows — fixed-width codes) × its slice's probing queries, so the
+    # longest-first placement spreads the hot lists' slices across
+    # cores instead of leaving the skew to scheduling (the 4× fan-out
+    # this replaces bounded a slow core's tail at one small task, but
+    # paid the fixed Python-task cost 4× over).  An empty probe map
+    # (possible only with 0 queries, which union_query_chunks_df
+    # already short-circuits) gives an empty frame
+    return scan_units(
         spark,
         files,
         "path STRING, cid INT, sl INT, nsl INT",
-        cost=[
+        [
             os.path.getsize(p) * len(range(sl, len(probe_map[cid]), nsl))
             for p, cid, sl, nsl in files
         ],
+        (qids_np, Q.astype(np.float32), probe_map),
+        serve,
+        "qid long, id long, adist double",
     )
-
-    def serve(it):
-        import pyarrow.parquet as pq
-
-        from filter_vectordb_spark.operators.knn import flatten_fixed_list
-
-        bqids, bQ, groups = bc.value
-        out_q, out_i, out_d = [], [], []
-        for batch in it:
-            paths = batch.column("path").to_pylist()
-            task_cids = batch.column("cid").to_pylist()
-            sls = batch.column("sl").to_pylist()
-            nsls = batch.column("nsl").to_pylist()
-            for path, cid, sl, nsl in zip(paths, task_cids, sls, nsls):
-                pos = groups.get(int(cid))
-                if pos is None:
-                    continue
-                if nsl > 1:
-                    pos = pos[sl::nsl]  # disjoint strided query slice
-                    if len(pos) == 0:
-                        continue
-                tbl = pq.read_table(path, columns=["id", "codes"])
-                n = tbl.num_rows
-                if n == 0:
-                    continue
-                ids = tbl.column("id").to_numpy(zero_copy_only=False)
-                codes = flatten_fixed_list(tbl.column("codes"), n)
-                oq, oi, od = _score_group(
-                    ids, codes, pos, bQ, lo32, scale32, metric, refine
-                )
-                out_q.append(oq)
-                out_i.append(oi)
-                out_d.append(od)
-        if out_q:
-            yield _task_merge(bqids, out_q, out_i, out_d, refine, metric)
-
-    return fdf.mapInArrow(serve, schema="qid long, id long, adist double")
 
 
 def _delegate_entries_dir(entries: DataFrame) -> str | None:
@@ -622,7 +586,7 @@ def ivfsq_search(
     adist_first = F.col("adist").desc() if metric == "ip" else F.col("adist").asc()
     if exact_codes:
         # Single-stage final merge (VERDICT r6 #1): the scan already cut
-        # each task's output to top-`refine` per query (task_topk_merge),
+        # each task's output to top-`refine` per query (TaskPartials),
         # so what reaches the driver is ≤ nq × refine × (tasks touching
         # that query's probed lists ≤ nprobe) rows — a few MB at serving
         # batch sizes.  One Arrow collect + a vectorized lexsort replace
@@ -636,19 +600,13 @@ def ivfsq_search(
         qids = tbl.column("qid").to_numpy(zero_copy_only=False)
         ids = tbl.column("id").to_numpy(zero_copy_only=False)
         ad = tbl.column("adist").to_numpy(zero_copy_only=False)
-        key = -ad if metric == "ip" else ad
-        order = np.lexsort((ids, key, qids))
-        aq, ai, av = qids[order], ids[order], ad[order]
-        starts = np.flatnonzero(np.r_[True, aq[1:] != aq[:-1]])
-        counts = np.diff(np.r_[starts, len(aq)])
-        rank = np.arange(len(aq)) - np.repeat(starts, counts) + 1
-        keep = rank <= k
+        sel, rank = _topk_per_group(qids, ids, -ad if metric == "ip" else ad, k)
         out = pd.DataFrame(
             {
-                "qid": aq[keep],
-                "id": ai[keep],
-                "dist": av[keep],
-                "rank": rank[keep].astype(np.int32),
+                "qid": qids[sel],
+                "id": ids[sel],
+                "dist": ad[sel],
+                "rank": (rank + 1).astype(np.int32),
             }
         )
         return spark.createDataFrame(out, schema="qid long, id long, dist double, rank int")

@@ -203,12 +203,12 @@ def _adc_scores_chunk(
 
     def scan(it):
         from filter_vectordb_spark.operators.knn import (
+            TaskPartials,
             flatten_fixed_list,
-            task_topk_merge,
             topk_blocked,
         )
 
-        out_q, out_i, out_d = [], [], []
+        out = TaskPartials(refine, len(qids), False, "adist")
         for batch in it:
             nb = batch.num_rows
             if nb == 0:
@@ -222,19 +222,8 @@ def _adc_scores_chunk(
             for s in range(nsub):
                 D += LUT[:, s, M[:, s]]
             part = topk_blocked(D, refine)
-            qrows = np.arange(len(qids))[:, None]
-            out_q.append(np.repeat(qids, part.shape[1]))
-            out_i.append(ids[part].ravel())
-            out_d.append(D[qrows, part].ravel())
-        if out_q:
-            yield task_topk_merge(
-                np.concatenate(out_q),
-                np.concatenate(out_i),
-                np.concatenate(out_d),
-                refine,
-                largest=False,
-                col="adist",
-            )
+            out.add_topk(qids, ids, part, D[np.arange(len(qids))[:, None], part])
+        yield from out.emit()
 
     return codes.mapInArrow(scan, schema="qid long, id long, adist double")
 

@@ -235,12 +235,12 @@ def sq_scores(
 
         def scan(it):
             from filter_vectordb_spark.operators.knn import (
+                TaskPartials,
                 flatten_fixed_list,
-                task_topk_merge,
                 topk_blocked,
             )
 
-            out_q, out_i, out_d = [], [], []
+            out = TaskPartials(refine, len(qids), False, "adist")
             for batch in it:
                 nb = batch.num_rows
                 if nb == 0:
@@ -254,19 +254,9 @@ def sq_scores(
                 D = qn[:, None] - 2.0 * G + (Xd * Xd).sum(axis=1)[None, :]
                 np.maximum(D, np.float32(0.0), out=D)
                 part = topk_blocked(D, refine)
-                qrows = np.arange(len(qids))[:, None]
-                out_q.append(np.repeat(qids, part.shape[1]))
-                out_i.append(ids[part].ravel())
-                out_d.append(D[qrows, part].ravel().astype(np.float64))
-            if out_q:
-                yield task_topk_merge(
-                    np.concatenate(out_q),
-                    np.concatenate(out_i),
-                    np.concatenate(out_d),
-                    refine,
-                    largest=False,
-                    col="adist",
-                )
+                ad = D[np.arange(len(qids))[:, None], part].astype(np.float64)
+                out.add_topk(qids, ids, part, ad)
+            yield from out.emit()
 
         return codes.mapInArrow(scan, schema="qid long, id long, adist double")
 

@@ -22,6 +22,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from filter_vectordb_spark.operators.knn import gemm_topk
 from filter_vectordb_spark.operators.postings import explode_tags, tag_stats
 from filter_vectordb_spark.operators.topk import per_group_topk
 
@@ -99,6 +100,16 @@ def _f32_exact_ok(Q: np.ndarray) -> bool:
     return Q.shape[1] <= 192 and bool(
         np.abs(Q).max(initial=0.0) <= 255 and np.array_equal(Q, np.rint(Q))
     )
+
+
+def _l2_topk(out, qids: np.ndarray, Q: np.ndarray, X: np.ndarray, xn, ids) -> None:
+    """Exact L2² top-k of the float64 queries Q (qids) over the block X
+    (row ids `ids`, squared norms xn) into the task's TaskPartials
+    `out`.  The GEMM runs in X's dtype: float32 only on the
+    integer-exact path _f32_exact_ok gates, query norms in float64."""
+    Qc = Q.astype(np.float32) if X.dtype == np.float32 else Q
+    part, dist = gemm_topk(Qc, (Q * Q).sum(axis=1), X, xn, "l2", out.k)
+    out.add_topk(qids, ids, part, dist)
 
 
 def _frequent_tag_view(base: DataFrame, min_freq: float) -> DataFrame:
@@ -272,20 +283,14 @@ def _score_pair_chunk(
         np.stack(qpdf["qemb"].to_numpy()).astype(np.float64)
     )
     vec_col = "emb" if off is None else "codes"
+    nq = len(qpdf)
     bc = spark.sparkContext.broadcast((by_pair, off, use_f32))
 
     def score(it):
-        from filter_vectordb_spark.operators.knn import (
-            flatten_fixed_list,
-            gemm_topk,
-            task_topk_merge,
-        )
+        from filter_vectordb_spark.operators.knn import TaskPartials, flatten_fixed_list
 
         groups, boff, bf32 = bc.value
-        # accumulate per-pair partials; ONE per-task top-k per query at
-        # iterator end (task_topk_merge) — nq×k rows per task into the
-        # merge shuffle however many pairs the task scored
-        out_q, out_i, out_d = [], [], []
+        out = TaskPartials(k, nq, False)
         for batch in it:
             nb = batch.num_rows
             if nb == 0:
@@ -314,22 +319,9 @@ def _score_pair_chunk(
                     continue
                 qids, Q = qg
                 X = _group_matrix(X_all, grp, boff, bf32)
-                Qc = Q.astype(np.float32) if X.dtype == np.float32 else Q
-                qn = (Q * Q).sum(axis=1)
                 Xf = X.astype(np.float64) if X.dtype == np.float32 else X
-                xn = (Xf * Xf).sum(axis=1)
-                part_idx, dist = gemm_topk(Qc, qn, X, xn, "l2", k)
-                out_q.append(np.repeat(qids, part_idx.shape[1]))
-                out_i.append(all_ids[grp][part_idx].ravel())
-                out_d.append(dist.ravel())
-        if out_q:
-            yield task_topk_merge(
-                np.concatenate(out_q),
-                np.concatenate(out_i),
-                np.concatenate(out_d),
-                k,
-                largest=False,
-            )
+                _l2_topk(out, qids, Q, X, (Xf * Xf).sum(axis=1), all_ids[grp])
+        yield from out.emit()
 
     hit_pairs = spark.createDataFrame(
         sorted({(int(a), int(b)) for a, b in zip(qpdf["tag_a"], qpdf["tag_b"])})
@@ -421,17 +413,14 @@ def _score_tag_chunk(
         np.stack(qpdf["qemb"].to_numpy()).astype(np.float64)
     )
     vec_col = "emb" if off is None else "codes"
+    nq = len(qpdf)
     bc = spark.sparkContext.broadcast((by_tag, off, use_f32))
 
     def score(it):
-        from filter_vectordb_spark.operators.knn import (
-            flatten_fixed_list,
-            gemm_topk,
-            task_topk_merge,
-        )
+        from filter_vectordb_spark.operators.knn import TaskPartials, flatten_fixed_list
 
         groups, boff, bf32 = bc.value
-        out_q, out_i, out_d = [], [], []
+        out = TaskPartials(k, nq, False)
         for batch in it:
             nb = batch.num_rows
             if nb == 0:
@@ -447,22 +436,9 @@ def _score_tag_chunk(
                     continue
                 qids, Q = qg
                 X = _group_matrix(X_all, grp, boff, bf32)
-                Qc = Q.astype(np.float32) if X.dtype == np.float32 else Q
-                qn = (Q * Q).sum(axis=1)
                 Xf = X.astype(np.float64) if X.dtype == np.float32 else X
-                xn = (Xf * Xf).sum(axis=1)
-                part_idx, dist = gemm_topk(Qc, qn, X, xn, "l2", k)
-                out_q.append(np.repeat(qids, part_idx.shape[1]))
-                out_i.append(all_ids[grp][part_idx].ravel())
-                out_d.append(dist.ravel())
-        if out_q:
-            yield task_topk_merge(
-                np.concatenate(out_q),
-                np.concatenate(out_i),
-                np.concatenate(out_d),
-                k,
-                largest=False,
-            )
+                _l2_topk(out, qids, Q, X, (Xf * Xf).sum(axis=1), all_ids[grp])
+        yield from out.emit()
 
     hit_tags = spark.createDataFrame(
         sorted({(int(t),) for t in qpdf["tag"]}) or [(-1,)], "tag INT"

@@ -133,14 +133,14 @@ def _filtered_scan_chunk(qpdf, base: DataFrame, k: int) -> DataFrame:
         import pyarrow as pa
 
         from filter_vectordb_spark.operators.knn import (
+            TaskPartials,
             flatten_fixed_list,
             gemm_topk,
-            task_topk_merge,
         )
 
         bqids, bQ, bgroups = bc.value
         qn = (bQ * bQ).sum(axis=1)
-        out_q, out_i, out_d = [], [], []
+        out = TaskPartials(k, len(bqids), False)
         for batch in it:
             nb = batch.num_rows
             if nb == 0:
@@ -185,17 +185,8 @@ def _filtered_scan_chunk(qpdf, base: DataFrame, k: int) -> DataFrame:
                     Xc = np.ascontiguousarray(X[cand])
                     xc, ic = xn[cand], ids[cand]
                 part, dist = gemm_topk(bQ[pos], qn[pos], Xc, xc, "l2", k)
-                out_q.append(np.repeat(pos, part.shape[1]))
-                out_i.append(ic[part].ravel())
-                out_d.append(dist.ravel())
-        if out_q:
-            yield task_topk_merge(
-                bqids[np.concatenate(out_q)],
-                np.concatenate(out_i),
-                np.concatenate(out_d),
-                k,
-                largest=False,
-            )
+                out.add_topk(bqids[pos], ic, part, dist)
+        yield from out.emit()
 
     return base.select("id", "emb", "tags").mapInArrow(
         score, schema="qid long, id long, dist double"

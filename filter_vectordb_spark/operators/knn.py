@@ -114,6 +114,20 @@ _NO_ID = np.iinfo(np.int64).max
 SEED_COLS = 256
 
 
+def _topk_per_group(groups: np.ndarray, ids: np.ndarray, key: np.ndarray, k: int):
+    """The one per-group top-k cut of every partial merge: positions of
+    each group's k best rows by (key asc, id asc), ordered by (group,
+    key, id), and each kept row's 0-based rank in its group — one
+    vectorized lexsort, no per-group Python loop.  Callers pass key =
+    -score when larger is better."""
+    order = np.lexsort((ids, key, groups))
+    g = groups[order]
+    starts = np.flatnonzero(np.r_[True, g[1:] != g[:-1]])
+    rank = np.arange(len(g)) - np.repeat(starts, np.diff(np.r_[starts, len(g)]))
+    keep = rank < k
+    return order[keep], rank[keep]
+
+
 def _threshold_merge(
     best_idx: np.ndarray,
     best_val: np.ndarray,
@@ -133,16 +147,10 @@ def _threshold_merge(
     all_r = np.concatenate([np.repeat(np.arange(nq), kk), rows])
     all_i = np.concatenate([best_idx.ravel(), ids])
     all_v = np.concatenate([best_val.ravel(), vals])
-    key = -all_v if larger else all_v
-    order = np.lexsort((all_i, key, all_r))
-    ar, ai, av = all_r[order], all_i[order], all_v[order]
-    starts = np.flatnonzero(np.r_[True, ar[1:] != ar[:-1]])
-    counts = np.diff(np.r_[starts, len(ar)])
-    rank = np.arange(len(ar)) - np.repeat(starts, counts)
-    keep = rank < kk
+    sel, _ = _topk_per_group(all_r, all_i, -all_v if larger else all_v, kk)
     # every row already holds kk dense entries → exactly kk survive per row
-    best_idx = ai[keep].reshape(nq, kk)
-    best_val = av[keep].reshape(nq, kk)
+    best_idx = all_i[sel].reshape(nq, kk)
+    best_val = all_v[sel].reshape(nq, kk)
     return best_idx, best_val, best_val[:, -1].copy()
 
 
@@ -412,23 +420,60 @@ def _union_all(parts: list[DataFrame]) -> DataFrame:
 
 
 def task_topk_merge(qids, ids, dists, k: int, largest: bool, col: str = "dist"):
-    """Per-qid top-k over a task's accumulated (qid, id, dist) partials,
-    kept in the downstream global merge's exact order (dist best-first,
-    id asc) — one vectorized lexsort, no per-query Python loop.  Bounds
-    what a task ships into the merge shuffle at nq×k rows however many
-    groups/batches it scored.  Returns an Arrow RecordBatch."""
+    """Per-qid top-k over a task's (qid, id, dist) partials, kept in the
+    downstream global merge's exact order (dist best-first, id asc).
+    Returns an Arrow RecordBatch."""
     import pyarrow as pa
 
-    key = -dists if largest else dists
-    order = np.lexsort((ids, key, qids))
-    aq, ai, ad = qids[order], ids[order], dists[order]
-    starts = np.flatnonzero(np.r_[True, aq[1:] != aq[:-1]])
-    counts = np.diff(np.r_[starts, len(aq)])
-    rank = np.arange(len(aq)) - np.repeat(starts, counts)
-    keep = rank < k
-    return pa.RecordBatch.from_pydict(
-        {"qid": aq[keep], "id": ai[keep], col: ad[keep]}
-    )
+    sel, _ = _topk_per_group(qids, ids, -dists if largest else dists, k)
+    return pa.RecordBatch.from_pydict({"qid": qids[sel], "id": ids[sel], col: dists[sel]})
+
+
+class TaskPartials:
+    """A scan task's one partial top-k — the partition-local half of the
+    two-phase (partition top-k, global merge) skeleton every scan kernel
+    shares.  Units, groups and batches add (qid, id, score) candidates;
+    emit() yields the per-qid top-k once, at iterator end, so a task
+    ships nq×k rows into the merge shuffle however much it scored.
+    Pending rows are cut to the per-qid top-k once they pass
+    max(65_536, 8·k·nq), which bounds per-task memory at O(nq·k + cap)
+    (ADVICE r8: hot tags / large nprobe otherwise hold every candidate
+    until iterator end).  The cut is exact under (score, id asc), so the
+    emitted rows do not depend on when it runs.  Scores keep their
+    dtype (the sparse kernel emits integer scores); `col` names the
+    score column, `largest` its direction."""
+
+    def __init__(self, k: int, nq: int, largest: bool, col: str = "dist"):
+        self.k, self.largest, self.col = k, largest, col
+        self._cap = max(65_536, 8 * k * nq)
+        self._parts: list = []  # (qids, ids, vals) triples
+        self._n = 0
+
+    def add(self, qids: np.ndarray, ids: np.ndarray, vals: np.ndarray) -> None:
+        """Offer flat (qid, id, score) triples."""
+        if len(qids) == 0:
+            return
+        self._parts.append((qids, ids, vals))
+        self._n += len(qids)
+        if self._n > self._cap:
+            q, i, v = self._pending()
+            sel, _ = _topk_per_group(q, i, -v if self.largest else v, self.k)
+            self._parts = [(q[sel], i[sel], v[sel])]
+            self._n = len(sel)
+
+    def add_topk(self, qids: np.ndarray, ids, idx: np.ndarray, vals: np.ndarray) -> None:
+        """Offer a per-query selection: idx/vals (len(qids), kk) as
+        gemm_topk / topk_blocked return them, idx indexing `ids`."""
+        self.add(np.repeat(qids, idx.shape[1]), ids[idx].ravel(), vals.ravel())
+
+    def _pending(self):
+        return tuple(np.concatenate(a) for a in zip(*self._parts))
+
+    def emit(self):
+        """Zero or one RecordBatch (qid, id, col): the per-qid top-k,
+        score best-first, then id ascending."""
+        if self._parts:
+            yield task_topk_merge(*self._pending(), self.k, self.largest, self.col)
 
 
 def _balance(cost: list, nbins: int) -> list[list[int]]:
@@ -450,7 +495,7 @@ def _balance(cost: list, nbins: int) -> list[list[int]]:
 
 
 def launch_units(spark, units: list, schema: str, cost=None) -> DataFrame:
-    """The one launch of every direct-read scan: a DataFrame of `units`
+    """The launch under scan_units: a DataFrame of `units`
     (tuples matching `schema`) in min(len(units), defaultParallelism)
     partitions — one Python task per core — balanced longest-first by
     the per-unit `cost` (rows × queries where the caller knows them,
@@ -458,11 +503,10 @@ def launch_units(spark, units: list, schema: str, cost=None) -> DataFrame:
     initialize cost (measured 0.2-0.5 s of slot time per task on a
     4-core host), so finer launches spend more on tasks than their
     dynamic scheduling saves; balance comes from the cost placement
-    instead, and the caller's serve loop carries its top-k state across
-    all units of its task.  Callers keep planning fine-grained units
-    (the packing needs them to balance).  An empty unit list gives an
-    empty frame of `schema`, so the caller's mapInArrow yields its typed
-    empty result."""
+    instead, and each task carries its top-k state across all of its
+    units.  Callers keep planning fine-grained units (the packing needs
+    them to balance).  An empty unit list gives an empty frame of
+    `schema`."""
     nparts = min(len(units), spark.sparkContext.defaultParallelism)
     if nparts == 0:
         return spark.createDataFrame([], schema)
@@ -470,6 +514,24 @@ def launch_units(spark, units: list, schema: str, cost=None) -> DataFrame:
     # one bin per element, so parallelize puts exactly one per partition
     rdd = spark.sparkContext.parallelize([[units[i] for i in b] for b in bins], nparts)
     return spark.createDataFrame(rdd.flatMap(lambda b: b), schema)
+
+
+def scan_units(spark, units: list, schema: str, cost, payload, serve, out_schema: str) -> DataFrame:
+    """The one direct-read scan skeleton: `units` (tuples matching
+    `schema`) launched one Python task per core by launch_units (placed
+    by `cost`), `payload` broadcast once, and per task
+    `serve(payload, unit_tuples)` — the route's scoring body, which
+    yields Arrow batches of `out_schema` (its TaskPartials.emit()).  No
+    units give the typed empty `out_schema` frame without a job."""
+    if not units:
+        return spark.createDataFrame([], out_schema)
+    bc = spark.sparkContext.broadcast(payload)
+    fdf = launch_units(spark, units, schema, cost)
+
+    def run(it):
+        yield from serve(bc.value, (u for b in it for u in zip(*b.to_pydict().values())))
+
+    return fdf.mapInArrow(run, schema=out_schema)
 
 
 #: planning grain of rg_units: units per core, so the longest-first
@@ -666,8 +728,7 @@ def _score_vectorized_chunk(
             ids = batch.column("id").to_numpy(zero_copy_only=False)
             X = flatten_fixed_list(batch.column("emb"), nb).astype(dt)
             _push_block(acc, Qc, qfac, ids, X)
-        if acc.seen:
-            yield _acc_partial(acc, bqids, k)
+        yield from _acc_partial(acc, bqids)
 
     return b.mapInArrow(score_batches, schema="qid long, id long, dist double")
 
@@ -702,13 +763,13 @@ def _push_block(acc: StreamTopK, Qc, qfac, ids, X) -> None:
     acc.scan(Qc, qfac, X, xfac, ids.astype(np.int64, copy=False))
 
 
-def _acc_partial(acc: StreamTopK, bqids: np.ndarray, k: int):
+def _acc_partial(acc: StreamTopK, bqids: np.ndarray):
     """A task's one partial: its accumulator's per-query top-k as the
-    (qid, id, dist) rows of task_topk_merge."""
+    TaskPartials rows (zero or one batch)."""
     idx, dist = acc.result()
-    return task_topk_merge(
-        np.repeat(bqids, idx.shape[1]), idx.ravel(), dist.ravel(), k, acc.larger
-    )
+    out = TaskPartials(acc.k, len(bqids), acc.larger)
+    out.add(np.repeat(bqids, idx.shape[1]), idx.ravel(), dist.ravel())
+    return out.emit()
 
 
 def _score_vectorized_chunk_direct(
@@ -722,7 +783,7 @@ def _score_vectorized_chunk_direct(
     serve from the OS page cache — the same resident-data cost model as
     the IVF+SQ8 direct serving path (index/ivfsq._ivfsq_score_chunk_direct,
     where the POSIX-path caveat lives).  One task per core
-    (launch_units, balanced by rows): each task carries one StreamTopK
+    (scan_units, balanced by rows): each task carries one StreamTopK
     across all of its units and emits one partial."""
     import glob as _glob
 
@@ -739,40 +800,35 @@ def _score_vectorized_chunk_direct(
     Q = np.stack(qpdf["qemb"].to_numpy()).astype(np.float64)
     if dt == np.float32:
         _check_f32_queries(Q)
-    bc = spark.sparkContext.broadcast((qids, Q))
+
+    def serve(payload, units):
+        import pyarrow.parquet as pq
+
+        bqids, bQ = payload
+        acc = StreamTopK(len(bqids), k, metric)
+        Qc, qfac = _query_side(bQ, metric, dt)
+        for path, lo, hi in units:
+            tbl = pq.ParquetFile(path).read_row_groups(
+                list(range(lo, hi)), columns=["id", "emb"]
+            )
+            n = tbl.num_rows
+            if n == 0:
+                continue
+            ids = tbl.column("id").to_numpy(zero_copy_only=False)
+            X = flatten_fixed_list(tbl.column("emb"), n).astype(dt)
+            _push_block(acc, Qc, qfac, ids, X)
+        yield from _acc_partial(acc, bqids)
+
     units = rg_units(spark, files)
-    fdf = launch_units(
+    return scan_units(
         spark,
         [u[:3] for u in units],
         "path STRING, rg_lo INT, rg_hi INT",
-        cost=[u[3] for u in units],
+        [u[3] for u in units],
+        (qids, Q),
+        serve,
+        "qid long, id long, dist double",
     )
-
-    def serve(it):
-        import pyarrow.parquet as pq
-
-        bqids, bQ = bc.value
-        acc = StreamTopK(len(bqids), k, metric)
-        Qc, qfac = _query_side(bQ, metric, dt)
-        for batch in it:
-            for path, lo, hi in zip(
-                batch.column("path").to_pylist(),
-                batch.column("rg_lo").to_pylist(),
-                batch.column("rg_hi").to_pylist(),
-            ):
-                tbl = pq.ParquetFile(path).read_row_groups(
-                    list(range(lo, hi)), columns=["id", "emb"]
-                )
-                n = tbl.num_rows
-                if n == 0:
-                    continue
-                ids = tbl.column("id").to_numpy(zero_copy_only=False)
-                X = flatten_fixed_list(tbl.column("emb"), n).astype(dt)
-                _push_block(acc, Qc, qfac, ids, X)
-        if acc.seen:
-            yield _acc_partial(acc, bqids, k)
-
-    return fdf.mapInArrow(serve, schema="qid long, id long, dist double")
 
 
 def pairwise_scores(

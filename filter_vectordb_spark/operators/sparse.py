@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from filter_vectordb_spark.operators.knn import launch_units, rg_rows
+from filter_vectordb_spark.operators.knn import TaskPartials, rg_rows, scan_units, topk_blocked
 from filter_vectordb_spark.operators.topk import per_group_topk
 
 
@@ -108,9 +108,10 @@ def sparse_topk_sharded(
     parquet files each holding COMPLETE documents (the staging writes
     one file per doc-partitioned generator partition — the caller's
     contract, parity-tested), so a task can compute each of its files'
-    docs' FULL scores and emit only that file's local top-k per query —
-    the shuffle carries nq×k×nfiles rows (~10⁵) instead of 10⁸.  Files
-    are launched one task per core (launch_units, balanced by rows).
+    docs' FULL scores and keep only the per-query top-k over all of its
+    files — the shuffle carries nq×k×ntasks rows (~10⁴) instead of 10⁸.
+    Files are launched one task per core (knn.scan_units, balanced by
+    rows).
     This is the inverted-index-as-doc-sharded-segments layout every
     distributed text engine uses; at 100 TB the segment list is the
     metadata and each task streams its segments.
@@ -162,112 +163,101 @@ def sparse_topk_sharded(
         qpdf["term"].to_numpy(dtype=np.int64),
         qpdf["w"].to_numpy(dtype=np.int64),
     )
-    bc = spark.sparkContext.broadcast(bq)
-    fdf = launch_units(
-        spark,
-        [(p,) for p in files],
-        "path STRING",
-        cost=[int(rg_rows(p).sum()) for p in files],
-    )
 
-    def serve(it):
+    def serve(payload, units):
         import pyarrow.parquet as pq
 
-        from filter_vectordb_spark.operators.knn import task_topk_merge, topk_blocked
-
-        qid_arr, qterm_arr, qw_arr = bc.value
+        qid_arr, qterm_arr, qw_arr = payload
         # dense query-row index (qids are arbitrary longs in general)
         uq, qrow = np.unique(qid_arr, return_inverse=True)
         nq = len(uq)
-        for batch in it:
-            for path in batch.column("path").to_pylist():
-                tbl = pq.read_table(path, columns=["id", "term", "w"])
-                n = tbl.num_rows
-                if n == 0:
-                    continue
-                did = tbl.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
-                dterm = tbl.column("term").to_numpy(zero_copy_only=False).astype(np.int64)
-                dw = tbl.column("w").to_numpy(zero_copy_only=False).astype(np.int64)
-                # posting lists must be binary-searchable term ranges:
-                # the staged layout arrives term-sorted (a one-pass
-                # check), arbitrary inputs pay the argsort here
-                if np.all(dterm[1:] >= dterm[:-1]):
-                    st, s_did, sw = dterm, did, dw
-                else:
-                    order = np.argsort(dterm, kind="stable")
-                    st, s_did, sw = dterm[order], did[order], dw[order]
-                lo = np.searchsorted(st, qterm_arr, side="left")
-                hi = np.searchsorted(st, qterm_arr, side="right")
-                counts = hi - lo
-                if budget is not None:
-                    # impact-ordered traversal cap: the first `budget`
-                    # rows of a (term asc, w desc)-sorted range are the
-                    # highest-weight postings — linscan's budget scan
-                    counts = np.minimum(counts, budget)
-                total = int(counts.sum())
-                if total == 0:
-                    continue
-                # vectorized range expansion: positions of every
-                # (query-term, matching segment row) pair
-                starts = np.repeat(lo, counts)
-                cum = np.concatenate(([0], np.cumsum(counts)[:-1]))
-                pos = starts + (np.arange(total) - np.repeat(cum, counts))
-                pq_ = np.repeat(qrow, counts)
-                pval = np.repeat(qw_arr, counts) * sw[pos]
-                # dense doc index over the segment's ID RANGE (gap docs
-                # just leave zero columns the nz filter drops): no
-                # factorize/unique pass at all — the range-partitioned
-                # staging makes width ≈ ndocs
-                dmin = int(did.min())
-                width = int(did.max()) - dmin + 1
-                # budgeted matches are sparse (nq x nnz x budget rows,
-                # not nq x width candidates) — the dense block would be
-                # mostly zero-traffic; group the triplets instead
-                if budget is None and nq * width <= 64_000_000:
-                    pdoc = s_did[pos] - dmin
-                    # dense accumulate: one scatter pass + blocked top-k
-                    M = np.bincount(
-                        pq_ * width + pdoc, weights=pval, minlength=nq * width
-                    ).reshape(nq, width)
-                    kk = min(k, width)
-                    # integer scores below 2^24 are exactly representable
-                    # in f32, so selection on an f32 view compares the
-                    # same values at 1/4 the memory bandwidth (measured
-                    # 1.51 s -> 0.39 s per 8.84M-corpus segment); the
-                    # guard keeps arbitrary-weight corpora on the exact
-                    # f64 sweep.  Emitted scores stay the f64 truth.
-                    Msel = M if M.max() >= 16_777_216.0 else M.astype(np.float32)
-                    part = topk_blocked(-Msel, kk)
-                    qrows = np.arange(nq)[:, None]
-                    vals = M[qrows, part]
-                    nz = vals > 0  # zero score = no shared term, not a hit
-                    yield task_topk_merge(
-                        np.repeat(uq, kk)[nz.ravel()],
-                        (part + dmin).ravel()[nz.ravel()],
-                        vals.ravel()[nz.ravel()].astype(np.int64),
-                        k,
-                        largest=True,
-                        col="score",
-                    )
-                else:
-                    # sort-group fallback for sparse/huge id ranges
-                    pid = s_did[pos]
-                    gorder = np.lexsort((pid, pq_))
-                    gq, gi, gv = pq_[gorder], pid[gorder], pval[gorder]
-                    bounds = np.flatnonzero(
-                        np.r_[True, (gq[1:] != gq[:-1]) | (gi[1:] != gi[:-1])]
-                    )
-                    sums = np.add.reduceat(gv, bounds)
-                    yield task_topk_merge(
-                        uq[gq[bounds]],
-                        gi[bounds],
-                        sums,
-                        k,
-                        largest=True,
-                        col="score",
-                    )
+        out = TaskPartials(k, nq, True, "score")
+        for (path,) in units:
+            tbl = pq.read_table(path, columns=["id", "term", "w"])
+            n = tbl.num_rows
+            if n == 0:
+                continue
+            did = tbl.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
+            dterm = tbl.column("term").to_numpy(zero_copy_only=False).astype(np.int64)
+            dw = tbl.column("w").to_numpy(zero_copy_only=False).astype(np.int64)
+            # posting lists must be binary-searchable term ranges:
+            # the staged layout arrives term-sorted (a one-pass
+            # check), arbitrary inputs pay the argsort here
+            if np.all(dterm[1:] >= dterm[:-1]):
+                st, s_did, sw = dterm, did, dw
+            else:
+                order = np.argsort(dterm, kind="stable")
+                st, s_did, sw = dterm[order], did[order], dw[order]
+            lo = np.searchsorted(st, qterm_arr, side="left")
+            hi = np.searchsorted(st, qterm_arr, side="right")
+            counts = hi - lo
+            if budget is not None:
+                # impact-ordered traversal cap: the first `budget`
+                # rows of a (term asc, w desc)-sorted range are the
+                # highest-weight postings — linscan's budget scan
+                counts = np.minimum(counts, budget)
+            total = int(counts.sum())
+            if total == 0:
+                continue
+            # vectorized range expansion: positions of every
+            # (query-term, matching segment row) pair
+            starts = np.repeat(lo, counts)
+            cum = np.concatenate(([0], np.cumsum(counts)[:-1]))
+            pos = starts + (np.arange(total) - np.repeat(cum, counts))
+            pq_ = np.repeat(qrow, counts)
+            pval = np.repeat(qw_arr, counts) * sw[pos]
+            # dense doc index over the segment's ID RANGE (gap docs
+            # just leave zero columns the nz filter drops): no
+            # factorize/unique pass at all — the range-partitioned
+            # staging makes width ≈ ndocs
+            dmin = int(did.min())
+            width = int(did.max()) - dmin + 1
+            # budgeted matches are sparse (nq x nnz x budget rows,
+            # not nq x width candidates) — the dense block would be
+            # mostly zero-traffic; group the triplets instead
+            if budget is None and nq * width <= 64_000_000:
+                pdoc = s_did[pos] - dmin
+                # dense accumulate: one scatter pass + blocked top-k
+                M = np.bincount(
+                    pq_ * width + pdoc, weights=pval, minlength=nq * width
+                ).reshape(nq, width)
+                kk = min(k, width)
+                # integer scores below 2^24 are exactly representable
+                # in f32, so selection on an f32 view compares the
+                # same values at 1/4 the memory bandwidth (measured
+                # 1.51 s -> 0.39 s per 8.84M-corpus segment); the
+                # guard keeps arbitrary-weight corpora on the exact
+                # f64 sweep.  Emitted scores stay the f64 truth.
+                Msel = M if M.max() >= 16_777_216.0 else M.astype(np.float32)
+                part = topk_blocked(-Msel, kk)
+                qrows = np.arange(nq)[:, None]
+                vals = M[qrows, part]
+                nz = vals > 0  # zero score = no shared term, not a hit
+                out.add(
+                    np.repeat(uq, kk)[nz.ravel()],
+                    (part + dmin).ravel()[nz.ravel()],
+                    vals.ravel()[nz.ravel()].astype(np.int64),
+                )
+            else:
+                # sort-group fallback for sparse/huge id ranges
+                pid = s_did[pos]
+                gorder = np.lexsort((pid, pq_))
+                gq, gi, gv = pq_[gorder], pid[gorder], pval[gorder]
+                bounds = np.flatnonzero(
+                    np.r_[True, (gq[1:] != gq[:-1]) | (gi[1:] != gi[:-1])]
+                )
+                out.add(uq[gq[bounds]], gi[bounds], np.add.reduceat(gv, bounds))
+        yield from out.emit()
 
-    scored = fdf.mapInArrow(serve, schema="qid long, id long, score long")
+    scored = scan_units(
+        spark,
+        [(p,) for p in files],
+        "path STRING",
+        [int(rg_rows(p).sum()) for p in files],
+        bq,
+        serve,
+        "qid long, id long, score long",
+    )
     return per_group_topk(
         scored, ["qid"], [F.col("score").desc(), F.col("id").asc()], k
     ).select("qid", "id", "score", "rank")

@@ -1,13 +1,12 @@
 #!/usr/bin/env python
-"""Exact frame-equality check of a registered query vs a committed git
-ref's implementation, plus min-of-N noop timing of both.
+"""Frame fingerprint of a registered query, plus noop and count timings.
 
 Usage: python scripts/exp_ab_frames.py <query> [<sf_dir>] [runs]
 
-Compares sorted collected rows (schema string + values) of the current
-working-tree implementation against the same query function imported
-from a pristine checkout at env FVDB_AB_REF_DIR (default: skip the
-old-side compare and just time the current one).
+Prints the schema and a `rows=<n> hash=<h>` line over the sorted
+collected rows.  For a frame-identity A/B, run it in two checkouts (for
+example the parent commit from `git archive` and the working tree) and
+compare the two lines.
 """
 import os
 import sys
@@ -25,15 +24,6 @@ from filter_vectordb_spark.registry import QUERIES  # noqa: E402
 spark = get_spark("exp_ab")
 spark.range(1000).count()
 fn = QUERIES[name]
-
-ref_dir = os.environ.get("FVDB_AB_REF_DIR")
-if ref_dir:
-    import importlib
-    import subprocess
-
-    # load the ref implementation from a separate checkout in a subprocess
-    # is heavy; instead rely on caller having captured expected rows
-    raise SystemExit("FVDB_AB_REF_DIR flow not implemented; use exp dump")
 
 df = fn(spark, sf_dir)
 print("schema:", df.schema.simpleString(), flush=True)

@@ -351,33 +351,6 @@ def test_decode_scratch_poison(monkeypatch):
     _DECODE_SCRATCH.clear()
 
 
-def test_partials_compact_equivalence():
-    """ADVICE r8 (low): compaction keeps exactly the per-qid top-k the
-    final task_topk_merge would select, and is a no-op under the cap."""
-    from filter_vectordb_spark.index.filteridx import _partials_compact
-    from filter_vectordb_spark.operators.knn import task_topk_merge
-
-    rng = np.random.default_rng(11)
-    qs = [rng.integers(0, 8, size=500).astype(np.int64) for _ in range(4)]
-    is_ = [rng.integers(0, 10_000, size=500).astype(np.int64) for _ in range(4)]
-    ds = [rng.random(500) for _ in range(4)]
-    ref = task_topk_merge(
-        np.concatenate(qs), np.concatenate(is_), np.concatenate(ds), 10, False
-    )
-    cq, ci, cd = list(qs[:1]), list(is_[:1]), list(ds[:1])
-    for j in range(1, 4):
-        cq.append(qs[j]), ci.append(is_[j]), cd.append(ds[j])
-        cq, ci, cd = _partials_compact(cq, ci, cd, 10, cap=600)
-    assert sum(a.size for a in cd) <= 600
-    got = task_topk_merge(
-        np.concatenate(cq), np.concatenate(ci), np.concatenate(cd), 10, False
-    )
-    assert got.equals(ref)
-    # under the cap: identity, no concatenation
-    same = _partials_compact(list(qs), list(is_), list(ds), 10, cap=10**9)
-    assert len(same[0]) == 4
-
-
 def test_meta_gather_plan_matches_sweep(spark, built):
     """VERDICT r8 #1c: the shuffle-based posting-gather plan and the
     direct-read sweep must return IDENTICAL results (ids, ranks, and

@@ -302,6 +302,67 @@ def test_stream_topk_seed_holds_until_first_merge():
     assert acc._npend < 64 * 2048 // 4
 
 
+def test_task_partials_equivalence(monkeypatch):
+    """ADVICE r8 (low): a task's TaskPartials emits exactly the per-qid
+    top-k one task_topk_merge over all of its rows selects — for either
+    score direction, integer or float scores, any score column name, and
+    whether its pending rows were compacted zero, one or several times;
+    compaction bounds the pending rows, and under the cap nothing is
+    concatenated."""
+    import numpy as np
+
+    from filter_vectordb_spark.operators import knn
+    from filter_vectordb_spark.operators.knn import TaskPartials, task_topk_merge
+
+    cuts = []
+
+    def counted(*a):
+        cuts.append(1)
+        return real(*a)
+
+    real = knn._topk_per_group
+    monkeypatch.setattr(knn, "_topk_per_group", counted)
+    rng = np.random.default_rng(11)
+    qs = [rng.integers(0, 8, size=500).astype(np.int64) for _ in range(4)]
+    is_ = [rng.integers(0, 10_000, size=500).astype(np.int64) for _ in range(4)]
+    scores = {
+        "float": [rng.random(500) for _ in range(4)],
+        # few distinct values: ties at the k-th score resolve by id asc
+        "int": [rng.integers(0, 50, size=500).astype(np.int64) for _ in range(4)],
+    }
+    for kind, largest, col in (
+        ("float", False, "dist"),
+        ("int", True, "score"),
+        ("float", True, "adist"),
+    ):
+        ds = scores[kind]
+        ref = task_topk_merge(
+            np.concatenate(qs), np.concatenate(is_), np.concatenate(ds), 10, largest, col
+        )
+        assert ref.schema.names == ["qid", "id", col]
+        assert str(ref.column(col).type) == ("int64" if kind == "int" else "double")
+        for cap, ncuts in ((10**9, 0), (1500, 1), (100, 4)):
+            acc = TaskPartials(10, 8, largest, col)
+            acc._cap = cap
+            cuts.clear()
+            for j in range(4):
+                acc.add(qs[j], is_[j], ds[j])
+                assert acc._n == sum(len(p[0]) for p in acc._parts) <= cap
+            assert len(cuts) == ncuts, (kind, cap)
+            if ncuts == 0:  # under the cap: identity, no concatenation
+                assert len(acc._parts) == 4
+            (got,) = acc.emit()
+            assert got.equals(ref), (kind, col, cap)
+    # the index-matrix form adds the same triples as the flat form
+    idx = np.array([[2, 0], [1, 3]])
+    vals = np.array([[0.5, 0.7], [0.1, 0.2]])
+    a, b = TaskPartials(2, 2, False), TaskPartials(2, 2, False)
+    a.add_topk(np.array([7, 9]), np.array([10, 11, 12, 13]), idx, vals)
+    b.add(np.array([7, 7, 9, 9]), np.array([12, 10, 11, 13]), vals.ravel())
+    assert next(a.emit()).equals(next(b.emit()))
+    assert list(TaskPartials(10, 8, False).emit()) == []
+
+
 def test_launch_units_one_task_per_core_balanced(spark):
     """launch_units places every unit exactly once into
     min(n, defaultParallelism) partitions, longest-first by cost, so the
@@ -339,16 +400,28 @@ def test_empty_units_give_typed_empty_frames(spark, tmp_path):
     from filter_vectordb_spark.index.filteridx_kernels import (
         _score_meta_bin,
         _score_pairview,
+        _score_tagview,
+        _score_tagview_probed,
     )
 
     off = np.zeros(4)
     q = pd.DataFrame(
-        {"qid": [1], "qemb": [[1.0, 2.0, 3.0, 4.0]], "tag_a": [5], "tag_b": [6], "qtags": [[5, 6]]}
+        {
+            "qid": [1],
+            "qemb": [[1.0, 2.0, 3.0, 4.0]],
+            "tag_a": [5],
+            "tag_b": [6],
+            "qtags": [[5, 6]],
+            "tag": [5],
+            "other": [6],
+        }
     )
     (tmp_path / "_SUCCESS.json").write_text(json.dumps({"d": 4, "files": []}))
     for df in (
         _score_pairview(spark, {}, q, K, off),
         _score_meta_bin(spark, str(tmp_path), q, K, off),
+        _score_tagview(spark, {}, q, K, off),
+        _score_tagview_probed(spark, {}, q, K, off, np.zeros((1, 2), dtype=np.int64), 4),
     ):
         assert df.collect() == []
         assert df.schema.simpleString() == "struct<qid:bigint,id:bigint,dist:double>"

@@ -109,13 +109,19 @@ def test_sparse_topk_sharded_equals_join_aggregate(spark, tmp_path):
 
     q = synth_sparse_queries(spark, nq=64, nnz=12)
     terms = synth_sparse_terms(spark, n=5000, nnz=30)
-    # two stagings: the optimized layout (range-partitioned by id +
+    # three stagings: the optimized layout (range-partitioned by id +
     # term-sorted within files — the fixture stager's shape, exercising
-    # the sorted fast path + contiguous dense index) and the raw
-    # generator layout (round-robin ids, term-unsorted — exercising the
-    # in-kernel argsort + gap-tolerant dense index)
+    # the sorted fast path + contiguous dense index), the same with
+    # 3×defaultParallelism files (several files per task, so each task
+    # accumulates one partial across files), and the raw generator
+    # layout (round-robin ids, term-unsorted — exercising the in-kernel
+    # argsort + gap-tolerant dense index)
+    nmany = 3 * spark.sparkContext.defaultParallelism
     layouts = {
         "sorted": lambda df: df.repartitionByRange(4, "id").sortWithinPartitions(
+            "term"
+        ),
+        "many": lambda df: df.repartitionByRange(nmany, "id").sortWithinPartitions(
             "term"
         ),
         "raw": lambda df: df,
