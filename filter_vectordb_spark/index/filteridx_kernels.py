@@ -5,13 +5,18 @@ reviewable there.  See filteridx's module docstring for the route map
 citations; this module holds the serve kernels plus their shared
 decode/posting helpers.
 
-Every kernel is one scoring body on the engine's one scan skeleton
-(operators/knn.py): it plans its units — parquet row groups or memmap
-sidecar files — and hands them to `scan_units`, which broadcasts the
-query payload, launches one Python task per core and calls the body
-with that task's units; the body feeds its candidates into one
-`TaskPartials`, whose emit() is the task's single bounded partial
-top-k for the global merge.  The hash-checked nq32 rows pin the
+Every direct-read route is one scoring body on the engine's one scan
+skeleton (operators/knn.py): its builder (_pairview_scan,
+_tagview_scan, _tagview_probed_scan, _meta_scan, _meta_bin_scan) plans
+the units — parquet row groups or memmap sidecar files — and returns a
+`Scan`; `scan_units` launches a list of them one Python task per core
+and calls each body with that task's units; the body feeds its
+candidates into one `TaskPartials`, whose emit() is the task's single
+bounded partial top-k per route for the global merge.
+filteridx.filtered_search hands all of a batch's routes to one
+scan_units call, so the routes share one stage; each `_score_*` runs
+its route alone (the per-route timings and tests).  _score_meta_gather
+is a DataFrame plan, not a scan.  The hash-checked nq32 rows pin the
 results."""
 
 from __future__ import annotations
@@ -24,19 +29,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filter_vectordb_spark.index.tagpart import _f32_exact_ok, _l2_topk
-from filter_vectordb_spark.operators.knn import TaskPartials, rg_rows, rg_units, scan_units
+from filter_vectordb_spark.operators.knn import Scan, TaskPartials, rg_rows, rg_units, scan_units
 
 #: schema of every route kernel's per-task partial
 _PARTIAL = "qid long, id long, dist double"
 
 
-def _score_pairview(
+def _pairview_scan(
     spark: SparkSession,
     pair_files: dict,
     qpdf,
     k: int,
     off: np.ndarray,
-) -> DataFrame:
+) -> Scan:
     """R1, direct-read: qpdf(qid, qemb, tag_a, tag_b).  Only the PROBED
     pairs' partition files are opened (driver-side dict lookup — the
     partition-pruning the DataFrame route left to runtime DPP, which
@@ -77,15 +82,12 @@ def _score_pairview(
             _l2_topk(out, qids, Q, X, _sqnorms(X), ids)
         yield from out.emit()
 
-    return scan_units(
-        spark,
-        units,
-        "tag_a INT, tag_b INT, path STRING, rg_lo INT, rg_hi INT",
-        cost,
-        (groups, off, use_f32),
-        serve,
-        _PARTIAL,
-    )
+    return Scan(units, cost, (groups, off, use_f32), serve)
+
+
+def _score_pairview(spark, pair_files, qpdf, k, off) -> DataFrame:
+    """R1 alone: _pairview_scan in a launch of its own."""
+    return scan_units(spark, [_pairview_scan(spark, pair_files, qpdf, k, off)], _PARTIAL)
 
 
 def _flat_tags(tbl_col, n: int):
@@ -251,20 +253,14 @@ def _tag_units(spark: SparkSession, groups: dict, tag_files: dict, bins):
     return units, bin_dir, bin_d
 
 
-def _scan_tag_units(spark: SparkSession, units: list, groups: dict, payload, serve) -> DataFrame:
-    """scan_units over _tag_units' units, each costing its rows × the
-    tag's query count."""
+def _tag_cost(units: list, groups: dict) -> list:
+    """Placement cost of _tag_units' units: rows × the tag's query
+    count."""
     nq = {t: sum(len(g[1]) for g in gl) for t, gl in groups.items()}
-    cost = [
-        (hi if lo < 0 else int(rg_rows(p)[lo:hi].sum())) * nq[t]
-        for t, p, lo, hi in units
-    ]
-    return scan_units(
-        spark, units, "tag INT, path STRING, rg_lo INT, rg_hi INT", cost, payload, serve, _PARTIAL
-    )
+    return [(hi if lo < 0 else int(rg_rows(p)[lo:hi].sum())) * nq[t] for t, p, lo, hi in units]
 
 
-def _score_tagview(
+def _tagview_scan(
     spark: SparkSession,
     tag_files: dict[int, list[str]],
     qpdf,
@@ -272,7 +268,7 @@ def _score_tagview(
     off: np.ndarray,
     has_xn: bool = False,
     bins: tuple | None = None,
-) -> DataFrame:
+) -> Scan:
     """R2/R3: qpdf(qid, qemb, tag, other) with other = -1 for no mask.
     Direct-read over ONLY the probed tags' partition files; per (tag,
     other) query group, one mask (when other ≥ 0) + one GEMM per task
@@ -433,12 +429,17 @@ def _score_tagview(
         yield from out.emit()
 
     units, bin_dir, bin_d = _tag_units(spark, groups, tag_files, bins)
-    return _scan_tag_units(
-        spark, units, groups, (groups, off, use_f32, has_xn, bin_dir, bin_d), serve
+    return Scan(
+        units, _tag_cost(units, groups), (groups, off, use_f32, has_xn, bin_dir, bin_d), serve
     )
 
 
-def _score_tagview_probed(
+def _score_tagview(spark, tag_files, qpdf, k, off, has_xn=False, bins=None) -> DataFrame:
+    """R2/R3 alone: _tagview_scan in a launch of its own."""
+    return scan_units(spark, [_tagview_scan(spark, tag_files, qpdf, k, off, has_xn, bins)], _PARTIAL)
+
+
+def _tagview_probed_scan(
     spark: SparkSession,
     tag_files: dict[int, list[str]],
     qpdf,
@@ -448,7 +449,7 @@ def _score_tagview_probed(
     nlist: int,
     has_xn: bool = False,
     bins: tuple | None = None,
-) -> DataFrame:
+) -> Scan:
     """R2/R3 with the per-tag sub-index ACTUALLY pruning: each query
     scans only its `probes` row's coarse lists inside the routed tag's
     partition — the lst-sorted file layout turns a probe set into
@@ -658,9 +659,20 @@ def _score_tagview_probed(
         yield from out.emit()
 
     units, bin_dir, bin_d = _tag_units(spark, groups, tag_files, bins)
-    return _scan_tag_units(
-        spark, units, groups, (groups, off, use_f32, nlist, has_xn, bin_dir, bin_d), serve
+    return Scan(
+        units,
+        _tag_cost(units, groups),
+        (groups, off, use_f32, nlist, has_xn, bin_dir, bin_d),
+        serve,
     )
+
+
+def _score_tagview_probed(
+    spark, tag_files, qpdf, k, off, probes, nlist, has_xn=False, bins=None
+) -> DataFrame:
+    """Probed R2/R3 alone: _tagview_probed_scan in a launch of its own."""
+    scan = _tagview_probed_scan(spark, tag_files, qpdf, k, off, probes, nlist, has_xn, bins)
+    return scan_units(spark, [scan], _PARTIAL)
 
 
 #: pair-scoring chunk: per-chunk gather buffers are 2 × CH × d × 4 B
@@ -891,7 +903,7 @@ def _multi_rows(need_idx, prow, starts):
     return mrows
 
 
-def _score_meta(
+def _meta_scan(
     spark: SparkSession,
     codes_dir: str,
     qpdf,
@@ -899,7 +911,7 @@ def _score_meta(
     off: np.ndarray,
     ndoc: dict | None = None,
     has_xn: bool = False,
-) -> DataFrame:
+) -> Scan:
     """R4: one direct-read pass over the codes table for ALL selective
     queries.  qpdf(qid, qemb, qtags).  Per task unit: PHASE 1 reads only
     the metadata columns (id, tags, persisted xn norms) — flatten the
@@ -1039,15 +1051,17 @@ def _score_meta(
         yield from out.emit()
 
     units = rg_units(spark, files)
-    return scan_units(
-        spark,
+    return Scan(
         [u[:3] for u in units],
-        "path STRING, rg_lo INT, rg_hi INT",
         [u[3] for u in units],
         (scan_q, flat_q, multi_q, probed, lut, off, use_f32, has_xn),
         serve,
-        _PARTIAL,
     )
+
+
+def _score_meta(spark, codes_dir, qpdf, k, off, ndoc=None, has_xn=False) -> DataFrame:
+    """R4 sweep alone: _meta_scan in a launch of its own."""
+    return scan_units(spark, [_meta_scan(spark, codes_dir, qpdf, k, off, ndoc, has_xn)], _PARTIAL)
 
 
 def _score_meta_gather(
@@ -1115,14 +1129,14 @@ def _score_meta_gather(
     return gathered.select("qid", "id", "codes").mapInArrow(score, schema=_PARTIAL)
 
 
-def _score_meta_bin(
+def _meta_bin_scan(
     spark: SparkSession,
     bin_dir: str,
     qpdf,
     k: int,
     off: np.ndarray,
     ndoc: dict | None = None,
-) -> DataFrame:
+) -> Scan:
     """R4 over the memmapped serving sidecars (filteridx.build_meta_bins
     — the reference's xbin_mmap + CSR serving arrays as build
     artifacts): the PREBUILT per-file CSR replaces the per-batch tags
@@ -1220,12 +1234,14 @@ def _score_meta_bin(
                 _l2_topk(out, *bscan, gather(C8, slice(rlo, rhi)), xn[rlo:rhi], ids[rlo:rhi])
         yield from out.emit()
 
-    return scan_units(
-        spark,
+    return Scan(
         units,
-        "stem STRING, n LONG, sp INT, nsp INT",
         [n * (sp + 1) // m - n * sp // m for _s, n, sp, m in units],
         (scan_q, flat_q, multi_q, probed, off, use_f32, bin_dir, d),
         serve,
-        _PARTIAL,
     )
+
+
+def _score_meta_bin(spark, bin_dir, qpdf, k, off, ndoc=None) -> DataFrame:
+    """R4 over the sidecars alone: _meta_bin_scan in a launch of its own."""
+    return scan_units(spark, [_meta_bin_scan(spark, bin_dir, qpdf, k, off, ndoc)], _PARTIAL)

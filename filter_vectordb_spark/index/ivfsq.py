@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from filter_vectordb_spark.index.sq import _scales, encode_sq, train_sq
 from filter_vectordb_spark.operators.knn import (
+    Scan,
     TaskPartials,
     _topk_per_group,
     flatten_fixed_list,
@@ -453,16 +454,13 @@ def _ivfsq_score_chunk_direct(
     # paid the fixed Python-task cost 4× over).  An empty probe map
     # (possible only with 0 queries, which union_query_chunks_df
     # already short-circuits) gives an empty frame
+    cost = [
+        os.path.getsize(p) * len(range(sl, len(probe_map[cid]), nsl))
+        for p, cid, sl, nsl in files
+    ]
     return scan_units(
         spark,
-        files,
-        "path STRING, cid INT, sl INT, nsl INT",
-        [
-            os.path.getsize(p) * len(range(sl, len(probe_map[cid]), nsl))
-            for p, cid, sl, nsl in files
-        ],
-        (qids_np, Q.astype(np.float32), probe_map),
-        serve,
+        [Scan(files, cost, (qids_np, Q.astype(np.float32), probe_map), serve)],
         "qid long, id long, adist double",
     )
 

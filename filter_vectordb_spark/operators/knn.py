@@ -29,7 +29,8 @@ rankings agree with the exact expression path.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import Any, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -494,44 +495,54 @@ def _balance(cost: list, nbins: int) -> list[list[int]]:
     return [sorted(b) for b in bins]
 
 
-def launch_units(spark, units: list, schema: str, cost=None) -> DataFrame:
-    """The launch under scan_units: a DataFrame of `units`
-    (tuples matching `schema`) in min(len(units), defaultParallelism)
-    partitions — one Python task per core — balanced longest-first by
-    the per-unit `cost` (rows × queries where the caller knows them,
-    else 1 per unit).  Each Python task pays a fixed worker start /
-    initialize cost (measured 0.2-0.5 s of slot time per task on a
-    4-core host), so finer launches spend more on tasks than their
-    dynamic scheduling saves; balance comes from the cost placement
-    instead, and each task carries its top-k state across all of its
-    units.  Callers keep planning fine-grained units (the packing needs
-    them to balance).  An empty unit list gives an empty frame of
-    `schema`."""
-    nparts = min(len(units), spark.sparkContext.defaultParallelism)
-    if nparts == 0:
-        return spark.createDataFrame([], schema)
-    bins = _balance([1] * len(units) if cost is None else list(cost), nparts)
-    # one bin per element, so parallelize puts exactly one per partition
-    rdd = spark.sparkContext.parallelize([[units[i] for i in b] for b in bins], nparts)
-    return spark.createDataFrame(rdd.flatMap(lambda b: b), schema)
+class Scan(NamedTuple):
+    """One route's share of a scan launch: its units (plain tuples), a
+    per-unit placement cost (rows × queries where the route knows them),
+    the payload its scoring body reads, and the body itself —
+    serve(payload, units) yields Arrow batches of the launch's schema
+    (its TaskPartials.emit())."""
+
+    units: list
+    cost: list
+    payload: Any
+    serve: Callable
 
 
-def scan_units(spark, units: list, schema: str, cost, payload, serve, out_schema: str) -> DataFrame:
-    """The one direct-read scan skeleton: `units` (tuples matching
-    `schema`) launched one Python task per core by launch_units (placed
-    by `cost`), `payload` broadcast once, and per task
-    `serve(payload, unit_tuples)` — the route's scoring body, which
-    yields Arrow batches of `out_schema` (its TaskPartials.emit()).  No
-    units give the typed empty `out_schema` frame without a job."""
-    if not units:
+def scan_units(spark, scans: list[Scan], out_schema: str) -> DataFrame:
+    """The one direct-read scan launch: every scan's units in
+    nparts = min(most units of any scan, defaultParallelism) Python
+    tasks — one per core.  Each scan's units are placed into the nparts
+    bins longest-first by its own cost (routes' costs are not
+    comparable), `(payloads, bins)` is broadcast once, and
+    `spark.range(0, nparts, 1, nparts)` starts the tasks: task p reads
+    p from the `id` column and runs each scan's serve(payload, units)
+    over that scan's bin p in turn, skipping empty bins.  Measured with
+    an empty serve on a 4-core host (median of 5), a range launch costs
+    0.34-0.36 s; shipping unit rows through parallelize → flatMap →
+    createDataFrame costs 0.75 s (a Python worker for the rows plus one
+    for serve), three such launches unioned 1.77 s — hence one launch
+    for all of a batch's scans.  Scans with no units are dropped; when
+    none is left the result is the typed empty `out_schema` frame,
+    without a job."""
+    scans = [s for s in scans if s.units]
+    if not scans:
         return spark.createDataFrame([], out_schema)
-    bc = spark.sparkContext.broadcast(payload)
-    fdf = launch_units(spark, units, schema, cost)
+    nparts = min(max(len(s.units) for s in scans), spark.sparkContext.defaultParallelism)
+    placed = [_balance(s.cost, nparts) for s in scans]
+    # bins[p][j]: scan j's unit tuples for task p, in input order
+    bins = [[[s.units[i] for i in pl[p]] for s, pl in zip(scans, placed)] for p in range(nparts)]
+    bc = spark.sparkContext.broadcast(([s.payload for s in scans], bins))
+    serves = [s.serve for s in scans]  # the closure ships bodies only, payloads ride bc
 
     def run(it):
-        yield from serve(bc.value, (u for b in it for u in zip(*b.to_pydict().values())))
+        payloads, bbins = bc.value
+        for batch in it:
+            for p in batch.column("id").to_pylist():
+                for serve, payload, units in zip(serves, payloads, bbins[p]):
+                    if units:
+                        yield from serve(payload, iter(units))
 
-    return fdf.mapInArrow(run, schema=out_schema)
+    return spark.range(0, nparts, 1, nparts).mapInArrow(run, schema=out_schema)
 
 
 #: planning grain of rg_units: units per core, so the longest-first
@@ -568,7 +579,7 @@ def rg_units(spark, files: list[str]) -> list[tuple[str, int, int, int]]:
     """(path, rg_lo, rg_hi, rows) scan units, row-group-aligned (pyarrow
     reads row groups whole, so the units partition the rows exactly):
     ~4 units per core when row groups abound, one per row group
-    otherwise — fine enough for launch_units to balance one task per
+    otherwise — fine enough for scan_units to balance one task per
     core by rows."""
     counts = [(p, rg_rows(p)) for p in files]
     total_rg = sum(len(r) for _, r in counts)
@@ -822,11 +833,7 @@ def _score_vectorized_chunk_direct(
     units = rg_units(spark, files)
     return scan_units(
         spark,
-        [u[:3] for u in units],
-        "path STRING, rg_lo INT, rg_hi INT",
-        [u[3] for u in units],
-        (qids, Q),
-        serve,
+        [Scan([u[:3] for u in units], [u[3] for u in units], (qids, Q), serve)],
         "qid long, id long, dist double",
     )
 

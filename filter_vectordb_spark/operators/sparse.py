@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from filter_vectordb_spark.operators.knn import TaskPartials, rg_rows, scan_units, topk_blocked
+from filter_vectordb_spark.operators.knn import Scan, TaskPartials, rg_rows, scan_units, topk_blocked
 from filter_vectordb_spark.operators.topk import per_group_topk
 
 
@@ -251,11 +251,7 @@ def sparse_topk_sharded(
 
     scored = scan_units(
         spark,
-        [(p,) for p in files],
-        "path STRING",
-        [int(rg_rows(p).sum()) for p in files],
-        bq,
-        serve,
+        [Scan([(p,) for p in files], [int(rg_rows(p).sum()) for p in files], bq, serve)],
         "qid long, id long, score long",
     )
     return per_group_topk(

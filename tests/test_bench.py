@@ -90,14 +90,15 @@ def test_taxed_retry_granted_protocol():
     assert taxed_retry_granted("sparse_mips_1m", 140.25, 1, ok)
     # only the FIRST run earns the grant
     assert not taxed_retry_granted("sparse_mips_1m", 140.25, 2, ok)
+    from bench import HARD_WALL_SEC, HIST_MIN_SEC, TAXED_RATIO
+
     # inside 3x the recorded min = plausibly real, no grant
-    assert not taxed_retry_granted("knn_ip_10m", 60.0, 1, ok)
+    assert not taxed_retry_granted("knn_ip_10m", 2 * HIST_MIN_SEC["knn_ip_10m"], 1, ok)
     # past the scale cutoff the grant holds while a conservatively-taxed
     # rerun still fits under the hard wall (the taxed run itself pushed
     # the loop over — the exact case the grant exists for) ...
     assert taxed_retry_granted("sparse_mips_1m", 140.25, 1, SCALE_CUTOFF_SEC + 1)
     # ... but not when even that budget is gone
-    from bench import HARD_WALL_SEC, HIST_MIN_SEC, TAXED_RATIO
 
     too_late = HARD_WALL_SEC - TAXED_RATIO * HIST_MIN_SEC["sparse_mips_1m"] + 1
     assert not taxed_retry_granted("sparse_mips_1m", 140.25, 1, too_late)

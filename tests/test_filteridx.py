@@ -732,3 +732,49 @@ def test_int8_pair_scores_segment_form_bit_identical():
     # empty input
     e = np.empty(0, dtype=np.int64)
     assert len(fk._int8_pair_scores(Qm, e, C8, e)) == 0
+
+
+def test_filtered_search_routes_share_one_scan_stage(spark, built):
+    """A batch that takes the pair, tag and metadata routes scans in ONE
+    stage of defaultParallelism tasks (one launch for every route), and
+    its result equals the W3 merge over the three routes run alone."""
+    from filter_vectordb_spark.index import filteridx as fi
+    from filter_vectordb_spark.operators.topk import per_group_topk
+
+    out, _base = built
+    sc = spark.sparkContext
+    dp = sc.defaultParallelism
+    qpdf = synth_yfcc_queries(spark, nq=96).toPandas()
+    ndoc, n_base, min_freq, off, pair_files, tag_files, _C, has_xn = fi._load_routing(spark, out)
+    r_pair, r_tag, r_meta, tag_col, other_col = fi._route(
+        qpdf["qtags"], ndoc, min_freq * n_base, pair_files, tag_files
+    )
+    assert r_pair and r_tag and r_meta
+    res = filtered_search(spark, out, spark.createDataFrame(qpdf), k=10, meta_plan="sweep")
+    group = "test-filtered-search-scan-tasks"
+    sc.setJobGroup(group, "fused route stage task count")
+    try:
+        got = res.toPandas()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    stages = sorted(s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds)
+    assert st.getStageInfo(stages[0]).numTasks == dp
+
+    pp = qpdf.iloc[r_pair].copy()
+    tt = np.array([sorted({int(x) for x in t}) for t in pp["qtags"]])
+    pp["tag_a"], pp["tag_b"] = tt[:, 0], tt[:, 1]
+    tp = qpdf.iloc[r_tag].copy()
+    tp["tag"], tp["other"] = tag_col[r_tag], other_col[r_tag]
+    alone = (
+        fi._score_pairview(spark, pair_files, pp, 10, off)
+        .unionByName(fi._score_tagview(spark, tag_files, tp, 10, off, has_xn, bins=fi._tag_bins(out)))
+        .unionByName(fi._score_meta_bin(spark, f"{out}/meta_bin", qpdf.iloc[r_meta], 10, off, ndoc=ndoc))
+    )
+    want = per_group_topk(alone, ["qid"], [F.col("dist").asc(), F.col("id").asc()], 10)
+    cols = ["qid", "id", "dist", "rank"]
+
+    def norm(df):
+        return df[cols].sort_values(["qid", "rank"]).reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(norm(got), norm(want.select(*cols).toPandas()))

@@ -363,30 +363,65 @@ def test_task_partials_equivalence(monkeypatch):
     assert list(TaskPartials(10, 8, False).emit()) == []
 
 
-def test_launch_units_one_task_per_core_balanced(spark):
-    """launch_units places every unit exactly once into
-    min(n, defaultParallelism) partitions, longest-first by cost, so the
-    heaviest partition exceeds the lightest by at most one unit's cost;
-    no units give an empty frame of the unit schema."""
+def test_scan_units_one_task_per_core_balanced(spark):
+    """scan_units serves every unit exactly once in
+    min(n, defaultParallelism) tasks, placed longest-first by cost, so
+    the heaviest task exceeds the lightest by at most one unit's cost;
+    with two scans, bin p of each runs in task p; no units give the
+    typed empty frame."""
     import numpy as np
+    import pyarrow as pa
 
-    from filter_vectordb_spark.operators.knn import launch_units
+    from filter_vectordb_spark.operators.knn import Scan, scan_units
 
     dp = spark.sparkContext.defaultParallelism
     rng = np.random.RandomState(1)
-    schema = "i INT, name STRING"
+    schema = "scan INT, part INT, i INT"
+
+    def serve(tag, units):
+        from pyspark import TaskContext
+
+        ids = [u[0] for u in units]
+        p = TaskContext.get().partitionId()
+        yield pa.RecordBatch.from_pydict(
+            {"scan": [tag] * len(ids), "part": [p] * len(ids), "i": ids},
+            schema=pa.schema([("scan", pa.int32()), ("part", pa.int32()), ("i", pa.int32())]),
+        )
+
+    def served(scans):
+        rows = scan_units(spark, scans, schema).collect()
+        parts: dict = {}
+        for r in rows:
+            parts.setdefault(r.scan, {}).setdefault(r.part, []).append(r.i)
+        return parts
+
     for n in (3, dp, 5 * dp + 3):
         units = [(i, f"u{i}") for i in range(n)]
-        for cost in (rng.randint(1, 1000, n).tolist(), None):
-            df = launch_units(spark, units, schema, cost)
-            parts = df.rdd.glom().map(lambda rows: [r.i for r in rows]).collect()
-            assert len(parts) == min(n, dp)
-            assert sorted(i for p in parts for i in p) == list(range(n))
-            c = cost or [1] * n
-            loads = [sum(c[i] for i in p) for p in parts]
-            assert max(loads) <= min(loads) + max(c), (n, loads)
-    empty = launch_units(spark, [], schema)
-    assert empty.collect() == [] and empty.schema.simpleString() == "struct<i:int,name:string>"
+        for cost in (rng.randint(1, 1000, n).tolist(), [1] * n):
+            parts = served([Scan(units, cost, 0, serve)])[0]
+            assert sorted(parts) == list(range(min(n, dp))), (n, sorted(parts))
+            assert sorted(i for p in parts.values() for i in p) == list(range(n))
+            loads = [sum(cost[i] for i in p) for p in parts.values()]
+            assert max(loads) <= min(loads) + max(cost), (n, loads)
+    # two scans share one launch: min(max units, dp) tasks, each scan
+    # balanced on its own cost, bin p of both served in task p
+    from filter_vectordb_spark.operators.knn import _balance
+
+    na, nb = 2 * dp + 1, 3
+    ca, cb = rng.randint(1, 1000, na).tolist(), rng.randint(1, 1000, nb).tolist()
+    ua, ub = [(i,) for i in range(na)], [(100 + i,) for i in range(nb)]
+    both = served([Scan(ua, ca, 0, serve), Scan([], [], 2, serve), Scan(ub, cb, 1, serve)])
+    nparts = min(na, dp)
+    assert sorted(both) == [0, 1]
+    assert sorted(both[0]) == list(range(nparts))
+    for tag, units, cost in ((0, ua, ca), (1, ub, cb)):
+        want = {p: [units[i][0] for i in b] for p, b in enumerate(_balance(cost, nparts)) if b}
+        assert {p: sorted(v) for p, v in both[tag].items()} == want, tag
+        loads = [sum(cost[units.index((i,))] for i in p) for p in both[tag].values()]
+        assert max(loads) <= min(loads) + max(cost), (tag, loads)
+    for scans in ([], [Scan([], [], 0, serve)]):
+        empty = scan_units(spark, scans, schema)
+        assert empty.collect() == [] and empty.schema.simpleString() == "struct<scan:int,part:int,i:int>"
 
 
 def test_empty_units_give_typed_empty_frames(spark, tmp_path):
