@@ -415,8 +415,8 @@ def main() -> None:
         # staging is covered by the knn_ip_10m_ivfsq warm above, and the
         # driver's correctness sweep refreshes the persisted curve
         # artifact every round anyway
-        # the per-sf_dir index fits (r11 note above): ivf16 / pq32x64 /
-        # sq8 / ivfsq16 / ivfpq16_32x64 / tagpart / tagpair / tagstats /
+        # the per-sf_dir index fits (r11 note above): ivfflat16 / ivfpq1_32x64 /
+        # ivfsq1 / ivfsq16 / ivfpq16_32x64 / tagpart / tagpair / tagstats /
         # lsh16 / langprof caches
         "ivf_full_probe",
         "pq_adc_knn",

@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filter_vectordb_spark.harness.base import BaseEngine
-from filter_vectordb_spark.index.ivf import build_ivf, ivf_search
+from filter_vectordb_spark.index.ivf import FLAT, build_ivf, search
 from filter_vectordb_spark.operators.filtered_knn import filtered_knn
 from filter_vectordb_spark.operators.knn import knn_join
 from filter_vectordb_spark.sources.vectors import dense_vectors
@@ -49,7 +49,7 @@ class IVFEngine(BaseEngine):
             max_iter=int(self.index_params.get("max_iter", 8)),
             train_rows=self.index_params.get("train_rows"),
         )
-        out = _index_cache_dir(self._cache_key(sf_dir), f"ivf{nlist}")
+        out = _index_cache_dir(self._cache_key(sf_dir), f"ivfflat{nlist}")
         save_ivf(assignments, centroids, out)
         self.assignments, self.centroids = load_ivf(spark, out)
         self.nlist = nlist
@@ -61,8 +61,8 @@ class IVFEngine(BaseEngine):
         from filter_vectordb_spark.registry import _index_cache_dir, _is_built
 
         nlist = int(self.index_params.get("nlist", 16))
-        out = _index_cache_dir(self._cache_key(sf_dir), f"ivf{nlist}")
-        if not _is_built(f"{out}/assignments", f"{out}/centroids"):
+        out = _index_cache_dir(self._cache_key(sf_dir), f"ivfflat{nlist}")
+        if not _is_built(f"{out}/entries", f"{out}/centroids"):
             return False
         self.assignments, self.centroids = load_ivf(spark, out)
         self.nlist = nlist
@@ -70,7 +70,9 @@ class IVFEngine(BaseEngine):
 
     def query(self, queries: DataFrame, k: int) -> DataFrame:
         nprobe = int(self.query_args.get("nprobe", self.nlist))
-        return ivf_search(queries, self.assignments, self.centroids, k, nprobe)
+        return search(
+            queries, self.assignments, self.centroids, FLAT, None, k, nprobe, k, self.metric
+        )
 
 
 class FilteredEngine(BaseEngine):
@@ -230,20 +232,19 @@ class PQEngine(BaseEngine):
             or int(self.index_params.get("ksub", 64)) != 64
         ):
             return False
-        out = _index_cache_dir(self._cache_key(sf_dir), "pq32x64")
-        if not _is_built(f"{out}/codes", f"{out}/codebooks"):
+        out = _index_cache_dir(self._cache_key(sf_dir), "ivfpq1_32x64")
+        if not _is_built(f"{out}/entries", f"{out}/codebooks"):
             return False
         self.base = self._base_source(spark, sf_dir)
         self.codes, self.codebooks = load_pq(spark, out)
         return True
 
     def query(self, queries: DataFrame, k: int) -> DataFrame:
-        from filter_vectordb_spark.index.pq import pq_adc_search
+        from filter_vectordb_spark.index.pq import pq_codec
 
         refine = int(self.query_args.get("refine", 4 * k))
-        return pq_adc_search(
-            queries, self.codes, self.codebooks, self.base, k, refine
-        )
+        codec = pq_codec(self.codebooks)
+        return search(queries, self.codes, None, codec, self.base, k, 1, refine, self.metric)
 
 
 class SQEngine(BaseEngine):
@@ -265,20 +266,19 @@ class SQEngine(BaseEngine):
         from filter_vectordb_spark.index.sq import load_sq
         from filter_vectordb_spark.registry import _index_cache_dir, _is_built
 
-        out = _index_cache_dir(self._cache_key(sf_dir), "sq8")
-        if not _is_built(f"{out}/codes", f"{out}/grid"):
+        out = _index_cache_dir(self._cache_key(sf_dir), "ivfsq1")
+        if not _is_built(f"{out}/entries", f"{out}/grid"):
             return False
         self.base = self._base_source(spark, sf_dir)
         self.codes, self.vmin, self.vmax = load_sq(spark, out)
         return True
 
     def query(self, queries: DataFrame, k: int) -> DataFrame:
-        from filter_vectordb_spark.index.sq import sq_search
+        from filter_vectordb_spark.index.sq import sq_codec
 
         refine = int(self.query_args.get("refine", 4 * k))
-        return sq_search(
-            queries, self.codes, self.vmin, self.vmax, self.base, k, refine
-        )
+        codec = sq_codec(self.vmin, self.vmax)
+        return search(queries, self.codes, None, codec, self.base, k, 1, refine, self.metric)
 
 
 class IVFSQEngine(BaseEngine):
@@ -298,10 +298,10 @@ class IVFSQEngine(BaseEngine):
 
         nlist = int(self.index_params.get("nlist", 16))
         self.base = self._base_source(spark, sf_dir)
-        ivf_out = _index_cache_dir(self._cache_key(sf_dir), f"ivf{nlist}")
+        ivf_out = _index_cache_dir(self._cache_key(sf_dir), f"ivfflat{nlist}")
         from filter_vectordb_spark.registry import _is_built
 
-        if _is_built(f"{ivf_out}/assignments", f"{ivf_out}/centroids"):
+        if _is_built(f"{ivf_out}/entries", f"{ivf_out}/centroids"):
             # share the coarse clustering with a same-nlist IVF build
             # (k-means is the expensive half; the SQ grid+codes are cheap)
             from filter_vectordb_spark.index.ivf import load_ivf
@@ -337,21 +337,13 @@ class IVFSQEngine(BaseEngine):
         return True
 
     def query(self, queries: DataFrame, k: int) -> DataFrame:
-        from filter_vectordb_spark.index.ivfsq import ivfsq_search
+        from filter_vectordb_spark.index.sq import sq_codec
 
         nprobe = int(self.query_args.get("nprobe", self.nlist))
         refine = int(self.query_args.get("refine", 4 * k))
-        return ivfsq_search(
-            queries,
-            self.entries,
-            self.centroids,
-            self.vmin,
-            self.vmax,
-            self.base,
-            k,
-            nprobe,
-            refine,
-            metric=self.metric if self.metric in ("l2", "ip") else "l2",
+        codec = sq_codec(self.vmin, self.vmax)
+        return search(
+            queries, self.entries, self.centroids, codec, self.base, k, nprobe, refine, self.metric
         )
 
 

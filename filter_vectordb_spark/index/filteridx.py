@@ -756,7 +756,7 @@ def filtered_search(
         if nprobe is None or nprobe >= len(C):
             scans.append(_tagview_scan(spark, tag_files, tp, k, off, has_xn, bins=tb))
         else:
-            from filter_vectordb_spark.index.ivfsq import driver_blas
+            from filter_vectordb_spark.index.ivf import driver_blas
 
             # per-query probe lists: rank the shared coarse centroids by
             # L2 — a bounded nq×nlist block, driver-side with borrowed

@@ -1,37 +1,54 @@
-"""IVF index build + search (SURVEY.md §2.7 B3, §2.8 Q4).
+"""One IVF × codec index (SURVEY.md §2.7 B3, §2.8 Q4).
 
-The reference's unfiltered path is faiss `IVF16384,SQ8`
-(`filter/faiss/faiss.py:133,205-208`): k-means coarse quantizer, search
-ranks centroids per query and scans the top-`nprobe` inverted lists.
+The reference's unfiltered index is the faiss factory string
+`IVF16384,SQ8` (`filter/faiss/faiss.py:133,205-208`), which faiss
+composes from three parts; every index here is that composition:
 
-Spark-native equivalents:
-  build  = MLlib KMeans → an assignment table (id, emb, centroid_id).
-           On a real lake this is written `partitionBy("centroid_id")` so
-           probes become partition pruning; the table IS the index.
-  search = rank centroids per query (centroid table is tiny — driver-side
-           numpy), emit (qid, centroid_id) probe pairs, broadcast-join
-           against the assignment table (prunes to nprobe/nlist of the
-           base), exact-score the survivors, two-phase top-k.
+  coarse = k-means lists (build_ivf), saved partitioned by centroid_id
+           so a probe is partition pruning — the table IS the index.
+           Without a coarse quantizer every row sits in list 0 and
+           every query probes it (PQ or SQ8 alone).
+  codec  = how a list row is stored and scored: FLAT (the raw vector),
+           SQ8 (index/sq.py) or PQ (index/pq.py).
+  refine = cut the codec's scores to `refine` candidates per query and
+           rescore them exactly; skipped when the codec's scores are
+           exact (flat, or SQ8 on a lossless grid).
 
-nprobe = nlist probes everything ⇒ results are EXACTLY brute-force k-NN,
-independent of how k-means clustered — that's the oracle-checkable
-configuration; smaller nprobe trades recall for scan fraction
-(recall tests in tests/test_index.py, mirroring the reference's
-recall-vs-QPS methodology, SURVEY.md §5).
-
-SQ8 scalar quantization is deliberately NOT reproduced: it is a memory
-optimization for a RAM-resident index; columnar Parquet already stores
-compressed, and exact arithmetic keeps the oracle contract (SURVEY.md §4
-"Quantization").
+Every search runs the same steps (search): plan probes driver-side,
+score each probed list with the codec into one TaskPartials per task,
+cut to refine, rescore, take the top-k.  nprobe = nlist probes
+everything, so an exact codec (or a refine that keeps the true top-k)
+returns exactly brute-force k-NN whatever k-means did — the
+oracle-checkable configuration; smaller nprobe trades recall for scan
+fraction (recall tests in tests/test_index.py, test_pq.py, test_sq.py,
+the reference's recall-vs-QPS methodology, SURVEY.md §5).
 """
 
 from __future__ import annotations
 
+import contextlib
+import ctypes
+import functools
+import os
+from collections.abc import Callable
+from typing import NamedTuple
+
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from filter_vectordb_spark.operators.knn import (
+    Scan,
+    TaskPartials,
+    _topk_per_group,
+    flatten_fixed_list,
+    gemm_topk,
+    pairwise_scores,
+    scan_units,
+    union_query_chunks_df,
+)
 from filter_vectordb_spark.operators.topk import per_group_topk
+from filter_vectordb_spark.session import openblas_fn
 
 
 def _lloyd_blocked(X: np.ndarray, ids: np.ndarray, k: int, iters: int) -> np.ndarray:
@@ -57,11 +74,7 @@ def _lloyd_blocked(X: np.ndarray, ids: np.ndarray, k: int, iters: int) -> np.nda
     # the assignment GEMM is a DRIVER-side kernel — borrow the idle cores
     # (executors are not running during coarse training) and hand them
     # back on exit; measured ~3× on the 200k × 3200 training block
-    from filter_vectordb_spark.index.ivfsq import driver_blas
-
-    import os as _os
-
-    with driver_blas(_os.cpu_count() or 8):
+    with driver_blas(os.cpu_count() or 8):
         for _ in range(iters):
             C32 = C.astype(np.float32)
             cn = (C32 * C32).sum(axis=1)
@@ -196,9 +209,7 @@ def ivf_insert(
     the maintained index stays oracle-checkable."""
     import pandas as pd
 
-    cpdf = centroids.toPandas()  # nlist rows — tiny
-    C = np.stack(cpdf["centroid"].to_numpy()).astype(np.float64)
-    cids = cpdf["centroid_id"].to_numpy(dtype=np.int64)
+    C, cids = _centroid_matrix(centroids)  # nlist rows — tiny
     cn = (C * C).sum(axis=1)
 
     def assign(it):
@@ -222,107 +233,498 @@ def ivf_insert(
     return assignments.select("id", "emb", "centroid_id").unionByName(new_assigned)
 
 
-def save_ivf(assignments: DataFrame, centroids: DataFrame, out_dir: str) -> None:
-    """S5 index save: persist the IVF as lake tables — assignments
-    partitioned by centroid_id (so probes become partition pruning,
-    `filter/faiss/faiss.py:205` read_index analog) + a tiny centroid table."""
-    # one shuffle partition per list first — otherwise every writer task
-    # emits a sliver into every list directory (nlist × tasks small
-    # files) and file enumeration dominates later probe scans
-    assignments.repartition("centroid_id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(f"{out_dir}/assignments")
-    centroids.write.mode("overwrite").parquet(f"{out_dir}/centroids")
 
 
-def load_ivf(spark, out_dir: str):
-    """S5 index load: read back (assignments, centroids); 'load' is just a
-    scan + the partition layout doing the indexing."""
-    return (
-        spark.read.parquet(f"{out_dir}/assignments"),
-        spark.read.parquet(f"{out_dir}/centroids"),
+# ------------------------------------------------------------ probe planner
+
+
+def _driver_blas_threads() -> "object | None":
+    """ctypes handle to numpy's bundled OpenBLAS thread setter, or None.
+    The session pins OPENBLAS_NUM_THREADS=1 process-wide so EXECUTOR
+    workers never oversubscribe N² threads — but the DRIVER-side ranking
+    GEMM then runs single-threaded on a 32-core box (measured 12.2 s vs
+    4.2 s for the nq=64k ranking block).  The setter lets driver-only
+    kernels borrow the cores and hand them back."""
+    fn = openblas_fn("openblas_set_num_threads64_", "openblas_set_num_threads")
+    if fn is not None:
+        fn.argtypes, fn.restype = [ctypes.c_int], None
+    return fn
+
+
+@contextlib.contextmanager
+def driver_blas(n: int):
+    """Multithreaded BLAS for a DRIVER-side kernel, restored to 1 thread
+    on exit (the executor-side invariant), also when the body raises."""
+    fn = _driver_blas_threads() if int(n) > 1 else None
+    if fn is not None:
+        fn(int(n))
+    try:
+        yield
+    finally:
+        if fn is not None:
+            fn(1)
+
+
+def _rank_smallest(key: np.ndarray, kk: int) -> np.ndarray:
+    """Per-row column indices of the kk smallest entries (unordered).
+    kk repeated argmin passes for small kk: introselect measured ~60 ns/elem
+    (12.6 s on a 210M-element ranking matrix) where a
+    vectorized min-scan is memory-bandwidth (~0.05 s/pass); argpartition
+    only wins past kk ≈ 8."""
+    nr, nc = key.shape
+    if kk >= nc:
+        return np.tile(np.arange(nc), (nr, 1))
+    if kk > 8:
+        return np.argpartition(key, kk - 1, axis=1)[:, :kk]
+    work = key.copy()
+    out = np.empty((nr, kk), dtype=np.int64)
+    rows = np.arange(nr)
+    big = np.float32(np.inf) if key.dtype == np.float32 else np.inf
+    for j in range(kk):
+        c = work.argmin(axis=1)
+        out[:, j] = c
+        work[rows, c] = big
+    return out
+
+
+@functools.lru_cache(maxsize=8)
+def _centroid_matrix(centroids: DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(C float64 (nlist, d), centroid ids) of a centroid table.  The
+    matrix is nlist rows but collecting it is a whole Spark job per
+    serving call; load_lists returns the SAME DataFrame object across
+    calls and DataFrames hash by identity, so repeat serving pays the
+    collect once (the cache's strong refs keep identities stable;
+    serving sessions hold a handful of live indexes)."""
+    cpdf = centroids.toPandas()  # nlist rows — tiny by construction
+    return np.stack(cpdf["centroid"].to_numpy()).astype(np.float64), cpdf["centroid_id"].to_numpy()
+
+
+def _probe_map(
+    Q: np.ndarray, C: np.ndarray | None, cids: np.ndarray | None, nprobe: int, metric: str
+) -> dict[int, np.ndarray]:
+    """{centroid_id → probing query positions} — the driver-side centroid
+    ranking (nlist × d work, tiny by construction).  C=None is the
+    single-list layout: every query probes list 0.
+
+    Fully vectorized: kk-pass argmin / argpartition (the per-query probe
+    SET is all that matters — probe_map only groups positions by list,
+    so within-row order is irrelevant) + one stable grouping sort over
+    the nq×nprobe pairs.  The previous per-pair Python loop measured
+    1.07 s at nq=8192 × nprobe=16 — longer than the distributed scan it
+    fed; the r6 single argpartition then became the floor itself at
+    larger batches (12.6 s at nq=64k)."""
+    if C is None:
+        return {0: np.arange(len(Q), dtype=np.int64)}
+    # rank in float32: probe selection is a heuristic (recall is measured
+    # and pinned downstream; full-probe rows are order-independent), and
+    # the f64 GEMM measured ~0.6 s at nq=8k × nlist=3.2k — pure
+    # serving-floor overhead.  The GEMM itself borrows
+    # the driver's cores (driver_blas) — executors are not running
+    # while the driver plans, so the cores are idle anyway.
+    Q32, C32 = Q.astype(np.float32), C.astype(np.float32)
+    with driver_blas(os.cpu_count() or 8):
+        G = Q32 @ C32.T
+    if metric == "ip":
+        # faiss METRIC_INNER_PRODUCT ranks lists by centroid IP descending
+        key = -G
+    else:
+        key = (Q32 * Q32).sum(1)[:, None] - 2.0 * G + (C32 * C32).sum(1)[None, :]
+    nlist = key.shape[1]
+    kk = min(nprobe, nlist)
+    rank = _rank_smallest(key, kk)
+    flat_cids = cids[rank.ravel()].astype(np.int64)
+    qpos = np.repeat(np.arange(len(Q), dtype=np.int64), kk)
+    order = np.argsort(flat_cids, kind="stable")  # keeps qpos ascending per list
+    sc, sq = flat_cids[order], qpos[order]
+    bounds = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
+    return {
+        int(sc[lo]): sq[lo:hi]
+        for lo, hi in zip(bounds, np.r_[bounds[1:], len(sc)])
+    }
+
+
+# -------------------------------------------------------------------- codecs
+
+
+class Codec(NamedTuple):
+    """How a list row is stored and scored.  prepare(Q float64 (nq, d),
+    metric) runs driver-side once per query chunk (its result is
+    broadcast); score(prepared, pos, block, metric, kk) runs in a task on
+    one list group — `block` is the stored `column` payload of its rows,
+    `pos` the probing queries — and returns the per-query top-kk (idx
+    into the rows, score float64).  `exact`: the scores are the true
+    distances, so no refine cut and rescore."""
+
+    name: str
+    column: str
+    metrics: tuple
+    exact: bool
+    prepare: Callable
+    score: Callable
+
+
+def _flat_prepare(Q: np.ndarray, metric: str):
+    return Q, (Q * Q).sum(axis=1)
+
+
+def _flat_score(prepared, pos, X, metric, kk):
+    Q, qn = prepared
+    X = X.astype(np.float64)
+    return gemm_topk(Q[pos], qn[pos], X, (X * X).sum(axis=1), metric, kk)
+
+
+#: IVF-flat: lists hold the raw vectors, scored exactly in float64
+FLAT = Codec("flat", "emb", ("l2", "ip"), True, _flat_prepare, _flat_score)
+
+
+def encode_codes(base: DataFrame, codes_of: Callable, b_id: str = "id", b_vec: str = "emb"):
+    """(id BIGINT, codes ARRAY<TINYINT>) — a codec's encode: one Arrow
+    pass over the base, codes_of(X float64 (n, d)) → int8 (n, width);
+    the codec's state rides the closure (kilobytes)."""
+    import pandas as pd
+
+    def enc(it):
+        for pdf in it:
+            if len(pdf):
+                X = np.stack(pdf[b_vec].to_numpy()).astype(np.float64)
+                codes = list(codes_of(X))
+                yield pd.DataFrame({"id": pdf[b_id].to_numpy(dtype=np.int64), "codes": codes})
+
+    return base.select(b_id, b_vec).mapInPandas(enc, schema="id long, codes array<tinyint>")
+
+
+# -------------------------------------------------------------- list layout
+
+#: per-session memo of loaded layouts — a serving path re-reading the
+#: centroid/state tables per query batch pays 2-3 small Spark jobs of
+#: pure overhead (the reference loads its index once, then serves:
+#: `ood/diskann/diskann-in-mem.py:159-163`).  Keyed (application id,
+#: out_dir, entries/_SUCCESS mtime); the loaded `entries` object is also
+#: what routes a search to the direct reader (_delegate_entries_dir).
+_LOAD_CACHE: dict = {}
+
+
+def save_lists(entries: DataFrame, centroids: DataFrame | None, out_dir: str) -> None:
+    """S5 index save: `entries` (id, centroid_id, payload) as
+    `<out>/entries` partitioned by centroid_id — probes become partition
+    pruning, `filter/faiss/faiss.py:205` read_index analog — plus the
+    tiny centroid table.  centroids=None writes the single-list layout
+    (every row in list 0).  The codec's own state is the caller's."""
+    if centroids is None:
+        entries = entries.withColumn("centroid_id", F.lit(0))
+    else:
+        # one shuffle partition per list before the partitioned write —
+        # without it every writer task emits a sliver into every list
+        # directory (nlist × tasks small files; 7.6k at nlist=256, where
+        # file enumeration then dominated every probe scan)
+        entries = entries.repartition("centroid_id")
+        centroids.write.mode("overwrite").parquet(f"{out_dir}/centroids")
+    entries.write.mode("overwrite").partitionBy("centroid_id").parquet(
+        f"{out_dir}/entries"
     )
+    # a rebuild invalidates any loaded layout for this path
+    for key in [k for k in _LOAD_CACHE if k[1] == out_dir]:
+        del _LOAD_CACHE[key]
 
 
-def ivf_search(
+def load_lists(
+    spark: SparkSession, out_dir: str, read_state: Callable = tuple, coarse: bool = True
+) -> tuple:
+    """(entries, centroids, *read_state()) of a save_lists layout;
+    centroids is None for a single-list layout (coarse=False)."""
+    # freshness token: a rebuild by ANOTHER process (save_lists only
+    # invalidates in-process) bumps the entries _SUCCESS mtime, so a
+    # long-lived session never serves DataFrames whose parquet file
+    # listing was captured against the old layout (ADVICE r5)
+    try:
+        token = os.stat(f"{out_dir}/entries/_SUCCESS").st_mtime_ns
+    except OSError:
+        token = None  # non-local path or missing marker: cache on path only
+    key = (spark.sparkContext.applicationId, out_dir, token)
+    hit = _LOAD_CACHE.get(key)
+    if hit is None:
+        hit = (
+            spark.read.parquet(f"{out_dir}/entries"),
+            spark.read.parquet(f"{out_dir}/centroids") if coarse else None,
+            *read_state(),
+        )
+        for stale in [k for k in _LOAD_CACHE if k[1] == out_dir]:
+            del _LOAD_CACHE[stale]  # at most one live layout per path
+        _LOAD_CACHE[key] = hit
+    return hit
+
+
+def _delegate_entries_dir(entries: DataFrame) -> str | None:
+    """Auto-delegation (VERDICT r7 #2): when the caller's `entries` is
+    the exact DataFrame load_lists returned for a LOCAL saved layout,
+    serving can use the direct-read path (hot-list query slicing, no
+    JVM Arrow hop) without the caller threading entries_dir through.
+    Identity match only — a filtered/projected descendant would lose
+    its transformation if read from files, so it keeps the DataFrame
+    route.  Returns the `<out>/entries` path or None."""
+    for key, hit in _LOAD_CACHE.items():
+        if hit[0] is entries and "://" not in key[1]:
+            return f"{key[1]}/entries"
+    return None
+
+
+# ------------------------------------------------------------------ the scan
+
+#: max probing queries per direct-read unit (hot-list query slicing —
+#: see _direct_scan): bounds one task's GEMM at _QSLICE × list_rows and
+#: its selection at the same key count.  512 measured best at the 10M
+#: point (finer slices pack the hot lists across all slots; a slice's
+#: file re-read is page-cache resident)
+_QSLICE = 512
+
+_SCORED = "qid long, id long, adist double"
+
+
+def _score_lists(codec: Codec, refine: int, metric: str, payload, lists):
+    """The one list scan, shared by both readers: `lists(groups)` yields
+    (probing query positions, ids, payload block) per list group; each
+    is scored by the codec into ONE per-task top-`refine` per query — a
+    task covering g lists would otherwise ship g×nq_probing×refine rows
+    into the merge (1.9M at the 1M bench point — the shuffle, not the
+    BLAS, then dominates)."""
+    bqids, prepared, groups = payload
+    out = TaskPartials(refine, len(bqids), metric == "ip", "adist")
+    for pos, ids, block in lists(groups):
+        part, ad = codec.score(prepared, pos, block, metric, refine)
+        out.add_topk(bqids[pos], ids, part, ad)
+    yield from out.emit()
+
+
+def _frame_scan(entries: DataFrame, codec: Codec, payload, refine: int, metric: str):
+    """DataFrame route: static partition pruning to the chunk's probed
+    lists, then each task groups its batches' rows by list.  Spark owns
+    the partitioning here, so a hot list (IP probe skew — see
+    _direct_scan) is scored inside whichever single task reads its
+    file."""
+    if "centroid_id" not in entries.columns:  # an unsaved single-list table
+        entries = entries.withColumn("centroid_id", F.lit(0))
+    # static IN-list on the partition column (≤ nlist ints — plan-size
+    # safe) → static partition pruning on the entries scan, payload only
+    cand = entries.filter(F.col("centroid_id").isin(sorted(payload[2]))).select(
+        "centroid_id", "id", codec.column
+    )
+    bc = entries.sparkSession.sparkContext.broadcast(payload)
+    column = codec.column
+
+    def scan(it):
+        def lists(groups):
+            for batch in it:
+                nb = batch.num_rows
+                if nb == 0:
+                    continue
+                ids = batch.column("id").to_numpy(zero_copy_only=False)
+                block = flatten_fixed_list(batch.column(column), nb)
+                cid = batch.column("centroid_id").to_numpy(zero_copy_only=False)
+                # partitionBy layout → batches are usually single-list,
+                # where the stable argsort is a ~free identity pass; it
+                # also handles the coalesced multi-file case
+                order = np.argsort(cid, kind="stable")
+                for grp in np.split(order, np.flatnonzero(np.diff(cid[order])) + 1):
+                    pos = groups.get(int(cid[grp[0]]))
+                    if pos is not None:
+                        yield pos, ids[grp], block[grp]
+
+        yield from _score_lists(codec, refine, metric, bc.value, lists)
+
+    return cand.mapInArrow(scan, schema=_SCORED)
+
+
+def _direct_scan(
+    spark: SparkSession, entries_dir: str, codec: Codec, payload, refine: int, metric: str
+) -> DataFrame:
+    """Direct-read route — the reference's load-then-serve cost model
+    (`ood/diskann/diskann-in-mem.py:80-106` serves from a loaded index;
+    BASELINE QPS excludes load).
+
+    The entries scan through the JVM ships every payload byte over the
+    executor↔Python Arrow socket per query batch — measured 4-24 s for
+    the 1M-point index BEFORE any math, the serving path's floor.  Here
+    the units are the probed lists' parquet FILES (driver-side glob —
+    metadata only); each task opens its files with pyarrow directly from
+    shared storage, so bytes move disk/page-cache → Python once, with no
+    JVM hop, and repeat queries serve from the OS page cache —
+    resident-index semantics without per-worker state.  File-level
+    pruning is exact: only probed lists' files are listed at all."""
+    import glob as _glob
+
+    # the glob below runs on the DRIVER and pq.read_table on EXECUTORS
+    # against the same string path — only valid for a POSIX path mounted
+    # identically on both (an hdfs://|s3:// URI would glob nothing and
+    # "raise FileNotFoundError" misleadingly); fail with the real reason
+    if "://" in entries_dir:
+        raise ValueError(
+            "entries_dir must be a local/shared-filesystem path; URI "
+            f"schemes are not supported by the direct-read path: {entries_dir!r}"
+            " — pass entries_dir=None to scan through the DataFrame route"
+        )
+    probe_map = payload[2]
+    # Hot-list query slicing: under IP centroid ranking the probe
+    # distribution is EXTREMELY skewed (measured at the 10M point:
+    # 2 of 3200 lists absorb ~94% of all probes — high-norm centroids
+    # attract almost every query), so a task-per-file layout serializes
+    # the whole job behind one (nq_hot × list) GEMM.  Plan one unit per
+    # (file, query-slice) with ≤ _QSLICE probing queries per slice —
+    # the slice re-reads a page-cache-resident file (cheap) and scores
+    # a disjoint strided subset of its queries, so the per-task partial
+    # top-k merge semantics are unchanged.
+    files = []
+    misses = 0
+    for cid in sorted(probe_map):
+        hits = sorted(_glob.glob(f"{entries_dir}/centroid_id={cid}/*.parquet"))
+        if not hits:
+            # partitionBy writes NO directory for an empty list, so a
+            # probed-but-empty list is legitimately absent (small/skewed
+            # builds); an absent list contributes nothing, same as the
+            # DataFrame route.  All-absent still means a wrong path.
+            misses += 1
+            continue
+        nsl = max(1, -(-len(probe_map[cid]) // _QSLICE))
+        files.extend((p, cid, s, nsl) for p in hits for s in range(nsl))
+    if misses and not files:
+        raise FileNotFoundError(
+            f"none of the {misses} probed lists have parquet under "
+            f"{entries_dir} — wrong entries_dir?"
+        )
+    column = codec.column
+
+    def serve(payload, units):
+        import pyarrow.parquet as pq
+
+        def lists(groups):
+            for path, cid, sl, nsl in units:
+                pos = groups[int(cid)][sl::nsl]  # disjoint strided query slice
+                if len(pos) == 0:
+                    continue
+                tbl = pq.read_table(path, columns=["id", column])
+                if tbl.num_rows:
+                    ids = tbl.column("id").to_numpy(zero_copy_only=False)
+                    yield pos, ids, flatten_fixed_list(tbl.column(column), tbl.num_rows)
+
+        yield from _score_lists(codec, refine, metric, payload, lists)
+
+    # one task per core: each unit costs its file's on-disk bytes (∝
+    # rows — fixed-width payload) × its slice's probing queries, so the
+    # longest-first placement spreads the hot lists' slices across
+    # cores instead of leaving the skew to scheduling.  An empty probe
+    # map (possible only with 0 queries, which union_query_chunks_df
+    # already short-circuits) gives an empty frame
+    cost = [
+        os.path.getsize(p) * len(range(sl, len(probe_map[cid]), nsl))
+        for p, cid, sl, nsl in files
+    ]
+    return scan_units(spark, [Scan(files, cost, payload, serve)], _SCORED)
+
+
+def list_scores(
     queries: DataFrame,
-    assignments: DataFrame,
-    centroids: DataFrame,
+    entries: DataFrame,
+    centroids: DataFrame | None,
+    codec: Codec,
+    nprobe: int,
+    refine: int,
+    metric: str = "l2",
+    entries_dir: str | None = None,
+) -> DataFrame:
+    """(qid, id, adist): each query (qid, qemb) scored by the codec
+    against the rows of its `nprobe` nearest lists, each task's output
+    cut to the per-query top-`refine`.  Above the broadcast cap the
+    query set chunk-and-unions through union_query_chunks_df — driver
+    and executor memory stay O(chunk), each chunk gets its own probe map
+    and pruned scan.  Reads the probed lists' files directly when
+    `entries_dir` is given or `entries` is a load_lists result over a
+    local path; otherwise scans the `entries` DataFrame."""
+    if metric not in codec.metrics:
+        raise ValueError(
+            f"{codec.name} codes cannot be scored with metric {metric!r} "
+            f"(supported: {', '.join(codec.metrics)})"
+        )
+    C, cids = _centroid_matrix(centroids) if centroids is not None else (None, None)
+    if entries_dir is None:
+        entries_dir = _delegate_entries_dir(entries)
+
+    def score_chunk(ch):
+        Q = np.stack(ch["qemb"].to_numpy()).astype(np.float64)
+        prepared = codec.prepare(Q, metric)  # checks the codec's query preconditions
+        payload = (
+            ch["qid"].to_numpy(dtype=np.int64), prepared, _probe_map(Q, C, cids, nprobe, metric)
+        )
+        if entries_dir is not None:
+            return _direct_scan(
+                entries.sparkSession, entries_dir, codec, payload, refine, metric
+            )
+        return _frame_scan(entries, codec, payload, refine, metric)
+
+    return union_query_chunks_df(queries.select("qid", "qemb"), score_chunk, _SCORED)
+
+
+def search(
+    queries: DataFrame,
+    entries: DataFrame,
+    centroids: DataFrame | None,
+    codec: Codec,
+    base: DataFrame | None,
     k: int,
     nprobe: int,
+    refine: int,
+    metric: str = "l2",
+    entries_dir: str | None = None,
 ) -> DataFrame:
-    """Top-k L2 search probing the `nprobe` nearest centroids per query.
+    """Top-k of each query (qid, qemb) under metric ∈ codec.metrics
+    (l2 = L2² ascending, ip descending; centroid ranking and score
+    ordering flip together, as in faiss METRIC_INNER_PRODUCT).  Returns
+    (qid, id, dist, rank).
 
-    Returns (qid, id, dist, rank).  Exact within the probed subset.
+    Inexact codec: cut to `refine` candidates per query, rescore the cut
+    exactly against `base` (id, emb) through a pruned join (nq×refine
+    float rows are touched), take the top-k.
 
-    Scan shape: the probed lists are scanned ONCE with the per-list query
-    groups broadcast and scored by the fused numpy kernel — the previous
-    (qid, centroid_id) probe-pair join duplicated every list row per
-    probing query AND scored through an interpreted Catalyst array
-    lambda, which measured 2-7 QPS on the 100k curve where this shape
-    serves >100.
+    Exact codec: the top-k comes straight from the scan, and `refine`
+    stays the scan's per-task partial width — the tie-slack knob
+    (integer scores DO tie at the k-th; slack lets the final (dist, id)
+    ordering see every tying candidate).  The bounded partials are
+    merged driver-side with one Arrow collect and a vectorized lexsort
+    instead of a per_group_topk shuffle and window job (VERDICT r6 #1),
+    so this runs EAGERLY: errors surface at the call and the result is
+    a small materialized DataFrame."""
+    scored = list_scores(queries, entries, centroids, codec, nprobe, refine, metric, entries_dir)
+    if codec.exact:
+        import pandas as pd
 
-    Above the broadcast cap the query set chunk-and-unions through
-    union_query_chunks_df — driver memory stays O(chunk), each chunk
-    gets its own probe map and pruned scan."""
-    from filter_vectordb_spark.operators.knn import union_query_chunks_df
-
-    cpdf = centroids.toPandas()  # nlist rows — always tiny
-    C = np.stack(cpdf["centroid"].to_numpy()).astype(np.float64)
-    cids = cpdf["centroid_id"].to_numpy()
-    scored = union_query_chunks_df(
-        queries.select("qid", "qemb"),
-        lambda ch: _ivf_score_chunk(ch, assignments, C, cids, k, nprobe),
-        "qid LONG, id LONG, dist DOUBLE",
-    )
+        tbl = scored.toArrow()
+        qids = tbl.column("qid").to_numpy(zero_copy_only=False)
+        ids = tbl.column("id").to_numpy(zero_copy_only=False)
+        ad = tbl.column("adist").to_numpy(zero_copy_only=False)
+        sel, rank = _topk_per_group(qids, ids, -ad if metric == "ip" else ad, k)
+        out = pd.DataFrame(
+            {"qid": qids[sel], "id": ids[sel], "dist": ad[sel], "rank": (rank + 1).astype(np.int32)}
+        )
+        return queries.sparkSession.createDataFrame(
+            out, schema="qid long, id long, dist double, rank int"
+        )
+    first = (lambda c: F.col(c).desc()) if metric == "ip" else (lambda c: F.col(c).asc())
+    cut = per_group_topk(scored, ["qid"], [first("adist"), F.col("id").asc()], refine)
+    pairs = base.select("id", "emb").join(F.broadcast(cut.select("qid", "id")), "id")
+    q = F.broadcast(queries.select("qid", "qemb"))
     return per_group_topk(
-        scored, ["qid"], [F.col("dist").asc(), F.col("id").asc()], k
+        pairwise_scores(pairs.join(q, "qid"), metric), ["qid"], [first("dist"), F.col("id").asc()], k
     ).select("qid", "id", "dist", "rank")
 
 
-def _ivf_score_chunk(
-    chunk_pdf, assignments: DataFrame, C: np.ndarray, cids: np.ndarray,
-    k: int, nprobe: int,
+# ------------------------------------------------------------------ IVF-flat
+
+#: IVF-flat's layout is the shared one: `assignments` are its entries
+save_ivf = save_lists
+load_ivf = load_lists
+
+
+def ivf_search(
+    queries: DataFrame, assignments: DataFrame, centroids: DataFrame, k: int, nprobe: int
 ) -> DataFrame:
-    """One ≤cap query chunk: driver-side centroid ranking, static
-    partition pruning to the chunk's probed lists, fused GEMM scan."""
-    from filter_vectordb_spark.index.ivfsq import _probe_map
-
-    qids_np, Q, probe_map = _probe_map(chunk_pdf, C, cids, nprobe, "l2")
-    spark = assignments.sparkSession
-    bc = spark.sparkContext.broadcast((qids_np, Q, probe_map))
-    probed = sorted(probe_map)
-    cand = assignments.filter(F.col("centroid_id").isin(probed)).select(
-        "centroid_id", "id", "emb"
-    )
-
-    def scan(it):
-        from filter_vectordb_spark.operators.knn import (
-            TaskPartials,
-            flatten_fixed_list,
-            gemm_topk,
-        )
-
-        bqids, bQ, groups = bc.value
-        qn = (bQ * bQ).sum(axis=1)
-        out = TaskPartials(k, len(bqids), False)
-        for batch in it:
-            nb = batch.num_rows
-            if nb == 0:
-                continue
-            all_ids = batch.column("id").to_numpy(zero_copy_only=False)
-            X_all = flatten_fixed_list(batch.column("emb"), nb)
-            cid_col = batch.column("centroid_id").to_numpy(zero_copy_only=False)
-            order = np.argsort(cid_col, kind="stable")
-            bounds = np.flatnonzero(np.diff(cid_col[order])) + 1
-            for grp in np.split(order, bounds):
-                pos = groups.get(int(cid_col[grp[0]]))
-                if pos is None:
-                    continue
-                X = np.ascontiguousarray(X_all[grp]).astype(np.float64)
-                xn = (X * X).sum(axis=1)
-                part, dist = gemm_topk(bQ[pos], qn[pos], X, xn, "l2", k)
-                out.add_topk(bqids[pos], all_ids[grp], part, dist)
-        yield from out.emit()
-
-    return cand.mapInArrow(scan, schema="qid long, id long, dist double")
+    """Top-k L2 search probing the `nprobe` nearest centroids per query;
+    exact within the probed lists.  Returns (qid, id, dist, rank)."""
+    return search(queries, assignments, centroids, FLAT, None, k, nprobe, k)

@@ -1,49 +1,15 @@
-"""IVF+SQ8 composed index — the reference's EXACT faiss indexkey
-(`IVF16384,SQ8`, `filter/faiss/faiss.py:133`) as lake tables.
-
-Same architecture as index/ivfpq.py with the product quantizer swapped
-for the per-dimension affine codec (index/sq.py): the coarse k-means
-partitioner prunes WHICH rows are scanned, the 1-byte-per-component SQ
-codes decide HOW CHEAPLY each surviving row is scored.
-
-  build  = IVF assignment (id → centroid_id)  ⋈  SQ codes (id → codes)
-           written `partitionBy("centroid_id")`; the affine grid
-           (pos, mn, mx) rides alongside — d rows, kilobytes.
-  search = rank centroids per query driver-side (nlist rows), scan only
-           the probed partitions ONCE with the per-list query groups
-           broadcast (each entry row ships once — the probe-pair join
-           shape would duplicate the codes per probing query),
-           reconstruct-and-score per list, cut to `refine`,
-           exact-rescore the cut only.
-
-Scale posture (100 TB, nlist=16k, nprobe=32): nprobe/nlist of the rows ×
-1/4 of the bytes are read on the only corpus-touching stage; everything
-downstream moves nq×refine rows.  nprobe = nlist + exact rescore is the
-oracle-checkable configuration (equal to brute force whenever the true
-top-k survive the SQ cut — SQ8 reconstruction error is ≤ half a grid
-step per component, so refine=64 has margin; pinned in tests/test_sq.py).
-"""
+"""IVF+SQ8 — the reference's exact faiss indexkey (`IVF16384,SQ8`,
+`filter/faiss/faiss.py:133`): index/ivf.py's lists with index/sq.py's
+codec.  The affine grid (pos, mn, mx) rides alongside the lists as
+`<out>/grid` — d rows, kilobytes."""
 
 from __future__ import annotations
 
-import ctypes
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from filter_vectordb_spark.index.sq import _scales, encode_sq, train_sq
-from filter_vectordb_spark.operators.knn import (
-    Scan,
-    TaskPartials,
-    _topk_per_group,
-    flatten_fixed_list,
-    scan_units,
-    topk_blocked,
-)
-from filter_vectordb_spark.operators.topk import per_group_topk
-from filter_vectordb_spark.session import openblas_fn
+from filter_vectordb_spark.index.ivf import build_ivf, load_lists, save_lists, search
+from filter_vectordb_spark.index.sq import encode_sq, read_grid, sq_codec, train_sq, write_grid
 
 
 def build_ivfsq(
@@ -54,444 +20,25 @@ def build_ivfsq(
     coarse: str = "mllib",
 ) -> tuple[DataFrame, DataFrame, np.ndarray, np.ndarray]:
     """Returns (entries, centroids, vmin, vmax): entries = (id,
-    centroid_id, codes) — both pruning structures in one table.
-    max_iter/train_rows/coarse pass through to the coarse k-means (see
-    build_ivf — faiss's bounded-sample training protocol; coarse="numpy"
-    for √N-rule list counts where MLlib's scalar loops are the build
-    bottleneck)."""
-    from filter_vectordb_spark.index.ivf import build_ivf
-
+    centroid_id, codes).  max_iter/train_rows/coarse pass through to
+    build_ivf."""
     assignments, centroids = build_ivf(
         base, nlist, max_iter=max_iter, train_rows=train_rows, coarse=coarse
     )
     vmin, vmax = train_sq(base)
-    codes = encode_sq(base, vmin, vmax)
-    entries = assignments.select("id", "centroid_id").join(codes, "id")
+    entries = assignments.select("id", "centroid_id").join(encode_sq(base, vmin, vmax), "id")
     return entries, centroids, vmin, vmax
 
 
 def save_ivfsq(
-    entries: DataFrame,
-    centroids: DataFrame,
-    vmin: np.ndarray,
-    vmax: np.ndarray,
-    out_dir: str,
+    entries: DataFrame, centroids: DataFrame, vmin: np.ndarray, vmax: np.ndarray, out_dir: str
 ) -> None:
-    from filter_vectordb_spark.index.sq import write_grid
-
-    # one shuffle partition per list before the partitioned write —
-    # without it every writer task emits a sliver into every list
-    # directory (nlist × tasks small files; 7.6k at nlist=256, where
-    # file enumeration then dominated every probe scan)
-    entries.repartition("centroid_id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(f"{out_dir}/entries")
-    centroids.write.mode("overwrite").parquet(f"{out_dir}/centroids")
+    save_lists(entries, centroids, out_dir)
     write_grid(entries.sparkSession, vmin, vmax, f"{out_dir}/grid")
-    # a rebuild invalidates any loaded metadata for this path
-    for key in [k for k in _LOAD_CACHE if k[1] == out_dir]:
-        del _LOAD_CACHE[key]
-
-
-#: max probing queries per scan task (hot-list query slicing — see
-#: _ivfsq_score_chunk_direct): bounds one task's GEMM at
-#: _QSLICE × list_rows and its selection at the same key count.
-#: 512 measured best at the 10M point (finer slices pack the hot lists
-#: across all slots; a slice's file re-read is page-cache resident)
-_QSLICE = 512
-
-#: per-session memo of loaded index metadata — a serving path re-reading
-#: the centroid/grid tables per query batch pays 2-3 small Spark jobs of
-#: pure overhead (the reference loads its index once, then serves:
-#: `ood/diskann/diskann-in-mem.py:159-163`)
-_LOAD_CACHE: dict = {}
-
-#: (centroids DataFrame identity) → (strong df ref, C, cids): the
-#: driver-side centroid matrix is nlist rows but collecting it is a
-#: whole Spark job per serving call; load_ivfsq returns the SAME
-#: DataFrame object across calls, so identity-keying makes repeat
-#: serving pay the collect once.  Strong refs keep id() stable; the
-#: cache is capped (serving sessions hold a handful of live indexes).
-_CENTROID_CACHE: dict = {}
-
-
-def _centroid_matrix(centroids: DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    key = id(centroids)
-    hit = _CENTROID_CACHE.get(key)
-    if hit is None or hit[0] is not centroids:
-        cpdf = centroids.toPandas()  # nlist rows — tiny by construction
-        if len(_CENTROID_CACHE) >= 8:
-            _CENTROID_CACHE.clear()
-        hit = (
-            centroids,
-            np.stack(cpdf["centroid"].to_numpy()).astype(np.float64),
-            cpdf["centroid_id"].to_numpy(),
-        )
-        _CENTROID_CACHE[key] = hit
-    return hit[1], hit[2]
 
 
 def load_ivfsq(spark: SparkSession, out_dir: str):
-    import os
-
-    from filter_vectordb_spark.index.sq import read_grid
-
-    # freshness token: a rebuild by ANOTHER process (save_ivfsq only
-    # invalidates in-process) bumps the entries _SUCCESS mtime, so a
-    # long-lived session never serves DataFrames whose parquet file
-    # listing was captured against the old layout (ADVICE r5)
-    try:
-        token = os.stat(f"{out_dir}/entries/_SUCCESS").st_mtime_ns
-    except OSError:
-        token = None  # non-local path or missing marker: cache on path only
-    key = (spark.sparkContext.applicationId, out_dir, token)
-    hit = _LOAD_CACHE.get(key)
-    if hit is None:
-        entries = spark.read.parquet(f"{out_dir}/entries")
-        centroids = spark.read.parquet(f"{out_dir}/centroids")
-        hit = (entries, centroids, *read_grid(spark, f"{out_dir}/grid"))
-        for stale in [k for k in _LOAD_CACHE if k[1] == out_dir]:
-            del _LOAD_CACHE[stale]  # at most one live layout per path
-        _LOAD_CACHE[key] = hit
-    return hit
-
-
-def _driver_blas_threads() -> "object | None":
-    """ctypes handle to numpy's bundled OpenBLAS thread setter, or None.
-    The session pins OPENBLAS_NUM_THREADS=1 process-wide so EXECUTOR
-    workers never oversubscribe N² threads — but the DRIVER-side ranking
-    GEMM then runs single-threaded on a 32-core box (measured 12.2 s vs
-    4.2 s for the nq=64k ranking block).  The setter lets driver-only
-    kernels borrow the cores and hand them back."""
-    fn = openblas_fn("openblas_set_num_threads64_", "openblas_set_num_threads")
-    if fn is not None:
-        fn.argtypes, fn.restype = [ctypes.c_int], None
-    return fn
-
-
-class driver_blas:
-    """Context manager: multithreaded BLAS for a DRIVER-side kernel,
-    restored to 1 thread on exit (the executor-side invariant)."""
-
-    def __init__(self, n: int):
-        self.n = max(1, int(n))
-
-    def __enter__(self):
-        fn = _driver_blas_threads()
-        if fn is not None and self.n > 1:
-            fn(self.n)
-        return self
-
-    def __exit__(self, *exc):
-        fn = _driver_blas_threads()
-        if fn is not None and self.n > 1:
-            fn(1)
-        return False
-
-
-def _rank_smallest(key: np.ndarray, kk: int) -> np.ndarray:
-    """Per-row column indices of the kk smallest entries (unordered).
-    kk repeated argmin passes for small kk: introselect costs ~60 ns/elem
-    on this host (12.6 s on a 210M-element ranking matrix) where a
-    vectorized min-scan is memory-bandwidth (~0.05 s/pass); argpartition
-    only wins past kk ≈ 8."""
-    nr, nc = key.shape
-    if kk >= nc:
-        return np.tile(np.arange(nc), (nr, 1))
-    if kk > 8:
-        return np.argpartition(key, kk - 1, axis=1)[:, :kk]
-    work = key.copy()
-    out = np.empty((nr, kk), dtype=np.int64)
-    rows = np.arange(nr)
-    big = np.float32(np.inf) if key.dtype == np.float32 else np.inf
-    for j in range(kk):
-        c = work.argmin(axis=1)
-        out[:, j] = c
-        work[rows, c] = big
-    return out
-
-
-def _probe_map(
-    chunk_pdf, C: np.ndarray, cids: np.ndarray, nprobe: int, metric: str
-) -> tuple[np.ndarray, np.ndarray, dict[int, np.ndarray]]:
-    """(qids, Q, {centroid_id → probing query positions}) — the driver-side
-    centroid ranking (nlist × d work, tiny by construction).
-
-    Fully vectorized: kk-pass argmin / argpartition (the per-query probe
-    SET is all that matters — probe_map only groups positions by list,
-    so within-row order is irrelevant) + one stable grouping sort over
-    the nq×nprobe pairs.  The previous per-pair Python loop measured
-    1.07 s at nq=8192 × nprobe=16 — longer than the distributed scan it
-    fed; the r6 single argpartition then became the floor itself at
-    larger batches (12.6 s at nq=64k)."""
-    qids_np = chunk_pdf["qid"].to_numpy(dtype=np.int64)
-    Q = np.stack(chunk_pdf["qemb"].to_numpy()).astype(np.float64)
-    # rank in float32: probe selection is a heuristic (recall is measured
-    # and pinned downstream; full-probe rows are order-independent), and
-    # the f64 GEMM costs ~0.6 s at nq=8k × nlist=3.2k on this host's
-    # OpenBLAS — pure serving-floor overhead.  The GEMM itself borrows
-    # the driver's cores (driver_blas) — executors are not running
-    # while the driver plans, so the cores are idle anyway.
-    import os
-
-    Q32, C32 = Q.astype(np.float32), C.astype(np.float32)
-    with driver_blas(os.cpu_count() or 8):
-        G = Q32 @ C32.T
-    if metric == "ip":
-        # faiss METRIC_INNER_PRODUCT ranks lists by centroid IP descending
-        key = -G
-    else:
-        key = (Q32 * Q32).sum(1)[:, None] - 2.0 * G + (C32 * C32).sum(1)[None, :]
-    nlist = key.shape[1]
-    kk = min(nprobe, nlist)
-    rank = _rank_smallest(key, kk)
-    flat_cids = cids[rank.ravel()].astype(np.int64)
-    qpos = np.repeat(np.arange(len(Q), dtype=np.int64), kk)
-    order = np.argsort(flat_cids, kind="stable")  # keeps qpos ascending per list
-    sc, sq = flat_cids[order], qpos[order]
-    bounds = np.flatnonzero(np.r_[True, sc[1:] != sc[:-1]])
-    probe_map = {
-        int(sc[lo]): sq[lo:hi]
-        for lo, hi in zip(bounds, np.r_[bounds[1:], len(sc)])
-    }
-    return qids_np, Q, probe_map
-
-
-def _score_group(codes, pos, bQ, lo32, scale32, metric, refine):
-    """Decode one list's codes and ADC-score it against its probing
-    queries bQ[pos]; returns the per-query top-`refine` selection
-    (idx into the list's rows, adist float64), both (len(pos), kk)."""
-    M = codes.astype(np.float32) + np.float32(128.0)
-    Xd = lo32[None, :] + M * scale32[None, :]  # decode ONCE per group
-    Qp = bQ[pos]
-    G = Qp @ Xd.T  # (nq_probing, nb_group), C-contiguous
-    if metric == "ip":
-        D = G
-        key = -D
-    else:
-        D = (Qp * Qp).sum(1)[:, None] - 2.0 * G + (Xd * Xd).sum(1)[None, :]
-        np.maximum(D, np.float32(0.0), out=D)
-        key = D
-    part = topk_blocked(key, refine)
-    return part, D[np.arange(len(pos))[:, None], part].astype(np.float64)
-
-
-def _ivfsq_score_chunk(
-    chunk_pdf,
-    entries: DataFrame,
-    C: np.ndarray,
-    cids: np.ndarray,
-    vmin: np.ndarray,
-    vmax: np.ndarray,
-    nprobe: int,
-    refine: int,
-    metric: str,
-) -> DataFrame:
-    """One ≤cap query chunk: rank centroids driver-side, scan only the
-    probed partitions ONCE (each entry row ships once, scored against
-    every chunk query probing its list — not the probe-pair join shape,
-    which duplicates the codes per probing query), emit per-batch partial
-    top-`refine` per query.
-
-    Known limitation vs the direct route: Spark owns the partitioning
-    here, so a hot list (IP probe skew — see _ivfsq_score_chunk_direct)
-    is scored inside whichever single task reads its file; serving
-    paths that care about the straggler should pass entries_dir and get
-    hot-list query slicing."""
-    qids_np, Q, probe_map = _probe_map(chunk_pdf, C, cids, nprobe, metric)
-
-    # float32 decode + GEMM: about twice the float64 rate (the absolute
-    # rate depends on the OpenBLAS kernels loaded — single-thread f32
-    # GEMM 23-25 GFLOP/s on the SSE3 fallback, 108-141 on AVX-512; see
-    # session._GENERIC_CORES) and safe here by design — the
-    # ADC stage only nominates `refine` candidates whose margin is set by
-    # SQ8 quantization error (≥ half a grid step per component), orders of
-    # magnitude above float32 rounding; survivors are exact-rescored in
-    # float64 downstream (ivfsq_search), so final ranks never see adist.
-    scale32 = _scales(vmin, vmax).astype(np.float32)
-    lo32 = vmin.astype(np.float32)
-    spark = entries.sparkSession
-    bc = spark.sparkContext.broadcast((qids_np, Q.astype(np.float32), probe_map))
-
-    # static IN-list on the partition column (≤ nlist ints — plan-size
-    # safe) → static partition pruning on the entries scan, codes only
-    probed = sorted(probe_map)
-    cand = entries.filter(F.col("centroid_id").isin(probed)).select(
-        "centroid_id", "id", "codes"
-    )
-
-    def recon(it):
-        bqids, bQ, groups = bc.value
-        # ONE per-task top-`refine` per query: a task covering g lists
-        # would otherwise ship g×nq_probing×refine rows into the merge
-        # shuffle (1.9M at the 1M bench point — the shuffle, not the
-        # BLAS, then dominates)
-        out = TaskPartials(refine, len(bqids), metric == "ip", "adist")
-        for batch in it:
-            nb = batch.num_rows
-            if nb == 0:
-                continue
-            all_ids = batch.column("id").to_numpy(zero_copy_only=False)
-            codes = flatten_fixed_list(batch.column("codes"), nb)
-            cid_col = batch.column("centroid_id").to_numpy(zero_copy_only=False)
-            # partitionBy layout → batches are usually single-list, where
-            # the stable argsort is a ~free identity pass; it also handles
-            # the coalesced multi-file case
-            order = np.argsort(cid_col, kind="stable")
-            bounds = np.flatnonzero(np.diff(cid_col[order])) + 1
-            for grp in np.split(order, bounds):
-                pos = groups.get(int(cid_col[grp[0]]))
-                if pos is None:
-                    continue
-                part, ad = _score_group(codes[grp], pos, bQ, lo32, scale32, metric, refine)
-                out.add_topk(bqids[pos], all_ids[grp], part, ad)
-        yield from out.emit()
-
-    return cand.mapInArrow(recon, schema="qid long, id long, adist double")
-
-
-def _ivfsq_score_chunk_direct(
-    chunk_pdf,
-    spark: SparkSession,
-    entries_dir: str,
-    C: np.ndarray,
-    cids: np.ndarray,
-    vmin: np.ndarray,
-    vmax: np.ndarray,
-    nprobe: int,
-    refine: int,
-    metric: str,
-) -> DataFrame:
-    """Direct-read variant of _ivfsq_score_chunk — the reference's
-    load-then-serve cost model (`ood/diskann/diskann-in-mem.py:80-106`
-    serves from a loaded index; BASELINE QPS excludes load).
-
-    The entries scan through the JVM ships every code byte over the
-    executor↔Python Arrow socket per query batch — measured 4-24 s for
-    the 1M-point index BEFORE any math, the serving path's floor.  Here
-    the task list is the probed lists' parquet FILES (driver-side glob —
-    metadata only, one path per list dir by construction of save_ivfsq);
-    each task opens its files with pyarrow directly from shared storage,
-    so bytes move disk/page-cache → Python once, with no JVM hop, and
-    repeat queries serve from the OS page cache — resident-index
-    semantics without per-worker state (works across worker processes
-    and runs).  File-level pruning is exact: only probed lists' files
-    are listed at all (nprobe/nlist of the corpus at small nq), where
-    the DataFrame route prunes partitions but still ships whole probed
-    partitions per batch."""
-    import glob as _glob
-
-    # the glob below runs on the DRIVER and pq.read_table on EXECUTORS
-    # against the same string path — only valid for a POSIX path mounted
-    # identically on both (an hdfs://|s3:// URI would glob nothing and
-    # "raise FileNotFoundError" misleadingly); fail with the real reason
-    if "://" in entries_dir:
-        raise ValueError(
-            "entries_dir must be a local/shared-filesystem path; URI "
-            f"schemes are not supported by the direct-read path: {entries_dir!r}"
-            " — pass entries_dir=None to scan through the DataFrame route"
-        )
-    qids_np, Q, probe_map = _probe_map(chunk_pdf, C, cids, nprobe, metric)
-    scale32 = _scales(vmin, vmax).astype(np.float32)
-    lo32 = vmin.astype(np.float32)
-
-    # Hot-list query slicing: under IP centroid ranking the probe
-    # distribution is EXTREMELY skewed (measured at the 10M point:
-    # 2 of 3200 lists absorb ~94% of all probes — high-norm centroids
-    # attract almost every query), so a task-per-file layout serializes
-    # the whole job behind one (nq_hot × list) GEMM.  Plan one unit per
-    # (file, query-slice) with ≤ _QSLICE probing queries per slice —
-    # the slice re-reads a page-cache-resident file (cheap) and scores
-    # a disjoint strided subset of its queries, so the per-task partial
-    # top-k merge semantics are unchanged.
-    files = []
-    misses = 0
-    for cid in sorted(probe_map):
-        hits = sorted(_glob.glob(f"{entries_dir}/centroid_id={cid}/*.parquet"))
-        if not hits:
-            # partitionBy writes NO directory for an empty list, so a
-            # probed-but-empty list is legitimately absent (small/skewed
-            # builds); an absent list contributes nothing, same as the
-            # DataFrame route.  All-absent still means a wrong path.
-            misses += 1
-            continue
-        nsl = max(1, -(-len(probe_map[cid]) // _QSLICE))
-        files.extend((p, cid, s, nsl) for p in hits for s in range(nsl))
-    if misses and not files:
-        raise FileNotFoundError(
-            f"none of the {misses} probed lists have parquet under "
-            f"{entries_dir} — wrong entries_dir?"
-        )
-
-    def serve(payload, units):
-        import pyarrow.parquet as pq
-
-        bqids, bQ, groups = payload
-        out = TaskPartials(refine, len(bqids), metric == "ip", "adist")
-        for path, cid, sl, nsl in units:
-            pos = groups.get(int(cid))
-            if pos is None:
-                continue
-            if nsl > 1:
-                pos = pos[sl::nsl]  # disjoint strided query slice
-                if len(pos) == 0:
-                    continue
-            tbl = pq.read_table(path, columns=["id", "codes"])
-            n = tbl.num_rows
-            if n == 0:
-                continue
-            ids = tbl.column("id").to_numpy(zero_copy_only=False)
-            codes = flatten_fixed_list(tbl.column("codes"), n)
-            part, ad = _score_group(codes, pos, bQ, lo32, scale32, metric, refine)
-            out.add_topk(bqids[pos], ids, part, ad)
-        yield from out.emit()
-
-    # one task per core: each unit costs its file's on-disk bytes (∝
-    # rows — fixed-width codes) × its slice's probing queries, so the
-    # longest-first placement spreads the hot lists' slices across
-    # cores instead of leaving the skew to scheduling (the 4× fan-out
-    # this replaces bounded a slow core's tail at one small task, but
-    # paid the fixed Python-task cost 4× over).  An empty probe map
-    # (possible only with 0 queries, which union_query_chunks_df
-    # already short-circuits) gives an empty frame
-    cost = [
-        os.path.getsize(p) * len(range(sl, len(probe_map[cid]), nsl))
-        for p, cid, sl, nsl in files
-    ]
-    return scan_units(
-        spark,
-        [Scan(files, cost, (qids_np, Q.astype(np.float32), probe_map), serve)],
-        "qid long, id long, adist double",
-    )
-
-
-def _delegate_entries_dir(entries: DataFrame) -> str | None:
-    """Auto-delegation (VERDICT r7 #2): when the caller's `entries` is
-    the exact DataFrame load_ivfsq returned for a LOCAL saved layout,
-    serving can use the direct-read path (hot-list query slicing, no
-    JVM Arrow hop) without the caller threading entries_dir through.
-    Identity match only — a filtered/projected descendant would lose
-    its transformation if read from files, so it keeps the DataFrame
-    route.  Returns the `<out>/entries` path or None."""
-    for key, hit in _LOAD_CACHE.items():
-        if hit[0] is entries and "://" not in key[1]:
-            return f"{key[1]}/entries"
-    return None
-
-
-def _assert_integer_queries(chunk_pdf) -> None:
-    """exact_codes precondition on the query side (per chunk): integer
-    components with |q| ≤ 255 and d ≤ 192 keep every f32 product and
-    partial sum an exactly-representable integer (< 2²⁴) — the same
-    proof as knn_join's compute_dtype='float32' contract."""
-    Q = np.stack(chunk_pdf["qemb"].to_numpy()).astype(np.float64)
-    if Q.shape[1] > 192 or not (
-        np.abs(Q).max(initial=0.0) <= 255 and np.array_equal(Q, np.rint(Q))
-    ):
-        raise ValueError(
-            "exact_codes=True requires integer-valued queries with "
-            "|component| <= 255 and d <= 192 (f32 exactness precondition)"
-        )
+    return load_lists(spark, out_dir, lambda: read_grid(spark, f"{out_dir}/grid"))
 
 
 def ivfsq_search(
@@ -505,116 +52,11 @@ def ivfsq_search(
     nprobe: int,
     refine: int,
     metric: str = "l2",
-    q_id: str = "qid",
-    q_vec: str = "qemb",
     entries_dir: str | None = None,
     exact_codes: bool = False,
 ) -> DataFrame:
-    """Probe `nprobe` lists per query, reconstruction-score only their
-    codes, cut to `refine`, exact-rescore survivors.  metric ∈ {l2, ip}
-    (ip = the OOD track's MIPS; centroid ranking and score ordering flip
-    together, as in faiss METRIC_INNER_PRODUCT).  Above the broadcast
-    cap the query set chunk-and-unions through union_query_chunks_df —
-    driver and executor memory stay O(chunk).  With `entries_dir` (the
-    saved index's `<out>/entries` path) the probed lists are read
-    directly with pyarrow in the tasks — identical results, serving-path
-    cost model (see _ivfsq_score_chunk_direct).  Returns
-    (qid, id, dist, rank).
-
-    exact_codes=True (uint8-corpus serving mode): requires a LOSSLESS
-    snapped grid (is_lossless_grid — codes roundtrip the integer
-    corpus exactly) and integer queries (asserted per chunk); the ADC
-    scores are then EXACT distances, so the top-k is taken straight
-    from the scan and the cut + base-gather + rescore half of the
-    pipeline disappears — fewer jobs, no full read of the float table.
-    Results are identical to the rescore path; what changes is cost.
-    NOTE (ADVICE r7): exact_codes=True executes EAGERLY — the scan runs
-    and its bounded partials are merged driver-side inside this call
-    (that merge replacing a whole Spark job is where the serving QPS
-    comes from), so errors surface at construction time and the
-    returned DataFrame is a small materialized result, not a lazy plan.
-
-    When `entries_dir` is omitted but `entries` is the untransformed
-    DataFrame handed out by load_ivfsq over a local save_ivfsq layout,
-    the search auto-delegates to the direct-read path (identical
-    results; hot-list query slicing + no JVM Arrow hop — the DataFrame
-    route otherwise serializes a skewed probe distribution behind one
-    task, VERDICT r7 #2).  Any derived/filtered entries DataFrame is
-    not identity-matched and keeps the DataFrame route."""
-    if metric not in ("l2", "ip"):
-        raise ValueError("metric must be 'l2' or 'ip'")
-    from filter_vectordb_spark.index.sq import is_lossless_grid
-    from filter_vectordb_spark.operators.knn import (
-        pairwise_scores,
-        union_query_chunks_df,
-    )
-
-    if exact_codes and not is_lossless_grid(vmin, vmax):
-        raise ValueError(
-            "exact_codes=True requires a lossless integer-snapped grid "
-            "(train_sq snap_integer on an integer corpus)"
-        )
-    C, cids = _centroid_matrix(centroids)
-    spark = entries.sparkSession
-    if entries_dir is None:
-        entries_dir = _delegate_entries_dir(entries)
-    q = queries.select(F.col(q_id).alias("qid"), F.col(q_vec).alias("qemb"))
-    # exact mode keeps `refine` as the scan's per-task partial width: it
-    # is the tie-slack knob (integer scores DO tie at the k-th; the
-    # selection kernels' boundary-tie pick is composition-dependent, so
-    # slack lets the final (dist, id) ordering see every tying candidate)
-    rf = refine
-
-    def score_chunk(ch):
-        if exact_codes:
-            _assert_integer_queries(ch)
-        if entries_dir is not None:
-            return _ivfsq_score_chunk_direct(
-                ch, spark, entries_dir, C, cids, vmin, vmax, nprobe, rf, metric
-            )
-        return _ivfsq_score_chunk(
-            ch, entries, C, cids, vmin, vmax, nprobe, rf, metric
-        )
-
-    scored = union_query_chunks_df(
-        q,
-        score_chunk,
-        "qid LONG, id LONG, adist DOUBLE",
-    )
-    adist_first = F.col("adist").desc() if metric == "ip" else F.col("adist").asc()
-    if exact_codes:
-        # Single-stage final merge (VERDICT r6 #1): the scan already cut
-        # each task's output to top-`refine` per query (TaskPartials),
-        # so what reaches the driver is ≤ nq × refine × (tasks touching
-        # that query's probed lists ≤ nprobe) rows — a few MB at serving
-        # batch sizes.  One Arrow collect + a vectorized lexsort replace
-        # the per_group_topk shuffle + window job, removing the serving
-        # pipeline's second Spark job per batch (its fixed cost was the
-        # QPS floor, not the scanned work).  Ordering/ties are identical
-        # to per_group_topk: (adist best-first, id asc), rank 1..k.
-        import pandas as pd
-
-        tbl = scored.toArrow()
-        qids = tbl.column("qid").to_numpy(zero_copy_only=False)
-        ids = tbl.column("id").to_numpy(zero_copy_only=False)
-        ad = tbl.column("adist").to_numpy(zero_copy_only=False)
-        sel, rank = _topk_per_group(qids, ids, -ad if metric == "ip" else ad, k)
-        out = pd.DataFrame(
-            {
-                "qid": qids[sel],
-                "id": ids[sel],
-                "dist": ad[sel],
-                "rank": (rank + 1).astype(np.int32),
-            }
-        )
-        return spark.createDataFrame(out, schema="qid long, id long, dist double, rank int")
-    cut = per_group_topk(
-        scored, ["qid"], [adist_first, F.col("id").asc()], rf
-    ).select("qid", "id")
-    b = base.select("id", "emb")
-    pairs_df = b.join(F.broadcast(cut), "id").join(F.broadcast(q), "qid")
-    exact = pairwise_scores(pairs_df, metric)
-    dist_first = F.col("dist").desc() if metric == "ip" else F.col("dist").asc()
-    return per_group_topk(
-        exact, ["qid"], [dist_first, F.col("id").asc()], k
-    ).select("qid", "id", "dist", "rank")
+    """ivf.search with the SQ8 codec; exact_codes=True is the lossless
+    uint8-corpus serving mode (sq_codec(exact=True): no rescore, eager
+    driver-side merge).  Returns (qid, id, dist, rank)."""
+    codec = sq_codec(vmin, vmax, exact_codes)
+    return search(queries, entries, centroids, codec, base, k, nprobe, refine, metric, entries_dir)

@@ -1,9 +1,9 @@
-"""SQ8 scalar quantization — the faiss `IVF16384,SQ8` codec surface
-(`filter/faiss/faiss.py:133`) as Spark tables.
+"""SQ8 scalar quantization — the codec of the faiss `IVF16384,SQ8`
+indexkey (`filter/faiss/faiss.py:133`); index/ivf.py composes it with the
+coarse lists and the exact rescore.
 
-Where PQ (index/pq.py) maps a subspace to one of ksub learned centroids,
-SQ8 quantizes each component independently to one byte on a per-dimension
-affine grid:
+Each component is quantized independently to one byte on a
+per-dimension affine grid:
 
   train  = exact per-dimension (min, max) over the corpus — one
            map-side-combined aggregation (d rows per Arrow batch leave
@@ -11,22 +11,14 @@ affine grid:
   encode = code_j = round(255 · (x_j − vmin_j) / (vmax_j − vmin_j)),
            clipped to [0, 255], stored −128 so the byte fits Spark's
            signed TINYINT — a d-byte row, 4× smaller than float32.
-  search = reconstruction ADC: decode each batch back to
-           x̂_j = vmin_j + code_j · scale_j and score ‖q − x̂‖² at BLAS
-           speed — the scan reads the 1-byte codes table, never the
-           float table (faiss's SQ distance computers reconstruct the
-           same way).  Per-batch partial top-`refine`, global merge,
-           then the survivors (nq×refine rows) are exactly rescored via
-           a pruned join against the float table and the final top-k is
-           exact over that candidate set — the pq_adc_search two-phase
-           shape (W3).
-
-Scale posture (100 TB of 1536-d float32): the codes table is 25 TB —
-4× less I/O on the only full-corpus pass; everything downstream moves
-nq×refine rows.  Exactness: equal to brute-force k-NN whenever the true
-top-k survive the SQ cut (SQ8's per-component error is ≤ scale/2, far
-tighter than PQ's subspace error; refine=64 achieves recall 1.0 on the
-fixtures — pinned in tests/test_sq.py).
+  score  = reconstruction ADC: decode a list group back to
+           x̂_j = vmin_j + code_j · scale_j in float32 and score it at
+           BLAS speed (faiss's SQ distance computers reconstruct the
+           same way).  The error is ≤ half a grid step per component,
+           so the true top-k survive a modest refine cut (refine=64
+           achieves recall 1.0 on the fixtures — pinned in
+           tests/test_sq.py); on a lossless integer grid the scores are
+           exact and the rescore is skipped (sq_codec(exact=True)).
 """
 
 from __future__ import annotations
@@ -38,8 +30,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from filter_vectordb_spark.operators.knn import pairwise_l2_scores
-from filter_vectordb_spark.operators.topk import per_group_topk
+from filter_vectordb_spark.index.ivf import (
+    Codec,
+    encode_codes,
+    list_scores,
+    load_lists,
+    save_lists,
+    search,
+)
+from filter_vectordb_spark.operators.knn import topk_blocked
 
 
 def train_sq(
@@ -58,7 +57,7 @@ def train_sq(
     (code = x − vmin roundtrips exactly), which is the uint8-corpus
     regime of the reference's filter track (yfcc is 192-d uint8).  A
     lossless grid lets search take the ADC scores as EXACT and skip the
-    refine+rescore half of the pipeline (ivfsq_search(exact_codes=)).
+    refine+rescore half of the pipeline (sq_codec(exact=True)).
     Non-integer corpora are never snapped: for data spanning less than
     255 the un-snapped grid is strictly finer."""
 
@@ -122,7 +121,7 @@ def train_sq(
 
 def is_lossless_grid(vmin: np.ndarray, vmax: np.ndarray) -> bool:
     """True iff serving straight from the codes is EXACT (the
-    ivfsq_search(exact_codes=True) gate): the grid decodes the corpus
+    sq_codec(exact=True) gate): the grid decodes the corpus
     losslessly AND the decoded values stay inside the f32-exact scoring
     regime.  Three conditions (ADVICE r6 strengthening):
 
@@ -166,20 +165,11 @@ def encode_sq(
     scale = _scales(vmin, vmax)
     lo = vmin.copy()
 
-    def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            X = np.stack(pdf[b_vec].to_numpy()).astype(np.float64)
-            C = np.clip(np.rint((X - lo[None, :]) / scale[None, :]), 0, 255)
-            codes = (C - 128).astype(np.int8)
-            yield pd.DataFrame(
-                {"id": pdf[b_id].to_numpy(dtype=np.int64), "codes": list(codes)}
-            )
+    def codes_of(X):
+        C = np.clip(np.rint((X - lo[None, :]) / scale[None, :]), 0, 255)
+        return (C - 128).astype(np.int8)
 
-    return base.select(b_id, b_vec).mapInPandas(
-        enc, schema="id long, codes array<tinyint>"
-    )
+    return encode_codes(base, codes_of, b_id, b_vec)
 
 
 def write_grid(
@@ -199,74 +189,73 @@ def read_grid(spark: SparkSession, path: str) -> tuple[np.ndarray, np.ndarray]:
 
 
 def save_sq(codes: DataFrame, vmin: np.ndarray, vmax: np.ndarray, out_dir: str) -> None:
-    """S5 index save: codes as a lake table + the affine grid."""
-    codes.write.mode("overwrite").parquet(f"{out_dir}/codes")
+    """S5 index save: the single-list layout + the affine grid."""
+    save_lists(codes, None, out_dir)
     write_grid(codes.sparkSession, vmin, vmax, f"{out_dir}/grid")
 
 
 def load_sq(spark: SparkSession, out_dir: str) -> tuple[DataFrame, np.ndarray, np.ndarray]:
-    codes = spark.read.parquet(f"{out_dir}/codes")
-    return (codes, *read_grid(spark, f"{out_dir}/grid"))
+    codes, _, vmin, vmax = load_lists(
+        spark, out_dir, lambda: read_grid(spark, f"{out_dir}/grid"), coarse=False
+    )
+    return codes, vmin, vmax
+
+
+def sq_codec(vmin: np.ndarray, vmax: np.ndarray, exact: bool = False) -> Codec:
+    """The SQ8 codec over one affine grid.  Decode + GEMM run in float32:
+    about twice the float64 rate (single-thread f32 GEMM 23-25 GFLOP/s
+    on the SSE3 OpenBLAS fallback, 108-141 on AVX-512; see
+    session._GENERIC_CORES) and safe by design — the scores only
+    nominate `refine` candidates whose margin is SQ8 quantization error,
+    orders of magnitude above float32 rounding, and the survivors are
+    rescored in float64.  exact=True (uint8-corpus serving) requires a
+    LOSSLESS snapped grid (is_lossless_grid) and integer queries
+    (asserted per chunk): the scores are then EXACT distances."""
+    if exact and not is_lossless_grid(vmin, vmax):
+        raise ValueError(
+            "exact_codes=True requires a lossless integer-snapped grid "
+            "(train_sq snap_integer on an integer corpus)"
+        )
+    lo32 = vmin.astype(np.float32)
+    scale32 = _scales(vmin, vmax).astype(np.float32)
+
+    def prepare(Q, metric):
+        # exact precondition on the query side (per chunk): integer
+        # components with |q| ≤ 255 and d ≤ 192 keep every f32 product
+        # and partial sum an exactly-representable integer (< 2²⁴) — the
+        # same proof as knn_join's compute_dtype='float32' contract
+        if exact and (
+            Q.shape[1] > 192
+            or not (np.abs(Q).max(initial=0.0) <= 255 and np.array_equal(Q, np.rint(Q)))
+        ):
+            raise ValueError(
+                "exact_codes=True requires integer-valued queries with "
+                "|component| <= 255 and d <= 192 (f32 exactness precondition)"
+            )
+        return Q.astype(np.float32)
+
+    def score(Q32, pos, codes, metric, kk):
+        M = codes.astype(np.float32) + np.float32(128.0)
+        Xd = lo32[None, :] + M * scale32[None, :]  # decode ONCE per group
+        Qp = Q32[pos]
+        G = Qp @ Xd.T  # (nq_probing, nb_group), C-contiguous
+        if metric == "ip":
+            D = G
+        else:
+            D = (Qp * Qp).sum(1)[:, None] - 2.0 * G + (Xd * Xd).sum(1)[None, :]
+            np.maximum(D, np.float32(0.0), out=D)
+        part = topk_blocked(-D if metric == "ip" else D, kk)
+        return part, D[np.arange(len(pos))[:, None], part].astype(np.float64)
+
+    return Codec("sq8", "codes", ("l2", "ip"), exact, prepare, score)
 
 
 def sq_scores(
-    queries: DataFrame,
-    codes: DataFrame,
-    vmin: np.ndarray,
-    vmax: np.ndarray,
-    refine: int,
-    q_id: str = "qid",
-    q_vec: str = "qemb",
+    queries: DataFrame, codes: DataFrame, vmin: np.ndarray, vmax: np.ndarray, refine: int
 ) -> DataFrame:
-    """(qid, id, adist): reconstruction-L2² per batch, partial
-    top-`refine` — only nq×refine rows per Arrow batch leave the scan."""
-    from filter_vectordb_spark.operators.knn import union_query_chunks_df
-    # float32 decode + scoring: the ADC stage nominates `refine`
-    # candidates whose margin is SQ8 quantization error, orders of
-    # magnitude above float32 rounding; survivors are exact-rescored in
-    # float64 (sq_search) — same contract as the IVF+SQ8 scan
-    scale32 = _scales(vmin, vmax).astype(np.float32)
-    lo32 = vmin.astype(np.float32)
-
-    def chunk_scores(qch: pd.DataFrame) -> DataFrame:
-        qids = qch["qid"].to_numpy(dtype=np.int64)
-        Q32 = np.stack(qch["qemb"].to_numpy()).astype(np.float32)
-        qn = (Q32 * Q32).sum(axis=1)
-
-        def scan(it):
-            from filter_vectordb_spark.operators.knn import (
-                TaskPartials,
-                flatten_fixed_list,
-                topk_blocked,
-            )
-
-            out = TaskPartials(refine, len(qids), False, "adist")
-            for batch in it:
-                nb = batch.num_rows
-                if nb == 0:
-                    continue
-                ids = batch.column("id").to_numpy(zero_copy_only=False)
-                M = flatten_fixed_list(batch.column("codes"), nb).astype(
-                    np.float32
-                ) + np.float32(128.0)
-                Xd = lo32[None, :] + M * scale32[None, :]  # decode (nb, d)
-                G = Q32 @ Xd.T  # (nq, nb), C-contiguous
-                D = qn[:, None] - 2.0 * G + (Xd * Xd).sum(axis=1)[None, :]
-                np.maximum(D, np.float32(0.0), out=D)
-                part = topk_blocked(D, refine)
-                ad = D[np.arange(len(qids))[:, None], part].astype(np.float64)
-                out.add_topk(qids, ids, part, ad)
-            yield from out.emit()
-
-        return codes.mapInArrow(scan, schema="qid long, id long, adist double")
-
-    # shared above-the-cap chunk-and-union contract — query side streams
-    # through the driver O(chunk) at a time (union_query_chunks_df)
-    return union_query_chunks_df(
-        queries.select(F.col(q_id).alias("qid"), F.col(q_vec).alias("qemb")),
-        chunk_scores,
-        "qid LONG, id LONG, adist DOUBLE",
-    )
+    """(qid, id, adist): reconstruction-L2² of every row, each task's
+    output cut to the per-query top-`refine`."""
+    return list_scores(queries, codes, None, sq_codec(vmin, vmax), 1, refine)
 
 
 def sq_search(
@@ -277,22 +266,7 @@ def sq_search(
     base: DataFrame,
     k: int,
     refine: int,
-    q_id: str = "qid",
-    q_vec: str = "qemb",
-    b_id: str = "id",
-    b_vec: str = "emb",
 ) -> DataFrame:
     """SQ cut to `refine` candidates per query, exact L2² rescore of the
-    survivors only (pruned join touches nq×refine float rows), final
-    top-k.  Returns (qid, id, dist, rank)."""
-    scored = sq_scores(queries, codes, vmin, vmax, refine, q_id=q_id, q_vec=q_vec)
-    cand = per_group_topk(
-        scored, ["qid"], [F.col("adist").asc(), F.col("id").asc()], refine
-    ).select("qid", "id")
-    b = base.select(F.col(b_id).alias("id"), F.col(b_vec).alias("emb"))
-    q = queries.select(F.col(q_id).alias("qid"), F.col(q_vec).alias("qemb"))
-    pairs = b.join(F.broadcast(cand), "id").join(F.broadcast(q), "qid")
-    exact = pairwise_l2_scores(pairs)
-    return per_group_topk(
-        exact, ["qid"], [F.col("dist").asc(), F.col("id").asc()], k
-    ).select("qid", "id", "dist", "rank")
+    survivors, final top-k.  Returns (qid, id, dist, rank)."""
+    return search(queries, codes, None, sq_codec(vmin, vmax), base, k, 1, refine)

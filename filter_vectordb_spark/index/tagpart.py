@@ -51,7 +51,7 @@ def view_is_built(out_dir: str) -> bool:
 #: per-session memo of loaded view metadata, keyed by (appId, path,
 #: _SUCCESS mtime) — the grid read is a whole (tiny) Spark job, pure
 #: per-batch overhead on a serving path otherwise, and the freshness
-#: token invalidates on rebuild (same pattern as ivfsq._LOAD_CACHE)
+#: token invalidates on rebuild (same pattern as ivf._LOAD_CACHE)
 _VIEW_CACHE: dict = {}
 
 

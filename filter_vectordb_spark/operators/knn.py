@@ -630,7 +630,7 @@ def knn_join(
     parquet directory.  The scan then reads each file directly with
     pyarrow inside the tasks instead of shipping every vector over the
     executor↔Python Arrow socket per run — the serving-path cost model
-    of index/ivfsq._ivfsq_score_chunk_direct (VERDICT r7 #3: the 1M/10M
+    of index/ivf._direct_scan (VERDICT r7 #3: the 1M/10M
     exact anchors were Arrow-transfer-bound, ~0.8 GB of emb per run
     moving JVM→Python before any math; repeat runs now serve from the
     OS page cache).  Results are identical to the DataFrame scan — the
@@ -792,7 +792,7 @@ def _score_vectorized_chunk_direct(
     files with pyarrow straight from shared storage, so vectors move
     disk/page-cache → Python once with no JVM Arrow hop, and repeat runs
     serve from the OS page cache — the same resident-data cost model as
-    the IVF+SQ8 direct serving path (index/ivfsq._ivfsq_score_chunk_direct,
+    the IVF × codec direct serving path (index/ivf._direct_scan,
     where the POSIX-path caveat lives).  One task per core
     (scan_units, balanced by rows): each task carries one StreamTopK
     across all of its units and emits one partial."""
@@ -876,12 +876,6 @@ def pairwise_scores(
     return df.select("qid", "id", q_vec, b_vec).mapInPandas(
         kern, schema="qid long, id long, dist double"
     )
-
-
-def pairwise_l2_scores(df: DataFrame, q_vec: str = "qemb", b_vec: str = "emb") -> DataFrame:
-    """L2² special case of pairwise_scores (the original name, kept for
-    the callers that are inherently L2 — PQ/SQ reconstruction rescore)."""
-    return pairwise_scores(df, "l2", q_vec, b_vec)
 
 
 def topk_as_arrays(result: DataFrame, k: int, pad: bool = True) -> DataFrame:

@@ -191,7 +191,7 @@ def _gt_kth_10m(spark: SparkSession) -> "object":
     out = _index_cache_dir("synth10m_v2", "gt_ood_kth_nq256")
     path = os.path.join(out, "gt.parquet")
     if not os.path.exists(path):
-        from filter_vectordb_spark.index.ivfsq import driver_blas
+        from filter_vectordb_spark.index.ivf import driver_blas
         from filter_vectordb_spark.sources.synth import ood_matrix
 
         os.makedirs(out, exist_ok=True)

@@ -43,8 +43,8 @@ def ivf_full_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q = dense_queries(spark, sf_dir)
     nlist = 16
-    out = _index_cache_dir(sf_dir, "ivf16")
-    if not _is_built(f"{out}/assignments", f"{out}/centroids"):
+    out = _index_cache_dir(sf_dir, "ivfflat16")
+    if not _is_built(f"{out}/entries", f"{out}/centroids"):
         base = dense_vectors(spark, sf_dir)
         assignments, centroids = build_ivf(base.select("id", "emb"), nlist)
         save_ivf(assignments, centroids, out)
@@ -77,8 +77,8 @@ def pq_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     q = dense_queries(spark, sf_dir)
-    out = _index_cache_dir(sf_dir, "pq32x64")
-    if not _is_built(f"{out}/codes", f"{out}/codebooks"):
+    out = _index_cache_dir(sf_dir, "ivfpq1_32x64")
+    if not _is_built(f"{out}/entries", f"{out}/codebooks"):
         base = dense_vectors(spark, sf_dir).select("id", "emb")
         cb = train_pq(base, nsub=32, ksub=64)
         save_pq(encode_pq(base, cb), cb, out)
@@ -111,8 +111,8 @@ def sq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     q = dense_queries(spark, sf_dir)
-    out = _index_cache_dir(sf_dir, "sq8")
-    if not _is_built(f"{out}/codes", f"{out}/grid"):
+    out = _index_cache_dir(sf_dir, "ivfsq1")
+    if not _is_built(f"{out}/entries", f"{out}/grid"):
         base = dense_vectors(spark, sf_dir).select("id", "emb")
         vmin, vmax = train_sq(base)
         save_sq(encode_sq(base, vmin, vmax), vmin, vmax, out)

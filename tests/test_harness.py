@@ -6,6 +6,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from filter_vectordb_spark.harness.runner import load_config, run_benchmark
 from tests.conftest import SF_DIR
 
@@ -124,3 +126,14 @@ def test_quantization_engines_refine_tradeoff(spark):
         pts.sort()
         assert [p[1] for p in pts] == sorted(p[1] for p in pts), eng
     assert by["sq8"][-1][1] == 1.0
+
+
+def test_index_engines_refuse_a_metric_their_codec_cannot_score(spark):
+    """A run group's metric reaches the index search: an engine whose
+    codec cannot score it raises, naming the codec and the metric,
+    instead of recording L2 results against that metric's ground
+    truth."""
+    for engine, codec, metric in (("ivfsq", "sq8", "cos"), ("pq", "pq", "ip")):
+        config = {"run_groups": [{"engine": engine, "metric": metric, "run_count": 1}]}
+        with pytest.raises(ValueError, match=f"{codec} .*'{metric}'"):
+            run_benchmark(spark, config, SF_DIR, k=10)

@@ -66,7 +66,7 @@ def test_ivf_save_load_roundtrip(spark, ivf, exact, tmp_path):
 
     out = str(tmp_path / "ivf")
     save_ivf(*ivf, out)
-    parts = [d for d in os.listdir(f"{out}/assignments") if d.startswith("centroid_id=")]
+    parts = [d for d in os.listdir(f"{out}/entries") if d.startswith("centroid_id=")]
     assert len(parts) > 1  # physically partitioned
     assignments, centroids = load_ivf(spark, out)
     q = dense_queries(spark, SF_DIR)
@@ -126,3 +126,33 @@ def test_ivf_search_chunks_above_broadcast_cap(spark, ivf, monkeypatch):
     monkeypatch.setattr(knn_mod, "MAX_BROADCAST_QUERIES", 3)
     got = ivf_search(q, *ivf, K, nprobe=NLIST).select("qid", "rank", "id")
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+@pytest.mark.parametrize("layout", ["flat", "sq8", "pq"])
+def test_rebuild_in_place_invalidates_load_cache(spark, exact, tmp_path, layout):
+    """Saving a rebuilt index over a loaded one must invalidate the
+    in-process load cache for every list layout: after the second save
+    the next load serves the new lists (their centroids and files)."""
+    from filter_vectordb_spark.index import ivf, ivfpq, ivfsq
+
+    base = dense_vectors(spark, SF_DIR).select("id", "emb")
+    q = dense_queries(spark, SF_DIR)
+    out = str(tmp_path / layout)
+    for nlist in (4, 8):
+        if layout == "flat":
+            ivf.save_ivf(*build_ivf(base, nlist), out)
+            entries, centroids = ivf.load_ivf(spark, out)
+            res = ivf.ivf_search(q, entries, centroids, K, nprobe=nlist)
+        elif layout == "sq8":
+            ivfsq.save_ivfsq(*ivfsq.build_ivfsq(base, nlist=nlist), out)
+            entries, centroids, vmin, vmax = ivfsq.load_ivfsq(spark, out)
+            res = ivfsq.ivfsq_search(
+                q, entries, centroids, vmin, vmax, base, K, nlist, refine=64
+            )
+        else:
+            ivfpq.save_ivfpq(*ivfpq.build_ivfpq(base, nlist, nsub=32, ksub=64), out)
+            entries, centroids, cb = ivfpq.load_ivfpq(spark, out)
+            res = ivfpq.ivfpq_search(q, entries, centroids, cb, base, K, nlist, refine=128)
+        assert centroids.count() == nlist
+        assert entries.count() == base.count()
+        assert _recall(res, exact) == 1.0

@@ -204,7 +204,10 @@ def test_ivfpq_probe_prunes_partitions(spark, base, ivfpq, tmp_path):
     save_ivfpq(entries, centroids, cb, out)
     e2, c2, cb2 = load_ivfpq(spark, out)
     q = dense_queries(spark, SF_DIR)
-    res = ivfpq_search(q, e2, c2, cb2, base, K, nprobe=2, refine=64)
+    # .alias() breaks the load_ivfpq identity match so the search stays
+    # on the DataFrame route — whose pruning contract this test pins
+    # (the identical-object case auto-delegates to the direct read)
+    res = ivfpq_search(q, e2.alias("e"), c2, cb2, base, K, nprobe=2, refine=64)
     assert_partition_pruned(res)
 
 

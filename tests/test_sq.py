@@ -285,35 +285,57 @@ def test_ivfsq_ip_1m_recall(spark):
     assert rec >= 0.9, f"tie-aware recall@10 {rec:.4f} < 0.9"
 
 
-def test_ivfsq_direct_read_equals_dataframe_path(tmp_path, spark, base, ivfsq):
-    """The serving-path direct pyarrow read (entries_dir) must return the
-    exact rows of the DataFrame-scan path — same index, same probes, same
-    merge order (ivfsq_search docstring contract)."""
-    from filter_vectordb_spark.index.ivfsq import (
-        ivfsq_search,
-        load_ivfsq,
-        save_ivfsq,
+def _list_layout(name, base):
+    """(codec, save(out), load(spark, out) -> (entries, centroids)) of
+    one saved IVF list layout per codec, nlist=8."""
+    from filter_vectordb_spark.index import ivf, ivfpq, ivfsq
+    from filter_vectordb_spark.index.pq import pq_codec
+    from filter_vectordb_spark.index.sq import sq_codec
+
+    if name == "flat":
+        built = ivf.build_ivf(base, 8)
+        return ivf.FLAT, lambda out: ivf.save_ivf(*built, out), ivf.load_ivf
+    if name == "sq8":
+        e, c, vmin, vmax = ivfsq.build_ivfsq(base, nlist=8)
+        return (
+            sq_codec(vmin, vmax),
+            lambda out: ivfsq.save_ivfsq(e, c, vmin, vmax, out),
+            lambda spark, out: ivfsq.load_ivfsq(spark, out)[:2],
+        )
+    e, c, cb = ivfpq.build_ivfpq(base, nlist=8, nsub=32, ksub=64)
+    return (
+        pq_codec(cb),
+        lambda out: ivfpq.save_ivfpq(e, c, cb, out),
+        lambda spark, out: ivfpq.load_ivfpq(spark, out)[:2],
     )
 
-    entries, centroids, vmin, vmax = ivfsq
-    out = str(tmp_path / "ivfsq_direct")
-    save_ivfsq(entries, centroids, vmin, vmax, out)
-    e2, c2, mn2, mx2 = load_ivfsq(spark, out)
+
+@pytest.mark.parametrize(
+    "layout,metric",
+    [("flat", "l2"), ("flat", "ip"), ("sq8", "l2"), ("sq8", "ip"), ("pq", "l2")],
+)
+def test_direct_read_equals_dataframe_path(tmp_path, spark, base, layout, metric):
+    """The serving-path direct pyarrow read (entries_dir) must return the
+    exact rows of the DataFrame-scan path for every list codec — same
+    index, same probes, same merge order (ivf.search contract)."""
+    from filter_vectordb_spark.index.ivf import search
+
+    codec, save, load = _list_layout(layout, base)
+    out = str(tmp_path / layout)
+    save(out)
+    e2, c2 = load(spark, out)
     q = dense_queries(spark, SF_DIR)
-    for metric in ("l2", "ip"):
-        # .alias() pins `want` to the DataFrame route (the identity
-        # match would otherwise auto-delegate both sides to the direct
-        # path and the comparison would be vacuous)
-        want = ivfsq_search(
-            q, e2.alias("e"), c2, mn2, mx2, base, K, nprobe=4, refine=32,
-            metric=metric,
-        ).select("qid", "rank", "id", "dist")
-        got = ivfsq_search(
-            q, e2, c2, mn2, mx2, base, K, nprobe=4, refine=32, metric=metric,
-            entries_dir=f"{out}/entries",
-        ).select("qid", "rank", "id", "dist")
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
+    # .alias() pins `want` to the DataFrame route (the identity match
+    # would otherwise auto-delegate both sides to the direct path and
+    # the comparison would be vacuous)
+    want = search(q, e2.alias("e"), c2, codec, base, K, 4, 32, metric).select(
+        "qid", "rank", "id", "dist"
+    )
+    got = search(
+        q, e2, c2, codec, base, K, 4, 32, metric, entries_dir=f"{out}/entries"
+    ).select("qid", "rank", "id", "dist")
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
 
 
 def test_ivfsq_delegates_to_direct_read(tmp_path, spark, base, ivfsq, monkeypatch):
@@ -321,7 +343,7 @@ def test_ivfsq_delegates_to_direct_read(tmp_path, spark, base, ivfsq, monkeypatc
     layout must auto-route to the direct-read path (hot-list query
     slicing) even when the caller omits entries_dir; a DERIVED entries
     DataFrame must NOT delegate (its transformation would be lost)."""
-    import filter_vectordb_spark.index.ivfsq as mod
+    import filter_vectordb_spark.index.ivf as mod
     from filter_vectordb_spark.index.ivfsq import (
         ivfsq_search,
         load_ivfsq,
@@ -335,13 +357,13 @@ def test_ivfsq_delegates_to_direct_read(tmp_path, spark, base, ivfsq, monkeypatc
     q = dense_queries(spark, SF_DIR)
 
     calls = []
-    real = mod._ivfsq_score_chunk_direct
+    real = mod._direct_scan
 
-    def spy(ch, spark_, entries_dir, *a, **kw):
+    def spy(spark_, entries_dir, *a, **kw):
         calls.append(entries_dir)
-        return real(ch, spark_, entries_dir, *a, **kw)
+        return real(spark_, entries_dir, *a, **kw)
 
-    monkeypatch.setattr(mod, "_ivfsq_score_chunk_direct", spy)
+    monkeypatch.setattr(mod, "_direct_scan", spy)
     res = ivfsq_search(q, e2, c2, mn2, mx2, base, K, nprobe=4, refine=32)
     assert res.count() > 0
     assert calls == [f"{out}/entries"], "load_ivfsq identity must delegate"
@@ -482,7 +504,7 @@ def test_rank_smallest_matches_argpartition():
     the same SET of kk smallest column indices per row as a plain
     argpartition, across both its regimes (argmin passes for kk ≤ 8,
     argpartition above) and at kk ≥ ncols."""
-    from filter_vectordb_spark.index.ivfsq import _rank_smallest
+    from filter_vectordb_spark.index.ivf import _rank_smallest
 
     rng = np.random.RandomState(3)
     key = rng.rand(64, 40).astype(np.float32)
@@ -500,7 +522,7 @@ def test_rank_smallest_matches_argpartition():
 def test_driver_blas_restores_single_thread():
     """driver_blas must hand the cores back on exit (the 1-thread
     executor invariant) — including when the body raises."""
-    from filter_vectordb_spark.index.ivfsq import (
+    from filter_vectordb_spark.index.ivf import (
         _driver_blas_threads,
         driver_blas,
     )
