@@ -29,7 +29,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filter_vectordb_spark.index.tagpart import _f32_exact_ok, _l2_topk
-from filter_vectordb_spark.operators.knn import Scan, TaskPartials, rg_rows, rg_units, scan_units
+from filter_vectordb_spark.operators.knn import (
+    Scan,
+    TaskPartials,
+    flatten_fixed_list,
+    rg_rows,
+    rg_units,
+    scan_units,
+)
 
 #: schema of every route kernel's per-task partial
 _PARTIAL = "qid long, id long, dist double"
@@ -106,29 +113,10 @@ def _flat_tags(tbl_col, n: int):
     return flat, row_of
 
 
-def _codes_matrix(col, n: int) -> np.ndarray:
-    """(n, d) int8 matrix over an Arrow fixed-length list column —
-    ZERO-COPY view when the buffers admit it (int8 values, no nulls:
-    the SQ8 code layout always does), else the copying flatten.  The
-    probed route's per-unit flatten copy (~47 MB/unit × every unit ×
-    every batch) was its dominant fixed cost — a view makes unprobed
-    rows genuinely free."""
-    import pyarrow as pa
-
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    try:
-        offs = col.offsets.to_numpy(zero_copy_only=True)
-        flat = col.values.to_numpy(zero_copy_only=True)
-    except (pa.ArrowInvalid, ValueError):
-        from filter_vectordb_spark.operators.knn import flatten_fixed_list
-
-        return flatten_fixed_list(col, n)
-    flat = flat[offs[0] : offs[-1]]
-    d, rem = divmod(flat.size, max(1, n))
-    if rem:
-        raise ValueError("ragged codes column — fixed-length vectors required")
-    return flat.reshape(n, d)
+#: the build-side name of the one dense decoder (index/filteridx's
+#: build_meta_bins / build_tag_bins import it): SQ8 codes are int8
+#: lists, which it views without a copy
+_codes_matrix = flatten_fixed_list
 
 
 #: per-worker decode scratch, keyed by dtype — Python workers persist
@@ -164,7 +152,7 @@ def _decode(codes_col, rows: np.ndarray | None, n: int, off: np.ndarray, f32: bo
     if isinstance(codes_col, np.ndarray):
         C = codes_col
     else:
-        C = _codes_matrix(codes_col, n)
+        C = flatten_fixed_list(codes_col, n)
     if rows is not None:
         C = C[rows]
     dt = np.float32 if f32 else np.float64
@@ -393,7 +381,7 @@ def _tagview_scan(
                     C8m = (
                         codes_src
                         if isinstance(codes_src, np.ndarray)
-                        else _codes_matrix(codes_src, n)
+                        else flatten_fixed_list(codes_src, n)
                     )
                     Qm = QU.astype(np.float32)
                     qoff = QU @ boff
@@ -536,7 +524,7 @@ def _tagview_probed_scan(
                     else None
                 )
                 lst = tbl.column("lst").to_numpy(zero_copy_only=False)
-                C8 = _codes_matrix(tbl.column("codes"), n)
+                C8 = flatten_fixed_list(tbl.column("codes"), n)
                 flat = row_of = None
                 if need_tags:
                     flat, row_of = _flat_tags(tbl.column("tags"), n)
@@ -1022,7 +1010,7 @@ def _meta_scan(
             if n_flat:
                 Qm = fQ32 if bf32 else fQ
                 if fast_flat and not full:
-                    C8m = _codes_matrix(codes_col, n)
+                    C8m = flatten_fixed_list(codes_col, n)
                     np_d = _int8_pair_scores(Qm, qrep, C8m, rows)
                     np_d += fqoff[qrep]
                     xn_rows = xn_col[rows]

@@ -47,13 +47,152 @@ def _write_base(df: DataFrame, out: str, n_files: int = _BASE_FILES) -> None:
     """Write a direct-read corpus in the fixed serving layout: n_files
     CONTIGUOUS-id files (min/max stats keep range predicates prunable —
     the streaming replays slice inserts by id range), ~16 MB row groups
-    (sub-splittable by operators.knn.rg_units at higher core counts)."""
+    (sub-splittable by operators.knn.rg_units at higher core counts).
+    Spark's writer: `emb` stays a parquet list (ARRAY<INT>) — the
+    msturing corpora, whose replays run Spark array expressions over it;
+    the synth exact-scan bases use _write_u8_base."""
     (
         df.repartitionByRange(n_files, "id")
         .write.mode("overwrite")
         .option("parquet.block.size", 16 * 1024 * 1024)
         .parquet(out)
     )
+
+
+def _write_u8_base(df: DataFrame, out: str, n_files: int = _BASE_FILES) -> None:
+    """_write_base's layout with `emb` stored as uint8: n_files
+    contiguous-id `part-*.parquet` files (range partitions by id, each
+    id-sorted), row groups of at most 16 MB, columns `id` (int64,
+    DELTA_BINARY_PACKED) and `emb` (`fixed_size_binary(d)`, i.e. parquet
+    FIXED_LEN_BYTE_ARRAY(d), PLAIN and uncompressed), `_SUCCESS` last.
+    A direct-read scan then reads d plain bytes per row — no repetition
+    levels, dictionary or list offsets to decode (operators.knn.
+    flatten_fixed_list views them as (n, d) uint8).  Each range
+    partition is written by pyarrow inside its task.  A value that is
+    not an integer in 0..255 raises ValueError naming `emb` and the
+    smallest offending id; nothing wraps into uint8."""
+    import os
+    import shutil
+
+    import numpy as np
+
+    shutil.rmtree(out, ignore_errors=True)
+    os.makedirs(out)
+
+    def write(it):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        from filter_vectordb_spark.operators.knn import flatten_fixed_list
+
+        # one row per partition: its vector width, and the smallest id
+        # holding a value uint8 cannot store (null when it wrote a file)
+        schema = pa.schema([("d", pa.int32()), ("bad", pa.int64())])
+        pid = TaskContext.get().partitionId()
+        batches = [b for b in it if b.num_rows]
+        if not batches:
+            return
+        ids = np.concatenate([b.column("id").to_numpy(zero_copy_only=False) for b in batches])
+        X = np.concatenate(
+            [flatten_fixed_list(b.column("emb"), b.num_rows) for b in batches]
+        )
+        order = np.argsort(ids, kind="stable")
+        ids, X = ids[order], X[order]
+        ok = (X >= 0) & (X <= 255)
+        if X.dtype.kind == "f":
+            ok &= X == np.rint(X)
+        bad = np.flatnonzero(~ok.all(axis=1))
+        d = X.shape[1]
+        if len(bad):
+            yield pa.RecordBatch.from_pydict(
+                {"d": [d], "bad": [int(ids[bad[0]])]}, schema=schema
+            )
+            return
+        U = np.ascontiguousarray(X, dtype=np.uint8)
+        emb = pa.FixedSizeBinaryArray.from_buffers(pa.binary(d), len(U), [None, pa.py_buffer(U)])
+        path = os.path.join(out, f"part-{pid:05d}.parquet")
+        tmp = os.path.join(out, f".part-{pid:05d}.parquet.tmp")
+        pq.write_table(
+            pa.table({"id": pa.array(ids, pa.int64()), "emb": emb}),
+            tmp,
+            row_group_size=max(1, (16 << 20) // (8 + d)),
+            use_dictionary=False,
+            column_encoding={"id": "DELTA_BINARY_PACKED", "emb": "PLAIN"},
+            compression="NONE",
+            write_statistics=["id"],
+        )
+        os.replace(tmp, path)
+        yield pa.RecordBatch.from_pydict({"d": [d], "bad": [None]}, schema=schema)
+
+    res = (
+        df.select("id", "emb")
+        .repartitionByRange(n_files, "id")
+        .mapInArrow(write, "d INT, bad BIGINT")
+        .collect()
+    )
+    bad = [r["bad"] for r in res if r["bad"] is not None]
+    if bad:
+        shutil.rmtree(out, ignore_errors=True)
+        raise ValueError(
+            f"emb: id {min(bad)} holds a value that is not an integer in "
+            "0..255 — the uint8 base cannot store it"
+        )
+    if len({r["d"] for r in res}) > 1:
+        shutil.rmtree(out, ignore_errors=True)
+        raise ValueError(f"emb: vectors of different lengths {sorted({r['d'] for r in res})}")
+    open(os.path.join(out, "_SUCCESS"), "w").close()
+
+
+def _u8_layout_ok(d: str, min_files: int = _MIN_BASE_FILES, dim: int = 192) -> bool:
+    """A staged uint8 base is served only when _SUCCESS exists, it has
+    at least min_files files, and its first file's footer stores `emb`
+    as fixed_size_binary(dim): a list-format base staged by an older
+    writer restages (in the stager, outside any timed region) instead of
+    being served through the slow list decode."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = sorted(glob.glob(f"{d}/*.parquet"))
+    if not (_is_built(d) and len(files) >= min_files):
+        return False
+    try:
+        return pq.read_schema(files[0]).field("emb").type == pa.binary(dim)
+    except (OSError, KeyError, pa.ArrowException):
+        return False
+
+
+def _u8_view(spark: SparkSession, path: str) -> DataFrame:
+    """The public (id BIGINT, emb ARRAY<INT>) frame over a uint8 base:
+    one mapInArrow that decodes `emb` with the scans' decoder
+    (operators.knn.flatten_fixed_list) and rebuilds list<int32>, so index
+    builds, harness engines and rescore joins see the list schema and
+    values.  The direct-read scans (knn_join base_dir=) read the files
+    themselves and never pass through this view.  A job that scans the
+    view several times persists it first (_build_ivfsq): the decode
+    worker otherwise runs beside the consumer's in every task."""
+    import numpy as np
+
+    def decode(it):
+        import pyarrow as pa
+
+        from filter_vectordb_spark.operators.knn import flatten_fixed_list
+
+        for b in it:
+            n = b.num_rows
+            if n == 0:
+                continue
+            X = flatten_fixed_list(b.column("emb"), n)
+            d = X.shape[1]
+            emb = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, n * d + 1, d, dtype=np.int32)),
+                pa.array(X.astype(np.int32).ravel()),
+            )
+            yield pa.RecordBatch.from_arrays([b.column("id"), emb], ["id", "emb"])
+
+    return spark.read.parquet(path).mapInArrow(decode, "id BIGINT, emb ARRAY<INT>")
 
 
 # ------------------------------------------------------------- 100k fixture
@@ -67,9 +206,9 @@ def _synth100k_base(spark: SparkSession) -> DataFrame:
     # half the write target, as _MIN_BASE_FILES is for the bigger
     # bases: repartitionByRange's sampled bounds can leave a few of the
     # 32 ranges empty, and an exact check would restage every session
-    if not (_is_built(out) and _layout_ok(out, 16)):
-        _write_base(synth_uint8_base(spark).select("id", "emb"), out, 32)
-    return spark.read.parquet(out)
+    if not _u8_layout_ok(out, 16):
+        _write_u8_base(synth_uint8_base(spark).select("id", "emb"), out, 32)
+    return _u8_view(spark, out)
 
 
 def _synth_queries_staged(spark: SparkSession, nq: int) -> DataFrame:
@@ -113,9 +252,28 @@ def _synth1m_base(spark: SparkSession) -> DataFrame:
     from filter_vectordb_spark.sources.synth import synth_uint8_base
 
     bdir = _index_cache_dir("synth1m_v2", "base")
-    if not (_is_built(bdir) and _layout_ok(bdir)):
-        _write_base(synth_uint8_base(spark, n=1_000_000).select("id", "emb"), bdir)
-    return spark.read.parquet(bdir)
+    if not _u8_layout_ok(bdir):
+        _write_u8_base(synth_uint8_base(spark, n=1_000_000).select("id", "emb"), bdir)
+    return _u8_view(spark, bdir)
+
+
+def _build_ivfsq(base: DataFrame, out: str, **kw) -> None:
+    """Build (coarse="numpy") and save an IVF+SQ8 index over a base view.
+    The build scans its base four times (sample, assignment, SQ grid,
+    encode), so the view is persisted to disk first: decoded once, the
+    build's own Python stages then reuse the decode stage's idle workers
+    instead of running one decode worker beside each of theirs — that
+    second worker per task OOM-killed the 1M build at 8 local tasks on a
+    16 GB host, where the list-format parent peaked at 15.1 GB."""
+    from pyspark import StorageLevel
+
+    from filter_vectordb_spark.index.ivfsq import build_ivfsq, save_ivfsq
+
+    base = base.persist(StorageLevel.DISK_ONLY)
+    try:
+        save_ivfsq(*build_ivfsq(base, coarse="numpy", **kw), out)
+    finally:
+        base.unpersist()
 
 
 def _ivfsq_1m(spark: SparkSession):
@@ -127,15 +285,12 @@ def _ivfsq_1m(spark: SparkSession):
     the deterministic driver-side coarse trainer (coarse="numpy" on the
     id-ordered sample) — MLlib's limit()-sampled clustering varied
     across rebuilds, which silently shifted partial-probe recall."""
-    from filter_vectordb_spark.index.ivfsq import build_ivfsq, load_ivfsq, save_ivfsq
+    from filter_vectordb_spark.index.ivfsq import load_ivfsq
 
     base = _synth1m_base(spark)
     out = _index_cache_dir("synth1m_v2", "ivfsq256_g2")
     if not _is_built(f"{out}/entries", f"{out}/centroids", f"{out}/grid"):
-        entries, centroids, vmin, vmax = build_ivfsq(
-            base, nlist=256, max_iter=16, train_rows=100_000, coarse="numpy"
-        )
-        save_ivfsq(entries, centroids, vmin, vmax, out)
+        _build_ivfsq(base, out, nlist=256, max_iter=16, train_rows=100_000)
     return (*load_ivfsq(spark, out), out)
 
 
@@ -152,9 +307,9 @@ def _synth10m_base(spark: SparkSession) -> DataFrame:
     from filter_vectordb_spark.sources.synth import synth_uint8_base
 
     bdir = _index_cache_dir("synth10m_v2", "base")
-    if not (_is_built(bdir) and _layout_ok(bdir)):
-        _write_base(synth_uint8_base(spark, n=_10M_N).select("id", "emb"), bdir)
-    return spark.read.parquet(bdir)
+    if not _u8_layout_ok(bdir):
+        _write_u8_base(synth_uint8_base(spark, n=_10M_N).select("id", "emb"), bdir)
+    return _u8_view(spark, bdir)
 
 
 def _ivfsq_10m(spark: SparkSession):
@@ -163,15 +318,12 @@ def _ivfsq_10m(spark: SparkSession):
     sample — MLlib's scalar loops need minutes per iteration at √N-rule
     list counts where the BLAS block needs ~1 s); assignment of the full
     10M rows is one distributed Arrow pass."""
-    from filter_vectordb_spark.index.ivfsq import build_ivfsq, load_ivfsq, save_ivfsq
+    from filter_vectordb_spark.index.ivfsq import load_ivfsq
 
     base = _synth10m_base(spark)
     out = _index_cache_dir("synth10m_v2", f"ivfsq{_10M_NLIST}_g1")
     if not _is_built(f"{out}/entries", f"{out}/centroids", f"{out}/grid"):
-        entries, centroids, vmin, vmax = build_ivfsq(
-            base, nlist=_10M_NLIST, max_iter=10, train_rows=200_000, coarse="numpy"
-        )
-        save_ivfsq(entries, centroids, vmin, vmax, out)
+        _build_ivfsq(base, out, nlist=_10M_NLIST, max_iter=10, train_rows=200_000)
     return (*load_ivfsq(spark, out), out)
 
 

@@ -176,24 +176,151 @@ def test_row_payload_bytes_samples_ragged_rows():
 def test_knn_join_direct_read_equals_dataframe_path(spark, tmp_path):
     """base_dir (the direct pyarrow file read, VERDICT r7 #3) must
     return the exact rows of the DataFrame scan — same kernel over the
-    same rows, across metrics and compute dtypes."""
+    same rows, across metrics and compute dtypes — over a Spark-written
+    list base and over the uint8 fixed-size-binary base _write_u8_base
+    stages: the direct read of its files, the DataFrame route over its
+    list view, and the DataFrame route over its raw BinaryType read."""
     import numpy as np
 
+    from filter_vectordb_spark.queries.fixtures import _u8_view, _write_u8_base
     from filter_vectordb_spark.sources.synth import synth_queries, synth_uint8_base
 
+    src = synth_uint8_base(spark, n=3000).select("id", "emb")
     out = str(tmp_path / "staged_base")
-    synth_uint8_base(spark, n=3000).select("id", "emb").repartition(5).write.parquet(out)
+    src.repartition(5).write.parquet(out)
     staged = spark.read.parquet(out)
+    u8 = str(tmp_path / "staged_u8")
+    _write_u8_base(src, u8, 5)
+    view = _u8_view(spark, u8)
+    raw = spark.read.parquet(u8)
+    assert view.schema.simpleString() == "struct<id:bigint,emb:array<int>>"
+    assert raw.schema.simpleString() == "struct<id:bigint,emb:binary>"
+    assert view.exceptAll(staged).count() == 0 and staged.exceptAll(view).count() == 0
     q = synth_queries(spark, nq=12).select("qid", "qemb")
     for metric, dtype in (("l2", "float64"), ("ip", "float32"), ("cos", "float64")):
         want = knn_join(
             q, staged, K, metric=metric, compute_dtype=dtype
         ).select("qid", "rank", "id", "dist")
-        got = knn_join(
-            q, staged, K, metric=metric, compute_dtype=dtype, base_dir=out
-        ).select("qid", "rank", "id", "dist")
-        assert got.exceptAll(want).count() == 0, (metric, dtype)
-        assert want.exceptAll(got).count() == 0, (metric, dtype)
+        for b, d in ((staged, out), (view, u8), (view, None), (raw, None)):
+            got = knn_join(
+                q, b, K, metric=metric, compute_dtype=dtype, base_dir=d
+            ).select("qid", "rank", "id", "dist")
+            assert got.exceptAll(want).count() == 0, (metric, dtype, d)
+            assert want.exceptAll(got).count() == 0, (metric, dtype, d)
+
+
+def test_flatten_fixed_list_decodes_every_dense_layout():
+    """The one dense decoder: equal values on every layout, slices
+    (offset != 0), multi-chunk and zero-row inputs; the binary layouts
+    come back as uint8 views of the Arrow data buffer (no copy)."""
+    import numpy as np
+    import pyarrow as pa
+
+    from filter_vectordb_spark.operators.knn import flatten_fixed_list
+
+    X = ((np.arange(35) * 37) % 256).astype(np.uint8).reshape(7, 5)
+    rows = [list(map(int, r)) for r in X]
+    raw = [bytes(r) for r in X]
+    fsb = pa.FixedSizeBinaryArray.from_buffers(pa.binary(5), 7, [None, pa.py_buffer(X)])
+    # (layout, array of X's rows, decoded as a uint8 view of its data buffer)
+    layouts = [
+        ("list<int32>", pa.array(rows, pa.list_(pa.int32())), False),
+        ("fixed_size_list", pa.array(rows, pa.list_(pa.int32(), 5)), False),
+        ("fixed_size_binary", fsb, True),
+        ("binary", pa.array(raw, pa.binary()), True),
+        ("large_binary", pa.array(raw, pa.large_binary()), True),
+    ]
+    for name, arr, view in layouts:
+        got = flatten_fixed_list(arr, 7)
+        np.testing.assert_array_equal(got, X, err_msg=name)
+        sl = flatten_fixed_list(arr.slice(2, 4), 4)
+        np.testing.assert_array_equal(sl, X[2:6], err_msg=name)
+        ch = pa.chunked_array([arr.slice(0, 3), arr.slice(3, 4)])
+        np.testing.assert_array_equal(flatten_fixed_list(ch, 7), X, err_msg=name)
+        one = pa.chunked_array([arr.slice(1, 5)])
+        np.testing.assert_array_equal(flatten_fixed_list(one, 5), X[1:6], err_msg=name)
+        assert flatten_fixed_list(arr.slice(0, 0), 0).shape[0] == 0, name
+        if view:
+            data = np.frombuffer(arr.buffers()[-1], np.uint8)
+            for a in (got, sl, flatten_fixed_list(one, 5)):
+                assert a.dtype == np.uint8, name
+                assert np.shares_memory(a, data), name
+        else:
+            assert got.dtype == np.int32, name
+    assert flatten_fixed_list(fsb.slice(0, 0), 0).shape == (0, 5)
+
+
+def test_flatten_fixed_list_refuses_ragged_vectors():
+    import pyarrow as pa
+
+    from filter_vectordb_spark.operators.knn import flatten_fixed_list
+
+    # equal total length (4 values over 2 rows) must not pass as d = 2
+    for arr in (
+        pa.array([[1], [2, 3, 4]], pa.list_(pa.int32())),
+        pa.array([b"a", b"bcd"], pa.binary()),
+        pa.array([b"a", b"bcd"], pa.large_binary()),
+        pa.array([b"ab", None], pa.binary()),
+    ):
+        with pytest.raises(ValueError):
+            flatten_fixed_list(arr, 2)
+
+
+def test_write_u8_base_refuses_values_uint8_cannot_store(spark, tmp_path):
+    """A block holding a non-integer or a value outside 0..255 raises
+    ValueError naming emb and the smallest offending id — never a silent
+    wrap into uint8 — and leaves no staged directory behind."""
+    import os
+
+    from filter_vectordb_spark.queries.fixtures import _write_u8_base
+
+    cases = (
+        ("ARRAY<INT>", {17: [1, 256, 3], 40: [-1, 0, 0]}, 17),
+        ("ARRAY<DOUBLE>", {63: [1.0, 2.5, 3.0]}, 63),
+    )
+    for typ, bad, first in cases:
+        cast = float if "DOUBLE" in typ else int
+        rows = [(i, [cast(v) for v in bad.get(i, [i % 256, 0, 255])]) for i in range(64)]
+        df = spark.createDataFrame(rows, f"id BIGINT, emb {typ}")
+        out = str(tmp_path / f"bad_{first}")
+        with pytest.raises(ValueError, match=rf"emb: id {first}\b"):
+            _write_u8_base(df, out, 4)
+        assert not os.path.exists(out)
+
+
+def test_stale_list_base_restages_to_uint8(spark, tmp_path, monkeypatch):
+    """A cache holding the Spark-written list format passes the file
+    count alone; the footer check restages it to fixed_size_binary(d)
+    once, and the restaged base is served without a second write."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from filter_vectordb_spark.queries import fixtures as fx
+    from filter_vectordb_spark.sources.synth import synth_uint8_base
+
+    monkeypatch.setattr(
+        fx, "_index_cache_dir", lambda key, kind: str(tmp_path / key / kind)
+    )
+    out = str(tmp_path / "synth100k_v2" / "base")
+    fx._write_base(synth_uint8_base(spark, n=2000).select("id", "emb"), out, 32)
+
+    def emb_type():
+        return pq.read_schema(sorted(glob.glob(f"{out}/*.parquet"))[0]).field("emb").type
+
+    assert pa.types.is_list(emb_type())
+    writes = []
+    real = fx._write_u8_base
+    monkeypatch.setattr(
+        fx, "_write_u8_base", lambda *a: (writes.append(a[1]), real(*a))
+    )
+    first = fx._synth100k_base(spark)
+    assert writes == [out] and emb_type() == pa.binary(192)
+    second = fx._synth100k_base(spark)
+    assert writes == [out]
+    assert second.schema.simpleString() == "struct<id:bigint,emb:array<int>>"
+    assert second.count() == first.count() == 100_000
 
 
 def test_knn_join_direct_read_rejects_bad_paths(spark, tmp_path):
