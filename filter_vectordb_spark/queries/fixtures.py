@@ -47,10 +47,7 @@ def _write_base(df: DataFrame, out: str, n_files: int = _BASE_FILES) -> None:
     """Write a direct-read corpus in the fixed serving layout: n_files
     CONTIGUOUS-id files (min/max stats keep range predicates prunable —
     the streaming replays slice inserts by id range), ~16 MB row groups
-    (sub-splittable by operators.knn.rg_units at higher core counts).
-    Spark's writer: `emb` stays a parquet list (ARRAY<INT>) — the
-    msturing corpora, whose replays run Spark array expressions over it;
-    the synth exact-scan bases use _write_u8_base."""
+    (sub-splittable by operators.knn.rg_units at higher core counts)."""
     (
         df.repartitionByRange(n_files, "id")
         .write.mode("overwrite")
@@ -70,7 +67,9 @@ def _write_u8_base(df: DataFrame, out: str, n_files: int = _BASE_FILES) -> None:
     flatten_fixed_list views them as (n, d) uint8).  Each range
     partition is written by pyarrow inside its task.  A value that is
     not an integer in 0..255 raises ValueError naming `emb` and the
-    smallest offending id; nothing wraps into uint8."""
+    smallest offending id; nothing wraps into uint8.  (_write_base, kept
+    for the msturing corpora whose replays run Spark array expressions
+    over `emb`, stores it as Spark's parquet list<int32>.)"""
     import os
     import shutil
 
@@ -155,11 +154,11 @@ def _u8_layout_ok(d: str, min_files: int = _MIN_BASE_FILES, dim: int = 192) -> b
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    files = sorted(glob.glob(f"{d}/*.parquet"))
-    if not (_is_built(d) and len(files) >= min_files):
+    if not (_is_built(d) and _layout_ok(d, min_files)):
         return False
     try:
-        return pq.read_schema(files[0]).field("emb").type == pa.binary(dim)
+        first = min(glob.glob(f"{d}/*.parquet"))
+        return pq.read_schema(first).field("emb").type == pa.binary(dim)
     except (OSError, KeyError, pa.ArrowException):
         return False
 
@@ -169,10 +168,13 @@ def _u8_view(spark: SparkSession, path: str) -> DataFrame:
     one mapInArrow that decodes `emb` with the scans' decoder
     (operators.knn.flatten_fixed_list) and rebuilds list<int32>, so index
     builds, harness engines and rescore joins see the list schema and
-    values.  The direct-read scans (knn_join base_dir=) read the files
-    themselves and never pass through this view.  A job that scans the
-    view several times persists it first (_build_ivfsq): the decode
-    worker otherwise runs beside the consumer's in every task."""
+    values.  The direct-read scans (knn_join base_dir=) and the harness's
+    exact scans (harness.base._scan_source) read the files themselves and
+    never pass through this view.  A job that scans the view several
+    times persists it first (_build_ivfsq): the decode worker otherwise
+    runs beside the consumer's in every task.  (A decode in Spark SQL
+    instead — split of the ISO-8859-1 string, ascii per element —
+    measured 4.3x slower than this view over the 1M base on 4 cores.)"""
     import numpy as np
 
     def decode(it):

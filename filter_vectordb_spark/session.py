@@ -149,38 +149,6 @@ def _select_blas_kernels() -> None:
         os.environ["OPENBLAS_CORETYPE"] = choice
 
 
-#: ceiling of the sized driver heap: the fixed default every host got
-#: before it was sized from memory
-_DRIVER_MEMORY_CAP_MB = 48 * 1024
-#: memory left per local core for its Python worker (decode buffers,
-#: score blocks, Arrow batches) and the OS page cache beside the heap
-_WORKER_MB = 256
-
-
-def _driver_memory(cpus: int, env=os.environ, meminfo: str = "/proc/meminfo") -> "str | None":
-    """spark.driver.memory for get_spark: SPARK_DRIVER_MEMORY when set;
-    None (keep the caller's value) when PYSPARK_SUBMIT_ARGS carries
-    --driver-memory or spark.driver.memory; otherwise half of MemTotal
-    less _WORKER_MB per core, at least a quarter of MemTotal (the
-    benchmark's own launch setting) and at most 48g — a fixed 48g heap
-    can outgrow a small host's physical memory before a full GC runs.
-    48g when MemTotal is unreadable."""
-    if env.get("SPARK_DRIVER_MEMORY"):
-        return env["SPARK_DRIVER_MEMORY"]
-    submit = env.get("PYSPARK_SUBMIT_ARGS", "")
-    if "--driver-memory" in submit or "spark.driver.memory" in submit:
-        return None
-    try:
-        with open(meminfo) as fh:
-            total_mb = next(
-                int(line.split()[1]) // 1024 for line in fh if line.startswith("MemTotal:")
-            )
-    except (OSError, StopIteration, ValueError, IndexError):
-        return f"{_DRIVER_MEMORY_CAP_MB}m"
-    mb = max(total_mb // 4, total_mb // 2 - _WORKER_MB * cpus)
-    return f"{min(_DRIVER_MEMORY_CAP_MB, mb)}m"
-
-
 def get_spark(app_name: str = "filter_vectordb_spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -204,6 +172,7 @@ def get_spark(app_name: str = "filter_vectordb_spark", cpus: int | None = None) 
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
@@ -212,9 +181,6 @@ def get_spark(app_name: str = "filter_vectordb_spark", cpus: int | None = None) 
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
     )
-    driver_memory = _driver_memory(cpus)
-    if driver_memory is not None:
-        builder = builder.config("spark.driver.memory", driver_memory)
     for k, v in {**_BLAS_ENV, **malloc_env}.items():
         builder = builder.config(f"spark.executorEnv.{k}", v)
     spark = builder.getOrCreate()

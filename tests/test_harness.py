@@ -137,3 +137,21 @@ def test_index_engines_refuse_a_metric_their_codec_cannot_score(spark):
         config = {"run_groups": [{"engine": engine, "metric": metric, "run_count": 1}]}
         with pytest.raises(ValueError, match=f"{codec} .*'{metric}'"):
             run_benchmark(spark, config, SF_DIR, k=10)
+
+
+def test_bruteforce_scans_the_staged_base_raw(spark):
+    """On the staged synth100k source the exact scan reads the base files
+    raw (`emb` BINARY, decoded by the scan kernel) instead of through the
+    loader's list view, and ranks exactly as the list view does."""
+    from filter_vectordb_spark.harness.engines import BruteForceEngine
+    from filter_vectordb_spark.operators.knn import knn_join
+
+    eng = BruteForceEngine(metric="ip", index_params={"source": "synth100k"})
+    eng.fit(spark, SF_DIR)
+    assert dict(eng.scan_base.dtypes)["emb"] == "binary"
+    assert dict(eng.base.dtypes)["emb"] == "array<int>"
+    q = eng.default_queries(spark, SF_DIR).filter("qid < 8")
+    got = eng.query(q, 10).select("qid", "rank", "id", "dist")
+    want = knn_join(q, eng.base, 10, metric="ip").select("qid", "rank", "id", "dist")
+    assert got.count() == 80
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0

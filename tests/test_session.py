@@ -98,23 +98,3 @@ def test_worker_runs_a_non_generic_core():
     got = json.loads(out.strip().splitlines()[-1])
     assert got["executor_env"] is None
     assert got["core"].lower() not in session._GENERIC_CORES, got
-
-
-def test_driver_memory_sized_from_mem_total(tmp_path):
-    """With neither SPARK_DRIVER_MEMORY nor a submit-args value, the
-    driver heap is half of MemTotal less 256 MB per local core, at least
-    a quarter of MemTotal and at most the former fixed 48g; 48g when
-    meminfo is unreadable."""
-    from filter_vectordb_spark.session import _driver_memory
-
-    meminfo = tmp_path / "meminfo"
-    meminfo.write_text("MemTotal:       15995392 kB\nMemAvailable:   15000000 kB\n")
-    assert _driver_memory(8, {}, str(meminfo)) == f"{15620 // 2 - 8 * 256}m"  # 15 GB VM
-    assert _driver_memory(4, {}, str(meminfo)) == f"{15620 // 2 - 4 * 256}m"
-    assert _driver_memory(32, {}, str(meminfo)) == f"{15620 // 4}m"  # floor
-    meminfo.write_text("MemTotal:       528000000 kB\n")
-    assert _driver_memory(32, {}, str(meminfo)) == f"{48 * 1024}m"  # never above 48g
-    assert _driver_memory(8, {}, str(tmp_path / "missing")) == f"{48 * 1024}m"
-    assert _driver_memory(8, {"SPARK_DRIVER_MEMORY": "3g"}, str(meminfo)) == "3g"
-    for submit in ("--driver-memory 2g pyspark-shell", "--conf spark.driver.memory=2g pyspark-shell"):
-        assert _driver_memory(8, {"PYSPARK_SUBMIT_ARGS": submit}, str(meminfo)) is None
