@@ -24,11 +24,14 @@ broadcast cap guards this).
 
 The vectorized path mirrors the reference's dot-trick kernel
 (`uint8_knn.hpp:9-29`: dist = ‖x‖² − 2·x·q + ‖q‖²) but in float64, so
-rankings agree with the exact expression path.
+rankings agree with the exact expression path.  Over a uint8 base it
+runs the reference's VNNI kernel itself (u8_scan.c, StreamTopK.scan_u8):
+exact int32 dots, so its scores equal the BLAS path's bit for bit.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable, Iterator
 from typing import Any, NamedTuple
 
@@ -210,7 +213,15 @@ class StreamTopK:
 
     The kept set is exact under (score, id asc): results do not depend
     on how rows are cut into blocks, units or tasks.  metric ∈ METRICS
-    fixes the direction (l2 smaller is better, ip/cos larger)."""
+    fixes the direction (l2 smaller is better, ip/cos larger).
+
+    Two paths feed the same state.  scan (BLAS GEMM + push) scores any
+    dtype and every metric.  scan_u8 (the compiled u8_scan.c kernel)
+    scores a uint8 block for l2/ip queries that pack_u8_queries packed:
+    integer-valued with a per-query range ≤ 255.  _push_block takes
+    scan_u8 whenever both hold and the kernel built (u8_kernel() ==
+    "active"), and scan otherwise; both give the same kept set and the
+    same float64 scores, so which one ran never shows in a result."""
 
     def __init__(self, nq: int, k: int, metric: str):
         self.k = k
@@ -224,6 +235,7 @@ class StreamTopK:
         self._pend: list = []  # (rows, ids, vals) candidate triples
         self._npend = 0
         self._cap = max(65_536, 4 * nq * k)
+        self._ubuf = None  # scan_u8's candidate buffers, made on first use
 
     def push(self, D: np.ndarray, ids: np.ndarray) -> None:
         """Offer a C-contiguous (nq, c) score block for the base rows
@@ -283,6 +295,63 @@ class StreamTopK:
                 D = G.astype(np.float64) / (qn[:, None] * xn[None, lo : lo + chunk])
             self.push(D, ids[lo : lo + chunk])
 
+    def scan_u8(self, P: U8Queries, X: np.ndarray, ids: np.ndarray) -> None:
+        """The compiled twin of scan for a uint8 (n, d) block X and
+        queries packed by pack_u8_queries: u8_scan.c computes each exact
+        int32 dot product with vpdpbusd, compares its key with the
+        current threshold while it is still in a register (ties kept, as
+        push keeps them), and returns only the candidates, which become
+        float64 on their way into the pending triples — so the kept set,
+        the merge and the emitted scores are push's, bit for bit.  An
+        accumulator that has not yet seen k rows first seeds thr through
+        scan over the block's first SEED_COLS rows.  The kernel writes at
+        most max(cap, nq) candidates per call and commits them per
+        1,024-row block: a block that would overflow is merged past
+        (tightening thr) and rescanned, and one that overflows an empty
+        buffer is rescanned in halves — a single row yields ≤ nq."""
+        n = len(X)
+        if X.dtype != np.uint8 or X.ndim != 2 or X.shape[1] != P.d or len(ids) != n:
+            raise ValueError(f"scan_u8 needs ({n}, {P.d}) uint8 rows and {n} ids")
+        if P.nq != len(self.thr):
+            raise ValueError(f"scan_u8: {P.nq} packed queries for {len(self.thr)} rows")
+        s = min(n, max(self.k, SEED_COLS)) if self.seen < self.k else 0
+        if s:
+            Xs = X[:s].astype(P.Q.dtype)
+            self.scan(P.Q, P.qn, Xs, _norm_factor(Xs, self.metric), ids[:s])
+        if s == n:
+            return
+        X, ids, dp = np.ascontiguousarray(X[s:]), ids[s:], P.qp.shape[1] * 4
+        if dp != P.d:  # zero-pad rows to the packed width
+            X = np.pad(X, ((0, 0), (0, dp - P.d)))
+        cap = max(self._cap, P.nqp)
+        if self._ubuf is None or self._ubuf.shape[1] < cap:
+            self._ubuf = np.empty((3, cap), np.int32)
+        rows, qs, keys = self._ubuf
+        done = np.zeros(1, np.int64)
+        lo, step, n = 0, len(X), len(X)
+        while lo < n:
+            hi = min(n, lo + step)
+            thr = P.thr32(self.thr)  # held: the call reads its memory
+            cnt = P.fn(
+                X[lo:hi].ctypes.data, hi - lo, dp, P.qp.ctypes.data, P.nqp // _U8_QT,
+                P.off.ctypes.data, thr.ctypes.data, P.l2,
+                rows.ctypes.data, qs.ctypes.data, keys.ctypes.data, cap, done.ctypes.data,
+            )
+            took = int(done[0])
+            if cnt:
+                q = qs[:cnt].astype(np.int64)
+                v = keys[:cnt].astype(np.float64)
+                if P.l2:
+                    v += P.qn[q]  # ‖q‖² + ‖x‖² − 2·dot, exact below 2⁵³
+                self._pend.append((q, ids[lo + rows[:cnt]], v))
+                self._npend += cnt
+            self.seen += took
+            lo += took
+            if took == 0 and not self._npend:
+                step = max(1, step // 2)  # ties overflow even an empty buffer
+            elif lo < hi or self._npend > self._cap:
+                self._merge()
+
     def _merge(self) -> None:
         if not self._npend:
             return
@@ -298,6 +367,148 @@ class StreamTopK:
         self._merge()
         kk = min(self.k, self.seen)
         return self.idx[:, :kk], self.val[:, :kk]
+
+
+#: the uint8 scan kernel (StreamTopK.scan_u8): its C source, its flags
+#: (explicit ISA, never -march=native, so one build serves every host
+#: with these flags) and the CPU flags it needs
+_U8_SRC = os.path.join(os.path.dirname(__file__), "u8_scan.c")
+_U8_CFLAGS = ("-O3", "-mavx512f", "-mavx512vnni", "-shared", "-fPIC")
+_U8_CPU = frozenset({"avx512f", "avx512_vnni"})
+#: queries per register tile — QT in u8_scan.c
+_U8_QT = 64
+_U8_BUILT: dict = {}  # _U8_SRC → (path, status), once per process
+_U8_FNS: dict = {}  # path → loaded entry point, once per process
+
+
+def u8_kernel() -> tuple[str | None, str]:
+    """(path of the compiled uint8 scan kernel, "active"), or (None,
+    why the numpy path runs: "no avx512_vnni", "no gcc" or "compile
+    error: …").  Compiled once into tempfile.gettempdir(), named by the
+    hash of the source and the flags, written under a temporary name and
+    renamed into place, so racing builders are safe and a failed compile
+    leaves nothing a later call would load.  The driver calls this while
+    it plans a scan (it rebuilds a kernel file removed since); tasks only
+    load the path it hands them."""
+    built = _U8_BUILT.get(_U8_SRC)
+    if built is None or (built[0] is not None and not os.path.exists(built[0])):
+        built = _U8_BUILT[_U8_SRC] = _build_u8()
+    return built
+
+
+def _build_u8() -> tuple[str | None, str]:
+    import hashlib
+    import shutil
+    import subprocess
+    import tempfile
+
+    from filter_vectordb_spark.session import _cpu_flags
+
+    if not _U8_CPU <= (_cpu_flags() or frozenset()):
+        return None, "no avx512_vnni"
+    gcc = shutil.which("gcc")
+    if gcc is None:
+        return None, "no gcc"
+    with open(_U8_SRC, "rb") as f:
+        tag = hashlib.sha256(f.read() + " ".join(_U8_CFLAGS).encode()).hexdigest()[:16]
+    path = os.path.join(tempfile.gettempdir(), f"fvdb_u8_scan_{tag}.so")
+    if os.path.exists(path):
+        if os.stat(path).st_uid != os.getuid():
+            return None, f"compile error: {path} belongs to another user"
+        return path, "active"
+    fd, tmp = tempfile.mkstemp(suffix=".so.tmp", dir=os.path.dirname(path))
+    os.close(fd)
+    try:
+        r = subprocess.run([gcc, *_U8_CFLAGS, "-o", tmp, _U8_SRC], capture_output=True, text=True)
+        if r.returncode:
+            return None, "compile error: " + (r.stderr.strip().splitlines() or ["gcc failed"])[-1]
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+    return path, "active"
+
+
+def _u8_fn(path: str):
+    """The u8_scan entry point of the built kernel at path."""
+    fn = _U8_FNS.get(path)
+    if fn is None:
+        import ctypes
+
+        fn = ctypes.CDLL(path).u8_scan
+        p, i64 = ctypes.c_void_p, ctypes.c_int64
+        fn.argtypes = [p, i64, i64, p, i64, p, p, ctypes.c_int32, p, p, p, i64, p]
+        fn.restype = i64
+        _U8_FNS[path] = fn
+    return fn
+
+
+class U8Queries(NamedTuple):
+    """A task's query set packed once for StreamTopK.scan_u8: qp holds
+    int8 q − off (off a per-query offset that brings the query into
+    int8; 0 when it already fits) in the kernel's 64-query × 4-dim tile
+    order, zero-padded to nqp = a multiple of 64 queries and to a
+    multiple of 4 dims.  Q/qn are the compute-dtype queries and their
+    norm factor, which seed thr through scan."""
+
+    fn: Any
+    qp: np.ndarray  # (nqp // 64, ⌈d/4⌉, 64, 4) int8
+    off: np.ndarray  # (nqp,) int32
+    nq: int
+    nqp: int
+    d: int  # the queries' (and the base's) dimension
+    l2: int
+    Q: np.ndarray
+    qn: np.ndarray | None
+
+    def thr32(self, thr: np.ndarray) -> np.ndarray:
+        """The kernel's int32 per-query key bounds for the float64
+        thresholds thr: ip keeps dot ≥ ⌈thr⌉, l2 keeps ‖x‖² − 2·dot ≤
+        ⌊thr − ‖q‖²⌋ (scores are integers, so both are exact); ±inf
+        clips to keep-everything, and pad lanes keep nothing."""
+        lo, hi = np.iinfo(np.int32).min, np.iinfo(np.int32).max
+        t = np.full(self.nqp, lo if self.l2 else hi, np.int32)
+        b = np.floor(thr - self.qn) if self.l2 else np.ceil(thr)
+        t[: self.nq] = np.clip(b, lo, hi)
+        return t
+
+
+def pack_u8_queries(
+    kernel: tuple[str | None, str], Q: np.ndarray, Qc: np.ndarray, qn, metric: str
+) -> tuple[U8Queries | None, str]:
+    """(queries packed for the uint8 kernel, "active"), or (None, why
+    the numpy path runs): kernel is u8_kernel()'s pair; Q float64 (nq,
+    d), Qc/qn as _query_side returns them.  The kernel scores l2 and ip
+    (cos stays on numpy) for integer-valued queries whose per-query
+    range max − min is ≤ 255 (they fit int8 after the offset — uint8
+    and int8 query sets both do), and only while every int32
+    intermediate stays exact."""
+    path, status = kernel
+    if path is None:
+        return None, status
+    try:
+        fn = _u8_fn(path)
+    except OSError as e:  # the driver's build is not on this host
+        return None, f"load error: {e}"
+    if metric == "cos":
+        return None, "cos metric"
+    nq, d = Q.shape
+    if nq == 0 or not np.array_equal(Q, np.rint(Q)):
+        return None, "non-integer queries"
+    lo, hi = Q.min(axis=1), Q.max(axis=1)
+    if (hi - lo).max() > 255:
+        return None, "query range > 255"
+    qmax = float(np.abs(Q).max())
+    if 255.0 * d * (2.0 * qmax + 383.0) >= 2**31:
+        return None, "int32 overflow"
+    off = np.where((lo >= -128) & (hi <= 127), 0, lo + 128).astype(np.int32)
+    nqp, dp = -(-nq // _U8_QT) * _U8_QT, -(-d // 4) * 4
+    P = np.zeros((nqp, dp), np.int8)
+    P[:nq, :d] = Q - off[:, None]
+    qp = np.ascontiguousarray(P.reshape(nqp // _U8_QT, _U8_QT, dp // 4, 4).transpose(0, 2, 1, 3))
+    offp = np.zeros(nqp, np.int32)
+    offp[:nq] = off
+    return U8Queries(fn, qp, offp, nq, nqp, d, int(metric == "l2"), Qc, qn), "active"
 
 
 def gemm_topk(
@@ -656,7 +867,19 @@ def knn_join(
     an integer float32 represents exactly, so G == the float64 result
     bit-for-bit (asserted in tests/test_knn.py).  The distance assembly
     and emitted dist stay float64 either way.  Callers with genuine
-    float embeddings must keep the float64 default.
+    float embeddings must keep the float64 default.  Every base row is
+    checked against that precondition before its cast (ValueError).
+
+    Which kernel scores a block: when the decoded base block is uint8
+    (the staged `fixed_size_binary` bases, or a raw BinaryType `emb`),
+    the metric is l2 or ip, and the queries are integers whose
+    per-query range max − min is ≤ 255, the compiled AVX-512 VNNI
+    kernel (u8_scan.c) computes exact int32 dots and compares them with
+    the running top-k threshold in registers — under either
+    compute_dtype, since both are exact there.  Everything else (list
+    bases, cos, real-valued queries, a host without avx512_vnni or gcc)
+    runs the BLAS GEMM in compute_dtype.  Results are bit-identical
+    whichever runs; u8_kernel() names the build status.
 
     base_dir (vectorized strategy only): path of the STAGED base's
     parquet directory, columns `id` and `emb`.  The scan then reads each
@@ -737,7 +960,8 @@ def _check_f32_queries(Q: np.ndarray) -> None:
     """Enforce the documented exactness precondition (knn_join): the
     f32 GEMM is bit-exact only for integer components, |v| ≤ 255,
     d ≤ 192.  Full check on the query side (cheap — one pass over the
-    chunk); the base side is spot-checked per block (_push_block)."""
+    chunk); the base side is checked per block before its cast
+    (_check_f32_base)."""
     if Q.shape[1] > 192 or not (
         np.abs(Q).max(initial=0.0) <= 255 and np.array_equal(Q, np.rint(Q))
     ):
@@ -763,52 +987,72 @@ def _score_vectorized_chunk(
     Q = np.stack(qpdf["qemb"].to_numpy()).astype(np.float64)
     if dt == np.float32:
         _check_f32_queries(Q)
-    bc = b.sparkSession.sparkContext.broadcast((qids, Q))
+    bc = b.sparkSession.sparkContext.broadcast((qids, Q, u8_kernel()))
 
     def score_batches(it):
-        bqids, bQ = bc.value
+        bqids, bQ, kernel = bc.value
         acc = StreamTopK(len(bqids), k, metric)
-        Qc, qfac = _query_side(bQ, metric, dt)
+        Qc, qfac, u8 = _query_side(bQ, metric, dt, kernel)
         for batch in it:
             nb = batch.num_rows
             if nb == 0:
                 continue
             ids = batch.column("id").to_numpy(zero_copy_only=False)
-            X = flatten_fixed_list(batch.column("emb"), nb).astype(dt)
-            _push_block(acc, Qc, qfac, ids, X)
+            _push_block(acc, Qc, qfac, u8, ids, flatten_fixed_list(batch.column("emb"), nb))
         yield from _acc_partial(acc, bqids)
 
     return b.mapInArrow(score_batches, schema="qid long, id long, dist double")
 
 
-def _query_side(bQ: np.ndarray, metric: str, dt):
+def _query_side(bQ: np.ndarray, metric: str, dt, kernel):
     """(Q in the compute dtype, its norm factor: float64 squared norms
-    for l2, norms for cos, None for ip)."""
+    for l2, norms for cos, None for ip; the queries packed for the
+    uint8 kernel, or None)."""
     qn64 = (bQ * bQ).sum(axis=1)  # float64 always — distance assembly
-    return bQ.astype(dt), {"l2": qn64, "ip": None, "cos": np.sqrt(qn64)}[metric]
+    Qc, qfac = bQ.astype(dt), {"l2": qn64, "ip": None, "cos": np.sqrt(qn64)}[metric]
+    return Qc, qfac, pack_u8_queries(kernel, bQ, Qc, qfac, metric)[0]
 
 
-def _push_block(acc: StreamTopK, Qc, qfac, ids, X) -> None:
-    """Shared per-block scan body of the DataFrame and direct-read
-    vectorized paths: f32 precondition spot-check, norm factors, fused
-    GEMM + push into the task's accumulator."""
-    if X.dtype == np.float32:
-        # spot-check the f32 exactness precondition on the base side
-        # (first row per block — a full pass would cost a
-        # memory-bandwidth sweep per block)
-        r0 = X[0].astype(np.float64)
-        if not (np.abs(r0).max(initial=0.0) <= 255 and np.array_equal(r0, np.rint(r0))):
-            raise ValueError(
-                "compute_dtype='float32' exactness precondition "
-                "violated by base vectors (non-integer or |v| > 255)"
-            )
-    if acc.metric == "ip":
-        xfac = None
+def _norm_factor(X: np.ndarray, metric: str):
+    """Base-side twin of _query_side's norm factor, float64."""
+    if metric == "ip":
+        return None
+    Xf = X if X.dtype == np.float64 else X.astype(np.float64)
+    xn = (Xf * Xf).sum(axis=1)
+    return xn if metric == "l2" else np.sqrt(xn)
+
+
+def _check_f32_base(X: np.ndarray) -> None:
+    """The base side of the f32 exactness precondition (knn_join), over
+    every decoded row: uint8 needs no check, other integer dtypes one
+    min/max pass, floats the full integrality check."""
+    if X.dtype == np.uint8 or X.size == 0:
+        return
+    if X.dtype.kind in "iu":
+        ok = X.min() >= -255 and X.max() <= 255
     else:
-        Xf = X if X.dtype == np.float64 else X.astype(np.float64)
-        xn = (Xf * Xf).sum(axis=1)
-        xfac = xn if acc.metric == "l2" else np.sqrt(xn)
-    acc.scan(Qc, qfac, X, xfac, ids.astype(np.int64, copy=False))
+        ok = np.abs(X).max() <= 255 and np.array_equal(X, np.rint(X))
+    if not ok:
+        raise ValueError(
+            "compute_dtype='float32' exactness precondition "
+            "violated by base vectors (non-integer or |v| > 255)"
+        )
+
+
+def _push_block(acc: StreamTopK, Qc, qfac, u8, ids, X) -> None:
+    """Shared per-block scan body of the DataFrame and direct-read
+    vectorized paths over decoded base rows X in their stored dtype:
+    the uint8 kernel when X is uint8 and the task's queries were packed
+    for it (u8), else the f32 exactness check, the cast to the compute
+    dtype, norm factors and fused GEMM + push."""
+    ids = ids.astype(np.int64, copy=False)
+    if u8 is not None and X.dtype == np.uint8:
+        acc.scan_u8(u8, X, ids)
+        return
+    if Qc.dtype == np.float32:
+        _check_f32_base(X)
+    X = X.astype(Qc.dtype, copy=False)
+    acc.scan(Qc, qfac, X, _norm_factor(X, acc.metric), ids)
 
 
 def _acc_partial(acc: StreamTopK, bqids: np.ndarray):
@@ -852,9 +1096,9 @@ def _score_vectorized_chunk_direct(
     def serve(payload, units):
         import pyarrow.parquet as pq
 
-        bqids, bQ = payload
+        bqids, bQ, kernel = payload
         acc = StreamTopK(len(bqids), k, metric)
-        Qc, qfac = _query_side(bQ, metric, dt)
+        Qc, qfac, u8 = _query_side(bQ, metric, dt, kernel)
         for path, lo, hi in units:
             tbl = pq.ParquetFile(path).read_row_groups(
                 list(range(lo, hi)), columns=["id", "emb"]
@@ -863,14 +1107,14 @@ def _score_vectorized_chunk_direct(
             if n == 0:
                 continue
             ids = tbl.column("id").to_numpy(zero_copy_only=False)
-            X = flatten_fixed_list(tbl.column("emb"), n).astype(dt)
-            _push_block(acc, Qc, qfac, ids, X)
+            _push_block(acc, Qc, qfac, u8, ids, flatten_fixed_list(tbl.column("emb"), n))
         yield from _acc_partial(acc, bqids)
 
     units = rg_units(spark, files)
+    payload = (qids, Q, u8_kernel())
     return scan_units(
         spark,
-        [Scan([u[:3] for u in units], [u[3] for u in units], (qids, Q), serve)],
+        [Scan([u[:3] for u in units], [u[3] for u in units], payload, serve)],
         "qid long, id long, dist double",
     )
 

@@ -610,3 +610,178 @@ def test_direct_read_scan_runs_one_task_per_core(spark, tmp_path):
     st = sc.statusTracker()
     stages = sorted(s for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds)
     assert st.getStageInfo(stages[0]).numTasks == dp
+
+
+def test_f32_base_check_reads_every_row(spark):
+    """The f32 exactness precondition holds for every base row, not only
+    each block's first: a list base whose row 0 is in range but whose
+    row 5 holds 300 (or 2.5) fails the DataFrame route with the
+    precondition's ValueError instead of scoring it inexactly."""
+    import numpy as np
+
+    rng = np.random.RandomState(3)
+    q = spark.createDataFrame(
+        [(i, rng.randint(0, 256, 8).tolist()) for i in range(3)], "qid LONG, qemb ARRAY<INT>"
+    )
+    for typ, bad in (("INT", 300), ("DOUBLE", 2.5)):
+        cast = float if typ == "DOUBLE" else int
+        rows = [(i, [cast(v) for v in rng.randint(0, 256, 8)]) for i in range(40)]
+        rows[5][1][3] = bad
+        base = spark.createDataFrame(rows, f"id LONG, emb ARRAY<{typ}>").coalesce(1)
+        with pytest.raises(Exception, match="ValueError.*exactness precondition"):
+            knn_join(q, base, K, metric="ip", compute_dtype="float32").collect()
+
+
+def _u8_kernel_or_skip():
+    from filter_vectordb_spark.operators.knn import u8_kernel
+
+    kernel = u8_kernel()
+    if kernel[0] is None:
+        pytest.skip(f"uint8 kernel unavailable: {kernel[1]}")
+    return kernel
+
+
+def test_u8_kernel_active_on_capable_host():
+    """Where the CPU lists avx512_vnni and gcc is on PATH, the uint8
+    scan kernel builds and loads: the numpy path must not stand in for
+    it silently."""
+    import shutil
+
+    from filter_vectordb_spark.operators.knn import _U8_CPU, u8_kernel
+    from filter_vectordb_spark.session import _cpu_flags
+
+    if not (_U8_CPU <= (_cpu_flags() or frozenset()) and shutil.which("gcc")):
+        pytest.skip("host without avx512_vnni or gcc")
+    assert u8_kernel()[1] == "active"
+
+
+def test_u8_kernel_matches_numpy_bit_for_bit():
+    """StreamTopK.scan_u8 keeps exactly the ids and float64 scores of
+    StreamTopK.scan over the same uint8 rows in f32: ip and l2; query
+    counts around the 64-query tile; d a multiple of 4 and not; row
+    counts off the 6-row tile, below k, and streamed as several units
+    into one accumulator; duplicated base rows that tie at the boundary;
+    uint8 and int8 query sets; buffers forced to overflow; and against
+    the float64 BLAS as well."""
+    import numpy as np
+
+    from filter_vectordb_spark.operators.knn import StreamTopK, _norm_factor, pack_u8_queries
+
+    kernel = _u8_kernel_or_skip()
+    rng = np.random.RandomState(17)
+    k = 10
+
+    def run(metric, Q, X, units, u8=None, cap=None, dt=np.float32):
+        acc = StreamTopK(len(Q), k, metric)
+        if cap is not None:
+            acc._cap = cap
+        for lo, hi in units:
+            ids = np.arange(lo, hi, dtype=np.int64)
+            if u8 is None:
+                Xf = X[lo:hi].astype(dt)
+                qn = (Q * Q).sum(1) if metric == "l2" else None
+                acc.scan(Q.astype(dt), qn, Xf, _norm_factor(Xf, metric), ids)
+            else:
+                acc.scan_u8(u8, X[lo:hi], ids)
+        return acc.result()
+
+    for metric in ("ip", "l2"):
+        for d in (192, 190):
+            pool = rng.randint(0, 256, (40, d)).astype(np.uint8)
+            for nq in (1, 63, 64, 65, 1024):
+                for qlo in (0, -128):  # uint8 and int8 query sets
+                    Q = rng.randint(qlo, qlo + 256, (nq, d)).astype(np.float64)
+                    Qc = Q.astype(np.float32)
+                    qn = (Q * Q).sum(1) if metric == "l2" else None
+                    u8, status = pack_u8_queries(kernel, Q, Qc, qn, metric)
+                    assert status == "active"
+                    n = 1999 if nq < 1024 else 1201
+                    X = rng.randint(0, 256, (n, d)).astype(np.uint8)
+                    X[n // 2 :] = pool[rng.randint(0, len(pool), n - n // 2)]  # ties
+                    for units in ([(0, n)], [(0, 7), (7, 900), (900, n)], [(0, 5)]):
+                        want = run(metric, Q, X, units)
+                        caps = (None, 16) if nq in (1, 65) else (None,)
+                        for cap in caps:
+                            got = run(metric, Q, X, units, u8, cap)
+                            case = (metric, d, nq, qlo, units, cap)
+                            assert np.array_equal(got[0], want[0]), case
+                            assert np.array_equal(got[1], want[1]), case
+                    if nq == 65:  # the float64 BLAS is exact on these too
+                        want = run(metric, Q, X, [(0, n)], dt=np.float64)
+                        got = run(metric, Q, X, [(0, n)], u8)
+                        assert np.array_equal(got[0], want[0]) and np.array_equal(got[1], want[1])
+
+
+def test_u8_kernel_refuses_wide_queries_and_cos():
+    """A query whose range max − min exceeds 255 does not fit int8 after
+    any offset, and cos is not integer: both take the numpy path, and
+    _push_block's result is the numpy result."""
+    import numpy as np
+
+    from filter_vectordb_spark.operators.knn import StreamTopK, _push_block, _query_side, pack_u8_queries
+
+    kernel = _u8_kernel_or_skip()
+    rng = np.random.RandomState(4)
+    X = rng.randint(0, 256, (500, 16)).astype(np.uint8)
+    Q = rng.randint(0, 256, (3, 16)).astype(np.float64)
+    Q[1, 0], Q[1, 1] = -200, 200
+    assert pack_u8_queries(kernel, Q, Q.astype(np.float32), None, "ip") == (None, "query range > 255")
+    assert pack_u8_queries(kernel, Q[::2], Q[::2], None, "cos") == (None, "cos metric")
+    Qc, qfac, u8 = _query_side(Q, "ip", np.float32, kernel)
+    assert u8 is None
+    acc = StreamTopK(3, K, "ip")
+    _push_block(acc, Qc, qfac, u8, np.arange(500), X)
+    G = Q @ X.T.astype(np.float64)
+    assert np.array_equal(acc.result()[1], -np.sort(-G, axis=1)[:, :K])
+
+
+def test_u8_failed_compile_leaves_nothing_to_load(monkeypatch, tmp_path):
+    """A source gcc rejects gives a "compile error" status and leaves no
+    shared object (not even a partial one) that a later build would
+    find and load."""
+    import shutil
+    import tempfile
+
+    from filter_vectordb_spark.operators import knn
+    from filter_vectordb_spark.session import _cpu_flags
+
+    if not (knn._U8_CPU <= (_cpu_flags() or frozenset()) and shutil.which("gcc")):
+        pytest.skip("host without avx512_vnni or gcc")
+    bad = tmp_path / "u8_scan.c"
+    bad.write_text("int u8_scan(void) { return }\n")
+    out = tmp_path / "tmp"
+    out.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(out))
+    monkeypatch.setattr(knn, "_U8_SRC", str(bad))
+    for _ in range(2):
+        monkeypatch.setattr(knn, "_U8_BUILT", {})
+        path, status = knn.u8_kernel()
+        assert path is None and status.startswith("compile error"), status
+        assert list(out.iterdir()) == []
+
+
+def test_u8_fallback_frame_equals_kernel_frame(spark, tmp_path, monkeypatch):
+    """The direct-read knn_join over a uint8 staged base returns the same
+    rows whether the tasks score with the kernel or, with the kernel
+    unavailable, with the numpy path (ip and l2, float32)."""
+    from filter_vectordb_spark.operators import knn
+    from filter_vectordb_spark.queries.fixtures import _write_u8_base
+    from filter_vectordb_spark.sources.synth import synth_queries, synth_uint8_base
+
+    _u8_kernel_or_skip()
+    u8 = str(tmp_path / "staged_u8")
+    _write_u8_base(synth_uint8_base(spark, n=3000).select("id", "emb"), u8, 5)
+    base = spark.read.parquet(u8)
+    q = synth_queries(spark, nq=70).select("qid", "qemb").cache()
+    for metric in ("ip", "l2"):
+        def frame():
+            return knn_join(
+                q, base, K, metric=metric, compute_dtype="float32", base_dir=u8
+            ).select("qid", "rank", "id", "dist").localCheckpoint()
+
+        fast = frame()
+        with monkeypatch.context() as m:
+            m.setattr(knn, "u8_kernel", lambda: (None, "no gcc"))
+            slow = frame()
+        assert fast.count() == 70 * K
+        assert fast.exceptAll(slow).count() == 0 and slow.exceptAll(fast).count() == 0, metric
