@@ -33,8 +33,10 @@ trades recall for QPS only because its per-tag indexes are HNSW):
 Layout (build_filtered_index):
   stats/    (tag, ndoc)                         A1 routing table
   grid/     SQ8 lossless grid                   shared decode offset
-  codes/    (id, codes, tags, xn) id-range      R4's durable source
-  tagview/  (tag=<t>/, id, codes, tags, xn)     R2/R3, hot tags salted
+  codes/    (id, codes, tags, xn) id-range      meta_bin's build source,
+                                                R4 gather plan's input
+  tagview/  (tag=<t>/, id, codes, tags, xn)     tag_bin's build source,
+                                                hot tags salted
   pair/     index/tagpart pair layout           R1
   meta_bin/ int8 bins + CSR + norms (npy)       R4 memmap serving
   tag_bin/  per-tag bins, lst-sorted + CSR      R2/R3 memmap serving
@@ -44,9 +46,10 @@ in-RAM uint8 matrix + CSR metadata (`benchmark/datasets.py` xbin_mmap,
 `filter/faiss/faiss.py:237`) as memmapped files: workers share corpus
 pages through the page cache instead of re-reading + re-decoding
 parquet into per-worker buffers every batch, and candidate gathers
-touch only candidate rows.  Parquet remains the durable format (and
-the serve path when sidecars are absent — bit-identical results,
-pytest-pinned).
+touch only candidate rows.  They are R2-R4's only serving layout: an
+index without them is not built (index_is_built), and filtered_search
+refuses it by name.  Parquet remains the durable format they are built
+from.
 
 Everything serves 1-byte SQ8 codes (lossless on integer corpora — the
 yfcc uint8 regime) and ships only nq×k partials per task into the W3
@@ -119,10 +122,18 @@ def _encode_with_tags(base: DataFrame, vmin: np.ndarray, vmax: np.ndarray) -> Da
     )
 
 
+#: the memmap serving sidecars, written last by build_filtered_index
+_SIDECARS = ("meta_bin", "tag_bin")
+
+
 def index_is_built(out_dir: str) -> bool:
-    return os.path.exists(f"{out_dir}/meta.json") and all(
-        os.path.exists(f"{out_dir}/{p}/_SUCCESS")
-        for p in ("stats", "grid", "codes", "tagview", "pair/view", "centroids")
+    return (
+        os.path.exists(f"{out_dir}/meta.json")
+        and all(
+            os.path.exists(f"{out_dir}/{p}/_SUCCESS")
+            for p in ("stats", "grid", "codes", "tagview", "pair/view", "centroids")
+        )
+        and all(os.path.exists(f"{out_dir}/{p}/_SUCCESS.json") for p in _SIDECARS)
     )
 
 
@@ -159,13 +170,13 @@ def build_filtered_index(
         )
     # Rebuild-in-place safety (ADVICE r9 medium): the parquet below is
     # written mode=overwrite, but the *_bin sidecars are idempotent
-    # build artifacts gated on _SUCCESS.json — left in place they would
-    # be PREFERRED by serving over the fresh parquet, silently answering
-    # from the OLD corpus.  Retire them first; the trailing
-    # build_*_bins calls regenerate both from the new parquet.
+    # build artifacts gated on _SUCCESS.json — left in place the
+    # trailing build_*_bins calls would keep them, and serving would
+    # answer from the OLD corpus.  Retire them first; those calls then
+    # regenerate both from the new parquet.
     import shutil
 
-    for sub in ("meta_bin", "tag_bin"):
+    for sub in _SIDECARS:
         shutil.rmtree(f"{out_dir}/{sub}", ignore_errors=True)
     vmin, vmax = codec
     n = base.count()
@@ -243,8 +254,8 @@ def build_filtered_index(
         "pair_min_freq": pair_min_freq,
         "nlist": int(nlist),
         # codes/tagview carry the persisted per-row squared-norm column
-        # (VERDICT r8 #1a); serving reads it instead of recomputing.
-        # Absent in pre-r9 layouts → the kernels fall back to _sqnorms.
+        # (VERDICT r8 #1a) that the sidecars serve; build_*_bins refuse
+        # a layout without it
         "xn": True,
     }
     tmp = f"{out_dir}/meta.json.tmp"
@@ -253,6 +264,19 @@ def build_filtered_index(
     os.replace(tmp, f"{out_dir}/meta.json")
     build_meta_bins(spark, out_dir)
     build_tag_bins(spark, out_dir)
+
+
+def _persisted_norms_meta(out_dir: str) -> dict:
+    """meta.json of a layout whose codes/tagview parquet carry the
+    persisted `xn` norms the sidecars copy; older layouts are refused."""
+    with open(f"{out_dir}/meta.json") as fh:
+        meta = json.load(fh)
+    if not meta.get("xn"):
+        raise ValueError(
+            f'{out_dir}/meta.json lacks "xn": true — its parquet predates '
+            "persisted norms; rebuild the index with build_filtered_index"
+        )
+    return meta
 
 
 def build_meta_bins(spark: SparkSession, out_dir: str) -> None:
@@ -279,19 +303,14 @@ def build_meta_bins(spark: SparkSession, out_dir: str) -> None:
     index pattern the reference's mmap readers use.  Idempotent;
     _SUCCESS.json records the manifest.  Build-time work by design
     (BASELINE QPS excludes build)."""
-    from filter_vectordb_spark.index.sq import read_grid
-
     dest = f"{out_dir}/meta_bin"
     if os.path.exists(f"{dest}/_SUCCESS.json"):
         return
+    _persisted_norms_meta(out_dir)
     os.makedirs(dest, exist_ok=True)
-    vmin, _vmax = read_grid(spark, f"{out_dir}/grid")
-    off = vmin + 128.0
-    with open(f"{out_dir}/meta.json") as fh:
-        has_xn = bool(json.load(fh).get("xn", False))
     files = sorted(_glob.glob(f"{out_dir}/codes/*.parquet"))
     fdf = spark.createDataFrame([(p,) for p in files], "path STRING")
-    bc = spark.sparkContext.broadcast((dest, off, has_xn))
+    bc = spark.sparkContext.broadcast(dest)
 
     def build_one(it):
         import pyarrow as pa
@@ -299,27 +318,22 @@ def build_meta_bins(spark: SparkSession, out_dir: str) -> None:
 
         from filter_vectordb_spark.index.filteridx_kernels import (
             _codes_matrix,
-            _decode,
             _flat_tags,
-            _sqnorms,
         )
 
-        bdest, boff, bxn = bc.value
+        bdest = bc.value
         for batch in it:
             for path in batch.column("path").to_pylist():
                 stem = os.path.splitext(os.path.basename(path))[0]
-                cols = ["id", "codes", "tags"] + (["xn"] if bxn else [])
+                cols = ["id", "codes", "tags", "xn"]
                 tbl = pq.ParquetFile(path).read(columns=cols)
                 n = tbl.num_rows
                 ids = tbl.column("id").to_numpy(zero_copy_only=False).astype(
                     np.int64
                 )
                 C8 = np.ascontiguousarray(_codes_matrix(tbl.column("codes"), n))
-                if bxn:
-                    xn = tbl.column("xn").to_numpy(zero_copy_only=False)
-                    xn = np.ascontiguousarray(xn, dtype=np.float64)
-                else:
-                    xn = _sqnorms(_decode(tbl.column("codes"), None, n, boff, True))
+                xn = tbl.column("xn").to_numpy(zero_copy_only=False)
+                xn = np.ascontiguousarray(xn, dtype=np.float64)
                 flat, row_of = _flat_tags(tbl.column("tags"), n)
                 order = np.lexsort((row_of, flat))
                 ft, ro = flat[order], row_of[order]
@@ -363,6 +377,7 @@ def build_tag_bins(spark: SparkSession, out_dir: str) -> None:
       tag_bin/<t>.<stem>.ids.npy    int64 row → doc id
       tag_bin/<t>.<stem>.xn.npy     float64 squared norms
       tag_bin/<t>.<stem>.lst.npy    int32 coarse-list id, ascending
+      tag_bin/<t>.<stem>.bounds.npy int64 first row of each list (nlist+1)
       tag_bin/<t>.<stem>.{ptags,pstarts,prows}.npy  in-file tag CSR
 
     The probed route previously read a probed tag's ENTIRE partition
@@ -370,21 +385,15 @@ def build_tag_bins(spark: SparkSession, out_dir: str) -> None:
     thousand candidate rows per query; the memmap layout makes the
     probe a binary-searched row-range gather from shared page-cache
     pages.  The lst sort is applied (stable) at BIN build, so serving
-    never needs the scrambled-writer re-sort guard on bin units; the
-    CSR replaces the per-batch tags flatten for R3 conjunction masks.
+    reads canonical lst-sorted rows whatever order the parquet writer
+    left; the CSR replaces the per-batch tags flatten for R3
+    conjunction masks.
     Idempotent; _SUCCESS.json records {tag: [[stem, n], ...]}."""
-    from filter_vectordb_spark.index.sq import read_grid
-
     dest = f"{out_dir}/tag_bin"
     if os.path.exists(f"{dest}/_SUCCESS.json"):
         return
+    nlist = int(_persisted_norms_meta(out_dir)["nlist"])
     os.makedirs(dest, exist_ok=True)
-    vmin, _vmax = read_grid(spark, f"{out_dir}/grid")
-    off = vmin + 128.0
-    with open(f"{out_dir}/meta.json") as fh:
-        meta = json.load(fh)
-    has_xn = bool(meta.get("xn", False))
-    nlist = int(meta["nlist"])
     files = []
     for d_ in _glob.glob(f"{out_dir}/tagview/tag=*"):
         t = int(os.path.basename(d_).split("=", 1)[1])
@@ -392,7 +401,7 @@ def build_tag_bins(spark: SparkSession, out_dir: str) -> None:
     fdf = spark.createDataFrame(
         [(t, p) for t, p in files], "tag INT, path STRING"
     )
-    bc = spark.sparkContext.broadcast((dest, off, has_xn, nlist))
+    bc = spark.sparkContext.broadcast((dest, nlist))
 
     def build_one(it):
         import pyarrow as pa
@@ -400,19 +409,17 @@ def build_tag_bins(spark: SparkSession, out_dir: str) -> None:
 
         from filter_vectordb_spark.index.filteridx_kernels import (
             _codes_matrix,
-            _decode,
             _flat_tags,
-            _sqnorms,
         )
 
-        bdest, boff, bxn, bnlist = bc.value
+        bdest, bnlist = bc.value
         for batch in it:
             for tag, path in zip(
                 batch.column("tag").to_pylist(), batch.column("path").to_pylist()
             ):
                 stem = os.path.splitext(os.path.basename(path))[0]
                 key = f"{tag}.{stem}"
-                cols = ["id", "codes", "tags", "lst"] + (["xn"] if bxn else [])
+                cols = ["id", "codes", "tags", "lst", "xn"]
                 tbl = pq.ParquetFile(path).read(columns=cols)
                 n = tbl.num_rows
                 ids = tbl.column("id").to_numpy(zero_copy_only=False).astype(
@@ -422,13 +429,10 @@ def build_tag_bins(spark: SparkSession, out_dir: str) -> None:
                     np.int32
                 )
                 C8 = np.ascontiguousarray(_codes_matrix(tbl.column("codes"), n))
-                if bxn:
-                    xn = np.ascontiguousarray(
-                        tbl.column("xn").to_numpy(zero_copy_only=False),
-                        dtype=np.float64,
-                    )
-                else:
-                    xn = _sqnorms(_decode(tbl.column("codes"), None, n, boff, True))
+                xn = np.ascontiguousarray(
+                    tbl.column("xn").to_numpy(zero_copy_only=False),
+                    dtype=np.float64,
+                )
                 flat, row_of = _flat_tags(tbl.column("tags"), n)
                 if n and np.any(np.diff(lst) < 0):
                     # canonicalize once at build (see docstring)
@@ -484,64 +488,15 @@ def build_tag_bins(spark: SparkSession, out_dir: str) -> None:
     os.replace(tmp, f"{dest}/_SUCCESS.json")
 
 
-#: (manifest path, mtime) → (bin_dir, {tag: [(key, n)]}, d) — the tag
-#: sidecar manifest is read per search otherwise (driver-side file open)
-_TAG_BIN_CACHE: dict = {}
-
-
 def _tag_bins(out_dir: str):
-    """Loaded tag_bin manifest as the kernels' `bins` tuple, or None
-    when the sidecars are not built (parquet serving path)."""
-    path = f"{out_dir}/tag_bin/_SUCCESS.json"
-    try:
-        token = os.stat(path).st_mtime_ns
-    except OSError:
-        return None
-    key = (path, token)
-    hit = _TAG_BIN_CACHE.get(key)
-    if hit is None:
-        with open(path) as fh:
-            man = json.load(fh)
-        for stale in [k for k in _TAG_BIN_CACHE if k[0] == path]:
-            del _TAG_BIN_CACHE[stale]
-        _upgrade_tag_bin_bounds(out_dir, man)
-        hit = (f"{out_dir}/tag_bin", man["tags"], int(man["d"]))
-        _TAG_BIN_CACHE[key] = hit
-    return hit
-
-
-def _upgrade_tag_bin_bounds(out_dir: str, man: dict) -> None:
-    """Backfill per-file `.bounds.npy` probe bounds into a pre-r10
-    tag_bin layout (driver-side, once per manifest load): new builds
-    write them in build_tag_bins; existing staged caches get them here
-    instead of a full sidecar rebuild.  One searchsorted of nlist+1
-    probes into each file's (already canonical, ascending) lst array —
-    bounded by the vocabulary-sized file count, no Spark job."""
-    try:
-        with open(f"{out_dir}/meta.json") as fh:
-            nlist = int(json.load(fh)["nlist"])
-    except (OSError, KeyError, ValueError):
-        return  # no shared quantizer — the probed route isn't served
-    grid = np.arange(nlist + 1, dtype=np.int64)
+    """The checked tag_bin manifest (_bin_manifest) as the tag-view
+    kernels' `bins` tuple (bin_dir, {tag: [(key, n)]}, d), or None when
+    the sidecar is not built."""
     bin_dir = f"{out_dir}/tag_bin"
-    for keys in man.get("tags", {}).values():
-        for key_, _n in keys:
-            dst = f"{bin_dir}/{key_}.bounds.npy"
-            if os.path.exists(dst):
-                continue
-            try:
-                lst = np.load(f"{bin_dir}/{key_}.lst.npy", mmap_mode="r")
-                bounds = np.searchsorted(lst, grid).astype(np.int64)
-                tmp = f"{dst}.tmp"
-                np.save(open(tmp, "wb"), bounds)
-                os.replace(tmp, dst)
-            except (OSError, ValueError):
-                # read-only index dir (shared cache / snapshot) or a
-                # corrupt/truncated lst file (np.load raises ValueError,
-                # not OSError, on a bad npy header — ADVICE r10): the
-                # serve path recomputes bounds from lst per unit — a
-                # failed backfill must never abort serving
-                continue
+    if not os.path.exists(f"{bin_dir}/_SUCCESS.json"):
+        return None
+    man = _bin_manifest(bin_dir)
+    return bin_dir, man["tags"], int(man["d"])
 
 
 #: per-session memo of loaded routing metadata, keyed by (appId, path,
@@ -551,12 +506,13 @@ _ROUTE_CACHE: dict = {}
 
 def _load_routing(spark: SparkSession, out_dir: str):
     """(ndoc dict, n_base, min_freq, decode_off, pair→files dict,
-    freq_tag→files dict, centroids, has_xn).  The stats table is
+    freq_tag→sidecar units dict, centroids, has_xn).  The stats table is
     vocabulary-bounded (the
     reference's is ~200k tags — a few MB driver-side, the same table
     its fit() keeps in memory, `filter/faiss/faiss.py:238-239`); the
-    built pair/tag listings come from the partition directory names —
-    driver metadata, no Spark job."""
+    built pairs come from the partition directory names, the routable
+    frequent tags from the tag_bin manifest the tag-view kernels serve
+    (empty without one) — driver metadata, no Spark job."""
     from filter_vectordb_spark.index.sq import read_grid
 
     try:
@@ -577,10 +533,6 @@ def _load_routing(spark: SparkSession, out_dir: str):
             b = int(os.path.basename(d).split("=", 1)[1])
             a = int(os.path.basename(os.path.dirname(d)).split("=", 1)[1])
             pair_files[(a, b)] = sorted(_glob.glob(f"{d}/*.parquet"))
-        tag_files = {}
-        for d in _glob.glob(f"{out_dir}/tagview/tag=*"):
-            t = int(os.path.basename(d).split("=", 1)[1])
-            tag_files[t] = sorted(_glob.glob(f"{d}/*.parquet"))
         cpdf = (
             spark.read.parquet(f"{out_dir}/centroids")
             .toPandas()
@@ -595,12 +547,14 @@ def _load_routing(spark: SparkSession, out_dir: str):
             float(meta["min_freq"]),
             off,
             pair_files,
-            tag_files,
             C,
             bool(meta.get("xn", False)),
         )
         _ROUTE_CACHE[key] = hit
-    return hit
+    ndoc, n_base, min_freq, off, pair_files, C, has_xn = hit
+    tb = _tag_bins(out_dir)
+    tag_files = {} if tb is None else tb[1]
+    return ndoc, n_base, min_freq, off, pair_files, tag_files, C, has_xn
 
 
 # Serve kernels + shared decode/posting helpers live in
@@ -608,19 +562,17 @@ def _load_routing(spark: SparkSession, out_dir: str):
 # the public surface (and the tests pinning kernel internals) keep one
 # import root.
 from filter_vectordb_spark.index.filteridx_kernels import (  # noqa: F401
+    _BIN_MANIFESTS,
     _DECODE_SCRATCH,
     _PAIR_CHUNK,
     _PARTIAL,
+    _bin_manifest,
     _codes_matrix,
     _decode,
     _decode_poison,
     _flat_tags,
-    _hit_lists,
     _meta_bin_scan,
-    _meta_scan,
     _pairview_scan,
-    _probed_lut,
-    _score_meta,
     _score_meta_bin,
     _score_meta_gather,
     _score_pairview,
@@ -678,8 +630,8 @@ def _route(qtags_col, ndoc: dict, thr: float, pairs: set, tag_files: dict):
             other_col[j] = rest[0] if rest else -1
             r_tag.append(j)
         else:
-            # frequent by count but no partition (stale build) — exact
-            # fallback through the metadata scan
+            # frequent by count but not in the tag_bin manifest — exact
+            # through the metadata route
             r_meta.append(j)
     return r_pair, r_tag, r_meta, tag_col, other_col
 
@@ -715,18 +667,29 @@ def filtered_search(
     DataFrame plan, is unioned before the W3 merge.
 
     meta_plan: how the R4 selective queries execute (VERDICT r8 #1c) —
-    "sweep" is the direct-read pass over the codes table (work: one
-    metadata-column sweep + Σ|candidates|, right while the batch is
-    large and the corpus page-cache-sized), "gather" is the shuffle-
-    based posting-intersection + candidate-join plan (_score_meta_gather
+    "sweep" is the direct-read pass over the meta_bin sidecar (work:
+    Σ|postings| over its prebuilt CSR + Σ|candidates|, right while the
+    batch is large and the corpus page-cache-sized), "gather" is the
+    shuffle-based posting-intersection + candidate-join plan (_score_meta_gather
     — work ∝ Σ|postings| + Σ|candidates| with no broadcast/page-cache
     assumption, the shape that survives a 100× corpus), "auto" picks
     per batch on the estimated candidate volume vs GATHER_MAX_CAND_FRAC
     of the corpus.  Both plans are exact with bit-identical distances;
-    scan-all (empty-conjunction) queries always run the sweep."""
+    scan-all (empty-conjunction) queries always run the sweep.
+
+    Raises FileNotFoundError when a serving sidecar (meta_bin/,
+    tag_bin/) is missing — an index whose sidecar build died is not
+    served."""
     import filter_vectordb_spark.operators.knn as _knn
 
-    (ndoc, n_base, min_freq, off, pair_files, tag_files, C, has_xn) = (
+    for sub in _SIDECARS:
+        if not os.path.exists(f"{out_dir}/{sub}/_SUCCESS.json"):
+            raise FileNotFoundError(
+                f"{out_dir}/{sub}/_SUCCESS.json not found: the index's "
+                f"{sub} serving sidecar is missing or partial; rebuild the "
+                "index with build_filtered_index"
+            )
+    ndoc, n_base, min_freq, off, pair_files, tag_files, C, _has_xn = (
         _load_routing(spark, out_dir)
     )
     qpdf = queries.select("qid", "qemb", "qtags").limit(
@@ -754,7 +717,7 @@ def filtered_search(
         tp["other"] = other_col[r_tag]
         tb = _tag_bins(out_dir)
         if nprobe is None or nprobe >= len(C):
-            scans.append(_tagview_scan(spark, tag_files, tp, k, off, has_xn, bins=tb))
+            scans.append(_tagview_scan(tb, tp, k, off))
         else:
             from filter_vectordb_spark.index.ivf import driver_blas
 
@@ -767,9 +730,7 @@ def filtered_search(
             P = np.argpartition(d2, nprobe - 1, axis=1)[:, :nprobe].astype(
                 np.int64
             )
-            scans.append(
-                _tagview_probed_scan(spark, tag_files, tp, k, off, P, len(C), has_xn, bins=tb)
-            )
+            scans.append(_tagview_probed_scan(tb, tp, k, off, P, len(C)))
     if r_meta:
         mp = qpdf.iloc[r_meta]
         tagged = mp["qtags"].map(
@@ -800,16 +761,7 @@ def filtered_search(
             )
             mp = mp[~tagged]  # scan-all queries stay on the sweep
         if len(mp):
-            bin_dir = f"{out_dir}/meta_bin"
-            if os.path.exists(f"{bin_dir}/_SUCCESS.json"):
-                # memmap serving sidecars present (build_meta_bins):
-                # prebuilt CSR + candidate-row gather — no per-batch
-                # corpus read/decode; bit-identical results
-                scans.append(_meta_bin_scan(spark, bin_dir, mp, k, off, ndoc=ndoc))
-            else:
-                scans.append(
-                    _meta_scan(spark, f"{out_dir}/codes", mp, k, off, ndoc=ndoc, has_xn=has_xn)
-                )
+            scans.append(_meta_bin_scan(spark, f"{out_dir}/meta_bin", mp, k, off, ndoc=ndoc))
     if scans:
         # every direct-read route in one launch: one stage, one Python
         # task per core for the whole batch

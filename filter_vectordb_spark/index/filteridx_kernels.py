@@ -6,11 +6,12 @@ citations; this module holds the serve kernels plus their shared
 decode/posting helpers.
 
 Every direct-read route is one scoring body on the engine's one scan
-skeleton (operators/knn.py): its builder (_pairview_scan,
-_tagview_scan, _tagview_probed_scan, _meta_scan, _meta_bin_scan) plans
-the units — parquet row groups or memmap sidecar files — and returns a
-`Scan`; `scan_units` launches a list of them one Python task per core
-and calls each body with that task's units; the body feeds its
+skeleton (operators/knn.py): its builder plans the units and returns a
+`Scan` — _pairview_scan (R1) over parquet row groups, _tagview_scan,
+_tagview_probed_scan (R2/R3) and _meta_bin_scan (R4) over memmap
+sidecar files, whose (query, row) pairs all score through one
+_score_pairs.  `scan_units` launches a list of them one Python task per
+core and calls each body with that task's units; the body feeds its
 candidates into one `TaskPartials`, whose emit() is the task's single
 bounded partial top-k per route for the global merge.
 filteridx.filtered_search hands all of a batch's routes to one
@@ -21,7 +22,7 @@ results."""
 
 from __future__ import annotations
 
-import glob as _glob
+import json
 import os
 
 import numpy as np
@@ -33,7 +34,6 @@ from filter_vectordb_spark.operators.knn import (
     Scan,
     TaskPartials,
     flatten_fixed_list,
-    rg_rows,
     rg_units,
     scan_units,
 )
@@ -184,8 +184,8 @@ def _sqnorms(X: np.ndarray) -> np.ndarray:
 def _csr_restrict(prefix: str, probed: np.ndarray):
     """(prow_cat, starts) over a bin sidecar's prebuilt tag CSR,
     restricted to `probed` (sorted): rows carrying probed[i] are
-    prow_cat[starts[i]:starts[i+1]], row-ascending — the _hit_lists
-    output shape without touching a tags column."""
+    prow_cat[starts[i]:starts[i+1]], row-ascending — per-tag posting
+    lists without touching a tags column."""
     if len(probed) == 0:
         return np.empty(0, dtype=np.int64), np.zeros(1, dtype=np.int64)
     ptags = np.load(f"{prefix}.ptags.npy", mmap_mode="r")
@@ -219,50 +219,65 @@ def _open_bin(bin_dir: str, stem: str, n: int, d: int):
     )
 
 
-def _tag_units(spark: SparkSession, groups: dict, tag_files: dict, bins):
-    """Task units for the R2/R3 kernels: memmap-sidecar units
-    (tag, key, -1, n) when the tag is in the bin manifest, parquet
-    row-group units (tag, path, rg_lo, rg_hi) otherwise — PER TAG, so a
-    routed tag absent from a stale/partial sidecar manifest falls back
-    to its parquet partition instead of silently contributing zero
-    units (ADVICE r9: that failure returned no rows for those queries).
-    The serve loops branch per unit on rg_lo < 0, so mixing is free."""
-    units = []
-    bin_dir, bin_tags, bin_d = (None, {}, 0) if bins is None else bins
-    for t in groups:
-        keys = bin_tags.get(str(t))
-        if keys:
-            units.extend((t, key, -1, int(n)) for key, n in keys)
-        else:
-            for p in tag_files.get(t, ()):
-                units.extend(
-                    (t, pth, lo, hi) for pth, lo, hi, _rows in rg_units(spark, [p])
+#: (manifest path, mtime) → checked sidecar manifest: a sidecar's files
+#: are checked once per build, not once per search
+_BIN_MANIFESTS: dict = {}
+
+
+def _bin_manifest(bin_dir: str) -> dict:
+    """A sidecar directory's `_SUCCESS.json` — build_meta_bins' {d,
+    files: [[stem, n]]} or build_tag_bins' {d, tags: {tag: [[key, n]]}},
+    tag keys made int — checked before use: every listed
+    `<stem>.codes.bin` must hold n·d bytes, so a truncated or missing
+    bin raises here, naming the file, instead of serving a short memmap.
+    Cached per manifest mtime (a rebuild re-checks)."""
+    path = f"{bin_dir}/_SUCCESS.json"
+    key = (path, os.stat(path).st_mtime_ns)
+    man = _BIN_MANIFESTS.get(key)
+    if man is None:
+        with open(path) as fh:
+            man = json.load(fh)
+        d = int(man["d"])
+        if "tags" in man:
+            man["tags"] = {int(t): keys for t, keys in man["tags"].items()}
+        listed = man.get("files", []) + [
+            u for keys in man.get("tags", {}).values() for u in keys
+        ]
+        for stem, n in listed:
+            p = f"{bin_dir}/{stem}.codes.bin"
+            size = os.path.getsize(p)
+            if size != n * d:
+                raise ValueError(
+                    f"{p} holds {size} bytes, its manifest lists {n} × {d} "
+                    f"= {n * d}; rebuild the index with build_filtered_index"
                 )
-    return units, bin_dir, bin_d
+        for stale in [k for k in _BIN_MANIFESTS if k[0] == path]:
+            del _BIN_MANIFESTS[stale]
+        _BIN_MANIFESTS[key] = man
+    return man
 
 
-def _tag_cost(units: list, groups: dict) -> list:
-    """Placement cost of _tag_units' units: rows × the tag's query
-    count."""
+def _tag_units(groups: dict, bins):
+    """(units, cost, bin_dir, d) of the R2/R3 kernels: one memmap unit
+    (tag, key, n) per sidecar file of each routed tag in the tag_bin
+    manifest `bins`, costed rows × the tag's query count.  No manifest
+    means no units (a typed empty result; filtered_search refuses an
+    index without its sidecars before routing)."""
+    if bins is None:
+        return [], [], None, 0
+    bin_dir, bin_tags, d = bins
+    units = [(t, key, int(n)) for t in groups for key, n in bin_tags.get(t, ())]
     nq = {t: sum(len(g[1]) for g in gl) for t, gl in groups.items()}
-    return [(hi if lo < 0 else int(rg_rows(p)[lo:hi].sum())) * nq[t] for t, p, lo, hi in units]
+    return units, [n * nq[t] for t, _key, n in units], bin_dir, d
 
 
-def _tagview_scan(
-    spark: SparkSession,
-    tag_files: dict[int, list[str]],
-    qpdf,
-    k: int,
-    off: np.ndarray,
-    has_xn: bool = False,
-    bins: tuple | None = None,
-) -> Scan:
+def _tagview_scan(bins, qpdf, k: int, off: np.ndarray) -> Scan:
     """R2/R3: qpdf(qid, qemb, tag, other) with other = -1 for no mask.
-    Direct-read over ONLY the probed tags' partition files; per (tag,
-    other) query group, one mask (when other ≥ 0) + one GEMM per task
-    unit; nq×k partials per task (W3).  has_xn: read the persisted
-    squared-norm column instead of recomputing (VERDICT r8 #1a); units
-    serving only masked groups decode only candidate rows (#1b)."""
+    Direct-read over ONLY the routed tags' sidecar files; per unit, each
+    single-tag group runs one GEMM over the whole unit, and every masked
+    (tag, other) group's (query, row) pairs — `other`'s posting list in
+    the unit's prebuilt CSR — score through _score_pairs; nq×k partials
+    per task (W3)."""
     groups: dict = {}
     for (tag, other), grp in qpdf.groupby(["tag", "other"]):
         groups.setdefault(int(tag), []).append(
@@ -273,182 +288,63 @@ def _tagview_scan(
             )
         )
     use_f32 = _f32_exact_ok(np.stack(qpdf["qemb"].to_numpy()).astype(np.float64))
+    direct = use_f32 and _int_off_ok(off)
     nq = len(qpdf)
 
     def serve(payload, units):
-        import pyarrow.parquet as pq
-
-        bgroups, boff, bf32, bxn, bdir, bd = payload
-        int8_direct = bf32 and _int_off_ok(boff)
+        bgroups, boff, bf32, bdirect, bdir, bd = payload
         out = TaskPartials(k, nq, False)
-        for tag, path, lo, hi in units:
+        for tag, key, n in units:
             tgroups = bgroups.get(tag)
-            if not tgroups:
+            if not tgroups or n == 0:
                 continue
+            ids, xn, C8 = _open_bin(bdir, key, n, bd)
             others = np.array(
                 sorted({o for o, _, _ in tgroups if o >= 0}), dtype=np.int64
             )
-            has_single = any(o < 0 for o, _, _ in tgroups)
-            starts = prow = None
-            if lo < 0:  # memmap sidecar unit: path = key, hi = n
-                n = hi
-                if n == 0:
-                    continue
-                ids, xn_col, codes_src = _open_bin(bdir, path, n, bd)
-                if len(others):
-                    prow, starts = _csr_restrict(f"{bdir}/{path}", others)
-            else:
-                cols = (
-                    ["id"]
-                    + (["xn"] if bxn else [])
-                    + ["codes"]
-                    + (["tags"] if len(others) else [])
-                )
-                tbl = pq.ParquetFile(path).read_row_groups(
-                    list(range(lo, hi)), columns=cols
-                )
-                n = tbl.num_rows
-                if n == 0:
-                    continue
-                ids = tbl.column("id").to_numpy(zero_copy_only=False)
-                xn_col = (
-                    tbl.column("xn").to_numpy(zero_copy_only=False)
-                    if bxn
-                    else None
-                )
-                codes_src = tbl.column("codes")
-                if len(others):
-                    # every unit row already carries THIS tag, so the
-                    # conjunction candidates of a (tag, other) group
-                    # are exactly `other`'s posting list in the unit
-                    flat, row_of = _flat_tags(tbl.column("tags"), n)
-                    _pt, prow, starts = _hit_lists(
-                        flat, row_of, others, _probed_lut(others)
-                    )
-            # masked 2-tag groups: flat (query, row) pairs, scored in
-            # one chunked integer-exact einsum (the per-group slice +
-            # BLAS-call loop ran |others| × units times)
-            pq_ = []
+            if len(others):
+                # every unit row already carries THIS tag, so the
+                # conjunction candidates of a (tag, other) group are
+                # exactly `other`'s posting list in the unit
+                prow, starts = _csr_restrict(f"{bdir}/{key}", others)
+            parts = []
             for other, qids, Q in tgroups:
                 if other < 0:
+                    # single-tag group: the whole unit, GEMM-shaped
+                    _l2_topk(out, qids, Q, _decode(C8, None, n, boff, bf32), xn, ids)
                     continue
                 oi = int(np.searchsorted(others, other))
                 rows = prow[starts[oi] : starts[oi + 1]]
-                if len(rows) == 0:
-                    continue
-                m = len(qids)
-                nb = sum(g[2].shape[0] for g in pq_)  # query-row base
-                pq_.append(
-                    (
-                        np.repeat(qids, len(rows)),
-                        nb + np.repeat(np.arange(m, dtype=np.int64), len(rows)),
-                        Q,
-                        np.tile(rows, m),
-                    )
-                )
-            if not has_single and not pq_:
-                continue  # every group masked and no candidates here
-            # decode: the whole unit when a single-tag group scans it
-            # anyway (GEMM over all rows), else only the union of the
-            # masked groups' candidate rows (VERDICT r8 #1b) — and
-            # with the r11 int8-direct path (persisted norms +
-            # integral grid) not even that: masked pairs score
-            # straight off the int8 codes below
-            fast_pairs = (
-                not has_single and int8_direct and xn_col is not None
-            )
-            if has_single:
-                X_all = _decode(codes_src, None, n, boff, bf32)
-                xn_all = xn_col if xn_col is not None else _sqnorms(X_all)
-            elif not fast_pairs:
-                rcat = np.concatenate([g[3] for g in pq_])
-                ur, inv_u = _row_union(rcat, n)
-                XU = _decode(codes_src, ur, n, boff, bf32)
-                xn_u = xn_col[ur] if xn_col is not None else _sqnorms(XU)
-            for other, qids, Q in tgroups:
-                if other >= 0:
-                    continue
-                # single-tag group: the whole unit, GEMM-shaped
-                _l2_topk(out, qids, Q, X_all, xn_all, ids)
-            if pq_:
-                QU = np.concatenate([g[2] for g in pq_], axis=0)
-                qidx = np.concatenate([g[1] for g in pq_])
-                qid_cat = np.concatenate([g[0] for g in pq_])
-                rows_cat = np.concatenate([g[3] for g in pq_])
-                qn_u = (QU * QU).sum(axis=1)
-                if fast_pairs:
-                    # int8-direct (r11, see _int_off_ok): no decode
-                    C8m = (
-                        codes_src
-                        if isinstance(codes_src, np.ndarray)
-                        else flatten_fixed_list(codes_src, n)
-                    )
-                    Qm = QU.astype(np.float32)
-                    qoff = QU @ boff
-                    g = _int8_pair_scores(Qm, qidx, C8m, rows_cat)
-                    dist = (
-                        qn_u[qidx]
-                        - 2.0 * (g + qoff[qidx])
-                        + xn_col[rows_cat]
-                    )
-                else:
-                    if has_single:
-                        XP, upos = X_all, rows_cat
-                        xn_rows = xn_all[rows_cat]
-                    else:
-                        XP, upos = XU, inv_u[rows_cat]
-                        xn_rows = xn_u[upos]
-                    Qm = (
-                        QU.astype(np.float32)
-                        if XP.dtype == np.float32
-                        else QU
-                    )
-                    g = np.empty(len(rows_cat), dtype=np.float64)
-                    for clo in range(0, len(rows_cat), _PAIR_CHUNK):
-                        chi = min(clo + _PAIR_CHUNK, len(rows_cat))
-                        g[clo:chi] = np.einsum(
-                            "ij,ij->i",
-                            Qm[qidx[clo:chi]],
-                            XP[upos[clo:chi]],
-                        ).astype(np.float64)
-                    dist = qn_u[qidx] - 2.0 * g + xn_rows
-                np.maximum(dist, 0.0, out=dist)
-                out.add(qid_cat, ids[rows_cat], dist)
+                if len(rows):
+                    qrep = np.repeat(np.arange(len(qids), dtype=np.int64), len(rows))
+                    parts.append((qids, Q, qrep, np.tile(rows, len(qids))))
+            if parts:
+                _score_pairs(out, *_concat_pairs(parts), ids, C8, xn, boff, bf32, bdirect)
         yield from out.emit()
 
-    units, bin_dir, bin_d = _tag_units(spark, groups, tag_files, bins)
-    return Scan(
-        units, _tag_cost(units, groups), (groups, off, use_f32, has_xn, bin_dir, bin_d), serve
-    )
+    units, cost, bin_dir, bin_d = _tag_units(groups, bins)
+    return Scan(units, cost, (groups, off, use_f32, direct, bin_dir, bin_d), serve)
 
 
 def _score_tagview(spark, tag_files, qpdf, k, off, has_xn=False, bins=None) -> DataFrame:
-    """R2/R3 alone: _tagview_scan in a launch of its own."""
-    return scan_units(spark, [_tagview_scan(spark, tag_files, qpdf, k, off, has_xn, bins)], _PARTIAL)
+    """R2/R3 alone: _tagview_scan in a launch of its own.  The units
+    come from `bins` (_tag_bins); tag_files and has_xn are not read."""
+    return scan_units(spark, [_tagview_scan(bins, qpdf, k, off)], _PARTIAL)
 
 
 def _tagview_probed_scan(
-    spark: SparkSession,
-    tag_files: dict[int, list[str]],
-    qpdf,
-    k: int,
-    off: np.ndarray,
-    probes: np.ndarray,
-    nlist: int,
-    has_xn: bool = False,
-    bins: tuple | None = None,
+    bins, qpdf, k: int, off: np.ndarray, probes: np.ndarray, nlist: int
 ) -> Scan:
     """R2/R3 with the per-tag sub-index ACTUALLY pruning: each query
     scans only its `probes` row's coarse lists inside the routed tag's
-    partition — the lst-sorted file layout turns a probe set into
-    binary-searched row ranges, the faiss IVF shape within each tag
+    sidecar files — their lst-sorted rows and per-file list bounds turn
+    a probe set into row ranges, the faiss IVF shape within each tag
     (the reference's per-tag sub-indexes are approximate HNSW;
     `filter/faiss/config.yaml:41-64`'s published 3,200 QPS is at the
     0.9-recall gate, so this is the like-for-like operating mode).
-    Scanned rows are scored EXACTLY (decoded lossless codes, f64
-    distance assembly) — recall loss comes only from unprobed lists;
-    nprobe ≥ nlist reproduces the exact route bit-for-bit (pytest-
-    pinned)."""
+    Scanned rows are scored EXACTLY through _score_pairs — recall loss
+    comes only from unprobed lists; nprobe ≥ nlist reproduces the exact
+    route bit-for-bit (pytest-pinned)."""
     groups: dict = {}
     pos_of = {j: i for i, j in enumerate(qpdf.index)}
     for (tag, other), grp in qpdf.groupby(["tag", "other"]):
@@ -462,108 +358,36 @@ def _tagview_probed_scan(
             )
         )
     use_f32 = _f32_exact_ok(np.stack(qpdf["qemb"].to_numpy()).astype(np.float64))
+    direct = use_f32 and _int_off_ok(off)
     nq = len(qpdf)
 
     def serve(payload, units):
-        import pyarrow.parquet as pq
-
-        bgroups, boff, bf32, bnlist, bxn, bdir, bd = payload
-        off32 = boff.astype(np.float32)
-        int8_direct = bf32 and _int_off_ok(boff)
+        bgroups, boff, bf32, bdirect, bnlist, bdir, bd = payload
         out = TaskPartials(k, nq, False)
-        for tag, path, lo, hi in units:
+        for tag, key, n in units:
             tgroups = bgroups.get(tag)
-            if not tgroups:
+            if not tgroups or n == 0:
                 continue
-            need_tags = any(o >= 0 for o, _, _, _ in tgroups)
-            oth_rows = oth_starts = None
+            ids, xn, C8 = _open_bin(bdir, key, n, bd)
+            # bounds[l] = first row of coarse list l in the unit's
+            # lst-sorted rows, written by build_tag_bins
+            bpath = f"{bdir}/{key}.bounds.npy"
+            bounds = np.load(bpath)
+            if len(bounds) != bnlist + 1:
+                raise ValueError(
+                    f"{bpath} holds {len(bounds)} list bounds, nlist={bnlist} "
+                    f"needs {bnlist + 1}; rebuild the index with "
+                    "build_filtered_index"
+                )
             others = np.array(
                 sorted({o for o, _, _, _ in tgroups if o >= 0}),
                 dtype=np.int64,
             )
-            bounds = None
-            if lo < 0:  # memmap sidecar unit: path = key, hi = n
-                n = hi
-                if n == 0:
-                    continue
-                ids, xn_col, C8 = _open_bin(bdir, path, n, bd)
-                # precomputed list bounds (VERDICT r9 next #1b):
-                # written at bin build / upgraded at manifest load —
-                # the per-batch searchsorted over lst (and the lst
-                # pages themselves) drop out of the serve path
-                try:
-                    bounds = np.load(f"{bdir}/{path}.bounds.npy")
-                    if len(bounds) != bnlist + 1:
-                        bounds = None  # foreign nlist — recompute
-                except OSError:
-                    bounds = None
-                if bounds is None:
-                    lst = np.load(f"{bdir}/{path}.lst.npy", mmap_mode="r")
-                if need_tags:
-                    oth_rows, oth_starts = _csr_restrict(
-                        f"{bdir}/{path}", others
-                    )
-                # lst ascending is canonical in bins (build_tag_bins
-                # applies the stable re-sort once at build)
-            else:
-                cols = (
-                    ["id", "codes", "lst"]
-                    + (["xn"] if bxn else [])
-                    + (["tags"] if need_tags else [])
-                )
-                tbl = pq.ParquetFile(path).read_row_groups(
-                    list(range(lo, hi)), columns=cols
-                )
-                n = tbl.num_rows
-                if n == 0:
-                    continue
-                ids = tbl.column("id").to_numpy(zero_copy_only=False)
-                xn_col = (
-                    tbl.column("xn").to_numpy(zero_copy_only=False)
-                    if bxn
-                    else None
-                )
-                lst = tbl.column("lst").to_numpy(zero_copy_only=False)
-                C8 = flatten_fixed_list(tbl.column("codes"), n)
-                flat = row_of = None
-                if need_tags:
-                    flat, row_of = _flat_tags(tbl.column("tags"), n)
-                # lst ascending within each file by the build's
-                # (tag, lst, id) sortWithinPartitions — probe sets
-                # become binary-searched row ranges.  GUARD, not
-                # assumption: a writer that re-sorts by partition
-                # columns (older layouts, foreign builds) hands back
-                # scrambled rows — re-sort locally instead of
-                # silently scanning the wrong lists (that failure
-                # measured recall ≈ nprobe/nlist)
-                if np.any(np.diff(lst) < 0):
-                    order = np.argsort(lst, kind="stable")
-                    ids, lst = ids[order], lst[order]
-                    C8 = np.ascontiguousarray(C8[order])
-                    if xn_col is not None:
-                        xn_col = xn_col[order]
-                    if row_of is not None:
-                        inv = np.empty(n, dtype=np.int64)
-                        inv[order] = np.arange(n, dtype=np.int64)
-                        row_of = inv[row_of]
-                if need_tags:
-                    # (rows, starts) over `others` — the CSR shape,
-                    # so the mask build below is source-agnostic
-                    _pt, oth_rows, oth_starts = _hit_lists(
-                        flat, row_of, others, _probed_lut(others)
-                    )
-            if bounds is None:
-                bounds = np.searchsorted(
-                    lst, np.arange(bnlist + 1, dtype=np.int64)
-                )
-            # PHASE 1 — every group's candidate (query, row) pairs,
-            # no codes touched yet.  PHASE 2 below decodes the UNION
-            # of probed rows across ALL of the unit's query groups
-            # once (VERDICT r9 next #1a: different groups' probe
-            # sets overlap on hot lists — per-group decode touched a
-            # hot list's codes once per group, now once per unit).
-            pq_ = []  # (qid_rows, global query-row idx, Q, rows)
-            nb = 0  # query-row base into the concatenated Q
+            if len(others):
+                oth_rows, oth_starts = _csr_restrict(f"{bdir}/{key}", others)
+            # every group's candidate (query, row) pairs; _score_pairs
+            # then scores all of the unit's groups at once
+            parts = []
             for other, qids, Q, P in tgroups:
                 # every query's probed row ranges IN ONE SHOT (the
                 # per-query range-concatenate loop ran len(qids) ×
@@ -600,66 +424,21 @@ def _tagview_probed_scan(
                     rows, qrep = rows[keep], qrep[keep]
                     if len(rows) == 0:
                         continue
-                pq_.append((qids[qrep], nb + qrep, Q, rows))
-                nb += len(qids)
-            if not pq_:
-                continue
-            # PHASE 2 — chunked pair scores over every group's
-            # pairs.  The einsum is per-pair independent, so
-            # batching groups together is bit-identical to the
-            # per-group loop.  Int8-direct fast path (r11 — the
-            # phase profile put 53% of serve-body time in the row
-            # union decode): with integer-exact queries, an
-            # integral grid offset, and persisted norms, score
-            # q·x = q·c + q·off straight off the int8 codes — the
-            # union decode drops out and per-pair code traffic
-            # falls 4× (192 B int8 vs 768 B decoded f32); the sum
-            # split is bit-exact (see _int_off_ok).
-            rows_cat = np.concatenate([g[3] for g in pq_])
-            QU = np.concatenate([g[2] for g in pq_], axis=0)
-            qidx = np.concatenate([g[1] for g in pq_])
-            qid_cat = np.concatenate([g[0] for g in pq_])
-            qn_u = (QU * QU).sum(axis=1)
-            Qm = QU.astype(np.float32) if bf32 else QU
-            if int8_direct and xn_col is not None:
-                qoff = QU @ boff  # f64 exact: integer q · integer off
-                g = _int8_pair_scores(Qm, qidx, C8, rows_cat)
-                dist = (
-                    qn_u[qidx] - 2.0 * (g + qoff[qidx]) + xn_col[rows_cat]
-                )
-            else:
-                ur, inv = _row_union(rows_cat, n)
-                pos = inv[rows_cat]
-                if bf32:  # integer-exact f32 (knn_join contract)
-                    Xu = C8[ur].astype(np.float32) + off32[None, :]
-                else:
-                    Xu = C8[ur].astype(np.float64) + boff[None, :]
-                xn_u = xn_col[ur] if xn_col is not None else _sqnorms(Xu)
-                g = np.empty(len(rows_cat), dtype=np.float64)
-                for clo in range(0, len(rows_cat), _PAIR_CHUNK):
-                    chi = min(clo + _PAIR_CHUNK, len(rows_cat))
-                    g[clo:chi] = np.einsum(
-                        "ij,ij->i", Qm[qidx[clo:chi]], Xu[pos[clo:chi]]
-                    ).astype(np.float64)
-                dist = qn_u[qidx] - 2.0 * g + xn_u[pos]
-            np.maximum(dist, 0.0, out=dist)
-            out.add(qid_cat, ids[rows_cat], dist)
+                parts.append((qids, Q, qrep, rows))
+            if parts:
+                _score_pairs(out, *_concat_pairs(parts), ids, C8, xn, boff, bf32, bdirect)
         yield from out.emit()
 
-    units, bin_dir, bin_d = _tag_units(spark, groups, tag_files, bins)
-    return Scan(
-        units,
-        _tag_cost(units, groups),
-        (groups, off, use_f32, nlist, has_xn, bin_dir, bin_d),
-        serve,
-    )
+    units, cost, bin_dir, bin_d = _tag_units(groups, bins)
+    return Scan(units, cost, (groups, off, use_f32, direct, nlist, bin_dir, bin_d), serve)
 
 
 def _score_tagview_probed(
     spark, tag_files, qpdf, k, off, probes, nlist, has_xn=False, bins=None
 ) -> DataFrame:
-    """Probed R2/R3 alone: _tagview_probed_scan in a launch of its own."""
-    scan = _tagview_probed_scan(spark, tag_files, qpdf, k, off, probes, nlist, has_xn, bins)
+    """Probed R2/R3 alone: _tagview_probed_scan in a launch of its own
+    (units from `bins`; tag_files and has_xn are not read)."""
+    scan = _tagview_probed_scan(bins, qpdf, k, off, probes, nlist)
     return scan_units(spark, [scan], _PARTIAL)
 
 
@@ -740,50 +519,54 @@ def _int8_pair_scores(
 #: crossover ≈ 64-120 pairs/query, scripts/exp_pair_kernel.py)
 _SEG_MIN_MEAN = 96
 
-#: build the probed-tag lookup table only while it stays broadcast-small
-#: (int32 LUT over 0..max_tag — 262k-tag yfcc vocab ≈ 1 MB); a sparse /
-#: huge / negative tag space falls back to binary search
-_LUT_MAX_TAG = 8_000_000
+
+def _concat_pairs(parts: list):
+    """(qids, Q, qidx, rows) for _score_pairs from per-group (qids, Q,
+    qrep, rows): the groups' query rows stacked, each group's local
+    query index qrep rebased onto the stack (qidx stays query-grouped)."""
+    base = np.cumsum([0] + [len(p[0]) for p in parts[:-1]])
+    return (
+        np.concatenate([p[0] for p in parts]),
+        np.concatenate([p[1] for p in parts], axis=0),
+        np.concatenate([b + p[2] for b, p in zip(base, parts)]),
+        np.concatenate([p[3] for p in parts]),
+    )
 
 
-def _probed_lut(probed: np.ndarray) -> np.ndarray | None:
-    if len(probed) == 0 or probed[0] < 0 or probed[-1] > _LUT_MAX_TAG:
-        return None
-    lut = np.full(int(probed[-1]) + 1, -1, dtype=np.int32)
-    lut[probed] = np.arange(len(probed), dtype=np.int32)
-    return lut
+def _score_pairs(out, qids, Q, qidx, rows, ids, C8, xn, off, f32: bool, direct: bool):
+    """Exact L2² of (query, row) pairs into the task's TaskPartials — the
+    one pair scorer of the masked tag view, the probed tag view and the
+    metadata-first flat queries.  Pair i is float64 query row Q[qidx[i]]
+    (qid qids[qidx[i]]) against row rows[i] of a unit's int8 codes C8
+    (doc ids `ids`, persisted squared norms xn).
 
-
-def _hit_lists(flat, row_of, probed, lut):
-    """(ptag, prow, starts): probed-tag posting lists within a unit —
-    rows carrying probed tag probed[i] are prow[starts[i]:starts[i+1]],
-    row-ascending.  Membership via the O(1) LUT gather when the tag
-    space admits it, else one searchsorted sweep."""
-    if lut is not None:
-        # clip BOTH ends: a negative tag with magnitude > len(lut) would
-        # make the gather throw (ADVICE r8); the (flat >= 0) term below
-        # already excludes every negative tag from matching
-        safe = np.clip(flat, 0, len(lut) - 1)
-        pidx = lut[safe]
-        valid = (pidx >= 0) & (flat == safe) & (flat >= 0)
-        ptag = pidx[valid].astype(np.int64)
+    direct (f32 and _int_off_ok(off), decided driver-side by the scan
+    builder): q·x = q·c + q·off straight off the int8 codes
+    (_int8_pair_scores) — no decode, 192 B of codes per pair instead of
+    768 B of floats.  Otherwise each _PAIR_CHUNK of pair rows is
+    gathered, decoded (code + off, f32 on the integer-exact path) and
+    dotted in one einsum.  Then qn − 2g + xn in float64, clamped at 0:
+    bit-identical either way, by the exactness argument in _int_off_ok."""
+    if direct:
+        g = _int8_pair_scores(Q.astype(np.float32), qidx, C8, rows)
+        g += (Q @ off)[qidx]  # f64 exact: integer q · integer off
     else:
-        pos = np.searchsorted(probed, flat)
-        valid = pos < len(probed)
-        valid[valid] = probed[pos[valid]] == flat[valid]
-        ptag = pos[valid]
-    prow = row_of[valid]
-    order = np.lexsort((prow, ptag))
-    ptag, prow = ptag[order], prow[order]
-    starts = np.searchsorted(ptag, np.arange(len(probed) + 1, dtype=np.int64))
-    return ptag, prow, starts
+        dt = np.float32 if f32 else np.float64
+        Qm, offd = Q.astype(dt), off.astype(dt)
+        g = np.empty(len(rows), dtype=np.float64)
+        for lo in range(0, len(rows), _PAIR_CHUNK):
+            hi = min(lo + _PAIR_CHUNK, len(rows))
+            B = C8[rows[lo:hi]].astype(dt)
+            B += offd[None, :]
+            g[lo:hi] = np.einsum("ij,ij->i", Qm[qidx[lo:hi]], B)
+    dist = (Q * Q).sum(axis=1)[qidx] - 2.0 * g + xn[rows]
+    np.maximum(dist, 0.0, out=dist)
+    out.add(qids[qidx], ids[rows], dist)
 
 
 def _group_queries(qpdf, ndoc: dict | None):
-    """R4 query grouping shared VERBATIM by the parquet sweep and the
-    bin kernel (VERDICT r9 #8 — the two copies must never drift; their
-    equality is the bin/parquet contract).  Splits the batch into
-    scan_q (empty conjunction → full scan), flat_q (1-2 tags → the
+    """R4 query grouping of the metadata-first kernel.  Splits the batch
+    into scan_q (empty conjunction → full scan), flat_q (1-2 tags → the
     vectorized pair kernel, rarer conjunct picked via ndoc — the
     reference's min-frequency cost model, `filter/faiss/faiss.py:
     378-385`), multi_q (>2 tags → per-group sorted intersection), plus
@@ -832,8 +615,7 @@ def _flat_pairs(frarer, fother, ptag, prow, starts, n: int):
     multi-slice gather over each query's rarer-tag posting range, second
     conjunct verified by one searchsorted over combined (tag, row) keys
     ((ptag, prow) is lexsorted and per-doc tags are distinct → keys are
-    strictly ascending).  Returns (qrep, rows) or (None, None); shared
-    by _score_meta and _score_meta_bin (VERDICT r9 #8)."""
+    strictly ascending).  Returns (qrep, rows) or (None, None)."""
     if not len(frarer):
         return None, None
     cnt = starts[frarer + 1] - starts[frarer]
@@ -863,20 +645,6 @@ def _flat_pairs(frarer, fother, ptag, prow, starts, n: int):
     return qrep, rows
 
 
-def _row_union(rows_cat: np.ndarray, n: int):
-    """(ur, pos): sorted unique rows + each pair's index into ur —
-    np.unique(..., return_inverse=True) semantics via an O(P + n)
-    mark + inverse-LUT pass instead of unique's O(P log P) sort (the
-    probed route runs this on millions of pairs per unit; n is bounded
-    by the unit's row count)."""
-    mark = np.zeros(n, dtype=bool)
-    mark[rows_cat] = True
-    ur = np.flatnonzero(mark)
-    inv = np.empty(n, dtype=np.int64)
-    inv[ur] = np.arange(len(ur), dtype=np.int64)
-    return ur, inv
-
-
 def _multi_rows(need_idx, prow, starts):
     """>2-tag conjunction row set within a unit: sorted intersection of
     the conjuncts' posting lists (reference J1 two-pointer merge,
@@ -889,167 +657,6 @@ def _multi_rows(need_idx, prow, starts):
         m[m] = other[p2[m]] == mrows[m]
         mrows = mrows[m]
     return mrows
-
-
-def _meta_scan(
-    spark: SparkSession,
-    codes_dir: str,
-    qpdf,
-    k: int,
-    off: np.ndarray,
-    ndoc: dict | None = None,
-    has_xn: bool = False,
-) -> Scan:
-    """R4: one direct-read pass over the codes table for ALL selective
-    queries.  qpdf(qid, qemb, qtags).  Per task unit: PHASE 1 reads only
-    the metadata columns (id, tags, persisted xn norms) — flatten the
-    tags column once, one vectorized LUT membership pass against the
-    probed tags, lexsort the hits into per-tag posting lists, build
-    every query's candidate (query, row) pairs IN ONE SHOT (multi-slice
-    gather over each query's rarer-tag posting range, second conjunct
-    verified by one searchsorted over combined (tag, row) keys).
-    PHASE 2 reads the codes column and decodes ONLY the union of
-    candidate rows (VERDICT r8 #1b — the sweep previously decoded and
-    norm'd every row per batch regardless of selectivity; the full
-    decode now happens only for scan-all queries or candidate-dense
-    units where the gather would cost more than the pass).  All pairs
-    score through a chunked integer-exact f32 einsum.  Work ∝
-    Σ_q |postings(rarer tag of q)| plus one metadata-column sweep; no
-    per-query Python loop, never a candidate join shuffle.
-
-    ndoc (the routing stats) picks each 2-tag query's RARER conjunct so
-    the gather touches the smaller posting list — the reference's
-    min-frequency cost model (`filter/faiss/faiss.py:378-385`).
-    Conjunctions beyond 2 tags take a per-group sorted-intersection
-    path; an empty conjunction scans the unit via the blocked GEMM.
-    has_xn: the build persisted per-row squared norms (VERDICT r8 #1a)
-    — read them instead of recomputing; bit-identical on the integer
-    grid (pre-r9 layouts fall back to _sqnorms)."""
-    scan_q, flat_q, multi_q, probed, use_f32 = _group_queries(qpdf, ndoc)
-    lut = _probed_lut(probed)
-    files = sorted(_glob.glob(f"{codes_dir}/*.parquet"))
-    if not files:
-        raise FileNotFoundError(f"no parquet files under {codes_dir}")
-    nq = len(qpdf)
-
-    def serve(payload, units):
-        import pyarrow.parquet as pq
-
-        bscan, bflat, bmulti, bprobed, blut, boff, bf32, bxn = payload
-        int8_direct = bf32 and _int_off_ok(boff)
-        fqids, fQ, frarer, fother = bflat
-        fQ32 = fQ.astype(np.float32)
-        fqn = (fQ * fQ).sum(axis=1)
-        fqoff = fQ @ boff if int8_direct else None  # f64 exact rebase
-        out = TaskPartials(k, nq, False)
-        for path, lo, hi in units:
-            pf = pq.ParquetFile(path)
-            rgs = list(range(lo, hi))
-            # PHASE 1: metadata columns only — candidates are known
-            # before a single code byte is read
-            mcols = ["id", "tags"] + (["xn"] if bxn else [])
-            tbl = pf.read_row_groups(rgs, columns=mcols)
-            n = tbl.num_rows
-            if n == 0:
-                continue
-            ids = tbl.column("id").to_numpy(zero_copy_only=False)
-            xn_col = (
-                tbl.column("xn").to_numpy(zero_copy_only=False)
-                if bxn
-                else None
-            )
-            flat, row_of = _flat_tags(tbl.column("tags"), n)
-            ptag, prow, starts = _hit_lists(flat, row_of, bprobed, blut)
-
-            # ---- the 1-2-tag bulk: all candidate pairs in one shot
-            qrep, rows = _flat_pairs(frarer, fother, ptag, prow, starts, n)
-            n_flat = len(qrep) if rows is not None else 0
-
-            # ---- >2-tag conjunctions: sorted-intersection row sets
-            mhits = []
-            for need_idx, qids, Q in bmulti:
-                mrows = _multi_rows(need_idx, prow, starts)
-                if len(mrows):
-                    mhits.append((mrows, qids, Q))
-
-            if not n_flat and not mhits and bscan is None:
-                continue  # nothing in this unit touches codes at all
-
-            # PHASE 2: the codes column — decode only the candidate
-            # union unless a scan-all query (or candidate density
-            # past half the unit, where the gather costs more than
-            # the straight pass) wants every row
-            codes_col = pf.read_row_groups(rgs, columns=["codes"]).column(
-                "codes"
-            )
-            # int8-direct fast path (r11, see _int_off_ok): with
-            # persisted norms + the integral grid, the flat pairs
-            # score straight off the int8 codes view — only the
-            # >2-tag GEMM row sets still decode; a scan-all batch
-            # decodes every row anyway, so the fast path stands
-            # down there
-            fast_flat = (
-                int8_direct and xn_col is not None and bscan is None
-            )
-            parts = (
-                [rows[:n_flat]] if n_flat and not fast_flat else []
-            ) + [m[0] for m in mhits]
-            if parts:
-                ur, inv_u = _row_union(np.concatenate(parts), n)
-            else:
-                ur = np.empty(0, dtype=np.int64)
-            full = bscan is not None or ur.size * 2 > n
-            if full:
-                X_all = _decode(codes_col, None, n, boff, bf32)
-                xn_all = xn_col if xn_col is not None else _sqnorms(X_all)
-                XU = X_all
-            elif len(ur):
-                XU = _decode(codes_col, ur, n, boff, bf32)
-                xn_u = xn_col[ur] if xn_col is not None else _sqnorms(XU)
-
-            if n_flat:
-                Qm = fQ32 if bf32 else fQ
-                if fast_flat and not full:
-                    C8m = flatten_fixed_list(codes_col, n)
-                    np_d = _int8_pair_scores(Qm, qrep, C8m, rows)
-                    np_d += fqoff[qrep]
-                    xn_rows = xn_col[rows]
-                else:
-                    up = rows if full else inv_u[rows]
-                    xn_rows = xn_all[rows] if full else xn_u[up]
-                    np_d = np.empty(n_flat, dtype=np.float64)
-                    for plo in range(0, n_flat, _PAIR_CHUNK):
-                        phi = min(plo + _PAIR_CHUNK, n_flat)
-                        a = Qm[qrep[plo:phi]]
-                        b = XU[up[plo:phi]]
-                        g = np.einsum("ij,ij->i", a, b)
-                        np_d[plo:phi] = g.astype(np.float64)
-                dist = fqn[qrep] - 2.0 * np_d + xn_rows
-                np.maximum(dist, 0.0, out=dist)
-                out.add(fqids[qrep], ids[rows], dist)
-
-            for mrows, qids, Q in mhits:
-                up = mrows if full else inv_u[mrows]
-                xc = xn_all[mrows] if full else xn_u[up]
-                _l2_topk(out, qids, Q, np.ascontiguousarray(XU[up]), xc, ids[mrows])
-
-            # ---- empty conjunction: every row, blocked GEMM
-            if bscan is not None:
-                _l2_topk(out, *bscan, X_all, xn_all, ids)
-        yield from out.emit()
-
-    units = rg_units(spark, files)
-    return Scan(
-        [u[:3] for u in units],
-        [u[3] for u in units],
-        (scan_q, flat_q, multi_q, probed, lut, off, use_f32, has_xn),
-        serve,
-    )
-
-
-def _score_meta(spark, codes_dir, qpdf, k, off, ndoc=None, has_xn=False) -> DataFrame:
-    """R4 sweep alone: _meta_scan in a launch of its own."""
-    return scan_units(spark, [_meta_scan(spark, codes_dir, qpdf, k, off, ndoc, has_xn)], _PARTIAL)
 
 
 def _score_meta_gather(
@@ -1125,26 +732,28 @@ def _meta_bin_scan(
     off: np.ndarray,
     ndoc: dict | None = None,
 ) -> Scan:
-    """R4 over the memmapped serving sidecars (filteridx.build_meta_bins
-    — the reference's xbin_mmap + CSR serving arrays as build
-    artifacts): the PREBUILT per-file CSR replaces the per-batch tags
-    scan entirely, and scoring gathers ONLY candidate rows straight
-    from the shared page-cache codes bin — per batch, work ∝
-    Σ_q |postings(rarer)| + Σ|candidates| with no full-corpus read or
-    decode anywhere (the parquet sweep's remaining O(corpus) terms).
-    Worker processes memmap the same files, so the corpus occupies ONE
-    set of physical pages across local[32] instead of 32 private Arrow
-    + decode heaps — which is also what makes the row robust on
-    fault-taxed hosts.  Query grouping (scan/flat/multi, rarer-conjunct
-    choice via ndoc), distance assembly (f32 gather-einsum, f64
-    qn − 2g + xn), and tie semantics are IDENTICAL to _score_meta —
-    the two paths are hash-pinned against the same oracle."""
-    import json as _json
+    """R4: one direct-read pass over the memmapped serving sidecars
+    (filteridx.build_meta_bins — the reference's xbin_mmap + CSR serving
+    arrays as build artifacts) for ALL selective queries.  qpdf(qid,
+    qemb, qtags).  Per unit (a row split of one file), the PREBUILT CSR
+    restricted to the probed tags gives every 1-2-tag query's candidate
+    (query, row) pairs in one shot (_flat_pairs), scored through
+    _score_pairs straight from the shared page-cache codes bin — per
+    batch, work ∝ Σ_q |postings(rarer)| + Σ|candidates| with no
+    full-corpus read, decode or tags scan.  >2-tag conjunctions take a
+    per-group sorted intersection; an empty conjunction scans the unit's
+    rows via the blocked GEMM.  Worker processes memmap the same files,
+    so the corpus occupies ONE set of physical pages across local[32]
+    instead of 32 private Arrow + decode heaps — which is also what
+    makes the row robust on fault-taxed hosts.
 
-    with open(f"{bin_dir}/_SUCCESS.json") as fh:
-        man = _json.load(fh)
+    ndoc (the routing stats) picks each 2-tag query's RARER conjunct so
+    the gather touches the smaller posting list — the reference's
+    min-frequency cost model (`filter/faiss/faiss.py:378-385`)."""
+    man = _bin_manifest(bin_dir)
     d = int(man["d"])
     scan_q, flat_q, multi_q, probed, use_f32 = _group_queries(qpdf, ndoc)
+    direct = use_f32 and _int_off_ok(off)
     # units: (file, row-split) — candidate work splits with the rows, so
     # the balance is not capped at the file count
     nfiles = max(1, len(man["files"]))
@@ -1155,18 +764,14 @@ def _meta_bin_scan(
     nq = len(qpdf)
 
     def serve(payload, units):
-        bscan, bflat, bmulti, bprobed, boff, bf32, bdir, bd = payload
-        off32 = boff.astype(np.float32)
-        offd = boff if not bf32 else off32
-        int8_direct = bf32 and _int_off_ok(boff)
+        bscan, bflat, bmulti, bprobed, boff, bf32, bdirect, bdir, bd = payload
+        dt = np.float32 if bf32 else np.float64
+        offd = boff.astype(dt)
         fqids, fQ, frarer, fother = bflat
-        fQ32 = fQ.astype(np.float32)
-        fqn = (fQ * fQ).sum(axis=1)
-        fqoff = fQ @ boff if int8_direct else None  # f64 exact rebase
         out = TaskPartials(k, nq, False)
 
         def gather(C8, rows):
-            B = C8[rows].astype(np.float32 if bf32 else np.float64)
+            B = C8[rows].astype(dt)
             B += offd[None, :]
             return B
 
@@ -1186,29 +791,12 @@ def _meta_bin_scan(
                     ptag_cat, np.arange(len(bprobed) + 1, dtype=np.int64)
                 )
 
-            # ---- 1-2-tag bulk (the shared _score_meta flat kernel)
+            # ---- 1-2-tag bulk: every candidate pair in one shot
             qrep, rows = _flat_pairs(
                 frarer, fother, ptag_cat, prow_cat, starts, n
             )
-            n_flat = len(qrep) if rows is not None else 0
-            if n_flat:
-                Qm = fQ32 if bf32 else fQ
-                if int8_direct:
-                    # int8-direct scoring (r11): q·x = q·c + q·off
-                    # straight off the codes bin — no per-chunk f32
-                    # decode buffer; bit-exact per _int_off_ok
-                    np_d = _int8_pair_scores(Qm, qrep, C8, rows)
-                    np_d += fqoff[qrep]
-                else:
-                    np_d = np.empty(n_flat, dtype=np.float64)
-                    for plo in range(0, n_flat, _PAIR_CHUNK):
-                        phi = min(plo + _PAIR_CHUNK, n_flat)
-                        B = gather(C8, rows[plo:phi])
-                        g = np.einsum("ij,ij->i", Qm[qrep[plo:phi]], B)
-                        np_d[plo:phi] = g.astype(np.float64)
-                dist = fqn[qrep] - 2.0 * np_d + xn[rows]
-                np.maximum(dist, 0.0, out=dist)
-                out.add(fqids[qrep], ids[rows], dist)
+            if rows is not None and len(rows):
+                _score_pairs(out, fqids, fQ, qrep, rows, ids, C8, xn, boff, bf32, bdirect)
 
             # ---- >2-tag conjunctions: sorted intersection over CSR
             for need_idx, qids, Q in bmulti:
@@ -1225,11 +813,11 @@ def _meta_bin_scan(
     return Scan(
         units,
         [n * (sp + 1) // m - n * sp // m for _s, n, sp, m in units],
-        (scan_q, flat_q, multi_q, probed, off, use_f32, bin_dir, d),
+        (scan_q, flat_q, multi_q, probed, off, use_f32, direct, bin_dir, d),
         serve,
     )
 
 
 def _score_meta_bin(spark, bin_dir, qpdf, k, off, ndoc=None) -> DataFrame:
-    """R4 over the sidecars alone: _meta_bin_scan in a launch of its own."""
+    """R4 alone: _meta_bin_scan in a launch of its own."""
     return scan_units(spark, [_meta_bin_scan(spark, bin_dir, qpdf, k, off, ndoc)], _PARTIAL)

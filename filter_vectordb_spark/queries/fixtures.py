@@ -490,10 +490,12 @@ def _synth_sparse8m84_skewed_terms_dir(spark: SparkSession) -> str:
 
 def _yfcc_index_dir(spark: SparkSession, key: str, n: int) -> str:
     """Stage (once) the full filtered-serving index (index/filteridx
-    layout: stats/grid/codes/tagview/pair) over an n-doc yfcc-shaped
-    corpus; returns the index dir.  Build-time work by design (the
-    reference prebuilds its per-tag/pair sub-indexes at fit(),
-    `filter/faiss/faiss.py:254-337`; BASELINE QPS excludes build)."""
+    layout: stats/grid/codes/tagview/pair + the meta_bin/tag_bin serving
+    sidecars) over an n-doc yfcc-shaped corpus; returns the index dir.
+    A cache missing a sidecar is not built (index_is_built) and
+    rebuilds whole.  Build-time work by design (the reference prebuilds
+    its per-tag/pair sub-indexes at fit(), `filter/faiss/faiss.py:
+    254-337`; BASELINE QPS excludes build)."""
     from filter_vectordb_spark.index.filteridx import (
         build_filtered_index,
         index_is_built,
@@ -508,17 +510,6 @@ def _yfcc_index_dir(spark: SparkSession, key: str, n: int) -> str:
     out = _index_cache_dir(key, "fidx_v4")
     if not index_is_built(out):
         build_filtered_index(synth_yfcc_base(spark, n=n), out)
-    else:
-        # upgrade-in-place: the memmap serving sidecars (meta_bin/ +
-        # tag_bin/) are derived artifacts — ensure them without
-        # rebuilding the parquet layout (idempotent no-op once present)
-        from filter_vectordb_spark.index.filteridx import (
-            build_meta_bins,
-            build_tag_bins,
-        )
-
-        build_meta_bins(spark, out)
-        build_tag_bins(spark, out)
     return out
 
 

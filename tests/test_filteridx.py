@@ -191,27 +191,6 @@ def test_probed_recall_and_exact_subscores(spark, built):
     assert 0.5 < recall <= 1.0, recall
 
 
-def test_probed_lut_and_fallback():
-    """_hit_lists membership: the O(1) LUT gather and the searchsorted
-    fallback (huge/negative tag space) must produce identical posting
-    lists — including out-of-range and unprobed tags in the flat sweep."""
-    from filter_vectordb_spark.index.filteridx import _hit_lists, _probed_lut
-
-    rng = np.random.default_rng(7)
-    probed = np.unique(rng.integers(0, 5000, size=64)).astype(np.int64)
-    flat = rng.integers(-10, 8000, size=4096).astype(np.int64)
-    row_of = rng.integers(0, 512, size=4096).astype(np.int64)
-    lut = _probed_lut(probed)
-    assert lut is not None
-    a = _hit_lists(flat, row_of, probed, lut)
-    b = _hit_lists(flat, row_of, probed, None)
-    for x, y in zip(a, b):
-        np.testing.assert_array_equal(x, y)
-    # a vocabulary past the LUT bound refuses the table
-    assert _probed_lut(np.array([0, 2**40], dtype=np.int64)) is None
-    assert _probed_lut(np.array([-3, 7], dtype=np.int64)) is None
-
-
 def test_three_tag_conjunction(spark, built):
     """R4 with a >2-tag conjunction exercises the per-group intersection
     path beside the vectorized 1-2-tag pair kernel; pandas oracle."""
@@ -310,23 +289,6 @@ def test_three_frequent_tag_conjunction(spark, built):
     assert set(got["id"]) <= cand and len(got) == min(10, len(cand))
 
 
-def test_hit_lists_large_negative_tag():
-    """ADVICE r8 (low): a negative flat tag with magnitude beyond the
-    LUT length must not throw — and matches nothing either way."""
-    from filter_vectordb_spark.index.filteridx import _hit_lists, _probed_lut
-
-    probed = np.array([3, 7, 9], dtype=np.int64)
-    lut = _probed_lut(probed)
-    flat = np.array([-100000, 3, -2, 9, 7, 3], dtype=np.int64)
-    row_of = np.array([0, 1, 2, 3, 4, 5], dtype=np.int64)
-    a = _hit_lists(flat, row_of, probed, lut)
-    b = _hit_lists(flat, row_of, probed, None)
-    for x, y in zip(a, b):
-        np.testing.assert_array_equal(x, y)
-    # the negative rows never appear in any posting list
-    assert set(a[1].tolist()) == {1, 3, 4, 5}
-
-
 def test_decode_scratch_poison(monkeypatch):
     """VERDICT r8 #3: under FVDB_DECODE_POISON=1, a view held across
     _decode calls reads NaN — the scratch-aliasing contract is enforced
@@ -401,74 +363,9 @@ def test_meta_auto_routing_threshold(spark, built):
     assert len(a) == min(10, rare_n)
 
 
-def test_meta_bin_matches_parquet_sweep(spark, built):
-    """The memmap sidecar kernel (_score_meta_bin) and the parquet sweep
-    (_score_meta) must return identical results — ids, ranks, bit-equal
-    distances.  The sidecar is a derived serving artifact, never a
-    semantic change."""
-    import os
-
-    out, _base = built
-    q = synth_yfcc_queries(spark, nq=64)
-    markers = [
-        f"{out}/meta_bin/_SUCCESS.json",
-        f"{out}/tag_bin/_SUCCESS.json",
-    ]
-    for m in markers:
-        assert os.path.exists(m), "build_filtered_index must build sidecars"
-    with_bin = (
-        filtered_search(spark, out, q, k=10, meta_plan="sweep")
-        .toPandas()
-        .sort_values(["qid", "rank"])
-        .reset_index(drop=True)
-    )
-    # exercise BOTH probe modes on both storage paths: the exact and
-    # the nprobe-gated tag routes must be source-agnostic too
-    with_bin_p = (
-        filtered_search(spark, out, q, k=10, nprobe=4, meta_plan="sweep")
-        .toPandas()
-        .sort_values(["qid", "rank"])
-        .reset_index(drop=True)
-    )
-    from filter_vectordb_spark.index import filteridx as fx
-
-    for m in markers:
-        os.rename(m, m + ".hide")
-    fx._TAG_BIN_CACHE.clear()
-    try:
-        without = (
-            filtered_search(spark, out, q, k=10, meta_plan="sweep")
-            .toPandas()
-            .sort_values(["qid", "rank"])
-            .reset_index(drop=True)
-        )
-        without_p = (
-            filtered_search(spark, out, q, k=10, nprobe=4, meta_plan="sweep")
-            .toPandas()
-            .sort_values(["qid", "rank"])
-            .reset_index(drop=True)
-        )
-    finally:
-        for m in markers:
-            os.rename(m + ".hide", m)
-        fx._TAG_BIN_CACHE.clear()
-    pd.testing.assert_frame_equal(
-        with_bin_p[["qid", "id", "rank"]], without_p[["qid", "id", "rank"]]
-    )
-    np.testing.assert_allclose(
-        with_bin_p["dist"], without_p["dist"], rtol=0, atol=0
-    )
-    pd.testing.assert_frame_equal(
-        with_bin[["qid", "id", "rank"]], without[["qid", "id", "rank"]]
-    )
-    np.testing.assert_allclose(
-        with_bin["dist"], without["dist"], rtol=0, atol=0
-    )
-
-
 def test_poison_on_e2e_serving(spark, built):
-    """VERDICT r9 missing #2: the full serving path (both probe modes,
-    bins present) runs with FVDB_DECODE_POISON=1 propagated to the
+    """VERDICT r9 missing #2: the full serving path (both probe modes)
+    runs with FVDB_DECODE_POISON=1 propagated to the
     Python workers — a kernel holding a _decode view across units would
     serve NaN distances and fail the equality, not silently serve stale
     vectors.  (test_decode_scratch_poison pins the mechanism; this pins
@@ -547,91 +444,6 @@ def test_gather_candidate_join_is_broadcast(spark, built):
     pd.testing.assert_frame_equal(topk(df.toPandas()), topk(df2.toPandas()))
 
 
-def test_tag_units_parquet_fallback_for_missing_manifest_tag(spark):
-    """ADVICE r9: a routed tag present in tag_files but absent from the
-    bin manifest must fall back to parquet row-group units for that tag
-    (a stale/partial sidecar otherwise silently returned no rows)."""
-    from filter_vectordb_spark.index.filteridx_kernels import _tag_units
-
-    groups = {7: [(-1, None, None)], 9: [(-1, None, None)]}
-    bins = ("/bins", {"7": [("7.part0", 100)]}, 16)
-    # tag 9 missing from the manifest → its parquet files are used
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import tempfile, os
-
-    d = tempfile.mkdtemp()
-    p9 = os.path.join(d, "t9.parquet")
-    pq.write_table(pa.table({"id": [1, 2]}), p9)
-    tag_files = {7: ["unused.parquet"], 9: [p9]}
-    units, bin_dir, bin_d = _tag_units(spark, groups, tag_files, bins)
-    assert bin_dir == "/bins" and bin_d == 16
-    bin_units = [u for u in units if u[2] == -1]
-    pq_units = [u for u in units if u[2] >= 0]
-    assert bin_units == [(7, "7.part0", -1, 100)]
-    assert len(pq_units) >= 1 and all(u[0] == 9 and u[1] == p9 for u in pq_units)
-    # bins absent entirely → all parquet
-    units2, bd2, _ = _tag_units(spark, {9: groups[9]}, tag_files, None)
-    assert bd2 is None and all(u[2] >= 0 for u in units2)
-
-
-def test_upgrade_tag_bin_bounds_backfills(spark, built):
-    """Pre-r10 sidecar layouts lack `.bounds.npy`; the manifest load
-    backfills them driver-side, and the backfilled bounds equal the
-    build-time searchsorted."""
-    import glob as g
-    import json
-    import os
-
-    from filter_vectordb_spark.index import filteridx as fx
-
-    out, _base = built
-    bfiles = sorted(g.glob(f"{out}/tag_bin/*.bounds.npy"))
-    assert bfiles, "build_tag_bins must write bounds sidecars"
-    victim = bfiles[0]
-    lst = np.load(victim.replace(".bounds.npy", ".lst.npy"))
-    with open(f"{out}/meta.json") as fh:
-        nlist = int(json.load(fh)["nlist"])
-    want = np.searchsorted(lst, np.arange(nlist + 1, dtype=np.int64))
-    os.remove(victim)
-    fx._TAG_BIN_CACHE.clear()
-    assert fx._tag_bins(out) is not None
-    got = np.load(victim)
-    np.testing.assert_array_equal(got, want)
-    assert len(got) == nlist + 1
-
-
-def test_upgrade_tag_bin_bounds_survives_corrupt_lst(spark, built):
-    """ADVICE r10: np.load of a truncated/corrupt .lst.npy raises
-    ValueError, not OSError — the backfill must swallow it and leave
-    manifest load (and serving) alive, per its own contract."""
-    import glob as g
-    import os
-
-    from filter_vectordb_spark.index import filteridx as fx
-
-    out, _base = built
-    bfiles = sorted(g.glob(f"{out}/tag_bin/*.bounds.npy"))
-    assert bfiles
-    victim = bfiles[0]
-    lst_path = victim.replace(".bounds.npy", ".lst.npy")
-    keep = open(lst_path, "rb").read()
-    try:
-        os.remove(victim)  # force the backfill path for this file
-        with open(lst_path, "wb") as fh:
-            fh.write(b"\x93NUMPY garbage not a real header")
-        fx._TAG_BIN_CACHE.clear()
-        # must not raise, and must not have written a bounds file
-        assert fx._tag_bins(out) is not None
-        assert not os.path.exists(victim)
-    finally:
-        with open(lst_path, "wb") as fh:
-            fh.write(keep)
-        fx._TAG_BIN_CACHE.clear()
-        assert fx._tag_bins(out) is not None  # restored layout backfills
-        assert os.path.exists(victim)
-
-
 def test_rebuild_in_place_retires_stale_sidecars(spark, tmp_path):
     """ADVICE r9 medium: rebuilding an index into the same out_dir must
     not leave the previous build's *_bin sidecars preferred over the
@@ -650,7 +462,7 @@ def test_rebuild_in_place_retires_stale_sidecars(spark, tmp_path):
     assert os.stat(f"{out}/meta_bin/_SUCCESS.json").st_mtime_ns != stamp
     from filter_vectordb_spark.index import filteridx as fx
 
-    fx._TAG_BIN_CACHE.clear()
+    fx._BIN_MANIFESTS.clear()
     fx._ROUTE_CACHE.clear()
     q = synth_yfcc_queries(spark, nq=8)
     got = filtered_search(spark, out, q, k=5).toPandas()
@@ -660,19 +472,19 @@ def test_rebuild_in_place_retires_stale_sidecars(spark, tmp_path):
 
 
 def test_int8_direct_path_bit_identical(spark, built, monkeypatch):
-    """r11 fast path: the probed/meta-bin kernels score q·x = q·c + q·off
-    straight off the int8 codes when the f32-exact gate + integral grid
-    offset + persisted norms hold — results must be BIT-identical to the
-    decode-then-dot path (the split-sum exactness argument in
-    _int_off_ok).  Force the slow path via the gate and compare."""
+    """r11 fast path: _score_pairs scores q·x = q·c + q·off straight off
+    the int8 codes when the f32-exact gate + integral grid offset hold —
+    results must be BIT-identical to its decode-then-dot branch (the
+    split-sum exactness argument in _int_off_ok).  Force the decode
+    branch via the gate and compare."""
     import pandas as pd
 
     from filter_vectordb_spark.index import filteridx_kernels as fk
 
     out, _base = built
     q = synth_yfcc_queries(spark, nq=64)
-    # probed mode exercises the probed/meta-bin kernels; exact mode the
-    # tagview masked-pair and meta-sweep flat paths
+    # both modes score the meta-bin flat queries; exact mode adds the
+    # tag view's masked pairs, probed mode the probed tag view
     modes = ({}, {"nprobe": 4})
 
     def run(kw):
@@ -778,3 +590,109 @@ def test_filtered_search_routes_share_one_scan_stage(spark, built):
         return df[cols].sort_values(["qid", "rank"]).reset_index(drop=True)
 
     pd.testing.assert_frame_equal(norm(got), norm(want.select(*cols).toPandas()))
+
+
+def _index_copy(built, tmp_path, name: str) -> str:
+    import shutil
+
+    out = str(tmp_path / name)
+    shutil.copytree(built[0], out)
+    return out
+
+
+@pytest.mark.parametrize("sidecar", ["meta_bin", "tag_bin"])
+def test_missing_sidecar_is_not_built_and_not_served(spark, built, tmp_path, sidecar):
+    """An index whose sidecar build died (parquet and meta.json written,
+    one *_bin/ missing) is not built, and filtered_search refuses it by
+    name instead of serving it through some other path."""
+    import shutil
+
+    out = _index_copy(built, tmp_path, "partial")
+    shutil.rmtree(f"{out}/{sidecar}")
+    assert not index_is_built(out)
+    q = synth_yfcc_queries(spark, nq=8)
+    with pytest.raises(FileNotFoundError, match=sidecar):
+        filtered_search(spark, out, q, k=10)
+
+
+def test_tag_missing_from_manifest_routes_meta_exactly(spark, built, tmp_path):
+    """Routing reads the tag_bin manifest that serving reads: a frequent
+    tag the manifest lacks goes to the exact metadata route, not to a
+    tag-view route with no units, and its answers equal brute force."""
+    import json
+
+    from filter_vectordb_spark.index.filteridx import _load_routing
+    from filter_vectordb_spark.operators.filtered_knn import filtered_knn_scan
+
+    src, base = built
+    out = _index_copy(built, tmp_path, "droptag")
+    man_path = f"{out}/tag_bin/_SUCCESS.json"
+    with open(man_path) as fh:
+        man = json.load(fh)
+    ndoc = _load_routing(spark, src)[0]
+    tag = max((int(t) for t in man["tags"]), key=lambda t: ndoc[t])
+    del man["tags"][str(tag)]
+    with open(man_path, "w") as fh:
+        json.dump(man, fh)
+    q = synth_yfcc_queries(spark, nq=8).select(
+        "qid", "qemb", F.array(F.lit(tag)).alias("qtags")
+    )
+    qpdf = q.toPandas()
+    every = list(range(len(qpdf)))
+    for path, route in ((src, 1), (out, 2)):
+        ndoc, n_base, min_freq, _off, pair_files, tag_files, _C, _hx = _load_routing(
+            spark, path
+        )
+        routed = _route(qpdf["qtags"], ndoc, min_freq * n_base, pair_files, tag_files)
+        assert routed[route] == every, path
+    got = (
+        filtered_search(spark, out, q, k=10)
+        .toPandas()
+        .sort_values(["qid", "rank"])
+        .reset_index(drop=True)
+    )
+    want = (
+        filtered_knn_scan(q, base, 10)
+        .toPandas()
+        .sort_values(["qid", "rank"])
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(
+        got[["qid", "id", "rank"]], want[["qid", "id", "rank"]]
+    )
+    np.testing.assert_allclose(got["dist"], want["dist"], rtol=0, atol=0)
+
+
+@pytest.mark.parametrize("sidecar", ["meta_bin", "tag_bin"])
+def test_truncated_sidecar_codes_raise_named_error(spark, built, tmp_path, sidecar):
+    """A `.codes.bin` shorter than its manifest's n·d bytes is refused at
+    manifest load, naming the file — not served as a short memmap."""
+    import glob
+    import os
+    import re
+
+    out = _index_copy(built, tmp_path, "trunc")
+    victim = max(glob.glob(f"{out}/{sidecar}/*.codes.bin"), key=os.path.getsize)
+    os.truncate(victim, os.path.getsize(victim) - 192)
+    q = synth_yfcc_queries(spark, nq=96)
+    with pytest.raises(ValueError, match=re.escape(os.path.basename(victim))):
+        filtered_search(spark, out, q, k=10, meta_plan="sweep").toPandas()
+
+
+@pytest.mark.parametrize("damage", ["missing", "short"])
+def test_probe_bounds_checked(spark, built, tmp_path, damage):
+    """build_tag_bins writes every file's coarse-list bounds; the probed
+    route refuses a missing or wrong-length `.bounds.npy` by name rather
+    than recomputing or guessing them."""
+    import glob
+    import os
+
+    out = _index_copy(built, tmp_path, "bounds")
+    for v in glob.glob(f"{out}/tag_bin/*.bounds.npy"):
+        if damage == "missing":
+            os.remove(v)
+        else:
+            np.save(v, np.load(v)[:-1])
+    q = synth_yfcc_queries(spark, nq=64)
+    with pytest.raises(Exception, match=r"bounds\.npy"):
+        filtered_search(spark, out, q, k=10, nprobe=4).toPandas()
