@@ -1,13 +1,17 @@
 """Built-in engines for the harness — each wraps one physical plan family
-from SURVEY.md §2.8."""
+from SURVEY.md §2.8: the exact scan (bruteforce), the selectivity router
+(filtered), hyperplane LSH (lsh), sparse MIPS (sparse), and one IVF ×
+codec index class serving ivf, pq, sq8 and ivfsq."""
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filter_vectordb_spark.harness.base import BaseEngine
-from filter_vectordb_spark.index.ivf import FLAT, build_ivf, search
+from filter_vectordb_spark.index.ivf import build_index, load_index, search
 from filter_vectordb_spark.operators.filtered_knn import filtered_knn
 from filter_vectordb_spark.operators.knn import knn_join
 from filter_vectordb_spark.sources.vectors import dense_vectors
@@ -28,54 +32,6 @@ class BruteForceEngine(BaseEngine):
         # the expr strategy's Spark array expressions need the list frame
         base = self.scan_base if strategy == "vectorized" else self.base
         return knn_join(queries, base, k, metric=self.metric, strategy=strategy)
-
-
-class IVFEngine(BaseEngine):
-    """KMeans-IVF (B3/Q4); query knob: nprobe (the faiss nprobe analog)."""
-
-    name = "ivf"
-
-    def fit(self, spark: SparkSession, sf_dir: str) -> None:
-        """Build AND persist to the shared index cache (fit()/load split,
-        the reference's `filter/run.py:15-52` lifecycle) — the saved
-        partitioned layout is what makes probes partition pruning, and
-        later runs (and the registry's own queries) load it instead of
-        re-running k-means."""
-        from filter_vectordb_spark.index.ivf import load_ivf, save_ivf
-        from filter_vectordb_spark.registry import _index_cache_dir
-
-        nlist = int(self.index_params.get("nlist", 16))
-        base = self._base_source(spark, sf_dir)
-        assignments, centroids = build_ivf(
-            base,
-            nlist,
-            max_iter=int(self.index_params.get("max_iter", 8)),
-            train_rows=self.index_params.get("train_rows"),
-        )
-        out = _index_cache_dir(self._cache_key(sf_dir), f"ivfflat{nlist}")
-        save_ivf(assignments, centroids, out)
-        self.assignments, self.centroids = load_ivf(spark, out)
-        self.nlist = nlist
-
-    def load_index(self, spark: SparkSession, sf_dir: str) -> bool:
-        """S5: serve from the shared per-source cache when the same-nlist
-        index was already built."""
-        from filter_vectordb_spark.index.ivf import load_ivf
-        from filter_vectordb_spark.registry import _index_cache_dir, _is_built
-
-        nlist = int(self.index_params.get("nlist", 16))
-        out = _index_cache_dir(self._cache_key(sf_dir), f"ivfflat{nlist}")
-        if not _is_built(f"{out}/entries", f"{out}/centroids"):
-            return False
-        self.assignments, self.centroids = load_ivf(spark, out)
-        self.nlist = nlist
-        return True
-
-    def query(self, queries: DataFrame, k: int) -> DataFrame:
-        nprobe = int(self.query_args.get("nprobe", self.nlist))
-        return search(
-            queries, self.assignments, self.centroids, FLAT, None, k, nprobe, k, self.metric
-        )
 
 
 class FilteredEngine(BaseEngine):
@@ -209,157 +165,86 @@ class SparseEngine(BaseEngine):
         return sparse_topk(queries, self.dterms, k).select("qid", "id")
 
 
-class PQEngine(BaseEngine):
-    """PQ ADC scan + exact rescore (index/pq.py); query knob: refine —
-    the ADC-cut width, the recall/scan-cost dial."""
+class IVFCodecEngine(BaseEngine):
+    """One IVF × codec index (index/ivf.py — the reference's faiss
+    factory string, `IVF…,SQ8`, `filter/faiss/faiss.py:133`), registered
+    under four names:
 
-    name = "pq"
+      ivf    IVF-flat: exact within the probed lists
+      pq     PQ alone (one list), index_params nsub/ksub (32×64)
+      sq8    SQ8 alone (one list)
+      ivfsq  IVF+SQ8
 
-    def fit(self, spark: SparkSession, sf_dir: str) -> None:
-        from filter_vectordb_spark.index.pq import encode_pq, train_pq
+    index_params of the IVF kinds: nlist (16), max_iter, train_rows.
+    Query knobs: nprobe (scan fraction, default nlist) and refine (the
+    exact-rescore cut, default k for an exact codec, else 4k) — the
+    dials the reference sweeps.  fit() builds, persists to the shared
+    index cache and loads (the reference's fit()/load_index() split,
+    `filter/run.py:15-52`): later runs, and the registry's own queries,
+    load instead of rebuilding."""
 
-        self.base = self._base_source(spark, sf_dir)
-        nsub = int(self.index_params.get("nsub", 32))
-        ksub = int(self.index_params.get("ksub", 64))
-        self.codebooks = train_pq(self.base, nsub=nsub, ksub=ksub)
-        self.codes = encode_pq(self.base, self.codebooks).localCheckpoint()
+    #: engine name → (codec, has coarse lists)
+    KINDS = {
+        "ivf": ("flat", True),
+        "pq": ("pq", False),
+        "sq8": ("sq8", False),
+        "ivfsq": ("sq8", True),
+    }
 
-    def load_index(self, spark: SparkSession, sf_dir: str) -> bool:
-        """S5: serve codes + codebooks from the registry's per-sf_dir
-        cache when the same nsub=32/ksub=64 index was already built."""
-        from filter_vectordb_spark.index.pq import load_pq
-        from filter_vectordb_spark.registry import _index_cache_dir, _is_built
+    def __init__(self, name: str, metric: str = "l2", index_params: dict | None = None):
+        super().__init__(metric, index_params)
+        self.name = name
+        self.kind, coarse = self.KINDS[name]
+        p = self.index_params
+        self.nlist = int(p.get("nlist", 16)) if coarse else 1
+        self.train = {}
+        if coarse:
+            self.train.update(max_iter=int(p.get("max_iter", 8)), train_rows=p.get("train_rows"))
+        if self.kind == "pq":
+            self.train.update(nsub=int(p.get("nsub", 32)), ksub=int(p.get("ksub", 64)))
 
-        if (
-            int(self.index_params.get("nsub", 32)) != 32
-            or int(self.index_params.get("ksub", 64)) != 64
-        ):
-            return False
-        out = _index_cache_dir(self._cache_key(sf_dir), "ivfpq1_32x64")
-        if not _is_built(f"{out}/entries", f"{out}/codebooks"):
-            return False
-        self.base = self._base_source(spark, sf_dir)
-        self.codes, self.codebooks = load_pq(spark, out)
-        return True
-
-    def query(self, queries: DataFrame, k: int) -> DataFrame:
-        from filter_vectordb_spark.index.pq import pq_codec
-
-        refine = int(self.query_args.get("refine", 4 * k))
-        codec = pq_codec(self.codebooks)
-        return search(queries, self.codes, None, codec, self.base, k, 1, refine, self.metric)
-
-
-class SQEngine(BaseEngine):
-    """SQ8 reconstruct scan + exact rescore (index/sq.py); query knob:
-    refine — same dial as PQ but over the 1-byte affine codec."""
-
-    name = "sq8"
-
-    def fit(self, spark: SparkSession, sf_dir: str) -> None:
-        from filter_vectordb_spark.index.sq import encode_sq, train_sq
-
-        self.base = self._base_source(spark, sf_dir)
-        self.vmin, self.vmax = train_sq(self.base)
-        self.codes = encode_sq(self.base, self.vmin, self.vmax).localCheckpoint()
-
-    def load_index(self, spark: SparkSession, sf_dir: str) -> bool:
-        """S5: serve the codes table + affine grid from the registry's
-        per-sf_dir cache when present."""
-        from filter_vectordb_spark.index.sq import load_sq
-        from filter_vectordb_spark.registry import _index_cache_dir, _is_built
-
-        out = _index_cache_dir(self._cache_key(sf_dir), "ivfsq1")
-        if not _is_built(f"{out}/entries", f"{out}/grid"):
-            return False
-        self.base = self._base_source(spark, sf_dir)
-        self.codes, self.vmin, self.vmax = load_sq(spark, out)
-        return True
-
-    def query(self, queries: DataFrame, k: int) -> DataFrame:
-        from filter_vectordb_spark.index.sq import sq_codec
-
-        refine = int(self.query_args.get("refine", 4 * k))
-        codec = sq_codec(self.vmin, self.vmax)
-        return search(queries, self.codes, None, codec, self.base, k, 1, refine, self.metric)
-
-
-class IVFSQEngine(BaseEngine):
-    """IVF+SQ8 composed index (index/ivfsq.py — the reference's exact
-    faiss indexkey `IVF…,SQ8`); query knobs: nprobe (scan fraction) and
-    refine (exact-rescore cut) — the same dials the reference sweeps."""
-
-    name = "ivfsq"
-
-    def fit(self, spark: SparkSession, sf_dir: str) -> None:
-        from filter_vectordb_spark.index.ivfsq import (
-            build_ivfsq,
-            load_ivfsq,
-            save_ivfsq,
-        )
+    def _out(self, sf_dir: str, kind: str) -> str:
+        """Cache directory `ivf{flat|sq|pq}{nlist}[_{nsub}x{ksub}]`."""
         from filter_vectordb_spark.registry import _index_cache_dir
 
-        nlist = int(self.index_params.get("nlist", 16))
+        key = f"ivf{kind.removesuffix('8')}{self.nlist}"
+        if kind == "pq":
+            key += f"_{self.train['nsub']}x{self.train['ksub']}"
+        return _index_cache_dir(self._cache_key(sf_dir), key)
+
+    def fit(self, spark: SparkSession, sf_dir: str) -> None:
+        """A coded IVF index reuses a saved same-nlist IVF-flat
+        clustering (k-means is the expensive half; the codes are
+        cheap)."""
+        shared = None
+        if self.kind != "flat" and self.nlist > 1:
+            shared = load_index(spark, self._out(sf_dir, "flat"))
         self.base = self._base_source(spark, sf_dir)
-        ivf_out = _index_cache_dir(self._cache_key(sf_dir), f"ivfflat{nlist}")
-        from filter_vectordb_spark.registry import _is_built
-
-        if _is_built(f"{ivf_out}/entries", f"{ivf_out}/centroids"):
-            # share the coarse clustering with a same-nlist IVF build
-            # (k-means is the expensive half; the SQ grid+codes are cheap)
-            from filter_vectordb_spark.index.ivf import load_ivf
-            from filter_vectordb_spark.index.sq import encode_sq, train_sq
-
-            assignments, centroids = load_ivf(spark, ivf_out)
-            vmin, vmax = train_sq(self.base)
-            codes = encode_sq(self.base, vmin, vmax)
-            entries = assignments.select("id", "centroid_id").join(codes, "id")
-        else:
-            entries, centroids, vmin, vmax = build_ivfsq(
-                self.base,
-                nlist=nlist,
-                max_iter=int(self.index_params.get("max_iter", 8)),
-                train_rows=self.index_params.get("train_rows"),
-            )
-        out = _index_cache_dir(self._cache_key(sf_dir), f"ivfsq{nlist}")
-        save_ivfsq(entries, centroids, vmin, vmax, out)
-        self.entries, self.centroids, self.vmin, self.vmax = load_ivfsq(spark, out)
-        self.nlist = nlist
+        out = self._out(sf_dir, self.kind)
+        self.entries, self.centroids, self.codec = build_index(
+            self.base, out, self.kind, self.nlist, shared and shared[:2], **self.train
+        )
 
     def load_index(self, spark: SparkSession, sf_dir: str) -> bool:
-        from filter_vectordb_spark.index.ivfsq import load_ivfsq
-        from filter_vectordb_spark.registry import _index_cache_dir, _is_built
-
-        nlist = int(self.index_params.get("nlist", 16))
-        out = _index_cache_dir(self._cache_key(sf_dir), f"ivfsq{nlist}")
-        if not _is_built(f"{out}/entries", f"{out}/centroids", f"{out}/grid"):
+        """S5: serve from the shared per-source cache when an index with
+        the same parameters was already built."""
+        loaded = load_index(spark, self._out(sf_dir, self.kind))
+        if loaded is None:
             return False
+        self.entries, self.centroids, self.codec = loaded
         self.base = self._base_source(spark, sf_dir)
-        self.entries, self.centroids, self.vmin, self.vmax = load_ivfsq(spark, out)
-        self.nlist = nlist
         return True
 
     def query(self, queries: DataFrame, k: int) -> DataFrame:
-        from filter_vectordb_spark.index.sq import sq_codec
-
         nprobe = int(self.query_args.get("nprobe", self.nlist))
-        refine = int(self.query_args.get("refine", 4 * k))
-        codec = sq_codec(self.vmin, self.vmax)
+        refine = int(self.query_args.get("refine", k if self.codec.exact else 4 * k))
         return search(
-            queries, self.entries, self.centroids, codec, self.base, k, nprobe, refine, self.metric
+            queries, self.entries, self.centroids, self.codec, self.base, k, nprobe, refine,
+            self.metric,
         )
 
 
 ENGINES = {
-    e.name: e
-    for e in (
-        BruteForceEngine,
-        IVFEngine,
-        FilteredEngine,
-        LSHEngine,
-        SparseEngine,
-        PQEngine,
-        SQEngine,
-        IVFSQEngine,
-    )
+    **{e.name: e for e in (BruteForceEngine, FilteredEngine, LSHEngine, SparseEngine)},
+    **{name: functools.partial(IVFCodecEngine, name) for name in IVFCodecEngine.KINDS},
 }

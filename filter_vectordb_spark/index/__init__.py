@@ -1,4 +1,9 @@
-from filter_vectordb_spark.index.ivf import build_ivf, ivf_search  # noqa: F401
+from filter_vectordb_spark.index.ivf import (  # noqa: F401
+    build_index,
+    build_ivf,
+    load_index,
+    search,
+)
 from filter_vectordb_spark.index.tagpart import (  # noqa: F401
     build_tag_partitions,
     tag_partition_knn,

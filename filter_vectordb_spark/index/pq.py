@@ -29,14 +29,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from filter_vectordb_spark.index.ivf import (
-    Codec,
-    encode_codes,
-    list_scores,
-    load_lists,
-    save_lists,
-    search,
-)
+from filter_vectordb_spark.index.ivf import Codec, encode_codes
 from filter_vectordb_spark.operators.knn import topk_blocked
 
 #: train on at most this many rows (lowest ids — deterministic), mirroring
@@ -164,41 +157,5 @@ def pq_codec(codebooks: np.ndarray) -> Codec:
         part = topk_blocked(D, kk)
         return part, D[np.arange(len(pos))[:, None], part]
 
-    return Codec("pq", "codes", ("l2",), False, prepare, score)
+    return Codec("pq", "codes", ("l2",), False, prepare, score, (codebooks,))
 
-
-def save_pq(codes: DataFrame, codebooks: np.ndarray, out_dir: str) -> None:
-    """S5 index save: the single-list layout + the codebooks."""
-    save_lists(codes, None, out_dir)
-    write_codebooks(codes.sparkSession, codebooks, f"{out_dir}/codebooks")
-
-
-def load_pq(spark: SparkSession, out_dir: str) -> tuple[DataFrame, np.ndarray]:
-    codes, _, cb = load_lists(
-        spark, out_dir, lambda: (read_codebooks(spark, f"{out_dir}/codebooks"),), coarse=False
-    )
-    return codes, cb
-
-
-def adc_scores(
-    queries: DataFrame, codes: DataFrame, codebooks: np.ndarray, refine: int
-) -> DataFrame:
-    """(qid, id, adist): ADC distance of every row, each task's output
-    cut to the per-query top-`refine` (the W3 two-phase shape; the
-    global merge is the caller's top-k)."""
-    return list_scores(queries, codes, None, pq_codec(codebooks), 1, refine)
-
-
-def pq_adc_search(
-    queries: DataFrame,
-    codes: DataFrame,
-    codebooks: np.ndarray,
-    base: DataFrame,
-    k: int,
-    refine: int,
-) -> DataFrame:
-    """ADC cut to `refine` candidates per query, exact L2² rescore of the
-    survivors only, final top-k.  Returns (qid, id, dist, rank) — equal to
-    brute-force k-NN whenever the true top-k survive the cut (recall of
-    the cut pinned in tests/test_pq.py)."""
-    return search(queries, codes, None, pq_codec(codebooks), base, k, 1, refine)

@@ -30,14 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from filter_vectordb_spark.index.ivf import (
-    Codec,
-    encode_codes,
-    list_scores,
-    load_lists,
-    save_lists,
-    search,
-)
+from filter_vectordb_spark.index.ivf import Codec, encode_codes
 from filter_vectordb_spark.operators.knn import topk_blocked
 
 
@@ -188,19 +181,6 @@ def read_grid(spark: SparkSession, path: str) -> tuple[np.ndarray, np.ndarray]:
     return g["mn"].to_numpy(), g["mx"].to_numpy()
 
 
-def save_sq(codes: DataFrame, vmin: np.ndarray, vmax: np.ndarray, out_dir: str) -> None:
-    """S5 index save: the single-list layout + the affine grid."""
-    save_lists(codes, None, out_dir)
-    write_grid(codes.sparkSession, vmin, vmax, f"{out_dir}/grid")
-
-
-def load_sq(spark: SparkSession, out_dir: str) -> tuple[DataFrame, np.ndarray, np.ndarray]:
-    codes, _, vmin, vmax = load_lists(
-        spark, out_dir, lambda: read_grid(spark, f"{out_dir}/grid"), coarse=False
-    )
-    return codes, vmin, vmax
-
-
 def sq_codec(vmin: np.ndarray, vmax: np.ndarray, exact: bool = False) -> Codec:
     """The SQ8 codec over one affine grid.  Decode + GEMM run in float32:
     about twice the float64 rate (single-thread f32 GEMM 23-25 GFLOP/s
@@ -213,7 +193,7 @@ def sq_codec(vmin: np.ndarray, vmax: np.ndarray, exact: bool = False) -> Codec:
     (asserted per chunk): the scores are then EXACT distances."""
     if exact and not is_lossless_grid(vmin, vmax):
         raise ValueError(
-            "exact_codes=True requires a lossless integer-snapped grid "
+            "exact=True requires a lossless integer-snapped grid "
             "(train_sq snap_integer on an integer corpus)"
         )
     lo32 = vmin.astype(np.float32)
@@ -229,7 +209,7 @@ def sq_codec(vmin: np.ndarray, vmax: np.ndarray, exact: bool = False) -> Codec:
             or not (np.abs(Q).max(initial=0.0) <= 255 and np.array_equal(Q, np.rint(Q)))
         ):
             raise ValueError(
-                "exact_codes=True requires integer-valued queries with "
+                "exact=True requires integer-valued queries with "
                 "|component| <= 255 and d <= 192 (f32 exactness precondition)"
             )
         return Q.astype(np.float32)
@@ -247,26 +227,5 @@ def sq_codec(vmin: np.ndarray, vmax: np.ndarray, exact: bool = False) -> Codec:
         part = topk_blocked(-D if metric == "ip" else D, kk)
         return part, D[np.arange(len(pos))[:, None], part].astype(np.float64)
 
-    return Codec("sq8", "codes", ("l2", "ip"), exact, prepare, score)
+    return Codec("sq8", "codes", ("l2", "ip"), exact, prepare, score, (vmin, vmax))
 
-
-def sq_scores(
-    queries: DataFrame, codes: DataFrame, vmin: np.ndarray, vmax: np.ndarray, refine: int
-) -> DataFrame:
-    """(qid, id, adist): reconstruction-L2² of every row, each task's
-    output cut to the per-query top-`refine`."""
-    return list_scores(queries, codes, None, sq_codec(vmin, vmax), 1, refine)
-
-
-def sq_search(
-    queries: DataFrame,
-    codes: DataFrame,
-    vmin: np.ndarray,
-    vmax: np.ndarray,
-    base: DataFrame,
-    k: int,
-    refine: int,
-) -> DataFrame:
-    """SQ cut to `refine` candidates per query, exact L2² rescore of the
-    survivors, final top-k.  Returns (qid, id, dist, rank)."""
-    return search(queries, codes, None, sq_codec(vmin, vmax), base, k, 1, refine)

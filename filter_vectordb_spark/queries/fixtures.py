@@ -269,11 +269,11 @@ def _build_ivfsq(base: DataFrame, out: str, **kw) -> None:
     16 GB host, where the list-format parent peaked at 15.1 GB."""
     from pyspark import StorageLevel
 
-    from filter_vectordb_spark.index.ivfsq import build_ivfsq, save_ivfsq
+    from filter_vectordb_spark.index.ivf import build_index
 
     base = base.persist(StorageLevel.DISK_ONLY)
     try:
-        save_ivfsq(*build_ivfsq(base, coarse="numpy", **kw), out)
+        build_index(base, out, "sq8", coarse="numpy", **kw)
     finally:
         base.unpersist()
 
@@ -281,19 +281,20 @@ def _build_ivfsq(base: DataFrame, out: str, **kw) -> None:
 def _ivfsq_1m(spark: SparkSession):
     """Build-once (faiss protocol: coarse quantizer trained on a 100k
     sample, everything assigned) and load the 1M IVF(256)+SQ8 index.
-    Returns (entries, centroids, vmin, vmax, out_dir).
+    Returns (entries, centroids, codec, out_dir), the codec in its
+    exact lossless-grid serving mode.
 
     _g2: integer-snapped lossless grid (train_sq snap_integer) +
     the deterministic driver-side coarse trainer (coarse="numpy" on the
     id-ordered sample) — MLlib's limit()-sampled clustering varied
     across rebuilds, which silently shifted partial-probe recall."""
-    from filter_vectordb_spark.index.ivfsq import load_ivfsq
+    from filter_vectordb_spark.index.ivf import load_index
 
     base = _synth1m_base(spark)
     out = _index_cache_dir("synth1m_v2", "ivfsq256_g2")
-    if not _is_built(f"{out}/entries", f"{out}/centroids", f"{out}/grid"):
+    if load_index(spark, out) is None:
         _build_ivfsq(base, out, nlist=256, max_iter=16, train_rows=100_000)
-    return (*load_ivfsq(spark, out), out)
+    return (*load_index(spark, out, exact=True), out)
 
 
 # ------------------------------------------------------------- 10M fixture
@@ -319,14 +320,14 @@ def _ivfsq_10m(spark: SparkSession):
     trains driver-side (coarse="numpy", blocked f32 BLAS over a 200k
     sample — MLlib's scalar loops need minutes per iteration at √N-rule
     list counts where the BLAS block needs ~1 s); assignment of the full
-    10M rows is one distributed Arrow pass."""
-    from filter_vectordb_spark.index.ivfsq import load_ivfsq
+    10M rows is one distributed Arrow pass.  Returns _ivfsq_1m's tuple."""
+    from filter_vectordb_spark.index.ivf import load_index
 
     base = _synth10m_base(spark)
     out = _index_cache_dir("synth10m_v2", f"ivfsq{_10M_NLIST}_g1")
-    if not _is_built(f"{out}/entries", f"{out}/centroids", f"{out}/grid"):
+    if load_index(spark, out) is None:
         _build_ivfsq(base, out, nlist=_10M_NLIST, max_iter=10, train_rows=200_000)
-    return (*load_ivfsq(spark, out), out)
+    return (*load_index(spark, out, exact=True), out)
 
 
 def _gt_kth_10m(spark: SparkSession) -> "object":

@@ -14,7 +14,6 @@ from filter_vectordb_spark.queries.core import (
     _B,
     _FILTERED_ORACLE,
     _index_cache_dir,
-    _is_built,
     _l2,
     register,
 )
@@ -39,17 +38,15 @@ def ivf_full_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake layout), searched probing ALL inverted lists — exactly
     brute-force k-NN regardless of clustering, hence the oracle is the
     plain k-NN oracle.  Smaller nprobe is recall-tested in tests/."""
-    from filter_vectordb_spark.index.ivf import build_ivf, ivf_search, load_ivf, save_ivf
+    from filter_vectordb_spark.index.ivf import build_index, load_index, search
 
     q = dense_queries(spark, sf_dir)
     nlist = 16
     out = _index_cache_dir(sf_dir, "ivfflat16")
-    if not _is_built(f"{out}/entries", f"{out}/centroids"):
-        base = dense_vectors(spark, sf_dir)
-        assignments, centroids = build_ivf(base.select("id", "emb"), nlist)
-        save_ivf(assignments, centroids, out)
-    assignments, centroids = load_ivf(spark, out)
-    return ivf_search(q, assignments, centroids, 10, nprobe=nlist).select(
+    entries, centroids, codec = load_index(spark, out) or build_index(
+        dense_vectors(spark, sf_dir).select("id", "emb"), out, "flat", nlist
+    )
+    return search(q, entries, centroids, codec, None, 10, nlist, 10).select(
         "qid", "rank", "id"
     )
 
@@ -68,25 +65,13 @@ def pq_adc_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     whenever the true top-k survive the cut (pinned in tests/test_pq.py
     with margin: refine=64 already achieves recall 1.0 on the fixtures),
     hence the plain k-NN oracle."""
-    from filter_vectordb_spark.index.pq import (
-        encode_pq,
-        load_pq,
-        pq_adc_search,
-        save_pq,
-        train_pq,
-    )
+    from filter_vectordb_spark.index.ivf import build_index, load_index, search
 
     q = dense_queries(spark, sf_dir)
     out = _index_cache_dir(sf_dir, "ivfpq1_32x64")
-    if not _is_built(f"{out}/entries", f"{out}/codebooks"):
-        base = dense_vectors(spark, sf_dir).select("id", "emb")
-        cb = train_pq(base, nsub=32, ksub=64)
-        save_pq(encode_pq(base, cb), cb, out)
-    codes, cb = load_pq(spark, out)
     base = dense_vectors(spark, sf_dir).select("id", "emb")
-    return pq_adc_search(q, codes, cb, base, 10, refine=128).select(
-        "qid", "rank", "id"
-    )
+    codes, _, codec = load_index(spark, out) or build_index(base, out, "pq", nsub=32, ksub=64)
+    return search(q, codes, None, codec, base, 10, 1, 128).select("qid", "rank", "id")
 
 
 @register(
@@ -102,25 +87,13 @@ def sq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force k-NN whenever the true top-k survive the cut (SQ8's
     per-component error is ≤ half a grid step; margin pinned in
     tests/test_sq.py), hence the plain k-NN oracle."""
-    from filter_vectordb_spark.index.sq import (
-        encode_sq,
-        load_sq,
-        save_sq,
-        sq_search,
-        train_sq,
-    )
+    from filter_vectordb_spark.index.ivf import build_index, load_index, search
 
     q = dense_queries(spark, sf_dir)
     out = _index_cache_dir(sf_dir, "ivfsq1")
-    if not _is_built(f"{out}/entries", f"{out}/grid"):
-        base = dense_vectors(spark, sf_dir).select("id", "emb")
-        vmin, vmax = train_sq(base)
-        save_sq(encode_sq(base, vmin, vmax), vmin, vmax, out)
-    codes, vmin, vmax = load_sq(spark, out)
     base = dense_vectors(spark, sf_dir).select("id", "emb")
-    return sq_search(q, codes, vmin, vmax, base, 10, refine=64).select(
-        "qid", "rank", "id"
-    )
+    codes, _, codec = load_index(spark, out) or build_index(base, out, "sq8")
+    return search(q, codes, None, codec, base, 10, 1, 64).select("qid", "rank", "id")
 
 
 @register(
@@ -134,25 +107,16 @@ def ivfsq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     decide HOW CHEAPLY; built once per sf_dir, probed full
     (nprobe=nlist) with exact rescore — the oracle-checkable
     configuration.  Partial-nprobe recall pinned in tests/test_sq.py."""
-    from filter_vectordb_spark.index.ivfsq import (
-        build_ivfsq,
-        ivfsq_search,
-        load_ivfsq,
-        save_ivfsq,
-    )
+    from filter_vectordb_spark.index.ivf import build_index, load_index, search
 
     q = dense_queries(spark, sf_dir)
     nlist = 16
     out = _index_cache_dir(sf_dir, "ivfsq16")
-    if not _is_built(f"{out}/entries", f"{out}/centroids", f"{out}/grid"):
-        base = dense_vectors(spark, sf_dir).select("id", "emb")
-        entries, centroids, vmin, vmax = build_ivfsq(base, nlist=nlist)
-        save_ivfsq(entries, centroids, vmin, vmax, out)
-    entries, centroids, vmin, vmax = load_ivfsq(spark, out)
     base = dense_vectors(spark, sf_dir).select("id", "emb")
-    return ivfsq_search(
-        q, entries, centroids, vmin, vmax, base, 10, nprobe=nlist, refine=64
-    ).select("qid", "rank", "id")
+    entries, centroids, codec = load_index(spark, out) or build_index(base, out, "sq8", nlist)
+    return search(q, entries, centroids, codec, base, 10, nlist, 64).select(
+        "qid", "rank", "id"
+    )
 
 
 @register(
@@ -166,7 +130,7 @@ def ivf_incremental_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained table is exactly brute force over the whole base, so the
     plain k-NN oracle checks that inserts neither lose nor duplicate
     rows."""
-    from filter_vectordb_spark.index.ivf import build_ivf, ivf_insert, ivf_search
+    from filter_vectordb_spark.index.ivf import FLAT, build_ivf, ivf_insert, search
 
     base = dense_vectors(spark, sf_dir).select("id", "emb")
     n = base.count()
@@ -175,7 +139,7 @@ def ivf_incremental_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignments, centroids = build_ivf(base.filter(F.col("id") < cut), nlist)
     merged = ivf_insert(assignments, centroids, base.filter(F.col("id") >= cut))
     q = dense_queries(spark, sf_dir)
-    return ivf_search(q, merged, centroids, 10, nprobe=nlist).select(
+    return search(q, merged, centroids, FLAT, None, 10, nlist, 10).select(
         "qid", "rank", "id"
     )
 
@@ -190,25 +154,18 @@ def ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     decide HOW CHEAPLY; built once per sf_dir, probed full (nprobe=nlist)
     with exact rescore — the oracle-checkable configuration.  Partial
     nprobe recall curve pinned in tests/test_pq.py."""
-    from filter_vectordb_spark.index.ivfpq import (
-        build_ivfpq,
-        ivfpq_search,
-        load_ivfpq,
-        save_ivfpq,
-    )
+    from filter_vectordb_spark.index.ivf import build_index, load_index, search
 
     q = dense_queries(spark, sf_dir)
     nlist = 16
     out = _index_cache_dir(sf_dir, "ivfpq16_32x64")
-    if not _is_built(f"{out}/entries", f"{out}/centroids", f"{out}/codebooks"):
-        base = dense_vectors(spark, sf_dir).select("id", "emb")
-        entries, centroids, cb = build_ivfpq(base, nlist=nlist, nsub=32, ksub=64)
-        save_ivfpq(entries, centroids, cb, out)
-    entries, centroids, cb = load_ivfpq(spark, out)
     base = dense_vectors(spark, sf_dir).select("id", "emb")
-    return ivfpq_search(
-        q, entries, centroids, cb, base, 10, nprobe=nlist, refine=128
-    ).select("qid", "rank", "id")
+    entries, centroids, codec = load_index(spark, out) or build_index(
+        base, out, "pq", nlist, nsub=32, ksub=64
+    )
+    return search(q, entries, centroids, codec, base, 10, nlist, 128).select(
+        "qid", "rank", "id"
+    )
 
 
 @register(

@@ -489,7 +489,7 @@ def knn_ip_1m_nq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HASH-CHECKED twin of the 1M serving path (VERDICT r5 #4): 8 dense
     IP queries through the IDENTICAL IVF(256)+SQ8 direct-read
     exact_codes route as knn_ip_1m_ivfsq — value-level correctness for
-    `ivfsq_search(entries_dir=, exact_codes=True)` end-to-end, where
+    the exact-codec ivf.search over the saved layout end-to-end, where
     the 2048-query point is rows-only.  nprobe=nlist (full probe): with
     every list probed and exact lossless-code scores, the result equals
     brute force BY CONSTRUCTION, so this row can never flake on a
@@ -500,17 +500,16 @@ def knn_ip_1m_nq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall PINS (tests/test_sq.py) instead of hash rows, the
     reference's own discipline for approximate configs.  IP over 0..250
     integers is integer-exact, cast BIGINT on both sides."""
-    from filter_vectordb_spark.index.ivfsq import ivfsq_search
+    from filter_vectordb_spark.index.ivf import search
 
     base = _synth1m_base(spark)
-    entries, centroids, vmin, vmax, out = _ivfsq_1m(spark)
+    entries, centroids, codec, _ = _ivfsq_1m(spark)
     q = _synth_queries_staged(spark, nq=2048).filter(F.col("qid") < _NQ8).select(
         "qid", "qemb"
     )
-    return ivfsq_search(
-        q, entries, centroids, vmin, vmax, base, 10, nprobe=256, refine=32,
-        metric="ip", entries_dir=f"{out}/entries", exact_codes=True,
-    ).select("qid", "rank", "id", F.col("dist").cast("long").alias("dist"))
+    return search(q, entries, centroids, codec, base, 10, 256, 32, "ip").select(
+        "qid", "rank", "id", F.col("dist").cast("long").alias("dist")
+    )
 
 
 @register("knn_ip_1m_nq8_ood", _IP_1M_NQ8_OOD_ORACLE)
@@ -524,17 +523,16 @@ def knn_ip_1m_nq8_ood(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe ranking → scan → merge) where the 10M OOD points are
     necessarily rows-only.  OOD components are ≤ 253 integers, so IP
     stays integer-exact; cast BIGINT both sides."""
-    from filter_vectordb_spark.index.ivfsq import ivfsq_search
+    from filter_vectordb_spark.index.ivf import search
 
     base = _synth1m_base(spark)
-    entries, centroids, vmin, vmax, out = _ivfsq_1m(spark)
+    entries, centroids, codec, _ = _ivfsq_1m(spark)
     q = _synth_ood_queries_staged(spark, nq=8192).filter(
         F.col("qid") < _NQ8
     ).select("qid", "qemb")
-    return ivfsq_search(
-        q, entries, centroids, vmin, vmax, base, 10, nprobe=256, refine=32,
-        metric="ip", entries_dir=f"{out}/entries", exact_codes=True,
-    ).select("qid", "rank", "id", F.col("dist").cast("long").alias("dist"))
+    return search(q, entries, centroids, codec, base, 10, 256, 32, "ip").select(
+        "qid", "rank", "id", F.col("dist").cast("long").alias("dist")
+    )
 
 
 @register("knn_ip_1m_ivfsq")  # bench-scale point — rows-only (approximate by design)
@@ -553,15 +551,14 @@ def knn_ip_1m_ivfsq(spark: SparkSession, sf_dir: str) -> DataFrame:
     clears the 0.9 gate, `ood/diskann/config.yaml:13-27`).  Converts
     the repo's one >2× baseline miss (exact-but-linear OOD serving)
     into the DiskANN-shaped measured tradeoff."""
-    from filter_vectordb_spark.index.ivfsq import ivfsq_search
+    from filter_vectordb_spark.index.ivf import search
 
     base = _synth1m_base(spark)
-    entries, centroids, vmin, vmax, out = _ivfsq_1m(spark)
+    entries, centroids, codec, _ = _ivfsq_1m(spark)
     q = _synth_queries_staged(spark, nq=2048).select("qid", "qemb")
-    return ivfsq_search(
-        q, entries, centroids, vmin, vmax, base, 10, nprobe=16, refine=16,
-        metric="ip", entries_dir=f"{out}/entries", exact_codes=True,
-    ).select("qid", "rank", "id")
+    return search(q, entries, centroids, codec, base, 10, 16, 16, "ip").select(
+        "qid", "rank", "id"
+    )
 
 
 # ------------------------------------------------ 10M OOD operating points
@@ -622,15 +619,13 @@ def knn_ip_10m(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _knn_ip_10m_served(spark: SparkSession, nprobe: int) -> DataFrame:
-    from filter_vectordb_spark.index.ivfsq import ivfsq_search
+    from filter_vectordb_spark.index.ivf import search
 
     base = _synth10m_base(spark)
-    entries, centroids, vmin, vmax, out = _ivfsq_10m(spark)
+    entries, centroids, codec, _ = _ivfsq_10m(spark)
     q = _synth_ood_queries_staged(spark, nq=_10M_NQ).select("qid", "qemb")
-    return ivfsq_search(
-        q, entries, centroids, vmin, vmax, base, 10, nprobe=nprobe,
-        refine=_10M_REFINE, metric="ip", entries_dir=f"{out}/entries",
-        exact_codes=True,
+    return search(
+        q, entries, centroids, codec, base, 10, nprobe, _10M_REFINE, "ip"
     ).select("qid", "rank", "id")
 
 
@@ -675,19 +670,17 @@ def ood_recall_curve_10m(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time
 
     from filter_vectordb_spark.harness.runner import write_curve
-    from filter_vectordb_spark.index.ivfsq import ivfsq_search
+    from filter_vectordb_spark.index.ivf import search
 
     base = _synth10m_base(spark)
-    entries, centroids, vmin, vmax, out = _ivfsq_10m(spark)
+    entries, centroids, codec, _ = _ivfsq_10m(spark)
     q = _synth_ood_queries_staged(spark, nq=_10M_NQ).select("qid", "qemb")
     gt = _gt_kth_10m(spark)
     kth = dict(zip(gt["qid"].astype(int), gt["kth"]))
     records = []
     for nprobe in (1, _10M_NPROBE_LO, 3, _10M_NPROBE_HI, 8, 16):
-        res = ivfsq_search(
-            q, entries, centroids, vmin, vmax, base, 10, nprobe=nprobe,
-            refine=_10M_REFINE, metric="ip", entries_dir=f"{out}/entries",
-            exact_codes=True,
+        res = search(
+            q, entries, centroids, codec, base, 10, nprobe, _10M_REFINE, "ip"
         ).select("qid", "id", "dist")
         # the bench convention (VERDICT r8 #4): the TIMED wall runs the
         # plan to a count() action — no driver transfer inside it; the
@@ -1118,7 +1111,7 @@ _CURVE_100K_CONFIG = {
             "query_args": [{"refine": r} for r in (10, 40, 160)],
         },
         {
-            # shares the ivf64 k-means above (engines.IVFSQEngine.fit
+            # shares the ivf64 k-means above (engines.IVFCodecEngine.fit
             # reuses a saved same-nlist clustering)
             "engine": "ivfsq",
             "index_params": {"source": "synth100k", "nlist": 64},

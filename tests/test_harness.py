@@ -139,6 +139,24 @@ def test_index_engines_refuse_a_metric_their_codec_cannot_score(spark):
             run_benchmark(spark, config, SF_DIR, k=10)
 
 
+@pytest.mark.parametrize("engine", ["ivf", "pq", "sq8", "ivfsq"])
+def test_index_engine_fit_saves_what_a_fresh_engine_loads(spark, engine):
+    """fit() builds, persists and loads the index: a fresh engine of the
+    same name then loads it from the shared cache instead of rebuilding,
+    and serves the same frame."""
+    from filter_vectordb_spark.harness.engines import ENGINES
+
+    fitted = ENGINES[engine]()
+    fitted.fit(spark, SF_DIR)
+    fresh = ENGINES[engine]()
+    assert fresh.load_index(spark, SF_DIR)
+    q = fitted.default_queries(spark, SF_DIR)
+    want = fitted.query(q, 10).select("qid", "rank", "id")
+    got = fresh.query(q, 10).select("qid", "rank", "id")
+    assert want.count() > 0
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
 def test_bruteforce_scans_the_staged_base_raw(spark):
     """On the staged synth100k source the exact scan reads the base files
     raw (`emb` BINARY, decoded by the scan kernel) instead of through the

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from filter_vectordb_spark.index.ivf import build_ivf, ivf_search
+from filter_vectordb_spark.index.ivf import FLAT, build_index, build_ivf, load_index, search
 from filter_vectordb_spark.operators.knn import knn_join
 from filter_vectordb_spark.sources.vectors import dense_queries, dense_vectors
 from tests.conftest import SF_DIR
@@ -38,14 +38,14 @@ def _recall(res, exact):
 
 def test_full_probe_is_exact(spark, ivf, exact):
     q = dense_queries(spark, SF_DIR)
-    res = ivf_search(q, *ivf, K, nprobe=NLIST)
+    res = search(q, *ivf, FLAT, None, K, NLIST, K)
     assert _recall(res, exact) == 1.0
 
 
 def test_recall_improves_with_nprobe(spark, ivf, exact):
     q = dense_queries(spark, SF_DIR)
-    r1 = _recall(ivf_search(q, *ivf, K, nprobe=1), exact)
-    r8 = _recall(ivf_search(q, *ivf, K, nprobe=8), exact)
+    r1 = _recall(search(q, *ivf, FLAT, None, K, 1, K), exact)
+    r8 = _recall(search(q, *ivf, FLAT, None, K, 8, K), exact)
     assert r8 >= r1
     assert r8 >= 0.5  # probing half the lists should recover most neighbors
 
@@ -62,15 +62,14 @@ def test_ivf_save_load_roundtrip(spark, ivf, exact, tmp_path):
     assignment table is partitioned by centroid_id."""
     import os
 
-    from filter_vectordb_spark.index.ivf import load_ivf, save_ivf
-
     out = str(tmp_path / "ivf")
-    save_ivf(*ivf, out)
+    base = dense_vectors(spark, SF_DIR).select("id", "emb")
+    build_index(base, out, "flat", NLIST, ivf)
     parts = [d for d in os.listdir(f"{out}/entries") if d.startswith("centroid_id=")]
     assert len(parts) > 1  # physically partitioned
-    assignments, centroids = load_ivf(spark, out)
+    assignments, centroids, codec = load_index(spark, out)
     q = dense_queries(spark, SF_DIR)
-    res = ivf_search(q, assignments, centroids, K, nprobe=NLIST)
+    res = search(q, assignments, centroids, codec, None, K, NLIST, K)
     assert _recall(res, exact) == 1.0
 
 
@@ -122,9 +121,9 @@ def test_ivf_search_chunks_above_broadcast_cap(spark, ivf, monkeypatch):
     from filter_vectordb_spark.operators import knn as knn_mod
 
     q = dense_queries(spark, SF_DIR)
-    want = ivf_search(q, *ivf, K, nprobe=NLIST).select("qid", "rank", "id")
+    want = search(q, *ivf, FLAT, None, K, NLIST, K).select("qid", "rank", "id")
     monkeypatch.setattr(knn_mod, "MAX_BROADCAST_QUERIES", 3)
-    got = ivf_search(q, *ivf, K, nprobe=NLIST).select("qid", "rank", "id")
+    got = search(q, *ivf, FLAT, None, K, NLIST, K).select("qid", "rank", "id")
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
@@ -133,26 +132,45 @@ def test_rebuild_in_place_invalidates_load_cache(spark, exact, tmp_path, layout)
     """Saving a rebuilt index over a loaded one must invalidate the
     in-process load cache for every list layout: after the second save
     the next load serves the new lists (their centroids and files)."""
-    from filter_vectordb_spark.index import ivf, ivfpq, ivfsq
-
     base = dense_vectors(spark, SF_DIR).select("id", "emb")
     q = dense_queries(spark, SF_DIR)
     out = str(tmp_path / layout)
+    train, refine = {"flat": ({}, K), "sq8": ({}, 64), "pq": ({"nsub": 32, "ksub": 64}, 128)}[layout]
     for nlist in (4, 8):
-        if layout == "flat":
-            ivf.save_ivf(*build_ivf(base, nlist), out)
-            entries, centroids = ivf.load_ivf(spark, out)
-            res = ivf.ivf_search(q, entries, centroids, K, nprobe=nlist)
-        elif layout == "sq8":
-            ivfsq.save_ivfsq(*ivfsq.build_ivfsq(base, nlist=nlist), out)
-            entries, centroids, vmin, vmax = ivfsq.load_ivfsq(spark, out)
-            res = ivfsq.ivfsq_search(
-                q, entries, centroids, vmin, vmax, base, K, nlist, refine=64
-            )
-        else:
-            ivfpq.save_ivfpq(*ivfpq.build_ivfpq(base, nlist, nsub=32, ksub=64), out)
-            entries, centroids, cb = ivfpq.load_ivfpq(spark, out)
-            res = ivfpq.ivfpq_search(q, entries, centroids, cb, base, K, nlist, refine=128)
+        build_index(base, out, layout, nlist, **train)
+        entries, centroids, codec = load_index(spark, out)
+        res = search(q, entries, centroids, codec, base, K, nlist, refine)
         assert centroids.count() == nlist
         assert entries.count() == base.count()
         assert _recall(res, exact) == 1.0
+
+
+def test_load_index_refuses_a_coded_layout_without_its_grid(spark, tmp_path):
+    """A saved sq8 layout that has lost grid/ is a partial index: loading
+    it raises, naming the missing part, instead of serving its codes
+    as something else."""
+    import shutil
+
+    base = dense_vectors(spark, SF_DIR).select("id", "emb")
+    out = str(tmp_path / "sq8")
+    build_index(base, out, "sq8")
+    shutil.rmtree(f"{out}/grid")
+    with pytest.raises(FileNotFoundError, match="grid"):
+        load_index(spark, out)
+
+
+def test_load_index_refuses_lists_without_centroids(spark, ivf, tmp_path):
+    """A coarse layout that has lost centroids/ cannot plan probes:
+    loading it raises, naming centroids."""
+    import shutil
+
+    base = dense_vectors(spark, SF_DIR).select("id", "emb")
+    out = str(tmp_path / "flat")
+    build_index(base, out, "flat", NLIST, ivf)
+    shutil.rmtree(f"{out}/centroids")
+    with pytest.raises(FileNotFoundError, match="centroids"):
+        load_index(spark, out)
+
+
+def test_load_index_of_an_empty_directory_is_none(spark, tmp_path):
+    assert load_index(spark, str(tmp_path)) is None

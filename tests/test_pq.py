@@ -12,15 +12,8 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from filter_vectordb_spark.index.pq import (
-    _lloyd,
-    adc_scores,
-    encode_pq,
-    load_pq,
-    pq_adc_search,
-    save_pq,
-    train_pq,
-)
+from filter_vectordb_spark.index.ivf import build_index, list_scores, load_index, search
+from filter_vectordb_spark.index.pq import _lloyd, encode_pq, pq_codec, train_pq
 from filter_vectordb_spark.operators.knn import knn_join
 from filter_vectordb_spark.operators.topk import per_group_topk
 from filter_vectordb_spark.sources.vectors import dense_queries, dense_vectors
@@ -77,7 +70,7 @@ def test_adc_cut_recall_margin(spark, codes, codebooks, exact):
     """The registry's correctness story: true top-k survive the ADC cut
     with margin — recall 1.0 already at refine=64 (registry uses 128)."""
     q = dense_queries(spark, SF_DIR)
-    scored = adc_scores(q, codes, codebooks, refine=64)
+    scored = list_scores(q, codes, None, pq_codec(codebooks), 1, 64)
     cut = per_group_topk(
         scored, ["qid"], [F.col("adist").asc(), F.col("id").asc()], 64
     ).select("qid", "id")
@@ -87,7 +80,7 @@ def test_adc_cut_recall_margin(spark, codes, codebooks, exact):
 
 def test_adc_rescore_equals_exact(spark, base, codes, codebooks, exact):
     q = dense_queries(spark, SF_DIR)
-    res = pq_adc_search(q, codes, codebooks, base, K, refine=128).select(
+    res = search(q, codes, None, pq_codec(codebooks), base, K, 1, 128).select(
         "qid", "rank", "id"
     )
     assert res.exceptAll(exact).count() == 0
@@ -96,11 +89,12 @@ def test_adc_rescore_equals_exact(spark, base, codes, codebooks, exact):
 
 def test_save_load_roundtrip(tmp_path, spark, base, codes, codebooks, exact):
     out = str(tmp_path / "pq")
-    save_pq(codes, codebooks, out)
-    codes2, cb2 = load_pq(spark, out)
+    build_index(base, out, "pq", nsub=NSUB, ksub=KSUB)
+    codes2, _, codec = load_index(spark, out)
+    (cb2,) = codec.state
     assert np.array_equal(cb2, codebooks)
     q = dense_queries(spark, SF_DIR)
-    res = pq_adc_search(q, codes2, cb2, base, K, refine=128).select(
+    res = search(q, codes2, None, codec, base, K, 1, 128).select(
         "qid", "rank", "id"
     )
     assert res.exceptAll(exact).count() == 0
@@ -112,7 +106,7 @@ def test_full_refine_is_exact_regardless_of_quantization(spark, base, codes, cod
     analog)."""
     n = base.count()
     q = dense_queries(spark, SF_DIR)
-    res = pq_adc_search(q, codes, codebooks, base, K, refine=int(n)).select(
+    res = search(q, codes, None, pq_codec(codebooks), base, K, 1, int(n)).select(
         "qid", "rank", "id"
     )
     assert res.exceptAll(exact).count() == 0
@@ -122,18 +116,22 @@ def test_full_refine_is_exact_regardless_of_quantization(spark, base, codes, cod
 
 
 @pytest.fixture(scope="module")
-def ivfpq(base):
-    from filter_vectordb_spark.index.ivfpq import build_ivfpq
+def ivfpq_dir(base, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("ivfpq"))
+    build_index(base, out, "pq", 8, nsub=NSUB, ksub=KSUB)
+    return out
 
-    return build_ivfpq(base, nlist=8, nsub=NSUB, ksub=KSUB)
+
+@pytest.fixture(scope="module")
+def ivfpq(spark, ivfpq_dir):
+    entries, centroids, codec = load_index(spark, ivfpq_dir)
+    return entries.localCheckpoint(), centroids.localCheckpoint(), codec
 
 
 def test_ivfpq_full_probe_equals_exact(spark, base, ivfpq, exact):
-    from filter_vectordb_spark.index.ivfpq import ivfpq_search
-
-    entries, centroids, cb = ivfpq
+    entries, centroids, codec = ivfpq
     q = dense_queries(spark, SF_DIR)
-    res = ivfpq_search(q, entries, centroids, cb, base, K, nprobe=8, refine=128).select(
+    res = search(q, entries, centroids, codec, base, K, 8, 128).select(
         "qid", "rank", "id"
     )
     assert res.exceptAll(exact).count() == 0
@@ -143,16 +141,14 @@ def test_ivfpq_full_probe_equals_exact(spark, base, ivfpq, exact):
 def test_ivfpq_recall_improves_with_nprobe(spark, base, ivfpq, exact):
     """The reference's recall-vs-QPS methodology: recall@10 is monotone
     non-decreasing in nprobe and high even at partial probe."""
-    from filter_vectordb_spark.index.ivfpq import ivfpq_search
-
-    entries, centroids, cb = ivfpq
+    entries, centroids, codec = ivfpq
     q = dense_queries(spark, SF_DIR)
     e = exact.select("qid", "id").toPandas()
     eset = set(map(tuple, e.values))
     recalls = []
     for nprobe in (1, 4, 8):
-        res = ivfpq_search(
-            q, entries, centroids, cb, base, K, nprobe=nprobe, refine=128
+        res = search(
+            q, entries, centroids, codec, base, K, nprobe, 128
         ).select("qid", "id").toPandas()
         got = set(map(tuple, res.values))
         recalls.append(len(got & eset) / len(eset))
@@ -161,16 +157,12 @@ def test_ivfpq_recall_improves_with_nprobe(spark, base, ivfpq, exact):
     assert recalls[0] > 0.3  # even 1/8 of the lists finds a solid fraction
 
 
-def test_ivfpq_save_load_roundtrip(tmp_path, spark, base, ivfpq, exact):
-    from filter_vectordb_spark.index.ivfpq import ivfpq_search, load_ivfpq, save_ivfpq
-
-    entries, centroids, cb = ivfpq
-    out = str(tmp_path / "ivfpq")
-    save_ivfpq(entries, centroids, cb, out)
-    e2, c2, cb2 = load_ivfpq(spark, out)
-    assert np.array_equal(cb2, cb)
+def test_ivfpq_save_load_roundtrip(spark, base, codebooks, ivfpq_dir, exact):
+    e2, c2, codec = load_index(spark, ivfpq_dir)
+    (cb2,) = codec.state
+    assert np.array_equal(cb2, codebooks)
     q = dense_queries(spark, SF_DIR)
-    res = ivfpq_search(q, e2, c2, cb2, base, K, nprobe=8, refine=128).select(
+    res = search(q, e2, c2, codec, base, K, 8, 128).select(
         "qid", "rank", "id"
     )
     assert res.exceptAll(exact).count() == 0
@@ -188,26 +180,22 @@ def test_adc_scan_reads_codes_only(spark, codes, codebooks):
     out = tempfile.mkdtemp(prefix="pq_plan_")
     codes.write.mode("overwrite").parquet(out)
     q = dense_queries(spark, SF_DIR)
-    scored = adc_scores(q, spark.read.parquet(out), codebooks, refine=64)
+    scored = list_scores(q, spark.read.parquet(out), None, pq_codec(codebooks), 1, 64)
     scan = [ln for ln in physical_plan(scored).splitlines() if "ReadSchema" in ln][0]
     assert "codes" in scan and "emb" not in scan, scan
 
 
-def test_ivfpq_probe_prunes_partitions(spark, base, ivfpq, tmp_path):
+def test_ivfpq_probe_prunes_partitions(spark, base, ivfpq_dir):
     """Probing must reach the entries scan as a partition filter (static
     or dynamic) — the 'probe = partition pruning' contract."""
-    from filter_vectordb_spark.index.ivfpq import ivfpq_search, load_ivfpq, save_ivfpq
     from filter_vectordb_spark.plans.audit import assert_partition_pruned
 
-    entries, centroids, cb = ivfpq
-    out = str(tmp_path / "ivfpq_plan")
-    save_ivfpq(entries, centroids, cb, out)
-    e2, c2, cb2 = load_ivfpq(spark, out)
+    e2, c2, codec = load_index(spark, ivfpq_dir)
     q = dense_queries(spark, SF_DIR)
-    # .alias() breaks the load_ivfpq identity match so the search stays
+    # .alias() breaks the load_index identity match so the search stays
     # on the DataFrame route — whose pruning contract this test pins
     # (the identical-object case auto-delegates to the direct read)
-    res = ivfpq_search(q, e2.alias("e"), c2, cb2, base, K, nprobe=2, refine=64)
+    res = search(q, e2.alias("e"), c2, codec, base, K, 2, 64)
     assert_partition_pruned(res)
 
 
@@ -235,15 +223,14 @@ def test_ivf_insert_assigns_to_nearest_existing_centroid(spark, base):
 
 def test_adc_chunks_above_broadcast_cap(spark, base, codes, codebooks, exact, monkeypatch):
     """Chunk-and-union above the broadcast cap must equal single-shot."""
-    from filter_vectordb_spark.index.pq import pq_adc_search
     from filter_vectordb_spark.operators import knn as knn_mod
 
     q = dense_queries(spark, SF_DIR)
-    want = pq_adc_search(q, codes, codebooks, base, K, refine=64).select(
+    want = search(q, codes, None, pq_codec(codebooks), base, K, 1, 64).select(
         "qid", "rank", "id"
     )
     monkeypatch.setattr(knn_mod, "MAX_BROADCAST_QUERIES", 3)
-    got = pq_adc_search(q, codes, codebooks, base, K, refine=64).select(
+    got = search(q, codes, None, pq_codec(codebooks), base, K, 1, 64).select(
         "qid", "rank", "id"
     )
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
@@ -252,16 +239,15 @@ def test_adc_chunks_above_broadcast_cap(spark, base, codes, codebooks, exact, mo
 def test_ivfpq_chunks_above_broadcast_cap(spark, base, ivfpq, monkeypatch):
     """Chunk-and-union above the broadcast cap must equal single-shot
     (VERDICT r5 #1: every scan family streams the query side)."""
-    from filter_vectordb_spark.index.ivfpq import ivfpq_search
     from filter_vectordb_spark.operators import knn as knn_mod
 
-    entries, centroids, cb = ivfpq
+    entries, centroids, codec = ivfpq
     q = dense_queries(spark, SF_DIR)
-    want = ivfpq_search(q, entries, centroids, cb, base, K, nprobe=8, refine=128).select(
+    want = search(q, entries, centroids, codec, base, K, 8, 128).select(
         "qid", "rank", "id"
     )
     monkeypatch.setattr(knn_mod, "MAX_BROADCAST_QUERIES", 3)
-    got = ivfpq_search(q, entries, centroids, cb, base, K, nprobe=8, refine=128).select(
+    got = search(q, entries, centroids, codec, base, K, 8, 128).select(
         "qid", "rank", "id"
     )
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0

@@ -101,7 +101,8 @@ def test_sq_search_matches_numpy_brute_force(spark, n, d, k, seed):
     equal brute force on arbitrary float data, and every component must
     reconstruct within half a grid step — the codec's contract beyond
     the fixture distributions."""
-    from filter_vectordb_spark.index.sq import encode_sq, sq_search, train_sq
+    from filter_vectordb_spark.index.ivf import search
+    from filter_vectordb_spark.index.sq import encode_sq, sq_codec, train_sq
 
     rng = np.random.RandomState(seed)
     X = (rng.randn(n, d) * rng.uniform(0.1, 50)).astype(np.float64)
@@ -128,7 +129,7 @@ def test_sq_search_matches_numpy_brute_force(spark, n, d, k, seed):
 
     # full refine (= n) makes the cut lossless → exact equality
     got = (
-        sq_search(queries, codes, vmin, vmax, base, k, refine=n)
+        search(queries, codes, None, sq_codec(vmin, vmax), base, k, 1, n)
         .toPandas()
         .sort_values(["qid", "rank"])
     )

@@ -1,4 +1,4 @@
-"""SQ8 scalar-quantization tests (index/sq.py, index/ivfsq.py).
+"""SQ8 scalar-quantization tests (index/sq.py, with index/ivf.py's lists).
 
 Same methodology as tests/test_pq.py: the approximate cut is measured
 against the in-engine exact plan, and the composed reconstruct+rescore
@@ -12,14 +12,8 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from filter_vectordb_spark.index.sq import (
-    encode_sq,
-    load_sq,
-    save_sq,
-    sq_scores,
-    sq_search,
-    train_sq,
-)
+from filter_vectordb_spark.index.ivf import build_index, list_scores, load_index, search
+from filter_vectordb_spark.index.sq import encode_sq, sq_codec, train_sq
 from filter_vectordb_spark.operators.knn import knn_join
 from filter_vectordb_spark.operators.topk import per_group_topk
 from filter_vectordb_spark.sources.vectors import dense_queries, dense_vectors
@@ -80,7 +74,7 @@ def test_sq_cut_recall_margin(spark, codes, grid, exact):
     """The cut at refine=K (no slack at all) already achieves recall 1.0
     on the fixture — the registry's refine=64 has 6.4× margin."""
     q = dense_queries(spark, SF_DIR)
-    scored = sq_scores(q, codes, *grid, refine=K)
+    scored = list_scores(q, codes, None, sq_codec(*grid), 1, K)
     cut = per_group_topk(
         scored, ["qid"], [F.col("adist").asc(), F.col("id").asc()], K
     ).select("qid", "id")
@@ -90,17 +84,18 @@ def test_sq_cut_recall_margin(spark, codes, grid, exact):
 
 def test_sq_rescore_equals_exact(spark, base, codes, grid, exact):
     q = dense_queries(spark, SF_DIR)
-    res = sq_search(q, codes, *grid, base, K, refine=64).select("qid", "rank", "id")
+    res = search(q, codes, None, sq_codec(*grid), base, K, 1, 64).select("qid", "rank", "id")
     assert res.exceptAll(exact).count() == 0 and exact.exceptAll(res).count() == 0
 
 
 def test_save_load_roundtrip(tmp_path, spark, base, codes, grid, exact):
     out = str(tmp_path / "sq8")
-    save_sq(codes, *grid, out)
-    codes2, vmin2, vmax2 = load_sq(spark, out)
+    build_index(base, out, "sq8")
+    codes2, _, codec = load_index(spark, out)
+    vmin2, vmax2 = codec.state
     assert np.array_equal(vmin2, grid[0]) and np.array_equal(vmax2, grid[1])
     q = dense_queries(spark, SF_DIR)
-    res = sq_search(q, codes2, vmin2, vmax2, base, K, refine=64).select(
+    res = search(q, codes2, None, codec, base, K, 1, 64).select(
         "qid", "rank", "id"
     )
     assert res.exceptAll(exact).count() == 0 and exact.exceptAll(res).count() == 0
@@ -110,7 +105,7 @@ def test_sq_scan_reads_codes_only(spark, codes, grid):
     """The corpus pass must not touch the float table — its input plan
     reads (id, codes) only."""
     q = dense_queries(spark, SF_DIR)
-    scored = sq_scores(q, codes, *grid, refine=K)
+    scored = list_scores(q, codes, None, sq_codec(*grid), 1, K)
     plan = scored._jdf.queryExecution().executedPlan().toString()
     assert "emb" not in plan
 
@@ -119,75 +114,59 @@ def test_sq_scan_reads_codes_only(spark, codes, grid):
 
 
 @pytest.fixture(scope="module")
-def ivfsq(base):
-    from filter_vectordb_spark.index.ivfsq import build_ivfsq
+def ivfsq_dir(base, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("ivfsq"))
+    build_index(base, out, "sq8", 8)
+    return out
 
-    entries, centroids, vmin, vmax = build_ivfsq(base, nlist=8)
-    return entries.localCheckpoint(), centroids.localCheckpoint(), vmin, vmax
+
+@pytest.fixture(scope="module")
+def ivfsq(spark, ivfsq_dir):
+    entries, centroids, codec = load_index(spark, ivfsq_dir)
+    return entries.localCheckpoint(), centroids.localCheckpoint(), codec
 
 
 def test_ivfsq_full_probe_equals_exact(spark, base, ivfsq, exact):
-    from filter_vectordb_spark.index.ivfsq import ivfsq_search
-
-    entries, centroids, vmin, vmax = ivfsq
+    entries, centroids, codec = ivfsq
     q = dense_queries(spark, SF_DIR)
-    res = ivfsq_search(
-        q, entries, centroids, vmin, vmax, base, K, nprobe=8, refine=64
-    ).select("qid", "rank", "id")
+    res = search(q, entries, centroids, codec, base, K, 8, 64).select("qid", "rank", "id")
     assert res.exceptAll(exact).count() == 0 and exact.exceptAll(res).count() == 0
 
 
 def test_ivfsq_recall_improves_with_nprobe(spark, base, ivfsq, exact):
-    from filter_vectordb_spark.index.ivfsq import ivfsq_search
-
-    entries, centroids, vmin, vmax = ivfsq
+    entries, centroids, codec = ivfsq
     q = dense_queries(spark, SF_DIR)
     truth = exact.select("qid", "id")
     denom = truth.count()
     recalls = []
     for nprobe in (1, 4, 8):
-        res = ivfsq_search(
-            q, entries, centroids, vmin, vmax, base, K, nprobe=nprobe, refine=64
-        )
+        res = search(q, entries, centroids, codec, base, K, nprobe, 64)
         recalls.append(res.join(truth, ["qid", "id"]).count() / denom)
     assert recalls == sorted(recalls)
     assert recalls[-1] == 1.0
 
 
-def test_ivfsq_save_load_roundtrip(tmp_path, spark, base, ivfsq, exact):
-    from filter_vectordb_spark.index.ivfsq import (
-        ivfsq_search,
-        load_ivfsq,
-        save_ivfsq,
-    )
-
-    entries, centroids, vmin, vmax = ivfsq
-    out = str(tmp_path / "ivfsq")
-    save_ivfsq(entries, centroids, vmin, vmax, out)
-    e2, c2, mn2, mx2 = load_ivfsq(spark, out)
+def test_ivfsq_save_load_roundtrip(spark, base, ivfsq_dir, exact):
+    e2, c2, codec = load_index(spark, ivfsq_dir)
     q = dense_queries(spark, SF_DIR)
-    res = ivfsq_search(q, e2, c2, mn2, mx2, base, K, nprobe=8, refine=64).select(
+    res = search(q, e2, c2, codec, base, K, 8, 64).select(
         "qid", "rank", "id"
     )
     assert res.exceptAll(exact).count() == 0 and exact.exceptAll(res).count() == 0
 
 
-def test_ivfsq_probe_prunes_partitions(spark, base, ivfsq, tmp_path):
+def test_ivfsq_probe_prunes_partitions(spark, base, ivfsq_dir):
     """Probing must reach the entries scan as a partition filter (static
     or dynamic) — the 'probe = partition pruning' contract."""
-    from filter_vectordb_spark.index.ivfsq import ivfsq_search, load_ivfsq, save_ivfsq
     from filter_vectordb_spark.plans.audit import assert_partition_pruned
 
-    entries, centroids, vmin, vmax = ivfsq
-    out = str(tmp_path / "ivfsq_plan")
-    save_ivfsq(entries, centroids, vmin, vmax, out)
-    e2, c2, mn2, mx2 = load_ivfsq(spark, out)
+    e2, c2, codec = load_index(spark, ivfsq_dir)
     q = dense_queries(spark, SF_DIR)
-    # .alias() breaks the load_ivfsq identity match so the search stays
+    # .alias() breaks the load_index identity match so the search stays
     # on the DataFrame route — whose pruning contract this test pins
     # (the identical-object case now auto-delegates to the direct read,
     # covered by test_ivfsq_delegates_to_direct_read)
-    res = ivfsq_search(q, e2.alias("e"), c2, mn2, mx2, base, K, nprobe=2, refine=64)
+    res = search(q, e2.alias("e"), c2, codec, base, K, 2, 64)
     assert_partition_pruned(res)
 
 
@@ -196,9 +175,9 @@ def test_sq_chunks_above_broadcast_cap(spark, base, codes, grid, exact, monkeypa
     from filter_vectordb_spark.operators import knn as knn_mod
 
     q = dense_queries(spark, SF_DIR)
-    want = sq_search(q, codes, *grid, base, K, refine=64).select("qid", "rank", "id")
+    want = search(q, codes, None, sq_codec(*grid), base, K, 1, 64).select("qid", "rank", "id")
     monkeypatch.setattr(knn_mod, "MAX_BROADCAST_QUERIES", 3)
-    got = sq_search(q, codes, *grid, base, K, refine=64).select("qid", "rank", "id")
+    got = search(q, codes, None, sq_codec(*grid), base, K, 1, 64).select("qid", "rank", "id")
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
@@ -206,45 +185,37 @@ def test_sq_search_empty_query_set_returns_empty(spark, base, codes, grid):
     """Zero queries must yield an empty typed result, not a kernel crash
     (union_query_chunks_df's shared empty-input contract)."""
     empty_q = spark.createDataFrame([], "qid BIGINT, qemb ARRAY<FLOAT>")
-    res = sq_search(empty_q, codes, *grid, base, K, refine=64)
+    res = search(empty_q, codes, None, sq_codec(*grid), base, K, 1, 64)
     assert res.count() == 0
     assert set(res.columns) == {"qid", "id", "dist", "rank"}
 
 
-def test_ivfsq_ip_full_probe_equals_exact(spark):
+def test_ivfsq_ip_full_probe_equals_exact(spark, tmp_path):
     """metric='ip' (the OOD track's MIPS): full probe + exact rescore must
     equal brute-force IP k-NN — centroid ranking and score ordering flip
     together (faiss METRIC_INNER_PRODUCT semantics)."""
-    from filter_vectordb_spark.index.ivfsq import build_ivfsq, ivfsq_search
     from filter_vectordb_spark.sources.synth import synth_queries, synth_uint8_base
 
     base = synth_uint8_base(spark, n=2000).select("id", "emb").localCheckpoint()
     q = synth_queries(spark, nq=16).select("qid", "qemb")
-    entries, centroids, vmin, vmax = build_ivfsq(base, nlist=8)
-    res = ivfsq_search(
-        q, entries, centroids, vmin, vmax, base, K, nprobe=8, refine=64, metric="ip"
-    ).select("qid", "rank", "id")
+    entries, centroids, codec = build_index(base, str(tmp_path), "sq8", 8)
+    res = search(q, entries, centroids, codec, base, K, 8, 64, "ip").select("qid", "rank", "id")
     exact = knn_join(q, base, K, metric="ip").select("qid", "rank", "id")
     assert res.exceptAll(exact).count() == 0 and exact.exceptAll(res).count() == 0
 
 
-def test_ivfsq_ip_chunks_above_broadcast_cap(spark, monkeypatch):
-    """ivfsq_search must chunk-and-union above the broadcast cap (the
+def test_ivfsq_ip_chunks_above_broadcast_cap(spark, monkeypatch, tmp_path):
+    """IVF+SQ8 search must chunk-and-union above the broadcast cap (the
     ADVICE r4 item): parity with the single-shot run."""
-    from filter_vectordb_spark.index.ivfsq import build_ivfsq, ivfsq_search
     from filter_vectordb_spark.operators import knn as knn_mod
     from filter_vectordb_spark.sources.synth import synth_queries, synth_uint8_base
 
     base = synth_uint8_base(spark, n=1000).select("id", "emb").localCheckpoint()
     q = synth_queries(spark, nq=10).select("qid", "qemb")
-    entries, centroids, vmin, vmax = build_ivfsq(base, nlist=4)
-    want = ivfsq_search(
-        q, entries, centroids, vmin, vmax, base, K, nprobe=2, refine=32, metric="ip"
-    ).select("qid", "rank", "id")
+    entries, centroids, codec = build_index(base, str(tmp_path), "sq8", 4)
+    want = search(q, entries, centroids, codec, base, K, 2, 32, "ip").select("qid", "rank", "id")
     monkeypatch.setattr(knn_mod, "MAX_BROADCAST_QUERIES", 3)
-    got = ivfsq_search(
-        q, entries, centroids, vmin, vmax, base, K, nprobe=2, refine=32, metric="ip"
-    ).select("qid", "rank", "id")
+    got = search(q, entries, centroids, codec, base, K, 2, 32, "ip").select("qid", "rank", "id")
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
@@ -285,45 +256,17 @@ def test_ivfsq_ip_1m_recall(spark):
     assert rec >= 0.9, f"tie-aware recall@10 {rec:.4f} < 0.9"
 
 
-def _list_layout(name, base):
-    """(codec, save(out), load(spark, out) -> (entries, centroids)) of
-    one saved IVF list layout per codec, nlist=8."""
-    from filter_vectordb_spark.index import ivf, ivfpq, ivfsq
-    from filter_vectordb_spark.index.pq import pq_codec
-    from filter_vectordb_spark.index.sq import sq_codec
-
-    if name == "flat":
-        built = ivf.build_ivf(base, 8)
-        return ivf.FLAT, lambda out: ivf.save_ivf(*built, out), ivf.load_ivf
-    if name == "sq8":
-        e, c, vmin, vmax = ivfsq.build_ivfsq(base, nlist=8)
-        return (
-            sq_codec(vmin, vmax),
-            lambda out: ivfsq.save_ivfsq(e, c, vmin, vmax, out),
-            lambda spark, out: ivfsq.load_ivfsq(spark, out)[:2],
-        )
-    e, c, cb = ivfpq.build_ivfpq(base, nlist=8, nsub=32, ksub=64)
-    return (
-        pq_codec(cb),
-        lambda out: ivfpq.save_ivfpq(e, c, cb, out),
-        lambda spark, out: ivfpq.load_ivfpq(spark, out)[:2],
-    )
-
-
 @pytest.mark.parametrize(
     "layout,metric",
     [("flat", "l2"), ("flat", "ip"), ("sq8", "l2"), ("sq8", "ip"), ("pq", "l2")],
 )
 def test_direct_read_equals_dataframe_path(tmp_path, spark, base, layout, metric):
-    """The serving-path direct pyarrow read (entries_dir) must return the
-    exact rows of the DataFrame-scan path for every list codec — same
-    index, same probes, same merge order (ivf.search contract)."""
-    from filter_vectordb_spark.index.ivf import search
-
-    codec, save, load = _list_layout(layout, base)
-    out = str(tmp_path / layout)
-    save(out)
-    e2, c2 = load(spark, out)
+    """The serving-path direct pyarrow read (a loaded layout's entries)
+    must return the exact rows of the DataFrame-scan path for every list
+    codec — same index, same probes, same merge order (ivf.search
+    contract)."""
+    train = {"nsub": 32, "ksub": 64} if layout == "pq" else {}
+    e2, c2, codec = build_index(base, str(tmp_path / layout), layout, 8, **train)
     q = dense_queries(spark, SF_DIR)
     # .alias() pins `want` to the DataFrame route (the identity match
     # would otherwise auto-delegate both sides to the direct path and
@@ -331,29 +274,22 @@ def test_direct_read_equals_dataframe_path(tmp_path, spark, base, layout, metric
     want = search(q, e2.alias("e"), c2, codec, base, K, 4, 32, metric).select(
         "qid", "rank", "id", "dist"
     )
-    got = search(
-        q, e2, c2, codec, base, K, 4, 32, metric, entries_dir=f"{out}/entries"
-    ).select("qid", "rank", "id", "dist")
+    got = search(q, e2, c2, codec, base, K, 4, 32, metric).select(
+        "qid", "rank", "id", "dist"
+    )
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
 
 
-def test_ivfsq_delegates_to_direct_read(tmp_path, spark, base, ivfsq, monkeypatch):
-    """VERDICT r7 #2: entries handed out by load_ivfsq over a local
+def test_ivfsq_delegates_to_direct_read(spark, base, ivfsq_dir, monkeypatch):
+    """VERDICT r7 #2: entries handed out by load_index over a local
     layout must auto-route to the direct-read path (hot-list query
-    slicing) even when the caller omits entries_dir; a DERIVED entries
-    DataFrame must NOT delegate (its transformation would be lost)."""
+    slicing); a DERIVED entries DataFrame must NOT delegate (its
+    transformation would be lost)."""
     import filter_vectordb_spark.index.ivf as mod
-    from filter_vectordb_spark.index.ivfsq import (
-        ivfsq_search,
-        load_ivfsq,
-        save_ivfsq,
-    )
 
-    entries, centroids, vmin, vmax = ivfsq
-    out = str(tmp_path / "ivfsq_delegate")
-    save_ivfsq(entries, centroids, vmin, vmax, out)
-    e2, c2, mn2, mx2 = load_ivfsq(spark, out)
+    out = ivfsq_dir
+    e2, c2, codec = load_index(spark, out)
     q = dense_queries(spark, SF_DIR)
 
     calls = []
@@ -364,14 +300,12 @@ def test_ivfsq_delegates_to_direct_read(tmp_path, spark, base, ivfsq, monkeypatc
         return real(spark_, entries_dir, *a, **kw)
 
     monkeypatch.setattr(mod, "_direct_scan", spy)
-    res = ivfsq_search(q, e2, c2, mn2, mx2, base, K, nprobe=4, refine=32)
+    res = search(q, e2, c2, codec, base, K, 4, 32)
     assert res.count() > 0
-    assert calls == [f"{out}/entries"], "load_ivfsq identity must delegate"
+    assert calls == [f"{out}/entries"], "load_index identity must delegate"
 
     calls.clear()
-    res2 = ivfsq_search(
-        q, e2.alias("e"), c2, mn2, mx2, base, K, nprobe=4, refine=32
-    )
+    res2 = search(q, e2.alias("e"), c2, codec, base, K, 4, 32)
     assert res2.count() > 0
     assert calls == [], "derived entries DataFrame must keep the DataFrame route"
 
@@ -412,18 +346,19 @@ def test_ivfsq_ip_10m_recall(spark):
         assert rec >= floor, f"{name}: tie-aware recall@10 {rec:.4f} < {floor}"
 
 
-def test_integer_snap_grid_is_lossless_and_exact_codes_serving(spark):
+def test_integer_snap_grid_is_lossless_and_exact_codes_serving(spark, tmp_path):
     """uint8-corpus serving mode: train_sq snaps an integer corpus's grid
-    to scale 1 (lossless — codes roundtrip exactly), and
-    ivfsq_search(exact_codes=True) equals brute-force IP k-NN while
+    to scale 1 (lossless — codes roundtrip exactly), and the exact sq8
+    codec (load_index(exact=True)) equals brute-force IP k-NN while
     skipping the rescore half of the pipeline.  Float corpora must NOT
     snap (the un-snapped grid is strictly finer there)."""
-    from filter_vectordb_spark.index.ivfsq import build_ivfsq, ivfsq_search
     from filter_vectordb_spark.index.sq import is_lossless_grid
     from filter_vectordb_spark.sources.synth import synth_queries, synth_uint8_base
 
     base = synth_uint8_base(spark, n=2000).select("id", "emb").localCheckpoint()
-    entries, centroids, vmin, vmax = build_ivfsq(base, nlist=8)
+    build_index(base, str(tmp_path), "sq8", 8)
+    entries, centroids, codec = load_index(spark, str(tmp_path), exact=True)
+    vmin, vmax = codec.state
     assert is_lossless_grid(vmin, vmax)
     # roundtrip exactness: decode(encode(x)) == x on every component
     from filter_vectordb_spark.index.sq import encode_sq
@@ -433,10 +368,9 @@ def test_integer_snap_grid_is_lossless_and_exact_codes_serving(spark):
     Cc = np.stack(pdf["codes"].to_numpy()).astype(np.float64) + 128.0
     assert np.array_equal(vmin[None, :] + Cc, X)
     q = synth_queries(spark, nq=16).select("qid", "qemb")
-    got = ivfsq_search(
-        entries=entries, centroids=centroids, vmin=vmin, vmax=vmax,
+    got = search(
+        entries=entries, centroids=centroids, codec=codec,
         queries=q, base=base, k=K, nprobe=8, refine=32, metric="ip",
-        exact_codes=True,
     ).select("qid", "rank", "id")
     want = knn_join(q, base, K, metric="ip").select("qid", "rank", "id")
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
@@ -474,29 +408,25 @@ def test_lossless_certificate_rejects_adversarial_corpora(spark):
     assert not is_lossless_grid(vmin_b, vmax_b)
 
 
-def test_exact_codes_rejects_lossy_grid_and_float_queries(spark, base, codes, grid):
+def test_exact_codes_rejects_lossy_grid_and_float_queries(spark, base, codes, grid, tmp_path):
     """exact_codes must refuse a non-snapped (float-corpus) grid, and a
     snapped index must refuse non-integer queries — silent approximation
     is never allowed under the exactness flag."""
-    from filter_vectordb_spark.index.ivfsq import build_ivfsq, ivfsq_search
     from filter_vectordb_spark.index.sq import is_lossless_grid
     from filter_vectordb_spark.sources.synth import synth_uint8_base
 
     vmin, vmax = grid  # float fixture: must NOT have snapped
     assert not is_lossless_grid(vmin, vmax)
     ib = synth_uint8_base(spark, n=500).select("id", "emb").localCheckpoint()
-    entries, centroids, ivmin, ivmax = build_ivfsq(ib, nlist=4)
+    build_index(ib, str(tmp_path), "sq8", 4)
+    entries, centroids, icodec = load_index(spark, str(tmp_path), exact=True)
     q_float = dense_queries(spark, SF_DIR)
     with pytest.raises(ValueError, match="lossless"):
-        ivfsq_search(
-            q_float, entries, centroids, vmin, vmax, ib, K, nprobe=4,
-            refine=32, metric="ip", exact_codes=True,
+        search(
+            q_float, entries, centroids, sq_codec(vmin, vmax, True), ib, K, 4, 32, "ip"
         )
     with pytest.raises(Exception, match="integer-valued"):
-        ivfsq_search(
-            q_float, entries, centroids, ivmin, ivmax, ib, K, nprobe=4,
-            refine=32, metric="ip", exact_codes=True,
-        ).count()
+        search(q_float, entries, centroids, icodec, ib, K, 4, 32, "ip").count()
 
 
 def test_rank_smallest_matches_argpartition():
