@@ -60,7 +60,9 @@ class BaseEngine(ABC):
         swaps the sf_dir fixture for the staged 100k scale fixture, so
         the same engine grid can be curved at bench scale (the curve's
         QPS column is then batch throughput, matching how BASELINE.md
-        numbers are defined — VERDICT r4 #5)."""
+        numbers are defined — VERDICT r4 #5).  That fixture is read raw,
+        `emb` BINARY: the scans, index builds and rescore joins decode it
+        themselves (operators.knn.flatten_fixed_list)."""
         if self.index_params.get("source") == "synth100k":
             from filter_vectordb_spark.registry import _synth100k_base
 
@@ -68,19 +70,6 @@ class BaseEngine(ABC):
         from filter_vectordb_spark.sources.vectors import dense_vectors
 
         return dense_vectors(spark, sf_dir).select("id", "emb")
-
-    def _scan_source(self, spark: SparkSession, sf_dir: str) -> DataFrame:
-        """(id, emb) for knn_join's vectorized scan.  The staged synth100k
-        base is read raw — `emb` BINARY, which the scan kernel decodes
-        itself (operators.knn.flatten_fixed_list) — rather than through
-        the loader's list view, whose decode ran a second Python worker
-        in every scan task; other sources are _base_source's frame."""
-        if self.index_params.get("source") == "synth100k":
-            from filter_vectordb_spark.registry import _index_cache_dir, _synth100k_base
-
-            _synth100k_base(spark)  # stages the files when absent
-            return spark.read.parquet(_index_cache_dir("synth100k_v2", "base")).select("id", "emb")
-        return self._base_source(spark, sf_dir)
 
     def _cache_key(self, sf_dir: str) -> str:
         """Index-cache key: the synth fixture has its own cache namespace
@@ -105,5 +94,5 @@ class BaseEngine(ABC):
         """(qid, id) exact ground truth for recall@k."""
         from filter_vectordb_spark.operators.knn import knn_join
 
-        base = self._scan_source(spark, sf_dir)
+        base = self._base_source(spark, sf_dir)
         return knn_join(queries, base, k, metric=self.metric).select("qid", "id")

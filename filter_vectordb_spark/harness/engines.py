@@ -25,13 +25,10 @@ class BruteForceEngine(BaseEngine):
 
     def fit(self, spark: SparkSession, sf_dir: str) -> None:
         self.base = self._base_source(spark, sf_dir)
-        self.scan_base = self._scan_source(spark, sf_dir)
 
     def query(self, queries: DataFrame, k: int) -> DataFrame:
         strategy = self.query_args.get("strategy", "vectorized")
-        # the expr strategy's Spark array expressions need the list frame
-        base = self.scan_base if strategy == "vectorized" else self.base
-        return knn_join(queries, base, k, metric=self.metric, strategy=strategy)
+        return knn_join(queries, self.base, k, metric=self.metric, strategy=strategy)
 
 
 class FilteredEngine(BaseEngine):

@@ -101,23 +101,28 @@ def _encode_with_tags(base: DataFrame, vmin: np.ndarray, vmax: np.ndarray) -> Da
     lo = vmin.copy()
 
     def enc(it):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in it:
-            if len(pdf) == 0:
+        from filter_vectordb_spark.operators.knn import flatten_fixed_list
+
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            X = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
+            X = flatten_fixed_list(batch.column("emb"), batch.num_rows).astype(np.float64)
             C = np.clip(np.rint((X - lo[None, :]) / scale[None, :]), 0, 255)
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(dtype=np.int64),
-                    "codes": list((C - 128).astype(np.int8)),
-                    "tags": pdf["tags"],
-                    "xn": np.einsum("ij,ij->i", X, X),
-                }
+            codes = (C - 128).astype(np.int8)
+            offs = pa.array(np.arange(0, codes.size + 1, codes.shape[1], dtype=np.int32))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("id"),
+                    pa.ListArray.from_arrays(offs, pa.array(codes.ravel())),
+                    batch.column("tags"),
+                    pa.array(np.einsum("ij,ij->i", X, X)),
+                ],
+                ["id", "codes", "tags", "xn"],
             )
 
-    return base.select("id", "emb", "tags").mapInPandas(
+    return base.select("id", "emb", "tags").mapInArrow(
         enc, schema="id long, codes array<tinyint>, tags array<int>, xn double"
     )
 

@@ -107,29 +107,25 @@ def assign_to_centroids(rows: DataFrame, C: np.ndarray, cids: np.ndarray) -> Dat
     """(id, emb, centroid_id): nearest-centroid assignment of arbitrarily
     many rows — one Arrow pass, centroid matrix rides the task closure
     (nlist × d floats).  The streaming-insert kernel, exposed for builds
-    whose coarse quantizer was trained driver-side."""
-    import pandas as pd
+    whose coarse quantizer was trained driver-side.  `emb` passes
+    through in the type it was given."""
+    import pyarrow as pa
 
     C32 = C.astype(np.float32)
     cn = (C32 * C32).sum(axis=1)
     cid_arr = np.asarray(cids, dtype=np.int64)
 
     def assign(it):
-        for pdf in it:
-            if len(pdf) == 0:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            X = np.stack(pdf["emb"].to_numpy()).astype(np.float32)
+            X = flatten_fixed_list(batch.column("emb"), batch.num_rows).astype(np.float32)
             D = cn[None, :] - 2.0 * (X @ C32.T)  # ‖x‖² constant per row
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(dtype=np.int64),
-                    "emb": pdf["emb"],
-                    "centroid_id": cid_arr[D.argmin(axis=1)].astype(np.int32),
-                }
-            )
+            cid = cid_arr[D.argmin(axis=1)].astype(np.int32)
+            yield batch.append_column("centroid_id", pa.array(cid))
 
     emb_type = dict(rows.dtypes)["emb"]
-    return rows.select("id", "emb").mapInPandas(
+    return rows.select("id", "emb").mapInArrow(
         assign, schema=f"id long, emb {emb_type}, centroid_id int"
     )
 
@@ -160,11 +156,9 @@ def build_ivf(
         if not train_rows:
             raise ValueError("coarse='numpy' requires train_rows (bounded sample)")
         spark = base.sparkSession
-        pdf = (
-            base.select("id", "emb").orderBy("id").limit(train_rows).toPandas()
-        )
-        X = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
-        C = _lloyd_blocked(X, pdf["id"].to_numpy(dtype=np.int64), nlist, max_iter)
+        tbl = base.select("id", "emb").orderBy("id").limit(train_rows).toArrow()
+        X = flatten_fixed_list(tbl.column("emb"), tbl.num_rows).astype(np.float64)
+        C = _lloyd_blocked(X, tbl.column("id").to_numpy(), nlist, max_iter)
         cids = np.arange(len(C), dtype=np.int64)
         centroids = spark.createDataFrame(
             [(int(i), [float(x) for x in c]) for i, c in enumerate(C)],
@@ -174,9 +168,30 @@ def build_ivf(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    feat = base.select(
-        "id", "emb", array_to_vector(F.col("emb").cast("array<double>")).alias("features")
-    )
+    if dict(base.dtypes)["emb"] == "binary":
+        # raw uint8 base: the features come from one Arrow decode (a list
+        # `emb` keeps the JVM cast below, with no Python stage)
+        import pyarrow as pa
+
+        def features(it):
+            for batch in it:
+                n = batch.num_rows
+                if n == 0:
+                    continue
+                X = flatten_fixed_list(batch.column("emb"), n).astype(np.float64)
+                offs = np.arange(0, X.size + 1, X.shape[1], dtype=np.int32)
+                yield batch.append_column(
+                    "features", pa.ListArray.from_arrays(pa.array(offs), pa.array(X.ravel()))
+                )
+
+        feat = base.select("id", "emb").mapInArrow(
+            features, "id long, emb binary, features array<double>"
+        )
+        feat = feat.withColumn("features", array_to_vector("features"))
+    else:
+        feat = base.select(
+            "id", "emb", array_to_vector(F.col("emb").cast("array<double>")).alias("features")
+        )
     # maxIter=8 default: coarse-quantizer centroids don't need convergence —
     # probe quality saturates quickly and full-probe correctness never
     # depends on the clustering (the reference's IVF trains similarly
@@ -211,28 +226,24 @@ def ivf_insert(
     closure (nlist × d floats — kilobytes); no shuffle: on a lake layout
     the append lands as new files inside each centroid partition.
     Full-probe search over the result is still exactly brute force, so
-    the maintained index stays oracle-checkable."""
-    import pandas as pd
+    the maintained index stays oracle-checkable.  `emb` passes through
+    in the type it was given."""
+    import pyarrow as pa
 
     C, cids = _centroid_matrix(centroids)  # nlist rows — tiny
     cn = (C * C).sum(axis=1)
 
     def assign(it):
-        for pdf in it:
-            if len(pdf) == 0:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            X = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
+            X = flatten_fixed_list(batch.column("emb"), batch.num_rows).astype(np.float64)
             D = cn[None, :] - 2.0 * (X @ C.T)  # ‖x‖² constant per row
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(dtype=np.int64),
-                    "emb": pdf["emb"],
-                    "centroid_id": cids[D.argmin(axis=1)].astype(np.int32),
-                }
-            )
+            cid = cids[D.argmin(axis=1)].astype(np.int32)
+            yield batch.append_column("centroid_id", pa.array(cid))
 
     emb_type = dict(new_rows.dtypes)["emb"]
-    new_assigned = new_rows.select("id", "emb").mapInPandas(
+    new_assigned = new_rows.select("id", "emb").mapInArrow(
         assign, schema=f"id long, emb {emb_type}, centroid_id int"
     )
     return assignments.select("id", "emb", "centroid_id").unionByName(new_assigned)
@@ -388,16 +399,18 @@ def encode_codes(base: DataFrame, codes_of: Callable, b_id: str = "id", b_vec: s
     """(id BIGINT, codes ARRAY<TINYINT>) — a codec's encode: one Arrow
     pass over the base, codes_of(X float64 (n, d)) → int8 (n, width);
     the codec's state rides the closure (kilobytes)."""
-    import pandas as pd
+    import pyarrow as pa
 
     def enc(it):
-        for pdf in it:
-            if len(pdf):
-                X = np.stack(pdf[b_vec].to_numpy()).astype(np.float64)
-                codes = list(codes_of(X))
-                yield pd.DataFrame({"id": pdf[b_id].to_numpy(dtype=np.int64), "codes": codes})
+        for batch in it:
+            n = batch.num_rows
+            if n:
+                codes = codes_of(flatten_fixed_list(batch.column(b_vec), n).astype(np.float64))
+                offs = pa.array(np.arange(0, codes.size + 1, codes.shape[1], dtype=np.int32))
+                codes = pa.ListArray.from_arrays(offs, pa.array(codes.ravel()))
+                yield pa.RecordBatch.from_arrays([batch.column(b_id), codes], ["id", "codes"])
 
-    return base.select(b_id, b_vec).mapInPandas(enc, schema="id long, codes array<tinyint>")
+    return base.select(b_id, b_vec).mapInArrow(enc, schema="id long, codes array<tinyint>")
 
 
 # -------------------------------------------------------------- list layout

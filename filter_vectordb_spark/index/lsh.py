@@ -7,7 +7,7 @@ buckets and exact-score only co-bucketed vectors — the same
 bucket-then-verify shape as MinHash dedup, applied to embeddings.
 
 Deterministic: hyperplanes come from a seeded RandomState, broadcast to
-executors; bucketing is a map-side pandas kernel (no shuffle until the
+executors; bucketing is a map-side Arrow kernel (no shuffle until the
 candidate join).  Approximate by design → verified by recall tests
 against the exact cosine plan (SURVEY.md §5 methodology), rows-only at
 the driver gate.
@@ -15,13 +15,11 @@ the driver gate.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from filter_vectordb_spark.operators.knn import flatten_fixed_list
 from filter_vectordb_spark.operators.topk import per_group_topk
 
 N_BITS = 16
@@ -52,22 +50,24 @@ def lsh_bucket_table(
     H = _hyperplanes(dim, seed)
     bc = emb.sparkSession.sparkContext.broadcast(H)
 
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def kernel(it):
+        import pyarrow as pa
+
         bH = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            X = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            X = flatten_fixed_list(batch.column(vec_col), batch.num_rows).astype(np.float64)
             keys = _band_keys(X, bH)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            yield pd.DataFrame(
+            ids = batch.column(id_col).to_numpy(zero_copy_only=False).astype(np.int64)
+            yield pa.RecordBatch.from_pydict(
                 {
                     "id": np.repeat(ids, N_BANDS),
                     "bucket": keys.ravel(),
                 }
             )
 
-    return emb.select(F.col(id_col).alias(id_col), F.col(vec_col).alias(vec_col)).mapInPandas(
+    return emb.select(F.col(id_col).alias(id_col), F.col(vec_col).alias(vec_col)).mapInArrow(
         kernel, schema="id BIGINT, bucket BIGINT"
     )
 

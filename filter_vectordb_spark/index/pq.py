@@ -14,7 +14,7 @@ Nearest Neighbor Search", TPAMI 2011):
            sample (driver-side numpy Lloyd's — faiss trains PQ on a
            sample the same way; the codebook is nsub·ksub·dsub floats,
            kilobytes, a broadcast variable not a dataset).
-  encode = one Arrow mapInPandas pass over the base: argmin centroid per
+  encode = one mapInArrow pass over the base: argmin centroid per
            subspace → (id, codes ARRAY<TINYINT>), ~nsub bytes/row.
   score  = ADC (asymmetric distance computation): per query an
            (nsub × ksub) lookup table of exact subspace distances, then
@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filter_vectordb_spark.index.ivf import Codec, encode_codes
-from filter_vectordb_spark.operators.knn import topk_blocked
+from filter_vectordb_spark.operators.knn import flatten_fixed_list, topk_blocked
 
 #: train on at most this many rows (lowest ids — deterministic), mirroring
 #: faiss's practice of training quantizers on a bounded sample
@@ -67,13 +67,13 @@ def train_pq(
     """Returns codebooks (nsub, ksub, dsub) float64.  Sample = the
     MAX_TRAIN_ROWS lowest-id rows (deterministic; the quantizer needs a
     distribution sketch, not the corpus)."""
-    pdf = (
+    tbl = (
         base.select(F.col(b_id).alias("id"), F.col(b_vec).alias("emb"))
         .orderBy("id")
         .limit(MAX_TRAIN_ROWS)
-        .toPandas()
+        .toArrow()
     )
-    X = np.stack(pdf["emb"].to_numpy()).astype(np.float64)
+    X = flatten_fixed_list(tbl.column("emb"), tbl.num_rows).astype(np.float64)
     d = X.shape[1]
     if d % nsub != 0:
         raise ValueError(f"dim {d} not divisible by nsub {nsub}")

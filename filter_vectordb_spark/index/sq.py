@@ -23,15 +23,12 @@ per-dimension affine grid:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filter_vectordb_spark.index.ivf import Codec, encode_codes
-from filter_vectordb_spark.operators.knn import topk_blocked
+from filter_vectordb_spark.operators.knn import flatten_fixed_list, topk_blocked
 
 
 def train_sq(
@@ -54,12 +51,14 @@ def train_sq(
     Non-integer corpora are never snapped: for data spanning less than
     255 the un-snapped grid is strictly finer."""
 
-    def partial(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
+    def partial(it):
+        import pyarrow as pa
+
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            X = np.stack(pdf[b_vec].to_numpy()).astype(np.float64)
-            yield pd.DataFrame(
+            X = flatten_fixed_list(batch.column(b_vec), batch.num_rows).astype(np.float64)
+            yield pa.RecordBatch.from_pydict(
                 {
                     "pos": np.arange(X.shape[1], dtype=np.int32),
                     "mn": X.min(axis=0),
@@ -72,7 +71,7 @@ def train_sq(
 
     stats = (
         base.select(b_vec)
-        .mapInPandas(partial, schema="pos int, mn double, mx double, allint boolean")
+        .mapInArrow(partial, schema="pos int, mn double, mx double, allint boolean")
         .groupBy("pos")
         .agg(
             F.min("mn").alias("mn"),

@@ -423,13 +423,12 @@ def embedding_near_dup(
 
     Block-nested self-join through the Arrow/BLAS kernel: one side is
     broadcast as a normalized float64 matrix, the other streams through
-    mapInPandas; each batch emits only its ≥τ pairs — O(n²/batch) FLOPs at
+    mapInArrow; each batch emits only its ≥τ pairs — O(n²/batch) FLOPs at
     BLAS speed, O(matches) shuffle.  The broadcast side caps at the same
     limit as the k-NN join; beyond that, bucket first (IVF/LSH) and verify
     candidates exactly, like minhash_dedup_pairs.
     """
     import numpy as np
-    import pandas as pd
 
     import filter_vectordb_spark.operators.knn as _knn
 
@@ -453,27 +452,29 @@ def embedding_near_dup(
         # beyond the broadcast cap: bucket-then-verify scale path
         # (approximate candidate recall, exact precision — see its doc)
         return embedding_near_dup_bucketed(emb, tau, id_col, vec_col)
-    pdf = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).toPandas()
-    ids_all = pdf["id"].to_numpy(dtype=np.int64)
-    V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+    tbl = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).toArrow()
+    ids_all = tbl.column("id").to_numpy().astype(np.int64)
+    V = _knn.flatten_fixed_list(tbl.column("v"), tbl.num_rows).astype(np.float64)
     norms = np.sqrt((V * V).sum(axis=1))
     bc = emb.sparkSession.sparkContext.broadcast((ids_all, V, norms))
 
     def kernel(it):
+        import pyarrow as pa
+
         bids, bV, bn = bc.value
         for batch in it:
-            if len(batch) == 0:
+            if batch.num_rows == 0:
                 continue
-            ids = batch["id"].to_numpy(dtype=np.int64)
-            X = np.stack(batch["v"].to_numpy()).astype(np.float64)
+            ids = batch.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
+            X = _knn.flatten_fixed_list(batch.column("v"), batch.num_rows).astype(np.float64)
             xn = np.sqrt((X * X).sum(axis=1))
             S = (X @ bV.T) / (xn[:, None] * bn[None, :])
             ii, jj = np.nonzero((S >= tau) & (ids[:, None] < bids[None, :]))
-            yield pd.DataFrame({"id_a": ids[ii], "id_b": bids[jj]})
+            yield pa.RecordBatch.from_pydict({"id_a": ids[ii], "id_b": bids[jj]})
 
     return emb.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    ).mapInPandas(kernel, schema="id_a BIGINT, id_b BIGINT")
+    ).mapInArrow(kernel, schema="id_a BIGINT, id_b BIGINT")
 
 
 def embedding_near_dup_bucketed(
@@ -497,7 +498,8 @@ def embedding_near_dup_bucketed(
     Recall vs the brute-force plan is pinned in tests/test_dedup.py.
     """
     import numpy as np
-    import pandas as pd
+
+    from filter_vectordb_spark.operators.knn import flatten_fixed_list
 
     bits_per_band = n_bits // n_bands
     e = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
@@ -506,22 +508,24 @@ def embedding_near_dup_bucketed(
     bc = emb.sparkSession.sparkContext.broadcast(H)
 
     def bucket_kernel(it):
+        import pyarrow as pa
+
         bH = bc.value
-        for pdf in it:
-            if len(pdf) == 0:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            X = np.stack(pdf["v"].to_numpy()).astype(np.float64)
+            X = flatten_fixed_list(batch.column("v"), batch.num_rows).astype(np.float64)
             bits = (X @ bH.T) > 0
-            ids = pdf["id"].to_numpy(dtype=np.int64)
+            ids = batch.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
             keys = np.zeros((len(X), n_bands), dtype=np.int64)
             for b in range(n_bands):
                 chunk = bits[:, b * bits_per_band : (b + 1) * bits_per_band]
                 keys[:, b] = (b << 32) | (chunk @ (1 << np.arange(bits_per_band)))
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {"id": np.repeat(ids, n_bands), "bucket": keys.ravel()}
             )
 
-    buckets = e.mapInPandas(bucket_kernel, schema="id BIGINT, bucket BIGINT")
+    buckets = e.mapInArrow(bucket_kernel, schema="id BIGINT, bucket BIGINT")
     cand = (
         buckets.alias("a")
         .join(buckets.alias("b"), "bucket")
@@ -536,17 +540,17 @@ def embedding_near_dup_bucketed(
     pairs = cand.join(va, "id_a").join(vb, "id_b")
 
     def verify_kernel(it):
-        for pdf in it:
-            if len(pdf) == 0:
+        for batch in it:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            A = np.stack(pdf["va"].to_numpy()).astype(np.float64)
-            B = np.stack(pdf["vb"].to_numpy()).astype(np.float64)
+            A = flatten_fixed_list(batch.column("va"), n).astype(np.float64)
+            B = flatten_fixed_list(batch.column("vb"), n).astype(np.float64)
             s = (A * B).sum(1) / (
                 np.sqrt((A * A).sum(1)) * np.sqrt((B * B).sum(1))
             )
-            keep = s >= tau
-            yield pd.DataFrame(
-                {"id_a": pdf["id_a"][keep], "id_b": pdf["id_b"][keep]}
-            )
+            yield batch.select(["id_a", "id_b"]).filter(s >= tau)
 
-    return pairs.mapInPandas(verify_kernel, schema="id_a BIGINT, id_b BIGINT")
+    return pairs.select("id_a", "id_b", "va", "vb").mapInArrow(
+        verify_kernel, schema="id_a BIGINT, id_b BIGINT"
+    )

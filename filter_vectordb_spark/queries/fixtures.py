@@ -64,7 +64,9 @@ def _write_u8_base(df: DataFrame, out: str, n_files: int = _BASE_FILES) -> None:
     FIXED_LEN_BYTE_ARRAY(d), PLAIN and uncompressed), `_SUCCESS` last.
     A direct-read scan then reads d plain bytes per row — no repetition
     levels, dictionary or list offsets to decode (operators.knn.
-    flatten_fixed_list views them as (n, d) uint8).  Each range
+    flatten_fixed_list views them as (n, d) uint8).  The loaders serve
+    these files as read, `emb` BINARY: every dense reader (scans, index
+    builds, rescore joins) decodes it with flatten_fixed_list.  Each range
     partition is written by pyarrow inside its task.  A value that is
     not an integer in 0..255 raises ValueError naming `emb` and the
     smallest offending id; nothing wraps into uint8.  (_write_base, kept
@@ -163,45 +165,12 @@ def _u8_layout_ok(d: str, min_files: int = _MIN_BASE_FILES, dim: int = 192) -> b
         return False
 
 
-def _u8_view(spark: SparkSession, path: str) -> DataFrame:
-    """The public (id BIGINT, emb ARRAY<INT>) frame over a uint8 base:
-    one mapInArrow that decodes `emb` with the scans' decoder
-    (operators.knn.flatten_fixed_list) and rebuilds list<int32>, so index
-    builds, harness engines and rescore joins see the list schema and
-    values.  The direct-read scans (knn_join base_dir=) and the harness's
-    exact scans (harness.base._scan_source) read the files themselves and
-    never pass through this view.  A job that scans the view several
-    times persists it first (_build_ivfsq): the decode worker otherwise
-    runs beside the consumer's in every task.  (A decode in Spark SQL
-    instead — split of the ISO-8859-1 string, ascii per element —
-    measured 4.3x slower than this view over the 1M base on 4 cores.)"""
-    import numpy as np
-
-    def decode(it):
-        import pyarrow as pa
-
-        from filter_vectordb_spark.operators.knn import flatten_fixed_list
-
-        for b in it:
-            n = b.num_rows
-            if n == 0:
-                continue
-            X = flatten_fixed_list(b.column("emb"), n)
-            d = X.shape[1]
-            emb = pa.ListArray.from_arrays(
-                pa.array(np.arange(0, n * d + 1, d, dtype=np.int32)),
-                pa.array(X.astype(np.int32).ravel()),
-            )
-            yield pa.RecordBatch.from_arrays([b.column("id"), emb], ["id", "emb"])
-
-    return spark.read.parquet(path).mapInArrow(decode, "id BIGINT, emb ARRAY<INT>")
-
-
 # ------------------------------------------------------------- 100k fixture
 
 
 def _synth100k_base(spark: SparkSession) -> DataFrame:
-    """Stage (once) and load the 100k × 192-d v2 fixture as (id, emb)."""
+    """Stage (once) and load the 100k × 192-d v2 fixture as (id, emb),
+    `emb` BINARY (_write_u8_base's files as read)."""
     from filter_vectordb_spark.sources.synth import synth_uint8_base
 
     out = _index_cache_dir("synth100k_v2", "base")
@@ -210,7 +179,7 @@ def _synth100k_base(spark: SparkSession) -> DataFrame:
     # 32 ranges empty, and an exact check would restage every session
     if not _u8_layout_ok(out, 16):
         _write_u8_base(synth_uint8_base(spark).select("id", "emb"), out, 32)
-    return _u8_view(spark, out)
+    return spark.read.parquet(out)
 
 
 def _synth_queries_staged(spark: SparkSession, nq: int) -> DataFrame:
@@ -256,26 +225,7 @@ def _synth1m_base(spark: SparkSession) -> DataFrame:
     bdir = _index_cache_dir("synth1m_v2", "base")
     if not _u8_layout_ok(bdir):
         _write_u8_base(synth_uint8_base(spark, n=1_000_000).select("id", "emb"), bdir)
-    return _u8_view(spark, bdir)
-
-
-def _build_ivfsq(base: DataFrame, out: str, **kw) -> None:
-    """Build (coarse="numpy") and save an IVF+SQ8 index over a base view.
-    The build scans its base four times (sample, assignment, SQ grid,
-    encode), so the view is persisted to disk first: decoded once, the
-    build's own Python stages then reuse the decode stage's idle workers
-    instead of running one decode worker beside each of theirs — that
-    second worker per task OOM-killed the 1M build at 8 local tasks on a
-    16 GB host, where the list-format parent peaked at 15.1 GB."""
-    from pyspark import StorageLevel
-
-    from filter_vectordb_spark.index.ivf import build_index
-
-    base = base.persist(StorageLevel.DISK_ONLY)
-    try:
-        build_index(base, out, "sq8", coarse="numpy", **kw)
-    finally:
-        base.unpersist()
+    return spark.read.parquet(bdir)
 
 
 def _ivfsq_1m(spark: SparkSession):
@@ -288,12 +238,12 @@ def _ivfsq_1m(spark: SparkSession):
     the deterministic driver-side coarse trainer (coarse="numpy" on the
     id-ordered sample) — MLlib's limit()-sampled clustering varied
     across rebuilds, which silently shifted partial-probe recall."""
-    from filter_vectordb_spark.index.ivf import load_index
+    from filter_vectordb_spark.index.ivf import build_index, load_index
 
     base = _synth1m_base(spark)
     out = _index_cache_dir("synth1m_v2", "ivfsq256_g2")
     if load_index(spark, out) is None:
-        _build_ivfsq(base, out, nlist=256, max_iter=16, train_rows=100_000)
+        build_index(base, out, "sq8", coarse="numpy", nlist=256, max_iter=16, train_rows=100_000)
     return (*load_index(spark, out, exact=True), out)
 
 
@@ -312,7 +262,7 @@ def _synth10m_base(spark: SparkSession) -> DataFrame:
     bdir = _index_cache_dir("synth10m_v2", "base")
     if not _u8_layout_ok(bdir):
         _write_u8_base(synth_uint8_base(spark, n=_10M_N).select("id", "emb"), bdir)
-    return _u8_view(spark, bdir)
+    return spark.read.parquet(bdir)
 
 
 def _ivfsq_10m(spark: SparkSession):
@@ -321,12 +271,14 @@ def _ivfsq_10m(spark: SparkSession):
     sample — MLlib's scalar loops need minutes per iteration at √N-rule
     list counts where the BLAS block needs ~1 s); assignment of the full
     10M rows is one distributed Arrow pass.  Returns _ivfsq_1m's tuple."""
-    from filter_vectordb_spark.index.ivf import load_index
+    from filter_vectordb_spark.index.ivf import build_index, load_index
 
     base = _synth10m_base(spark)
     out = _index_cache_dir("synth10m_v2", f"ivfsq{_10M_NLIST}_g1")
     if load_index(spark, out) is None:
-        _build_ivfsq(base, out, nlist=_10M_NLIST, max_iter=10, train_rows=200_000)
+        build_index(
+            base, out, "sq8", coarse="numpy", nlist=_10M_NLIST, max_iter=10, train_rows=200_000
+        )
     return (*load_index(spark, out, exact=True), out)
 
 

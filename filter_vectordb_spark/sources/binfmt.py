@@ -77,28 +77,30 @@ def write_dense_bin_distributed(
     )
 
     def write_part(it):
-        import pandas as pd
+        import pyarrow as pa
+
+        from filter_vectordb_spark.operators.knn import flatten_fixed_list
 
         rows = 0
         with open(path, "r+b") as f:
-            for pdf in it:
-                if not len(pdf):
+            for batch in it:
+                if not batch.num_rows:
                     continue
-                ids = pdf[id_col].to_numpy(dtype=np.int64)
+                ids = batch.column(id_col).to_numpy(zero_copy_only=False).astype(np.int64)
                 order = np.argsort(ids)
                 ids = ids[order]
-                mat = np.stack(pdf[vec_col].to_numpy()[order]).astype(np_dtype)
+                mat = flatten_fixed_list(batch.column(vec_col), len(ids))[order].astype(np_dtype)
                 breaks = np.where(np.diff(ids) != 1)[0] + 1
                 for seg_ids, seg in zip(np.split(ids, breaks), np.split(mat, breaks)):
                     f.seek(8 + int(seg_ids[0]) * dim * itemsize)
                     f.write(np.ascontiguousarray(seg).tobytes())
                 rows += len(ids)
-        yield pd.DataFrame({"rows": [rows]})
+        yield pa.RecordBatch.from_pydict({"rows": [rows]}, pa.schema([("rows", pa.int64())]))
 
     written = (
         df.select(id_col, vec_col)
         .repartitionByRange(nparts, id_col)
-        .mapInPandas(write_part, schema="rows BIGINT")
+        .mapInArrow(write_part, schema="rows BIGINT")
         .agg({"rows": "sum"})
         .collect()[0][0]
     )

@@ -159,17 +159,18 @@ def test_index_engine_fit_saves_what_a_fresh_engine_loads(spark, engine):
 
 def test_bruteforce_scans_the_staged_base_raw(spark):
     """On the staged synth100k source the exact scan reads the base files
-    raw (`emb` BINARY, decoded by the scan kernel) instead of through the
-    loader's list view, and ranks exactly as the list view does."""
+    raw (`emb` BINARY, decoded by the scan kernel) and ranks exactly as a
+    scan over the generator's list frame does."""
     from filter_vectordb_spark.harness.engines import BruteForceEngine
     from filter_vectordb_spark.operators.knn import knn_join
+    from filter_vectordb_spark.sources.synth import synth_uint8_base
 
     eng = BruteForceEngine(metric="ip", index_params={"source": "synth100k"})
     eng.fit(spark, SF_DIR)
-    assert dict(eng.scan_base.dtypes)["emb"] == "binary"
-    assert dict(eng.base.dtypes)["emb"] == "array<int>"
+    assert dict(eng.base.dtypes)["emb"] == "binary"
     q = eng.default_queries(spark, SF_DIR).filter("qid < 8")
     got = eng.query(q, 10).select("qid", "rank", "id", "dist")
-    want = knn_join(q, eng.base, 10, metric="ip").select("qid", "rank", "id", "dist")
+    lists = synth_uint8_base(spark).select("id", "emb")
+    want = knn_join(q, lists, 10, metric="ip").select("qid", "rank", "id", "dist")
     assert got.count() == 80
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0

@@ -174,3 +174,124 @@ def test_load_index_refuses_lists_without_centroids(spark, ivf, tmp_path):
 
 def test_load_index_of_an_empty_directory_is_none(spark, tmp_path):
     assert load_index(spark, str(tmp_path)) is None
+
+
+@pytest.fixture(scope="module")
+def two_layouts(spark, tmp_path_factory):
+    """The same 2,000 rows staged as a Spark list base (_write_base) and
+    as a uint8 base (_write_u8_base), each read back as one id-sorted
+    partition, so order-sensitive trainers (MLlib k-means) see the same
+    input on both."""
+    from filter_vectordb_spark.queries.fixtures import _write_base, _write_u8_base
+    from filter_vectordb_spark.sources.synth import synth_uint8_base
+
+    src = synth_uint8_base(spark, n=2000).select("id", "emb")
+    root = tmp_path_factory.mktemp("two_layouts")
+    _write_base(src, str(root / "list"), 4)
+    _write_u8_base(src, str(root / "u8"), 4)
+    frames = {
+        name: spark.read.parquet(str(root / name)).repartition(1).sortWithinPartitions("id")
+        for name in ("list", "u8")
+    }
+    assert dict(frames["list"].dtypes)["emb"] == "array<int>"
+    assert dict(frames["u8"].dtypes)["emb"] == "binary"
+    return frames
+
+
+def _rows(df, *cols):
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def _read_train_sq(spark, b, tmp):
+    from filter_vectordb_spark.index.sq import train_sq
+
+    return [list(a) for a in train_sq(b)]
+
+
+def _read_encode_sq(spark, b, tmp):
+    import numpy as np
+
+    from filter_vectordb_spark.index.sq import encode_sq
+
+    return _rows(encode_sq(b, np.zeros(192), np.full(192, 255.0)), "id", "codes")
+
+
+def _read_build_ivf(coarse):
+    def read(spark, b, tmp):
+        kw = {"coarse": "numpy", "train_rows": 500} if coarse == "numpy" else {}
+        assignments, centroids = build_ivf(b, 4, max_iter=4, **kw)
+        return _rows(centroids, "centroid_id", "centroid"), _rows(assignments, "id", "centroid_id")
+
+    return read
+
+
+def _read_pq(spark, b, tmp):
+    from filter_vectordb_spark.index.pq import encode_pq, train_pq
+
+    cb = train_pq(b, nsub=4, ksub=8, iters=3)
+    return cb.tolist(), _rows(encode_pq(b, cb), "id", "codes")
+
+
+def _read_ivf_insert(spark, b, tmp):
+    import numpy as np
+
+    from filter_vectordb_spark.index.ivf import assign_to_centroids, ivf_insert
+
+    C = np.arange(4 * 192, dtype=np.float64).reshape(4, 192) % 251
+    cents = spark.createDataFrame(
+        [(i, c.tolist()) for i, c in enumerate(C)], "centroid_id INT, centroid ARRAY<DOUBLE>"
+    )
+    old = assign_to_centroids(b.filter("id < 1500"), C, np.arange(4))
+    merged = ivf_insert(old, cents, b.filter("id >= 1500"))
+    assert dict(merged.dtypes)["emb"] == dict(b.dtypes)["emb"]
+    return _rows(merged, "id", "centroid_id")
+
+
+def _read_lsh(spark, b, tmp):
+    from filter_vectordb_spark.index.lsh import lsh_bucket_table
+
+    return _rows(lsh_bucket_table(b, 192), "id", "bucket")
+
+
+def _read_pairwise(spark, b, tmp):
+    from filter_vectordb_spark.operators.knn import pairwise_scores
+    from filter_vectordb_spark.sources.synth import synth_queries
+
+    pairs = b.filter("id < 40").crossJoin(synth_queries(spark, nq=3).select("qid", "qemb"))
+    return [_rows(pairwise_scores(pairs, m), "qid", "id", "dist") for m in ("l2", "ip", "cos")]
+
+
+def _read_dense_bin(spark, b, tmp):
+    from filter_vectordb_spark.sources.binfmt import write_dense_bin_distributed
+
+    path = str(tmp / f"base_{dict(b.dtypes)['emb'][:3]}.u8bin")
+    assert write_dense_bin_distributed(b, path, "u8bin") == 2000
+    with open(path, "rb") as f:
+        return f.read()
+
+
+@pytest.mark.parametrize(
+    "read",
+    [
+        _read_train_sq,
+        _read_encode_sq,
+        _read_build_ivf("numpy"),
+        _read_build_ivf("mllib"),
+        _read_pq,
+        _read_ivf_insert,
+        _read_lsh,
+        _read_pairwise,
+        _read_dense_bin,
+    ],
+    ids=[
+        "train_sq", "encode_sq", "build_ivf_numpy", "build_ivf_mllib", "pq", "ivf_insert",
+        "lsh_bucket_table", "pairwise_scores", "write_dense_bin",
+    ],
+)
+def test_dense_readers_equal_on_list_and_uint8_bases(spark, two_layouts, tmp_path, read):
+    """Every dense reader decodes `emb` with operators.knn.
+    flatten_fixed_list, so a raw uint8 base (BINARY) gives the output the
+    same rows give as a Spark list base."""
+    want = read(spark, two_layouts["list"], tmp_path)
+    got = read(spark, two_layouts["u8"], tmp_path)
+    assert got == want

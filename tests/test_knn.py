@@ -178,11 +178,10 @@ def test_knn_join_direct_read_equals_dataframe_path(spark, tmp_path):
     return the exact rows of the DataFrame scan — same kernel over the
     same rows, across metrics and compute dtypes — over a Spark-written
     list base and over the uint8 fixed-size-binary base _write_u8_base
-    stages: the direct read of its files, the DataFrame route over its
-    list view, and the DataFrame route over its raw BinaryType read."""
-    import numpy as np
-
-    from filter_vectordb_spark.queries.fixtures import _u8_view, _write_u8_base
+    stages: the direct read of its files and the DataFrame route over
+    its raw BinaryType read.  strategy="expr" refuses the binary frame
+    by name."""
+    from filter_vectordb_spark.queries.fixtures import _write_u8_base
     from filter_vectordb_spark.sources.synth import synth_queries, synth_uint8_base
 
     src = synth_uint8_base(spark, n=3000).select("id", "emb")
@@ -191,17 +190,16 @@ def test_knn_join_direct_read_equals_dataframe_path(spark, tmp_path):
     staged = spark.read.parquet(out)
     u8 = str(tmp_path / "staged_u8")
     _write_u8_base(src, u8, 5)
-    view = _u8_view(spark, u8)
     raw = spark.read.parquet(u8)
-    assert view.schema.simpleString() == "struct<id:bigint,emb:array<int>>"
     assert raw.schema.simpleString() == "struct<id:bigint,emb:binary>"
-    assert view.exceptAll(staged).count() == 0 and staged.exceptAll(view).count() == 0
     q = synth_queries(spark, nq=12).select("qid", "qemb")
+    with pytest.raises(ValueError, match=r"'emb' is binary.*strategy='vectorized'"):
+        knn_join(q, raw, K, strategy="expr")
     for metric, dtype in (("l2", "float64"), ("ip", "float32"), ("cos", "float64")):
         want = knn_join(
             q, staged, K, metric=metric, compute_dtype=dtype
         ).select("qid", "rank", "id", "dist")
-        for b, d in ((staged, out), (view, u8), (view, None), (raw, None)):
+        for b, d in ((staged, out), (raw, u8), (raw, None)):
             got = knn_join(
                 q, b, K, metric=metric, compute_dtype=dtype, base_dir=d
             ).select("qid", "rank", "id", "dist")
@@ -319,7 +317,7 @@ def test_stale_list_base_restages_to_uint8(spark, tmp_path, monkeypatch):
     assert writes == [out] and emb_type() == pa.binary(192)
     second = fx._synth100k_base(spark)
     assert writes == [out]
-    assert second.schema.simpleString() == "struct<id:bigint,emb:array<int>>"
+    assert second.schema.simpleString() == "struct<id:bigint,emb:binary>"
     assert second.count() == first.count() == 100_000
 
 
