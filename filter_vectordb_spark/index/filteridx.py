@@ -103,7 +103,7 @@ def _encode_with_tags(base: DataFrame, vmin: np.ndarray, vmax: np.ndarray) -> Da
     def enc(it):
         import pyarrow as pa
 
-        from filter_vectordb_spark.operators.knn import flatten_fixed_list
+        from filter_vectordb_spark.operators.knn import flatten_fixed_list, list_column
 
         for batch in it:
             if batch.num_rows == 0:
@@ -111,11 +111,10 @@ def _encode_with_tags(base: DataFrame, vmin: np.ndarray, vmax: np.ndarray) -> Da
             X = flatten_fixed_list(batch.column("emb"), batch.num_rows).astype(np.float64)
             C = np.clip(np.rint((X - lo[None, :]) / scale[None, :]), 0, 255)
             codes = (C - 128).astype(np.int8)
-            offs = pa.array(np.arange(0, codes.size + 1, codes.shape[1], dtype=np.int32))
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("id"),
-                    pa.ListArray.from_arrays(offs, pa.array(codes.ravel())),
+                    list_column(codes),
                     batch.column("tags"),
                     pa.array(np.einsum("ij,ij->i", X, X)),
                 ],

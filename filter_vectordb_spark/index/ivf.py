@@ -48,6 +48,7 @@ from filter_vectordb_spark.operators.knn import (
     _topk_per_group,
     flatten_fixed_list,
     gemm_topk,
+    list_column,
     pairwise_scores,
     scan_units,
     union_query_chunks_df,
@@ -168,30 +169,18 @@ def build_ivf(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    if dict(base.dtypes)["emb"] == "binary":
-        # raw uint8 base: the features come from one Arrow decode (a list
-        # `emb` keeps the JVM cast below, with no Python stage)
-        import pyarrow as pa
-
-        def features(it):
-            for batch in it:
-                n = batch.num_rows
-                if n == 0:
-                    continue
+    def features(it):
+        for batch in it:
+            n = batch.num_rows
+            if n:
                 X = flatten_fixed_list(batch.column("emb"), n).astype(np.float64)
-                offs = np.arange(0, X.size + 1, X.shape[1], dtype=np.int32)
-                yield batch.append_column(
-                    "features", pa.ListArray.from_arrays(pa.array(offs), pa.array(X.ravel()))
-                )
+                yield batch.append_column("features", list_column(X))
 
-        feat = base.select("id", "emb").mapInArrow(
-            features, "id long, emb binary, features array<double>"
-        )
-        feat = feat.withColumn("features", array_to_vector("features"))
-    else:
-        feat = base.select(
-            "id", "emb", array_to_vector(F.col("emb").cast("array<double>")).alias("features")
-        )
+    emb_type = dict(base.dtypes)["emb"]
+    feat = base.select("id", "emb").mapInArrow(
+        features, f"id long, emb {emb_type}, features array<double>"
+    )
+    feat = feat.withColumn("features", array_to_vector("features"))
     # maxIter=8 default: coarse-quantizer centroids don't need convergence —
     # probe quality saturates quickly and full-probe correctness never
     # depends on the clustering (the reference's IVF trains similarly
@@ -406,9 +395,9 @@ def encode_codes(base: DataFrame, codes_of: Callable, b_id: str = "id", b_vec: s
             n = batch.num_rows
             if n:
                 codes = codes_of(flatten_fixed_list(batch.column(b_vec), n).astype(np.float64))
-                offs = pa.array(np.arange(0, codes.size + 1, codes.shape[1], dtype=np.int32))
-                codes = pa.ListArray.from_arrays(offs, pa.array(codes.ravel()))
-                yield pa.RecordBatch.from_arrays([batch.column(b_id), codes], ["id", "codes"])
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(b_id), list_column(codes)], ["id", "codes"]
+                )
 
     return base.select(b_id, b_vec).mapInArrow(enc, schema="id long, codes array<tinyint>")
 

@@ -19,7 +19,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from filter_vectordb_spark.operators.knn import flatten_fixed_list
+from filter_vectordb_spark.operators.knn import flatten_fixed_list, pairwise_scores
 from filter_vectordb_spark.operators.topk import per_group_topk
 
 N_BITS = 16
@@ -81,24 +81,21 @@ def lsh_cosine_knn(
     base_buckets: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k: co-bucket join → exact rescoring of
-    candidates → per-query top-k.  queries(qid, qemb), base(id, emb).
+    candidates (pairwise_scores, so `emb` may be a list or the raw uint8
+    BINARY layout) → per-query top-k.  queries(qid, qemb), base(id, emb).
 
     Pass `base_buckets` (a saved `lsh_bucket_table` output) to serve from
     a prebuilt index instead of re-bucketing the base per call — the
     fit()/query() split the reference's runner makes (`filter/run.py:15-52`).
     """
-    from filter_vectordb_spark.functions.distance import cosine_sim
-
     qb = lsh_bucket_table(queries, dim, "qid", "qemb", seed).withColumnRenamed(
         "id", "qid"
     )
     bb = base_buckets if base_buckets is not None else lsh_bucket_table(base, dim, "id", "emb", seed)
     cand = bb.join(F.broadcast(qb), "bucket").select("qid", "id").distinct()
-    scored = (
-        cand.join(base, "id")
-        .join(F.broadcast(queries), "qid")
-        .select("qid", "id", cosine_sim(F.col("qemb"), F.col("emb")).alias("sim"))
-    )
+    scored = pairwise_scores(
+        cand.join(base, "id").join(F.broadcast(queries), "qid"), "cos"
+    ).withColumnRenamed("dist", "sim")
     return per_group_topk(
         scored, ["qid"], [F.col("sim").desc(), F.col("id").asc()], k
     ).select("qid", "id", "sim", "rank")

@@ -105,6 +105,15 @@ def flatten_fixed_list(col, n_rows: int) -> np.ndarray:
     return flat.reshape(n_rows, d)
 
 
+def list_column(X: np.ndarray):
+    """The inverse of flatten_fixed_list: a 2-D ndarray as an Arrow
+    list column, one row per ndarray row (Spark `array<dtype>`)."""
+    import pyarrow as pa
+
+    offs = np.arange(0, X.size + 1, X.shape[1], dtype=np.int32)
+    return pa.ListArray.from_arrays(pa.array(offs), pa.array(X.ravel()))
+
+
 def _uniform_width(offs: np.ndarray) -> int:
     """The common length of the vectors an offsets array delimits (0 for
     no rows); raises ValueError when they differ."""

@@ -174,3 +174,22 @@ def test_bruteforce_scans_the_staged_base_raw(spark):
     want = knn_join(q, lists, 10, metric="ip").select("qid", "rank", "id", "dist")
     assert got.count() == 80
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_lsh_rescores_the_staged_base_raw(spark):
+    """LSH on the staged synth100k source buckets and rescores the raw
+    BINARY base and answers exactly as over the generator's list frame.
+    One query: the uncentred uint8 vectors share most buckets, so each
+    query rescores most of the base."""
+    from filter_vectordb_spark.harness.engines import LSHEngine
+    from filter_vectordb_spark.index.lsh import lsh_cosine_knn
+    from filter_vectordb_spark.sources.synth import synth_uint8_base
+
+    eng = LSHEngine(metric="cos", index_params={"source": "synth100k"})
+    eng.fit(spark, SF_DIR)
+    assert dict(eng.base.dtypes)["emb"] == "binary"
+    q = eng.default_queries(spark, SF_DIR).filter("qid = 0")
+    got = sorted(map(tuple, eng.query(q, 10).collect()))
+    lists = synth_uint8_base(spark).select("id", "emb")
+    want = lsh_cosine_knn(q, lists, 10, eng.dim).select("qid", "id", "rank").collect()
+    assert len(got) == 10 and got == sorted(map(tuple, want))

@@ -253,6 +253,14 @@ def _read_lsh(spark, b, tmp):
     return _rows(lsh_bucket_table(b, 192), "id", "bucket")
 
 
+def _read_lsh_knn(spark, b, tmp):
+    from filter_vectordb_spark.index.lsh import lsh_cosine_knn
+    from filter_vectordb_spark.sources.synth import synth_queries
+
+    q = synth_queries(spark, nq=3).select("qid", "qemb")
+    return _rows(lsh_cosine_knn(q, b, 10, 192), "qid", "rank", "id", "sim")
+
+
 def _read_pairwise(spark, b, tmp):
     from filter_vectordb_spark.operators.knn import pairwise_scores
     from filter_vectordb_spark.sources.synth import synth_queries
@@ -280,12 +288,13 @@ def _read_dense_bin(spark, b, tmp):
         _read_pq,
         _read_ivf_insert,
         _read_lsh,
+        _read_lsh_knn,
         _read_pairwise,
         _read_dense_bin,
     ],
     ids=[
         "train_sq", "encode_sq", "build_ivf_numpy", "build_ivf_mllib", "pq", "ivf_insert",
-        "lsh_bucket_table", "pairwise_scores", "write_dense_bin",
+        "lsh_bucket_table", "lsh_cosine_knn", "pairwise_scores", "write_dense_bin",
     ],
 )
 def test_dense_readers_equal_on_list_and_uint8_bases(spark, two_layouts, tmp_path, read):
