@@ -457,7 +457,7 @@ def main() -> None:
         # land here, never inside the timed run
         _fx._synth_msturing1m,
         _fx._synth_msturing1m_clustered,
-        # the yfcc filtered-serving index (stats/grid/codes/tagview/pair)
+        # the yfcc filtered-serving index (stats/grid/codes/pair + sidecars)
         # is fit(), not search — ~minutes cold at 10M, never inside the
         # timed runs
         _fx._yfcc100k_index,
@@ -488,10 +488,9 @@ def main() -> None:
         _index_cache_dir("synth1m_v2", "base"),
         _fx._synth_sparse1m_terms_dir(spark),
         _fx._synth_sparse8m84_skewed_terms_dir(spark),
-        # yfcc 10M serving data: the metadata-first codes table and the
-        # frequent-tag view are what the timed routes actually read
-        # r9: serving reads the memmap sidecars (meta_bin/ + tag_bin/),
-        # not the codes/tagview parquet — prefault what the routes touch
+        # yfcc 10M serving data: the timed R2-R4 routes read the memmap
+        # sidecars (meta_bin/ + tag_bin/), not the codes parquet —
+        # prefault what the routes touch
         _index_cache_dir("yfcc10m_v2", "fidx_v4/meta_bin"),
         _index_cache_dir("yfcc10m_v2", "fidx_v4/tag_bin"),
     ):

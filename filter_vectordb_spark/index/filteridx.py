@@ -35,11 +35,11 @@ Layout (build_filtered_index):
   grid/     SQ8 lossless grid                   shared decode offset
   codes/    (id, codes, tags, xn) id-range      meta_bin's build source,
                                                 R4 gather plan's input
-  tagview/  (tag=<t>/, id, codes, tags, xn)     tag_bin's build source,
-                                                hot tags salted
   pair/     index/tagpart pair layout           R1
   meta_bin/ int8 bins + CSR + norms (npy)       R4 memmap serving
-  tag_bin/  per-tag bins, lst-sorted + CSR      R2/R3 memmap serving
+  tag_bin/  per-(tag, salt) bins, lst-sorted    R2/R3 memmap serving,
+            + CSR                               written by the view's
+                                                grouped encode pass
 
 The *_bin sidecars (r9) are DERIVED serving artifacts — the reference's
 in-RAM uint8 matrix + CSR metadata (`benchmark/datasets.py` xbin_mmap,
@@ -48,8 +48,9 @@ pages through the page cache instead of re-reading + re-decoding
 parquet into per-worker buffers every batch, and candidate gathers
 touch only candidate rows.  They are R2-R4's only serving layout: an
 index without them is not built (index_is_built), and filtered_search
-refuses it by name.  Parquet remains the durable format they are built
-from.
+refuses it by name.  meta_bin/ is built from the codes/ parquet;
+tag_bin/ is written straight from the frequent-tag view frame, with no
+parquet copy of the view.
 
 Everything serves 1-byte SQ8 codes (lossless on integer corpora — the
 yfcc uint8 regime) and ships only nq×k partials per task into the W3
@@ -135,7 +136,7 @@ def index_is_built(out_dir: str) -> bool:
         os.path.exists(f"{out_dir}/meta.json")
         and all(
             os.path.exists(f"{out_dir}/{p}/_SUCCESS")
-            for p in ("stats", "grid", "codes", "tagview", "pair/view", "centroids")
+            for p in ("stats", "grid", "codes", "pair/view", "centroids")
         )
         and all(os.path.exists(f"{out_dir}/{p}/_SUCCESS.json") for p in _SIDECARS)
     )
@@ -211,11 +212,12 @@ def build_filtered_index(
     )
     centroids.write.mode("overwrite").parquet(f"{out_dir}/centroids")
 
-    # frequent-tag view, hot tags salted into ≤split_rows files (the
-    # pair build's straggler fix, index/tagpart.py — one writer task AND
-    # one scan task per (tag, salt)); rows LIST-SORTED within each file
+    # frequent-tag view, hot tags salted into ≤split_rows groups (the
+    # pair build's straggler fix, index/tagpart.py — one bin-writer task
+    # AND one scan unit per (tag, salt))
     sdf = spark.read.parquet(f"{out_dir}/stats")
     frequent = sdf.filter(F.col("ndoc") >= min_freq * n).select("tag", "ndoc")
+    nsplit = F.greatest(F.lit(1), F.ceil(F.col("ndoc") / F.lit(split_rows))).cast("int")
     view = (
         explode_tags(base)
         .join(F.broadcast(frequent), "tag")
@@ -226,28 +228,15 @@ def build_filtered_index(
             "id",
         )
         .join(assignments.select("id", F.col("centroid_id").alias("lst")), "id")
-        .select("tag", "id", "codes", "tags", "xn", "lst", "ndoc")
-    )
-    nsplit = F.greatest(F.lit(1), F.ceil(F.col("ndoc") / F.lit(split_rows))).cast("int")
-    n_write_tasks = int(
-        frequent.agg(
-            F.sum(F.greatest(F.lit(1), F.ceil(F.col("ndoc") / F.lit(split_rows)))).alias("s")
-        ).first()["s"]
-        or 1
-    )
-    (
-        view.withColumn("_salt", F.pmod(F.xxhash64(F.col("id")), nsplit).cast("int"))
-        .repartition(n_write_tasks, F.col("tag"), F.col("_salt"))
-        # the partition column LEADS the sort: FileFormatWriter re-sorts
-        # any task not already ordered by its dynamic partition columns,
-        # and that internal sort is not stable — a bare (lst, id) sort
-        # here came back scrambled at 10M (measured: probed recall
-        # collapsed to the random-scan floor ~nprobe/nlist)
-        .sortWithinPartitions("tag", "lst", "id")
-        .drop("_salt", "ndoc")
-        .write.mode("overwrite")
-        .partitionBy("tag")
-        .parquet(f"{out_dir}/tagview")
+        .select(
+            "tag",
+            F.pmod(F.xxhash64(F.col("id")), nsplit).cast("int").alias("_salt"),
+            "id",
+            "codes",
+            "tags",
+            "xn",
+            "lst",
+        )
     )
 
     build_tag_pair_partitions(base, f"{out_dir}/pair", min_freq=pair_min_freq)
@@ -257,9 +246,9 @@ def build_filtered_index(
         "min_freq": min_freq,
         "pair_min_freq": pair_min_freq,
         "nlist": int(nlist),
-        # codes/tagview carry the persisted per-row squared-norm column
-        # (VERDICT r8 #1a) that the sidecars serve; build_*_bins refuse
-        # a layout without it
+        # codes/ carries the persisted per-row squared-norm column
+        # (VERDICT r8 #1a) that the sidecars serve; build_meta_bins
+        # refuses a layout without it
         "xn": True,
     }
     tmp = f"{out_dir}/meta.json.tmp"
@@ -267,12 +256,12 @@ def build_filtered_index(
         json.dump(meta, fh)
     os.replace(tmp, f"{out_dir}/meta.json")
     build_meta_bins(spark, out_dir)
-    build_tag_bins(spark, out_dir)
+    build_tag_bins(view, out_dir, nlist)
 
 
 def _persisted_norms_meta(out_dir: str) -> dict:
-    """meta.json of a layout whose codes/tagview parquet carry the
-    persisted `xn` norms the sidecars copy; older layouts are refused."""
+    """meta.json of a layout whose codes/ parquet carries the persisted
+    `xn` norms meta_bin/ copies; older layouts are refused."""
     with open(f"{out_dir}/meta.json") as fh:
         meta = json.load(fh)
     if not meta.get("xn"):
@@ -373,112 +362,84 @@ def build_meta_bins(spark: SparkSession, out_dir: str) -> None:
     os.replace(tmp, f"{dest}/_SUCCESS.json")
 
 
-def build_tag_bins(spark: SparkSession, out_dir: str) -> None:
-    """R2/R3 serving sidecars — the tag-view twin of build_meta_bins:
-    per tagview file `tag=<t>/<stem>.parquet` →
+def build_tag_bins(view: DataFrame, out_dir: str, nlist: int) -> None:
+    """R2/R3 serving sidecars — the tag-view twin of build_meta_bins,
+    written straight from build_filtered_index's frequent-tag view
+    (tag, _salt, id, codes, tags, xn, lst): one grouped-map call per
+    (tag, salt) group, keyed `<t>.<salt>` →
 
-      tag_bin/<t>.<stem>.codes.bin  raw int8 (n × d), CANONICAL lst-sort
-      tag_bin/<t>.<stem>.ids.npy    int64 row → doc id
-      tag_bin/<t>.<stem>.xn.npy     float64 squared norms
-      tag_bin/<t>.<stem>.lst.npy    int32 coarse-list id, ascending
-      tag_bin/<t>.<stem>.bounds.npy int64 first row of each list (nlist+1)
-      tag_bin/<t>.<stem>.{ptags,pstarts,prows}.npy  in-file tag CSR
+      tag_bin/<key>.codes.bin  raw int8 (n × d), rows in (lst, id) order
+      tag_bin/<key>.ids.npy    int64 row → doc id
+      tag_bin/<key>.xn.npy     float64 squared norms
+      tag_bin/<key>.lst.npy    int32 coarse-list id, ascending
+      tag_bin/<key>.bounds.npy int64 first row of each list (nlist+1)
+      tag_bin/<key>.{ptags,pstarts,prows}.npy  in-unit tag CSR
 
     The probed route previously read a probed tag's ENTIRE partition
     from parquet (hot tag ≈ 500 MB of Arrow per batch) to gather a few
     thousand candidate rows per query; the memmap layout makes the
     probe a binary-searched row-range gather from shared page-cache
-    pages.  The lst sort is applied (stable) at BIN build, so serving
-    reads canonical lst-sorted rows whatever order the parquet writer
-    left; the CSR replaces the per-batch tags flatten for R3
-    conjunction masks.
-    Idempotent; _SUCCESS.json records {tag: [[stem, n], ...]}."""
+    pages.  Each group is sorted by (lst, id) in its own task, so
+    serving reads canonical lst-sorted rows; the CSR replaces the
+    per-batch tags flatten for R3 conjunction masks.
+    _SUCCESS.json records {tag: [[key, n], ...]}."""
     dest = f"{out_dir}/tag_bin"
-    if os.path.exists(f"{dest}/_SUCCESS.json"):
-        return
-    nlist = int(_persisted_norms_meta(out_dir)["nlist"])
     os.makedirs(dest, exist_ok=True)
-    files = []
-    for d_ in _glob.glob(f"{out_dir}/tagview/tag=*"):
-        t = int(os.path.basename(d_).split("=", 1)[1])
-        files.extend((t, p) for p in sorted(_glob.glob(f"{d_}/*.parquet")))
-    fdf = spark.createDataFrame(
-        [(t, p) for t, p in files], "tag INT, path STRING"
-    )
-    bc = spark.sparkContext.broadcast((dest, nlist))
 
-    def build_one(it):
+    def write(tbl):
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         from filter_vectordb_spark.index.filteridx_kernels import (
             _codes_matrix,
             _flat_tags,
         )
 
-        bdest, bnlist = bc.value
-        for batch in it:
-            for tag, path in zip(
-                batch.column("tag").to_pylist(), batch.column("path").to_pylist()
-            ):
-                stem = os.path.splitext(os.path.basename(path))[0]
-                key = f"{tag}.{stem}"
-                cols = ["id", "codes", "tags", "lst", "xn"]
-                tbl = pq.ParquetFile(path).read(columns=cols)
-                n = tbl.num_rows
-                ids = tbl.column("id").to_numpy(zero_copy_only=False).astype(
-                    np.int64
-                )
-                lst = tbl.column("lst").to_numpy(zero_copy_only=False).astype(
-                    np.int32
-                )
-                C8 = np.ascontiguousarray(_codes_matrix(tbl.column("codes"), n))
-                xn = np.ascontiguousarray(
-                    tbl.column("xn").to_numpy(zero_copy_only=False),
-                    dtype=np.float64,
-                )
-                flat, row_of = _flat_tags(tbl.column("tags"), n)
-                if n and np.any(np.diff(lst) < 0):
-                    # canonicalize once at build (see docstring)
-                    order = np.argsort(lst, kind="stable")
-                    ids, lst, xn = ids[order], lst[order], xn[order]
-                    C8 = np.ascontiguousarray(C8[order])
-                    inv = np.empty(n, dtype=np.int64)
-                    inv[order] = np.arange(n, dtype=np.int64)
-                    row_of = inv[row_of]
-                torder = np.lexsort((row_of, flat))
-                ft, ro = flat[torder], row_of[torder]
-                bnd = np.flatnonzero(np.r_[True, ft[1:] != ft[:-1]])
-                # per-file probe bounds precomputed at build (VERDICT r9
-                # next #1b): bounds[l] = first row of coarse list l in
-                # the canonical lst-sorted layout — the probed kernel's
-                # per-batch searchsorted (and its lst page touches) move
-                # here, once per file ever
-                bounds = np.searchsorted(
-                    lst, np.arange(bnlist + 1, dtype=np.int64)
-                ).astype(np.int64)
-                for name, arr in (
-                    ("ids", ids),
-                    ("xn", xn),
-                    ("lst", lst),
-                    ("bounds", bounds),
-                    ("ptags", ft[bnd]),
-                    ("pstarts", np.r_[bnd, len(ft)].astype(np.int64)),
-                    ("prows", ro.astype(np.int32)),
-                ):
-                    tmp = f"{bdest}/{key}.{name}.npy.tmp"
-                    np.save(open(tmp, "wb"), arr)
-                    os.replace(tmp, f"{bdest}/{key}.{name}.npy")
-                tmp = f"{bdest}/{key}.codes.bin.tmp"
-                C8.tofile(tmp)
-                os.replace(tmp, f"{bdest}/{key}.codes.bin")
-                yield pa.RecordBatch.from_pydict(
-                    {"tag": [tag], "key": [key], "n": [n], "d": [C8.shape[1]]}
-                )
+        tag = tbl.column("tag")[0].as_py()
+        key = f"{tag}.{tbl.column('_salt')[0].as_py()}"
+        ids = tbl.column("id").to_numpy().astype(np.int64)
+        lst = tbl.column("lst").to_numpy().astype(np.int32)
+        order = np.lexsort((ids, lst))
+        ids, lst = ids[order], lst[order]
+        tbl = tbl.select(["codes", "tags", "xn"]).take(order)
+        n = tbl.num_rows
+        C8 = np.ascontiguousarray(_codes_matrix(tbl.column("codes"), n))
+        xn = np.ascontiguousarray(tbl.column("xn").to_numpy(), dtype=np.float64)
+        flat, row_of = _flat_tags(tbl.column("tags"), n)
+        torder = np.lexsort((row_of, flat))
+        ft, ro = flat[torder], row_of[torder]
+        bnd = np.flatnonzero(np.r_[True, ft[1:] != ft[:-1]])
+        # per-unit probe bounds precomputed at build (VERDICT r9 next
+        # #1b): bounds[l] = first row of coarse list l in the lst-sorted
+        # layout — the probed kernel's per-batch searchsorted (and its
+        # lst page touches) move here, once per unit ever
+        bounds = np.searchsorted(lst, np.arange(nlist + 1, dtype=np.int64)).astype(
+            np.int64
+        )
+        for name, arr in (
+            ("ids", ids),
+            ("xn", xn),
+            ("lst", lst),
+            ("bounds", bounds),
+            ("ptags", ft[bnd]),
+            ("pstarts", np.r_[bnd, len(ft)].astype(np.int64)),
+            ("prows", ro.astype(np.int32)),
+        ):
+            tmp = f"{dest}/{key}.{name}.npy.tmp"
+            with open(tmp, "wb") as fh:
+                np.save(fh, arr)
+            os.replace(tmp, f"{dest}/{key}.{name}.npy")
+        tmp = f"{dest}/{key}.codes.bin.tmp"
+        C8.tofile(tmp)
+        os.replace(tmp, f"{dest}/{key}.codes.bin")
+        return pa.Table.from_pydict(
+            {"tag": [tag], "key": [key], "n": [n], "d": [C8.shape[1]]}
+        )
 
-    rows = fdf.mapInArrow(
-        build_one, schema="tag long, key string, n long, d long"
-    ).collect()
+    rows = (
+        view.groupBy("tag", "_salt")
+        .applyInArrow(write, schema="tag long, key string, n long, d long")
+        .collect()
+    )
     by_tag: dict = {}
     for r in rows:
         by_tag.setdefault(int(r["tag"]), []).append((r["key"], int(r["n"])))

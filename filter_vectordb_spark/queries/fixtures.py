@@ -443,7 +443,7 @@ def _synth_sparse8m84_skewed_terms_dir(spark: SparkSession) -> str:
 
 def _yfcc_index_dir(spark: SparkSession, key: str, n: int) -> str:
     """Stage (once) the full filtered-serving index (index/filteridx
-    layout: stats/grid/codes/tagview/pair + the meta_bin/tag_bin serving
+    layout: stats/grid/codes/pair + the meta_bin/tag_bin serving
     sidecars) over an n-doc yfcc-shaped corpus; returns the index dir.
     A cache missing a sidecar is not built (index_is_built) and
     rebuilds whole.  Build-time work by design (the reference prebuilds
@@ -457,9 +457,9 @@ def _yfcc_index_dir(spark: SparkSession, key: str, n: int) -> str:
 
     # _v3: tag views carry the shared coarse quantizer's list id
     # (lst-sorted files) + centroids/ — the nprobe-gated serving layout.
-    # _v4: codes + tagview persist the per-row squared-norm column
-    # (VERDICT r8 #1a) so serving reads norms instead of recomputing
-    # them over the whole corpus every batch
+    # _v4: codes persists the per-row squared-norm column (VERDICT r8
+    # #1a) so serving reads norms instead of recomputing them over the
+    # whole corpus every batch
     out = _index_cache_dir(key, "fidx_v4")
     if not index_is_built(out):
         build_filtered_index(synth_yfcc_base(spark, n=n), out)

@@ -696,3 +696,122 @@ def test_probe_bounds_checked(spark, built, tmp_path, damage):
     q = synth_yfcc_queries(spark, nq=64)
     with pytest.raises(Exception, match=r"bounds\.npy"):
         filtered_search(spark, out, q, k=10, nprobe=4).toPandas()
+
+
+def _check_tag_bin_layout(out: str, base) -> None:
+    """tag_bin/ as serving reads it: every manifest tag's units hold the
+    docs carrying that tag, each exactly once; each unit is (lst, id)-
+    sorted, its bounds are the coarse-list starts, and its tag CSR
+    reproduces every row's tags."""
+    import json
+
+    with open(f"{out}/meta.json") as fh:
+        nlist = json.load(fh)["nlist"]
+    with open(f"{out}/tag_bin/_SUCCESS.json") as fh:
+        man = json.load(fh)
+    pdf = base.select("id", "tags").toPandas()
+    doc_tags = {int(i): sorted(int(t) for t in ts) for i, ts in zip(pdf["id"], pdf["tags"])}
+    for tag, units in man["tags"].items():
+        got = []
+        for key, n in units:
+            p = f"{out}/tag_bin/{key}"
+            ids, lst = np.load(f"{p}.ids.npy"), np.load(f"{p}.lst.npy")
+            assert len(ids) == len(lst) == n, key
+            np.testing.assert_array_equal(np.lexsort((ids, lst)), np.arange(n))
+            np.testing.assert_array_equal(
+                np.load(f"{p}.bounds.npy"), np.searchsorted(lst, np.arange(nlist + 1))
+            )
+            ptags, pstarts, prows = (np.load(f"{p}.{c}.npy") for c in ("ptags", "pstarts", "prows"))
+            rows = [[] for _ in range(n)]
+            for t, a, b in zip(ptags, pstarts[:-1], pstarts[1:]):
+                for r in prows[a:b]:
+                    rows[r].append(int(t))
+            assert rows == [doc_tags[int(i)] for i in ids], key
+            got.extend(int(i) for i in ids)
+        assert sorted(got) == sorted(i for i, ts in doc_tags.items() if int(tag) in ts), tag
+
+
+def test_tag_bins_written_from_the_view(spark, built):
+    """build_filtered_index writes tag_bin/ straight from its frequent-tag
+    view: no tagview/ parquet, and the bins hold exactly the frequent
+    tags' docs in the layout serving reads."""
+    import json
+    import os
+
+    out, base = built
+    assert not os.path.exists(f"{out}/tagview")
+    with open(f"{out}/tag_bin/_SUCCESS.json") as fh:
+        tags = {int(t) for t in json.load(fh)["tags"]}
+    stats = F.col("ndoc") >= MIN_FREQ * N
+    frequent = {r["tag"] for r in spark.read.parquet(f"{out}/stats").filter(stats).collect()}
+    assert tags == frequent
+    _check_tag_bin_layout(out, base)
+
+
+def test_salted_tag_bins_serve_exactly(spark, tmp_path):
+    """A tag above split_rows is written as several (tag, salt) units;
+    each keeps the layout, the exact route over them equals brute force,
+    and the probed route scores true distances."""
+    import json
+
+    from filter_vectordb_spark.index.filteridx import _load_routing
+    from filter_vectordb_spark.operators.filtered_knn import filtered_knn_scan
+
+    out = str(tmp_path / "salted")
+    base = synth_yfcc_base(spark, n=3000)
+    build_filtered_index(base, out, min_freq=0.01, pair_min_freq=0.01, split_rows=200)
+    with open(f"{out}/tag_bin/_SUCCESS.json") as fh:
+        units = json.load(fh)["tags"]
+    assert max(len(u) for u in units.values()) > 1
+    _check_tag_bin_layout(out, base)
+    q = synth_yfcc_queries(spark, nq=64)
+    ndoc, n_base, min_freq, _off, pair_files, tag_files, _C, _hx = _load_routing(spark, out)
+    _p, r_tag, _m, tag_col, _o = _route(
+        q.toPandas()["qtags"], ndoc, min_freq * n_base, pair_files, tag_files
+    )
+    assert any(len(units[str(t)]) > 1 for t in tag_col[r_tag])
+    cols = ["qid", "rank", "id", "dist"]
+    want = filtered_knn_scan(q, base, 10).toPandas().sort_values(cols)[cols]
+    got = filtered_search(spark, out, q, k=10).toPandas().sort_values(cols)[cols]
+    pd.testing.assert_frame_equal(got.reset_index(drop=True), want.reset_index(drop=True))
+    probed = filtered_search(spark, out, q, k=10, nprobe=4).toPandas()
+    exact = want.set_index(["qid", "id"])["dist"]
+    ap = probed.set_index(["qid", "id"])["dist"]
+    shared = ap.index.intersection(exact.index)
+    assert len(shared) > 0
+    np.testing.assert_array_equal(ap.loc[shared], exact.loc[shared])
+
+
+def _perfbench_module(monkeypatch, name: str):
+    """perfbench/<name>.py loaded by path under the top-level name
+    perfbench/run.py imports it by, for this test only."""
+    import importlib.util
+    import os
+    import sys
+
+    path = os.path.join(os.path.dirname(__file__), os.pardir, "perfbench", f"{name}.py")
+    spec = importlib.util.spec_from_file_location(name, path)
+    mod = importlib.util.module_from_spec(spec)
+    monkeypatch.setitem(sys.modules, name, mod)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_perfbench_package_uses_still_run(spark, built, monkeypatch):
+    """The benchmark keys its fixture cache on package sources
+    (inspect.getsource) and its traced run builds filtered_search's route
+    frames from filteridx internals; both keep working on the package as
+    it is."""
+    fixtures = _perfbench_module(monkeypatch, "fixtures")
+    for name, fixture in fixtures._fixture_table().items():
+        assert len(fixtures.source_hash(fixture.sources)) == 12, name
+    _perfbench_module(monkeypatch, "stats")
+    workloads = _perfbench_module(monkeypatch, "workloads")
+    wl = workloads.FilterYfcc(seed=11)
+    wl.load(spark, built[0])
+    qpdf = synth_yfcc_queries(spark, nq=256).toPandas()
+    parts, _route_s, mix, _cand = wl.route_parts(spark, qpdf)
+    assert set(parts) == {"pair", "tag", "meta"}
+    assert sum(mix.values()) == len(qpdf)
+    for build in parts.values():
+        workloads.noop(build())

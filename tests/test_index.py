@@ -304,3 +304,15 @@ def test_dense_readers_equal_on_list_and_uint8_bases(spark, two_layouts, tmp_pat
     want = read(spark, two_layouts["list"], tmp_path)
     got = read(spark, two_layouts["u8"], tmp_path)
     assert got == want
+
+
+@pytest.mark.parametrize("layout", ["list", "u8"])
+def test_pairwise_scores_sliced_equals_whole_batch(spark, two_layouts, tmp_path, monkeypatch, layout):
+    """pairwise_scores scores each Arrow batch in PAIRWISE_SLICE_ROWS-row
+    float64 slices; each row's sum is its own, so 7-row slices give the
+    whole-batch l2, ip and cos scores bit for bit."""
+    import filter_vectordb_spark.operators.knn as knn
+
+    want = _read_pairwise(spark, two_layouts[layout], tmp_path)
+    monkeypatch.setattr(knn, "PAIRWISE_SLICE_ROWS", 7)
+    assert _read_pairwise(spark, two_layouts[layout], tmp_path) == want
