@@ -15,7 +15,7 @@ trades recall for QPS only because its per-tag indexes are HNSW):
 
   R1 pair view    both query tags form a prebuilt pair partition →
                   partition-pruned scan of exactly the matching docs
-                  (index/tagpart._score_pair_chunk, SQ8-coded, salted).
+                  (filteridx_kernels._view_scan, SQ8-coded, salted).
   R2 tag view     single frequent tag → partition-pruned scan of the
                   tag's docs.
   R3 tag view+mask  two tags, pair unbuilt, rarer tag frequent → scan
@@ -76,7 +76,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from filter_vectordb_spark.index.tagpart import _f32_exact_ok, _train_codec
+from filter_vectordb_spark.index.tagpart import _train_codec
 from filter_vectordb_spark.operators.postings import explode_tags
 from filter_vectordb_spark.operators.topk import per_group_topk
 
@@ -465,7 +465,8 @@ def _tag_bins(out_dir: str):
 
 
 #: per-session memo of loaded routing metadata, keyed by (appId, path,
-#: meta.json mtime) — same freshness pattern as tagpart._VIEW_CACHE
+#: meta.json mtime) — the freshness pattern of tagpart._VIEW_CACHE,
+#: which memoizes the same _view_files listing for the tag/pair views
 _ROUTE_CACHE: dict = {}
 
 
@@ -493,11 +494,7 @@ def _load_routing(spark: SparkSession, out_dir: str):
         ndoc = dict(zip(pdf["tag"].astype(int), pdf["ndoc"].astype(int)))
         vmin, _vmax = read_grid(spark, f"{out_dir}/grid")
         off = vmin + 128.0
-        pair_files: dict[tuple[int, int], list[str]] = {}
-        for d in _glob.glob(f"{out_dir}/pair/view/tag_a=*/tag_b=*"):
-            b = int(os.path.basename(d).split("=", 1)[1])
-            a = int(os.path.basename(os.path.dirname(d)).split("=", 1)[1])
-            pair_files[(a, b)] = sorted(_glob.glob(f"{d}/*.parquet"))
+        pair_files = _view_files(f"{out_dir}/pair/view", _PAIR_KEYS)
         cpdf = (
             spark.read.parquet(f"{out_dir}/centroids")
             .toPandas()
@@ -530,6 +527,7 @@ from filter_vectordb_spark.index.filteridx_kernels import (  # noqa: F401
     _BIN_MANIFESTS,
     _DECODE_SCRATCH,
     _PAIR_CHUNK,
+    _PAIR_KEYS,
     _PARTIAL,
     _bin_manifest,
     _codes_matrix,
@@ -537,7 +535,6 @@ from filter_vectordb_spark.index.filteridx_kernels import (  # noqa: F401
     _decode_poison,
     _flat_tags,
     _meta_bin_scan,
-    _pairview_scan,
     _score_meta_bin,
     _score_meta_gather,
     _score_pairview,
@@ -546,6 +543,8 @@ from filter_vectordb_spark.index.filteridx_kernels import (  # noqa: F401
     _sqnorms,
     _tagview_probed_scan,
     _tagview_scan,
+    _view_files,
+    _view_scan,
 )
 
 #: auto meta-plan switch (VERDICT r8 #1c): when the batch's estimated
@@ -675,7 +674,7 @@ def filtered_search(
         pp = qpdf.iloc[r_pair].copy()
         tt = np.array([sorted({int(x) for x in t}) for t in pp["qtags"]])
         pp["tag_a"], pp["tag_b"] = tt[:, 0], tt[:, 1]
-        scans.append(_pairview_scan(spark, pair_files, pp, k, off))
+        scans.append(_view_scan(spark, pair_files, pp, _PAIR_KEYS, k, off))
     if r_tag:
         tp = qpdf.iloc[r_tag].copy()
         tp["tag"] = tag_col[r_tag]

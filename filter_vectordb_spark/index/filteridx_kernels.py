@@ -7,21 +7,22 @@ decode/posting helpers.
 
 Every direct-read route is one scoring body on the engine's one scan
 skeleton (operators/knn.py): its builder plans the units and returns a
-`Scan` — _pairview_scan (R1) over parquet row groups, _tagview_scan,
-_tagview_probed_scan (R2/R3) and _meta_bin_scan (R4) over memmap
-sidecar files, whose (query, row) pairs all score through one
-_score_pairs.  `scan_units` launches a list of them one Python task per
-core and calls each body with that task's units; the body feeds its
-candidates into one `TaskPartials`, whose emit() is the task's single
-bounded partial top-k per route for the global merge.
-filteridx.filtered_search hands all of a batch's routes to one
-scan_units call, so the routes share one stage; each `_score_*` runs
-its route alone (the per-route timings and tests).  _score_meta_gather
-is a DataFrame plan, not a scan.  The hash-checked nq32 rows pin the
-results."""
+`Scan` — _view_scan (R1, and index/tagpart's tag and pair views) over
+parquet row groups, _tagview_scan, _tagview_probed_scan (R2/R3) and
+_meta_bin_scan (R4) over memmap sidecar files, whose (query, row) pairs
+all score through one _score_pairs.  `scan_units` launches a list of
+them one Python task per core and calls each body with that task's
+units; the body feeds its candidates into one `TaskPartials`, whose
+emit() is the task's single bounded partial top-k per route for the
+global merge.  filteridx.filtered_search hands all of a batch's routes
+to one scan_units call, so the routes share one stage; each `_score_*`
+runs its route alone (the per-route timings and tests).
+_score_meta_gather is a DataFrame plan, not a scan.  The hash-checked
+nq32 rows pin the results."""
 
 from __future__ import annotations
 
+import glob as _glob
 import json
 import os
 
@@ -29,11 +30,13 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from filter_vectordb_spark.index.tagpart import _f32_exact_ok, _l2_topk
-from filter_vectordb_spark.operators.knn import (
+from filter_vectordb_spark.operators.knn import (  # noqa: F401 (_flat_tags: build-side name)
     Scan,
     TaskPartials,
+    _f32_exact_ok,
+    _flat_tags,
     flatten_fixed_list,
+    gemm_topk,
     rg_units,
     scan_units,
 )
@@ -41,31 +44,65 @@ from filter_vectordb_spark.operators.knn import (
 #: schema of every route kernel's per-task partial
 _PARTIAL = "qid long, id long, dist double"
 
+#: partition keys of the pair view (R1, index/tagpart.build_tag_pair_partitions)
+_PAIR_KEYS = ("tag_a", "tag_b")
 
-def _pairview_scan(
+
+def _l2_topk(out, qids: np.ndarray, Q: np.ndarray, X: np.ndarray, xn, ids) -> None:
+    """Exact L2² top-k of the float64 queries Q (qids) over the block X
+    (row ids `ids`, squared norms xn) into the task's TaskPartials
+    `out`.  The GEMM runs in X's dtype: float32 only on the
+    integer-exact path _f32_exact_ok gates, query norms in float64."""
+    Qc = Q.astype(np.float32) if X.dtype == np.float32 else Q
+    part, dist = gemm_topk(Qc, (Q * Q).sum(axis=1), X, xn, "l2", out.k)
+    out.add_topk(qids, ids, part, dist)
+
+
+def _view_files(view_dir: str, keys: tuple) -> dict:
+    """{key tuple: sorted parquet files} of a view written
+    `partitionBy(*keys)`: the partition directory names
+    (`k1=v1/k2=v2/…`) are the integer keys — driver metadata, no Spark
+    job."""
+    files: dict = {}
+    for d in _glob.glob(f"{view_dir}/" + "/".join(f"{c}=*" for c in keys)):
+        parts = os.path.relpath(d, view_dir).split(os.sep)
+        files[tuple(int(p.split("=", 1)[1]) for p in parts)] = sorted(
+            _glob.glob(f"{d}/*.parquet")
+        )
+    return files
+
+
+def _view_scan(
     spark: SparkSession,
-    pair_files: dict,
+    files: dict,
     qpdf,
+    keys: tuple,
     k: int,
-    off: np.ndarray,
+    off: np.ndarray | None,
 ) -> Scan:
-    """R1, direct-read: qpdf(qid, qemb, tag_a, tag_b).  Only the PROBED
-    pairs' partition files are opened (driver-side dict lookup — the
+    """Direct read of a partition view: qpdf(qid, qemb, *keys), `files`
+    the view's {key tuple: parquet files} (_view_files).  Only the
+    PROBED keys' files are opened (driver-side dict lookup — the
     partition-pruning the DataFrame route left to runtime DPP, which
     measured a full 531 MB view read + JVM Arrow hop per batch at the
-    10M point); per pair group one GEMM per task unit."""
+    10M point); per key group one GEMM per task unit.  off set (an
+    SQ8-coded view): `codes` decode to x = code + off, exact on the
+    lossless grid, and integer queries take the f32 GEMM; off None (a
+    float view): `emb` is read as float64."""
     groups: dict = {}
-    for (a, b), grp in qpdf.groupby(["tag_a", "tag_b"]):
-        groups[(int(a), int(b))] = (
+    for key, grp in qpdf.groupby(list(keys)):
+        groups[tuple(int(v) for v in key)] = (
             grp["qid"].to_numpy(dtype=np.int64),
             np.stack(grp["qemb"].to_numpy()).astype(np.float64),
         )
-    use_f32 = _f32_exact_ok(np.stack(qpdf["qemb"].to_numpy()).astype(np.float64))
+    use_f32 = off is not None and _f32_exact_ok(
+        np.stack(qpdf["qemb"].to_numpy()).astype(np.float64)
+    )
     nq = len(qpdf)
     units, cost = [], []
-    for pr, (qids, _Q) in groups.items():
-        for p, lo, hi, rows in rg_units(spark, list(pair_files.get(pr, ()))):
-            units.append((pr[0], pr[1], p, lo, hi))
+    for key, (qids, _Q) in groups.items():
+        for p, lo, hi, rows in rg_units(spark, list(files.get(key, ()))):
+            units.append((key, p, lo, hi))
             cost.append(rows * len(qids))
 
     def serve(payload, units):
@@ -73,19 +110,19 @@ def _pairview_scan(
 
         bgroups, boff, bf32 = payload
         out = TaskPartials(k, nq, False)
-        for a, b, path, lo, hi in units:
-            qg = bgroups.get((a, b))
-            if qg is None:
-                continue
-            qids, Q = qg
+        for key, path, lo, hi in units:
+            qids, Q = bgroups[key]
             tbl = pq.ParquetFile(path).read_row_groups(
-                list(range(lo, hi)), columns=["id", "codes"]
+                list(range(lo, hi)), columns=["id", "emb" if boff is None else "codes"]
             )
             n = tbl.num_rows
             if n == 0:
                 continue
             ids = tbl.column("id").to_numpy(zero_copy_only=False)
-            X = _decode(tbl.column("codes"), None, n, boff, bf32)
+            if boff is None:
+                X = flatten_fixed_list(tbl.column("emb"), n).astype(np.float64)
+            else:
+                X = _decode(tbl.column("codes"), None, n, boff, bf32)
             _l2_topk(out, qids, Q, X, _sqnorms(X), ids)
         yield from out.emit()
 
@@ -93,24 +130,10 @@ def _pairview_scan(
 
 
 def _score_pairview(spark, pair_files, qpdf, k, off) -> DataFrame:
-    """R1 alone: _pairview_scan in a launch of its own."""
-    return scan_units(spark, [_pairview_scan(spark, pair_files, qpdf, k, off)], _PARTIAL)
-
-
-def _flat_tags(tbl_col, n: int):
-    """(flat_tags int64, row_of int64) off the Arrow list buffers —
-    rebased for sliced arrays (the tagpart/filtered_knn convention)."""
-    import pyarrow as pa
-
-    col = tbl_col
-    if isinstance(col, pa.ChunkedArray):
-        col = col.combine_chunks()
-    off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-    flat = (col.values.to_numpy(zero_copy_only=False).astype(np.int64))[
-        off[0] : off[-1]
-    ]
-    row_of = np.repeat(np.arange(n, dtype=np.int64), np.diff(off))
-    return flat, row_of
+    """R1 alone: the pair view's _view_scan in a launch of its own."""
+    return scan_units(
+        spark, [_view_scan(spark, pair_files, qpdf, _PAIR_KEYS, k, off)], _PARTIAL
+    )
 
 
 #: the build-side name of the one dense decoder (index/filteridx's
@@ -175,10 +198,13 @@ def _sqnorms(X: np.ndarray) -> np.ndarray:
     the products and every partial sum stay below 2²⁴, so one f32
     einsum is BIT-exact — the per-group float64 matrix conversion it
     replaces was the meta/tag kernels' single largest memory-traffic
-    term (192 × 8 B per candidate row)."""
+    term (192 × 8 B per candidate row).  A float64 block sums
+    `(X * X).sum(axis=1)`: the float views' norms, which an einsum
+    would round differently in the last bits (integer rows are exact
+    either way)."""
     if X.dtype == np.float32:
         return np.einsum("ij,ij->i", X, X).astype(np.float64)
-    return np.einsum("ij,ij->i", X, X)
+    return (X * X).sum(axis=1)
 
 
 def _csr_restrict(prefix: str, probed: np.ndarray):

@@ -130,10 +130,9 @@ def _filtered_scan_chunk(qpdf, base: DataFrame, k: int) -> DataFrame:
     bc = base.sparkSession.sparkContext.broadcast((qids, Q, qgroups))
 
     def score(it):
-        import pyarrow as pa
-
         from filter_vectordb_spark.operators.knn import (
             TaskPartials,
+            _flat_tags,
             flatten_fixed_list,
             gemm_topk,
         )
@@ -147,19 +146,9 @@ def _filtered_scan_chunk(qpdf, base: DataFrame, k: int) -> DataFrame:
                 continue
             ids = batch.column("id").to_numpy(zero_copy_only=False)
             X = flatten_fixed_list(batch.column("emb"), nb).astype(np.float64)
-            # flatten tags ONCE per batch straight off the Arrow list
-            # buffers (no per-row Python); per-tag membership masks are
+            # flatten tags ONCE per batch; per-tag membership masks are
             # cached across the chunk's query groups
-            tcol = batch.column("tags")
-            if isinstance(tcol, pa.ChunkedArray):
-                tcol = tcol.combine_chunks()
-            off = tcol.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-            # a sliced ListArray's offsets index into the PARENT values
-            # buffer — rebase so flat_tags and row_of stay aligned
-            flat_tags = (
-                tcol.values.to_numpy(zero_copy_only=False).astype(np.int64)
-            )[off[0] : off[-1]]
-            row_of = np.repeat(np.arange(nb, dtype=np.int64), np.diff(off))
+            flat_tags, row_of = _flat_tags(batch.column("tags"), nb)
             tag_masks: dict[int, np.ndarray] = {}
 
             def has_tag(t: int) -> np.ndarray:

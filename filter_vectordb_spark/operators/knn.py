@@ -105,6 +105,24 @@ def flatten_fixed_list(col, n_rows: int) -> np.ndarray:
     return flat.reshape(n_rows, d)
 
 
+def _flat_tags(col, n: int):
+    """(flat_tags int64, row_of int64) of an Arrow list column of n rows,
+    straight off its list buffers (no per-row Python): row_of[i] is the
+    row flat_tags[i] belongs to.  A sliced array's offsets index into
+    its PARENT values buffer, so the values are rebased to keep the two
+    aligned."""
+    import pyarrow as pa
+
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    flat = (col.values.to_numpy(zero_copy_only=False).astype(np.int64))[
+        off[0] : off[-1]
+    ]
+    row_of = np.repeat(np.arange(n, dtype=np.int64), np.diff(off))
+    return flat, row_of
+
+
 def list_column(X: np.ndarray):
     """The inverse of flatten_fixed_list: a 2-D ndarray as an Arrow
     list column, one row per ndarray row (Spark `array<dtype>`)."""
@@ -972,15 +990,20 @@ def _score_vectorized(
     )
 
 
-def _check_f32_queries(Q: np.ndarray) -> None:
-    """Enforce the documented exactness precondition (knn_join): the
-    f32 GEMM is bit-exact only for integer components, |v| ≤ 255,
-    d ≤ 192.  Full check on the query side (cheap — one pass over the
-    chunk); the base side is checked per block before its cast
-    (_check_f32_base)."""
-    if Q.shape[1] > 192 or not (
+def _f32_exact_ok(Q: np.ndarray) -> bool:
+    """The documented exactness precondition (knn_join) on a query
+    block: the f32 GEMM is bit-exact only for integer components,
+    |v| ≤ 255, d ≤ 192.  One pass over the block."""
+    return Q.shape[1] <= 192 and bool(
         np.abs(Q).max(initial=0.0) <= 255 and np.array_equal(Q, np.rint(Q))
-    ):
+    )
+
+
+def _check_f32_queries(Q: np.ndarray) -> None:
+    """Enforce _f32_exact_ok on the query side of a float32 knn_join;
+    the base side is checked per block before its cast
+    (_check_f32_base)."""
+    if not _f32_exact_ok(Q):
         raise ValueError(
             "compute_dtype='float32' requires integer-valued vectors "
             "with |component| <= 255 and d <= 192 (exactness "

@@ -73,12 +73,20 @@ def test_ivf_save_load_roundtrip(spark, ivf, exact, tmp_path):
     assert _recall(res, exact) == 1.0
 
 
+def _ranked(df, cols=("qid", "rank", "id")):
+    return (
+        df.select(*cols).toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
+    )
+
+
 def test_tag_partition_scan_prunes(spark, tmp_path):
-    """The partition-pruned plan must scan only the queried tag's files."""
+    """The tag view returns only the queried tag's rows, ranked exactly
+    as the tag-filtered scan over the whole base ranks them."""
     from filter_vectordb_spark.index.tagpart import (
         build_tag_partitions,
         tag_partition_knn,
     )
+    from filter_vectordb_spark.operators.filtered_knn import filtered_knn_scan
 
     base = dense_vectors(spark, SF_DIR)
     out = str(tmp_path / "tagpart")
@@ -94,6 +102,56 @@ def test_tag_partition_scan_prunes(spark, tmp_path):
     )
     bad = joined.filter(~F.array_contains("tags", F.col("qtag"))).count()
     assert bad == 0
+    want = filtered_knn_scan(
+        q.select("qid", "qemb", F.array("qtag").alias("qtags")), base, 5
+    )
+    assert _ranked(res).equals(_ranked(want))
+
+
+@pytest.mark.parametrize("view", ["tag", "pair"])
+def test_coded_tag_views_match_filtered_scan(spark, tmp_path, view):
+    """On an integer corpus both views store SQ8 codes (`view/` +
+    `grid/`) and serve them through the decode branch of
+    filteridx_kernels._view_scan (f32 GEMM): (qid, rank, id, dist)
+    equal the tag-filtered float64 scan's, distance bits included."""
+    import os
+
+    from filter_vectordb_spark.index.tagpart import (
+        build_tag_pair_partitions,
+        build_tag_partitions,
+        tag_pair_knn,
+        tag_partition_knn,
+    )
+    from filter_vectordb_spark.operators.filtered_knn import filtered_knn_scan
+    from filter_vectordb_spark.sources.vectors import quantize_uint8
+
+    base = dense_vectors(spark, SF_DIR).withColumn(
+        "emb", F.transform("emb", quantize_uint8)
+    )
+    q = dense_queries(spark, SF_DIR).withColumn(
+        "qemb", F.transform("qemb", quantize_uint8)
+    )
+    out = str(tmp_path / view)
+    if view == "tag":
+        build_tag_partitions(base, out, min_freq=0.0)
+        qv = q.select("qid", "qemb", F.col("qtags")[0].alias("qtag"))
+        got = tag_partition_knn(spark, out, qv, 5)
+        qtags = qv.select("qid", "qemb", F.array("qtag").alias("qtags"))
+    else:
+        build_tag_pair_partitions(base, out, min_freq=0.0)
+        qv = q.select(
+            "qid",
+            "qemb",
+            F.least(F.col("qtags")[0], F.col("qtags")[1]).alias("tag_a"),
+            F.greatest(F.col("qtags")[0], F.col("qtags")[1]).alias("tag_b"),
+        )
+        got = tag_pair_knn(spark, out, qv, 5)
+        qtags = q.select("qid", "qemb", "qtags")
+    assert os.path.exists(f"{out}/grid/_SUCCESS")  # the coded layout
+    cols = ("qid", "rank", "id", "dist")
+    want = _ranked(filtered_knn_scan(qtags, base, 5), cols)
+    assert len(want) > 0
+    assert _ranked(got, cols).equals(want)
 
 
 def test_router_self_heals_poisoned_tagstats_cache(spark):

@@ -12,7 +12,6 @@ import pytest
 from filter_vectordb_spark.plans.audit import (
     assert_broadcast_join,
     assert_no_cartesian,
-    assert_partition_pruned,
     assert_pushed_filters,
     assert_whole_stage_codegen,
     physical_plan,
@@ -71,22 +70,32 @@ def test_sparse_mips_broadcasts_queries(spark):
     assert_no_cartesian(df)
 
 
+def _assert_view_scan_opens_only_probed(spark, out, qpdf, keys):
+    """The _view_scan built for qpdf lists units from exactly the files
+    of the keys the batch probes, and the view holds other keys too."""
+    from filter_vectordb_spark.index.filteridx_kernels import _view_scan
+    from filter_vectordb_spark.index.tagpart import _load_view
+
+    files, off = _load_view(spark, out, keys)
+    probed = {tuple(map(int, t)) for t in zip(*(qpdf[c] for c in keys))} & set(files)
+    assert probed and probed < set(files)
+    scan = _view_scan(spark, files, qpdf, keys, 5, off)
+    assert {u[0] for u in scan.units} == probed
+    assert {u[1] for u in scan.units} == {p for key in probed for p in files[key]}
+
+
 def test_tag_partition_scan_is_pruned(spark, tmp_path):
-    """Single-tag search over the partitioned view must prune partitions
-    (static or dynamic) rather than scan all tags."""
-    from filter_vectordb_spark.index.tagpart import (
-        build_tag_partitions,
-        tag_partition_knn,
-    )
+    """Single-tag search over the partitioned view opens only the
+    probed tags' files, not every tag's."""
+    from filter_vectordb_spark.index.tagpart import build_tag_partitions
     from filter_vectordb_spark.sources.vectors import dense_queries, dense_vectors
 
     out = str(tmp_path / "tp")
     build_tag_partitions(dense_vectors(spark, SF_DIR), out, min_freq=0.0)
-    q = dense_queries(spark, SF_DIR).select(
-        "qid", "qemb", F.col("qtags")[0].alias("qtag")
-    )
-    df = tag_partition_knn(spark, out, q, 5)
-    assert_partition_pruned(df)
+    qpdf = dense_queries(spark, SF_DIR).select(
+        "qid", "qemb", F.col("qtags")[0].alias("tag")
+    ).toPandas()
+    _assert_view_scan_opens_only_probed(spark, out, qpdf, ("tag",))
 
 
 def test_filtered_knn_router_has_no_literal_id_inlist(spark):
@@ -142,23 +151,20 @@ def test_filtered_knn_sig_predicate_is_in_the_plan(spark):
 
 
 def test_tag_pair_partition_scan_is_pruned(spark, tmp_path):
-    """2-tag search over the pair view must prune to the probed pairs."""
-    from filter_vectordb_spark.index.tagpart import (
-        build_tag_pair_partitions,
-        tag_pair_knn,
-    )
+    """2-tag search over the pair view opens only the probed pairs'
+    files."""
+    from filter_vectordb_spark.index.tagpart import build_tag_pair_partitions
     from filter_vectordb_spark.sources.vectors import dense_queries, dense_vectors
 
     out = str(tmp_path / "tp2")
     build_tag_pair_partitions(dense_vectors(spark, SF_DIR), out, min_freq=0.0)
-    q = dense_queries(spark, SF_DIR).select(
+    qpdf = dense_queries(spark, SF_DIR).select(
         "qid",
         "qemb",
         F.least(F.col("qtags")[0], F.col("qtags")[1]).alias("tag_a"),
         F.greatest(F.col("qtags")[0], F.col("qtags")[1]).alias("tag_b"),
-    )
-    df = tag_pair_knn(spark, out, q, 5)
-    assert_partition_pruned(df)
+    ).toPandas()
+    _assert_view_scan_opens_only_probed(spark, out, qpdf, ("tag_a", "tag_b"))
 
 
 def test_lineitem_projection_prunes_columns(spark):
